@@ -131,10 +131,6 @@ def _q_histogram_numeric(spark, sf):
     return A.histogram_numeric(load_table(spark, sf, "lineitem"), "l_extendedprice", bins=12)
 
 
-def _q_histogram_month_of_year(spark, sf):
-    return A.histogram_month_of_year(load_table(spark, sf, "orders"), "o_orderdate")
-
-
 def _q_distinct_count(spark, sf):
     return A.distinct_count(load_table(spark, sf, "events"), "event_type", "user_id")
 
@@ -143,22 +139,6 @@ def _q_top_k(spark, sf):
     part = load_table(spark, sf, "part")
     return part.orderBy(F.desc("p_retailprice"), F.asc("p_partkey")).limit(10).select(
         "p_partkey", "p_name", "p_retailprice"
-    )
-
-
-def _q_limit_preview(spark, sf):
-    orders = load_table(spark, sf, "orders")
-    return orders.orderBy("o_orderkey").limit(5)
-
-
-def _q_join_broadcast_dim(spark, sf):
-    nation = load_table(spark, sf, "nation")
-    region = load_table(spark, sf, "region")
-    return (
-        nation.join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n_nations"))
-        .orderBy("r_name")
     )
 
 
@@ -212,10 +192,6 @@ def _q_set_ops(spark, sf):
 def _q_dedup_exact(spark, sf):
     docs = load_table(spark, sf, "documents")
     return D.dedup_exact(docs).select("doc_id", "lang", "source", "n_chars")
-
-
-def _q_duplicate_groups(spark, sf):
-    return D.duplicate_groups(load_table(spark, sf, "documents"))
 
 
 def _q_dedup_clusters(spark, sf):
@@ -393,35 +369,10 @@ def _q_corpus_pipeline(spark, sf):
     )
 
 
-def _q_corpus_ingest_stream(spark, sf):
-    """STREAMING ingestion front-end of the curation pipeline, driven
-    to completion over the finite shard directory: readStream.text →
-    content-addressed projection → stateful streaming dedup
-    (dropDuplicates on the content hash) → quality gate — all inside
-    the stream; the memory sink materializes the result for the
-    driver. The oracle twin models the same semantics relationally
-    (DISTINCT text + the quality formula), so this is the engine's
-    first VALUE-checked streaming entry, not rows-only.
-
-    State note: content dedup keys the state store by doc_id, sharded
-    by the grouping key across executors; a production deployment
-    bounds it with an ingest-time watermark + TTL (the events-based
-    streaming_dedup shows the watermarked form)."""
-    from data_pengadaan_agent_spark.sources.readers import read_text_corpus_stream
-
-    corpus = read_text_corpus_stream(spark, _ensure_text_corpus(sf))
-    deduped = corpus.dropDuplicates(["doc_id"])
-    scored = X.quality_score(deduped, carry=("text",))
-    gated = scored.filter(F.col("quality_score") >= _PIPE_QUALITY_MIN).select(
-        "text", "n_chars", "quality_score"
-    )
-    return SW.run_stream_to_memory(spark, gated, "corpus_ingest_stream")
-
-
 def _q_corpus_ingest_stream_ttl(spark, sf):
-    """State-BOUNDED twin of ``corpus_ingest_stream`` (VERDICT r4 #3):
-    the same readStream.text → content dedup → quality gate front-end,
-    but deduping with ``dropDuplicatesWithinWatermark`` over a
+    """State-BOUNDED streaming ingest (VERDICT r4 #3): the
+    readStream.text → content dedup → quality gate front-end,
+    deduping with ``dropDuplicatesWithinWatermark`` over a
     synthetic ingest-time column so the state store holds each content
     hash only for the watermark horizon instead of forever — the form
     that survives an infinite 100 TB ingest stream.
@@ -431,7 +382,7 @@ def _q_corpus_ingest_stream_ttl(spark, sf):
     batching, and byte-identical duplicates get IDENTICAL timestamps,
     so they always fall inside one watermark window and the output is
     exactly DISTINCT-by-content — the oracle twin is therefore the
-    same relational model as the unbounded variant. The 2-hour delay
+    same relational model as an unbounded dedup. The 2-hour delay
     exceeds the 1-hour timestamp spread, so no row can be dropped as
     late even if the directory splits across micro-batches. State
     eviction across triggers is exercised separately by
@@ -554,12 +505,6 @@ def _corpus_ingest_scored_sql() -> str:
     """
 
 
-def _q_activity_heatmap(spark, sf):
-    """Day-of-week × hour-of-day usage heatmap cells (C4-family chart
-    data; operators/relational.activity_heatmap)."""
-    return R.activity_heatmap(load_table(spark, sf, "events"))
-
-
 def _q_detect_pii(spark, sf):
     """PII span audit (operators/privacy.detect_pii) over support
     tickets synthesized deterministically from customer rows (the
@@ -634,14 +579,6 @@ def _q_ngram_jaccard(spark, sf):
     return D.ngram_jaccard_pairs(docs, n=3, threshold=0.12)
 
 
-def _q_minhash_lsh_pairs(spark, sf):
-    """Arithmetic universal-hash minhash (oracle recomputes signatures
-    exactly); the xxhash64 variant D.minhash_lsh_pairs is the JVM-only
-    production twin with the identical plan shape."""
-    docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    return D.minhash_lsh_pairs_arith(docs, n_hashes=32, bands=16)
-
-
 def _q_simhash_pairs(spark, sf):
     """Arithmetic-channel simhash (oracle recomputes the signatures);
     D.simhash_pairs is the xxhash64 production twin, same plan."""
@@ -661,69 +598,11 @@ def _q_embedding_cosine_pairs(spark, sf):
     ).withColumn("similarity", F.round("similarity", 4))
 
 
-def _q_embedding_cosine_allpairs(spark, sf):
-    """Exact all-pairs VERIFICATION BASELINE — O(N²) by construction,
-    so the scope is LOUDLY capped to vec_id < 300 (the first 300
-    vectors). The uncapped production path is `embedding_cosine_pairs`
-    (LSH-bucketed) above."""
-    emb = load_table(spark, sf, "embeddings")
-    return S.cosine_pairs(emb, "embedding", threshold=0.35, max_id=300).withColumn(
-        "similarity", F.round("similarity", 4)
-    )
-
-
 def _warehouse_path(spark, sf, name):
     import os
 
     tag = sf.rstrip("/").rsplit("/", 1)[-1]
     return os.path.join(os.path.dirname(os.path.abspath(__file__)), "spark-warehouse", f"{name}_{tag}")
-
-
-def _table_stale(spark, path, expected_rows, expect_types=()):
-    """True when a precomputed table at ``path`` is absent, its row
-    count drifted from the source fixture, or a column's dtype is not
-    the expected one (ingest-once semantics: the build is skipped on
-    every later call of the same round)."""
-    try:
-        df = spark.read.parquet(path)
-        dtypes = dict(df.dtypes)
-        for col, typ in expect_types:
-            if dtypes.get(col) != typ:
-                return True
-        return df.count() != expected_rows
-    except Exception:
-        return True
-
-
-def _q_sim_topk_lsh_precomputed(spark, sf):
-    """The ingest-time ANN path: signatures PRECOMPUTED into a table
-    partitioned by signature (ingest runs once; later calls detect
-    freshness and skip it), probe = partition-pruned read of ONE
-    bucket + exact rescore. Same (n_planes=6, seed=42) family as
-    `sim_topk_lsh`, so the inline and precomputed paths share one
-    oracle. tests/test_plans.py asserts the probe plan prunes."""
-    emb = load_table(spark, sf, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    path = _warehouse_path(spark, sf, "lsh_signatures")
-    if _table_stale(spark, path, emb.count(), expect_types=[("_sig", "string")]):
-        S.build_lsh_signature_table(emb, "embedding", 64, path, n_planes=6, seed=42)
-    return S.lsh_topk_precomputed(
-        spark, path, "embedding", qvec, k=10, n_planes=6, seed=42
-    ).withColumn("similarity", F.round("similarity", 4))
-
-
-def _q_sim_topk_ivf_precomputed(spark, sf):
-    """IVF twin of the precomputed probe: inverted lists ARE partitions
-    (partitionBy centroid_id at ingest, skipped when fresh); the probe
-    reads n_probe=2 of 8 partitions and rescores."""
-    emb = load_table(spark, sf, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    path = _warehouse_path(spark, sf, "ivf_lists")
-    if _table_stale(spark, path, emb.count()):
-        S.build_ivf_table(emb, "embedding", 64, path, n_centroids=8, seed=7)
-    return S.ivf_topk_precomputed(
-        spark, path, "embedding", qvec, k=10, n_centroids=8, n_probe=2, seed=7
-    ).withColumn("similarity", F.round("similarity", 4))
 
 
 def _partsupp(spark, sf):
@@ -949,42 +828,14 @@ def _q_ngram_contamination(spark, sf):
     return X.ngram_contamination(test, train, n=5)
 
 
-def _q_trending_terms_stream(spark, sf):
-    """STREAMING windowed trending-term monitor (streaming/windows.
-    trending_terms_stream): tumbling 10-minute term counts over the
-    ingest stream, complete output mode (the finite-source
-    materialization equals the batch aggregation, so the entry is
-    VALUE-checked). The ingest time derives from line length (base +
-    pmod(n_chars × Knuth, 3600) s) — deterministic AND replicable in
-    plain SQL, unlike the xxhash64 doc hash."""
-    from data_pengadaan_agent_spark.sources.readers import read_text_corpus_stream
-
-    corpus = read_text_corpus_stream(spark, _ensure_text_corpus(sf)).withColumn(
-        "ingest_ts",
-        F.timestamp_seconds(
-            F.lit(1704067200)
-            + F.pmod(F.col("n_chars") * F.lit(2654435761), F.lit(3600))
-        ),
-    )
-    out = SW.trending_terms_stream(corpus, min_count=5)
-    res = SW.run_stream_to_memory(
-        spark, out, "trending_terms_stream", output_mode="complete"
-    )
-    return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm").alias("window_start"),
-        "term",
-        "n",
-    )
-
-
 def _q_trending_terms_append(spark, sf):
     """The PRODUCTION (state-bounded) trending-terms form, registered
     in round 6 (VERDICT r5 ask #5): same windowed term-count frame as
     `trending_terms_stream` but APPEND output mode with a 30-minute
     watermark — closed windows are emitted exactly once and their
     state evicted, so state is O(|terms per window| × |open windows|)
-    on an infinite stream (the complete-mode twin, which retains
-    every window forever, is retired to the locally-checked set).
+    on an infinite stream (complete mode would retain every window
+    forever).
     Value-checkable because the emitted set is deterministic: windows
     whose end ≤ final watermark = max(ingest_ts) − 30 min; the oracle
     computes the batch aggregation with that same cutoff (no window
@@ -1036,16 +887,6 @@ def _q_boilerplate_ngrams(spark, sf):
     value-checked."""
     return X.boilerplate_ngrams(
         load_table(spark, sf, "documents"), n=3, min_docs=2
-    )
-
-
-def _q_length_outliers(spark, sf):
-    """Percentile length-band gate (operators/textan.
-    length_outlier_band): exact corpus p10/p90 token-count band,
-    broadcast back as a 1-row bounds frame; every doc flagged
-    in/out of band."""
-    return X.length_outlier_band(
-        load_table(spark, sf, "documents"), p_lo=0.10, p_hi=0.90
     )
 
 
@@ -1199,26 +1040,6 @@ def _q_semdedup_greedy(spark, sf):
     )
 
 
-def _q_normalize_text(spark, sf):
-    """Canonical normalization (operators/textan.normalize_text) over
-    deliberately-dirtied input (upper-cased text + a punctuated
-    revision suffix) so the lowercase/strip/collapse path does real
-    work the oracle can check."""
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id",
-        F.concat(
-            F.upper("text"),
-            F.lit(" [Rev-"),
-            F.col("doc_id").cast("string"),
-            F.lit(".0]"),
-        ).alias("text"),
-    )
-    out = X.normalize_text(docs)
-    return out.select(
-        "doc_id", "text_norm", F.col("n_chars_norm").cast("bigint").alias("n_chars_norm")
-    )
-
-
 def _q_kmeans_clusters(spark, sf):
     """Lloyd k-means (operators/similarity.kmeans_lloyd): 2 training
     iterations, k=4, deterministic init (vec_id < 4) and tie-break —
@@ -1297,18 +1118,6 @@ def _q_train_test_split(spark, sf):
             F.sum("doc_id").alias("id_sum"),
             F.sum("n_chars").alias("chars_sum"),
         )
-    )
-
-
-def _q_sample_per_group(spark, sf):
-    """k-per-group deterministic cap: at most 5 documents per source,
-    chosen by scrambled-hash rank (the 'cap per domain' curation
-    step)."""
-    from data_pengadaan_agent_spark.operators.sampling import sample_per_group
-
-    docs = load_table(spark, sf, "documents")
-    return sample_per_group(docs, "source", "doc_id", k=5).select(
-        "source", "doc_id", "lang", "n_chars"
     )
 
 
@@ -1409,22 +1218,6 @@ def _q_sim_topk_brute(spark, sf):
     )
 
 
-def _q_sim_topk_lsh(spark, sf):
-    emb = load_table(spark, sf, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return S.lsh_topk(emb, "embedding", qvec, k=10, n_planes=6, seed=42).withColumn(
-        "similarity", F.round("similarity", 4)
-    )
-
-
-def _q_sim_topk_ivf(spark, sf):
-    emb = load_table(spark, sf, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return S.ivf_topk(
-        emb, "embedding", qvec, k=10, n_centroids=8, n_probe=2, seed=7
-    ).withColumn("similarity", F.round("similarity", 4))
-
-
 def _q_ann_recall(spark, sf):
     """Retrieval QUALITY as a checkable row (VERDICT r4 #4): recall@10
     of the two ANN paths (`lsh_topk`, `ivf_topk`) against the exact
@@ -1463,22 +1256,6 @@ def _q_ann_recall(spark, sf):
         )
 
     return recall_row("ivf", ivf).unionAll(recall_row("lsh", lsh)).orderBy("method")
-
-
-def _q_bm25_retrieval(spark, sf):
-    """BM25-ranked keyword retrieval (operators/textan.bm25_score) —
-    the principled ranking upgrade of the raw match-count keyword arm
-    (reference retrieval semantics, openai/list_of_tools.py:123-143):
-    idf-weighted, tf-saturating, length-normalized. One corpus scan +
-    a 1-row broadcast of corpus stats; top-20 via
-    TakeOrderedAndProject."""
-    docs = load_table(spark, sf, "documents")
-    out = X.bm25_score(docs, ["spark", "window", "join"])
-    return (
-        out.withColumn("bm25", F.round("bm25", 4))
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(20)
-    )
 
 
 _MIX_TOKEN_BUDGETS = {"en": 5000, "de": 2000, "fr": 100000}
@@ -1631,10 +1408,6 @@ def _q_tpch_q15(spark, sf):
     )
 
 
-def _q_hourly_distinct_users(spark, sf):
-    return R.hourly_distinct_users(load_table(spark, sf, "events"))
-
-
 def _q_cohort_retention(spark, sf):
     return R.cohort_retention(load_table(spark, sf, "events"))
 
@@ -1661,12 +1434,6 @@ def _q_full_outer_monthly(spark, sf):
     )
 
 
-def _q_except_all(spark, sf):
-    return R.surplus_order_multiplicity(
-        load_table(spark, sf, "orders"), load_table(spark, sf, "customer")
-    )
-
-
 def _q_salted_join(spark, sf):
     return R.salted_user_totals_join(load_table(spark, sf, "events"), n_salts=8)
 
@@ -1684,15 +1451,6 @@ def _q_intermediary_pipeline(spark, sf):
         """SELECT source, count(*) AS n, sum(n_chars) AS total_chars
            FROM intermediary_q GROUP BY source ORDER BY source"""
     )
-
-
-def _q_chart_histogram_categorical(spark, sf):
-    """C4 dtype dispatch, categorical branch (value_counts fallback)."""
-    from data_pengadaan_agent_spark.operators import charts as C
-
-    docs = load_table(spark, sf, "documents")
-    data, _insights = C.histogram_data(docs, "source")
-    return data.orderBy("source")
 
 
 def _q_parse_ts_coerce(spark, sf):
@@ -1793,16 +1551,8 @@ def _q_tpch_q18(spark, sf):
     )
 
 
-def _q_pivot_counts(spark, sf):
-    return R.pivot_status_by_priority(load_table(spark, sf, "orders"))
-
-
 def _q_cube_agg(spark, sf):
     return R.cube_returns(load_table(spark, sf, "lineitem"))
-
-
-def _q_percentiles(spark, sf):
-    return R.exact_percentiles(load_table(spark, sf, "events"), "value")
 
 
 def _split_events(spark, sf):
@@ -1846,29 +1596,9 @@ def _q_range_join(spark, sf):
     return out.select("p_id", "c_id")
 
 
-def _q_embedding_normalize(spark, sf):
-    emb = load_table(spark, sf, "embeddings").filter(F.col("vec_id") < 100)
-    normed = S.l2_normalize_pandas(emb)
-    return normed.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "v")
-    ).select("vec_id", "dim", F.round("v", 6).alias("v"))
-
-
 def _q_tpch_q4(spark, sf):
     return R.priority_with_late_lines(
         load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-    )
-
-
-def _q_tpch_q12(spark, sf):
-    return R.returnflag_priority_mix(
-        load_table(spark, sf, "orders"), load_table(spark, sf, "lineitem")
-    )
-
-
-def _q_tpch_q14(spark, sf):
-    return R.promo_revenue_share(
-        load_table(spark, sf, "part"), load_table(spark, sf, "lineitem")
     )
 
 
@@ -1888,10 +1618,6 @@ def _q_tpch_q22(spark, sf):
     return R.idle_rich_customers(
         load_table(spark, sf, "customer"), load_table(spark, sf, "orders")
     )
-
-
-def _q_window_cumulative(spark, sf):
-    return R.cumulative_revenue(load_table(spark, sf, "orders"))
 
 
 def _q_window_ntile(spark, sf):
@@ -1925,12 +1651,6 @@ def _q_multimodal_features(spark, sf):
 def _q_multimodal_audio_chunks(spark, sf):
     M, media = _media(spark, sf)
     return M.chunk_audio(media, chunk_ms=5000)
-
-
-def _q_text_top_terms(spark, sf):
-    return X.top_terms_per_doc(
-        load_table(spark, sf, "documents").filter(F.col("doc_id") < 100), k=3
-    )
 
 
 def _q_grouping_sets(spark, sf):
@@ -1987,43 +1707,6 @@ def _q_unpivot_metrics(spark, sf):
     ).orderBy("l_returnflag", "l_linestatus", "metric")
 
 
-def _q_lateral_topk(spark, sf):
-    """LATERAL correlated subquery: for each region, its top-2 nations
-    by customer count. Catalyst rewrites the lateral to a ranked
-    window join — no per-row re-execution."""
-    load_table(spark, sf, "region").createOrReplaceTempView("_region_lat")
-    load_table(spark, sf, "nation").createOrReplaceTempView("_nation_lat")
-    load_table(spark, sf, "customer").createOrReplaceTempView("_customer_lat")
-    return spark.sql(
-        """
-        SELECT r.r_name, t.n_name, t.n_customers
-        FROM _region_lat r,
-        LATERAL (
-          SELECT n.n_name, count(*) AS n_customers
-          FROM _nation_lat n JOIN _customer_lat c ON c.c_nationkey = n.n_nationkey
-          WHERE n.n_regionkey = r.r_regionkey
-          GROUP BY n.n_name
-          ORDER BY n_customers DESC, n.n_name LIMIT 2
-        ) t
-        ORDER BY r.r_name, t.n_customers DESC, t.n_name
-        """
-    )
-
-
-def _q_session_window_native(spark, sf):
-    """Native session_window in BATCH mode (same operator the stream
-    uses) — the gaps-and-islands `sessionize` query is its SQL twin;
-    note the different end semantics (last_event + gap, not max(ts))."""
-    ev = load_table(spark, sf, "events")
-    out = SW.session_windows_stream(ev, gap="30 minutes")
-    return out.select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        "n_events",
-    )
-
-
 def _q_chart_pie_shares(spark, sf):
     """C3 pie shares in LOCKSTEP with charts.pie_chart_data's fixed
     plan (VERDICT r12 "what's wrong" #1): share via a broadcast
@@ -2049,17 +1732,6 @@ def _q_flagship(spark, sf):
     return _flagship(spark, sf)
 
 
-# Target language mixture for corpus_mix — LLaMA-style mixing table.
-_MIX_WEIGHTS = {"en": 0.4, "es": 0.2, "de": 0.2, "fr": 0.15, "zh": 0.05}
-
-
-def _q_passage_dedup(spark, sf):
-    """Passage-level duplication audit (operators/dedup
-    .passage_dedup_stats): 16-token windows, per-doc share of
-    passages that also appear in another document."""
-    return D.passage_dedup_stats(load_table(spark, sf, "documents"))
-
-
 def _q_pii_pseudonymize(spark, sf):
     """PII pseudonymization + k-anonymity audit (operators/privacy
     .pseudonymize_customers): md5 names, nation→region and
@@ -2077,15 +1749,6 @@ def _q_tfidf_top_terms(spark, sf):
     """Per-doc top-3 terms by exact-arithmetic tf·idf
     (operators/textan.tfidf_top_terms)."""
     return X.tfidf_top_terms(load_table(spark, sf, "documents"))
-
-
-def _q_corpus_mix(spark, sf):
-    """Weighted language mixing (operators/sampling.corpus_mix):
-    deterministic downsample to the target mixture."""
-    from data_pengadaan_agent_spark.operators.sampling import corpus_mix
-
-    docs = load_table(spark, sf, "documents").select("doc_id", "lang", "source")
-    return corpus_mix(docs, _MIX_WEIGHTS)
 
 
 def _q_quantile_band(spark, sf):
@@ -2118,12 +1781,6 @@ def _q_scrub_terms(spark, sf):
     from data_pengadaan_agent_spark.operators.privacy import scrub_terms
 
     return scrub_terms(load_table(spark, sf, "documents"), _SCRUB_TERMS)
-
-
-def _q_mode_per_group(spark, sf):
-    """Per-language dominant source with pinned tie-break
-    (operators/aggregates.mode_per_group)."""
-    return A.mode_per_group(load_table(spark, sf, "documents"), "lang", "source")
 
 
 def _q_dsir_importance(spark, sf):
@@ -2290,21 +1947,6 @@ def _q_decontaminate_semantic(spark, sf):
     )
 
 
-def _q_bm25_retrieval_batch(spark, sf):
-    """Batched BM25 retrieval (operators/textan.bm25_retrieval_batch):
-    queries = every doc_id%50==0 document's first three tokens, run
-    against the whole corpus, top-5 per query — the lexical
-    hard-negative miner (DPR's "BM25 negatives" step) and the
-    many-query form of bm25_retrieval. ROUND-8/9 registration
-    candidate."""
-    docs = load_table(spark, sf, "documents")
-    queries = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("qid"),
-        F.slice(X.tokens("text"), 1, 3).alias("terms"),
-    )
-    return X.bm25_retrieval_batch(queries, docs, k=5)
-
-
 def _bm25_retrieval_batch_sql(k: int = 5, tail: str | None = None) -> str:
     """DuckDB twin of _q_bm25_retrieval_batch: integer-proxy idf and
     the EXACT-INTEGER contribution (round-9 determinism fix — the old
@@ -2375,32 +2017,6 @@ r AS (
 )
 {tail if tail is not None else
  f"SELECT qid, doc_id, bm25, CAST(rk AS INT) AS rank FROM r WHERE rk <= " + str(k)}
-"""
-
-
-def _q_bm25_components_probe(spark, sf):
-    """Driver-red localization probe (VERDICT r9 What's-wrong #1.iii,
-    staged as the r11 contingency): the RAW BIGINT components of the
-    bm25_retrieval_batch contribution for the doc_id%500==0 slice —
-    (qid, doc_id, t, tf, dl, df, n_docs, sum_dl, contrib). Shares
-    textan._bm25_contrib_frame with the batch operator and the twin's
-    own c CTE, so driver green/red on this row bisects the batch
-    query: probe green + batch red => sum/rank/output stage; probe
-    red => the differing component column. ROUND-11 CONTINGENCY
-    candidate — register only if bm25_retrieval_batch reds in r10."""
-    docs = load_table(spark, sf, "documents")
-    queries = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("qid"),
-        F.slice(X.tokens("text"), 1, 3).alias("terms"),
-    )
-    return X.bm25_components_probe(queries, docs, doc_mod=500)
-
-
-_BM25_PROBE_TAIL = """
-SELECT qid, doc_id, t, tf, CAST(dl AS BIGINT) AS dl,
-       CAST(dft AS BIGINT) AS df, CAST(n AS BIGINT) AS n_docs,
-       CAST(sdl AS BIGINT) AS sum_dl, CAST(c AS BIGINT) AS contrib
-FROM c WHERE doc_id % 500 = 0
 """
 
 
@@ -2636,10 +2252,7 @@ def _q_dedup_passages(spark, sf):
     suppressed to empty rows) and chimera docs (ids +2000000) whose
     first 16 tokens copy a doc_id%13==0 source and whose tail is
     unique per chimera (doc-id-stamped) — exactly the head passage
-    drops when the source had ≥16 tokens. REGISTRY CANDIDATE — per
-    tools/plan_rotation.py all three candidates fit round 7's gate
-    window alongside the limit_preview/histogram_month_of_year
-    retirements (must-check 49/50)."""
+    drops when the source had ≥16 tokens."""
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")
     replay = docs.filter(F.col("doc_id") % 11 == 0).select(
@@ -2698,46 +2311,24 @@ def _dedup_passages_sql() -> str:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry ordered STALEST-FIRST from ROTATION.json (generated by
+    """The registry: every benched, oracle-checked entry, ordered
+    STALEST-FIRST from ROTATION.json (generated by
     ``tools/update_rotation.py`` from the driver's CORRECTNESS_r*.json
     files): entries never driver-checked lead, then ascending
     last-driver-green round, ties broken by registration order in
     ``_query_impls``. The driver gate checks the first ~50 registered
     entries per round, so this ordering is what keeps every entry's
-    hard signal ≤2 rounds old (148 entries / 50-entry window → each
-    check must buy 3 rounds of freshness; 148/3 ≈ 49.3 ≤ 50 — at the
-    feasibility EDGE: the registry hard cap is 150, enforced by the
-    driver-contract test, and past it tier-3 entries must be retired)
-    without per-round hand-reordering. Enforced by
+    hard signal ≤2 rounds old (150 entries / 50-entry window → each
+    check must buy 3 rounds of freshness) without per-round
+    hand-reordering. Enforced by
     ``tests/test_driver_contract.py::test_rotation_manifest_current``.
 
-    Rotation-priority tiers (VERDICT r4 #7 — if the gate window ever
-    shrinks, drop freshness for tier-3 entries first):
-      tier 1 (load-bearing semantics): the §2 reference surface
-        (flagship/filters/aggregates/charts/topk), corpus_pipeline,
-        corpus_ingest_stream*, dedup_exact, minhash_lsh_pairs,
-        sim_topk_brute, text_* core, stratified_sample;
-      tier 2 (distinct algorithms): TPC-H 22, windows, as-of/range/
-        bucketed joins, simhash, dedup_clusters, IVF/LSH probes,
-        kmeans, streaming windows, privacy, sampling/mixing,
-        boilerplate_ngrams, snapshot_diff, cross_source_overlap,
-        embedding_qa, prototypicality, semdedup_prune, corpus_report;
-      tier 3 (variants/supersets of tier-1/2 entries):
-        *_precomputed probes, embedding_cosine_allpairs (capped exact
-        baseline of embedding_cosine_pairs), duplicate_groups
-        (superset of dedup_exact), session_window_native (twin of
-        sessionize), limit_preview, histogram_month_of_year,
-        length_outliers (continuous-percentile twin of quantile_band).
-
-    Round 6 retired six tier-3 entries from the driver gate
-    (``_RETIRED_TIER3`` — VERDICT r5 ask #2, the 148/150 capacity
-    crunch); they remain implemented, exported via
-    ``retired_queries()``/``retired_oracle_sql()``, and value-checked
-    on every pytest run with the driver's own comparison.
+    The registry hard cap is 150, and it is the only pool: every
+    top-level ``_q_*`` function here is a registered entry
+    (``test_every_entry_function_is_registered``), so a new entry
+    replaces an old one instead of parking beside the registry.
     """
-    impls = {
-        k: v for k, v in _query_impls().items() if k not in _RETIRED_TIER3
-    }
+    impls = _query_impls()
     try:
         import json as _json
         import os as _os
@@ -2761,20 +2352,15 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     if any tiebreak ever pushes a must-check entry out of the gate
     window — the invariant is the assert, not the dict order."""
     return {
-        # --- NEW in round 14 (promoted from candidate_queries(); the
-        # EXPANDED 7-in/7-out triage written and simulator-verified in
-        # round 13 — NOTES.md "r14 registration triage" — funded by
-        # retiring window_cumulative + mode_per_group + pivot_counts +
-        # percentiles + embedding_normalize + tpch_q12_priority_mix +
-        # tpch_q14_promo_share from r14's due set, see _RETIRED_TIER3.
-        # Each new row hashes a family no registered entry covers:
-        # incremental graph connectivity (large-star/small-star ≡ the
-        # recursive-CTE closure), the Bloom fill/FPP audit STATE, the
-        # Count-Min sketch STATE + point estimates, KMV sketch-domain
-        # set algebra (union/intersection overlap from two sketches),
-        # length-bounded PassJoin fuzzy edit-distance pairs, the
-        # deterministic lossy-counting heavy-hitter sweep, and
-        # mergeable-histogram quantile interpolation.) ---
+        # --- NEW in round 14. Each row hashes a family no other
+        # registered entry covers: incremental graph connectivity
+        # (large-star/small-star ≡ the recursive-CTE closure), the
+        # Bloom fill/FPP audit STATE, the Count-Min sketch STATE + point
+        # estimates, KMV sketch-domain set algebra (union/intersection
+        # overlap from two sketches), length-bounded PassJoin fuzzy
+        # edit-distance pairs, the deterministic lossy-counting
+        # heavy-hitter sweep, and mergeable-histogram quantile
+        # interpolation. ---
         "incremental_components": _q_incremental_components,
         "bloom_fill_report": _q_bloom_fill_report,
         "cms_freq": _q_cms_freq,
@@ -2782,89 +2368,59 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuzzy_dup_pairs": _q_fuzzy_dup_pairs,
         "heavy_hitters": _q_heavy_hitters,
         "hist_quantiles": _q_hist_quantiles,
-        # --- NEW in round 13 (promoted from candidate_queries(); the
-        # 5-in/5-out triage written and simulator-verified in round 12
-        # — NOTES.md "r13 registration triage" — funded by retiring
-        # bm25_retrieval_batch + winnow_fingerprints + activity_heatmap
-        # + sim_topk_lsh + sim_topk_ivf from r13's due set, see
-        # _RETIRED_TIER3. Each new row hashes a family no registered
-        # entry covers: the KMV bottom-k sketch STATE + its estimate,
-        # the declarative DQ rule-report aggregate, degree-ordered
-        # triangle counting, the z-order + zonemap file-pruned scan
-        # (literal survivor paths ≡ full scan), and the leakage-free
-        # SCD2 point-in-time read with the zero-duration tiebreak.) ---
+        # --- NEW in round 13. Each row hashes a family no other
+        # registered entry covers: the KMV bottom-k sketch STATE + its
+        # estimate, the declarative DQ rule-report aggregate,
+        # degree-ordered triangle counting, the z-order + zonemap
+        # file-pruned scan (literal survivor paths ≡ full scan), and the
+        # leakage-free SCD2 point-in-time read with the zero-duration
+        # tiebreak. ---
         "kmv_distinct": _q_kmv_distinct,
         "dq_report": _q_dq_report,
         "graph_triangles": _q_graph_triangles,
         "zorder_zonemap_scan": _q_zorder_zonemap_scan,
         "pit_join": _q_pit_join,
-        # --- NEW in round 12 (promoted from candidate_queries(); the
-        # 2-in/1-out triage written and simulator-verified in round 11
-        # — NOTES.md "Round 12 registration triage" — paired with
-        # retiring lateral_topk from r12's due set, see _RETIRED_TIER3.
-        # ivfpq_adc_batch hashes the union-of-probed-lists literal
-        # PartitionFilter, the per-qid probe ranking, the per-
-        # (qid, list) residual LUT selection AND the partition-cut
-        # batch kernel in one row (its |Q|=1 and flat-geometry special
-        # cases ivfpq_adc_topk / pq_adc_batch stay candidates);
+        # --- NEW in round 12. ivfpq_adc_batch hashes the
+        # union-of-probed-lists literal PartitionFilter, the per-qid
+        # probe ranking, the per-(qid, list) residual LUT selection AND
+        # the partition-cut batch kernel in one row;
         # ann_ingest_stream_codes is the streaming IVF-PQ append
         # contract — no other row hashes a foreachBatch sink writing
-        # into a frozen-geometry ANN index.) ---
+        # into a frozen-geometry ANN index. ---
         "ivfpq_adc_batch": _q_ivfpq_adc_batch,
         "ann_ingest_stream_codes": _q_ann_ingest_stream_codes,
-        # --- ALSO NEW in round 12 (the backlog-drain wave VERDICT r11
-        # ask #2 called for — funded by retiring text_top_terms +
-        # sample_per_group, both in r12's due set, see _RETIRED_TIER3.
-        # The two strongest candidates from the r13 shortlist, pulled
-        # forward: each is the semantic-twin class where one green row
-        # certifies an entire index family — trgm_search's twin is the
-        # DIRECT contains() scan (candidate superset lossless by the
-        # gram-containment argument), bloom_new_rows' twin the DIRECT
-        # fingerprint anti-join (only the maybe-sliver ever reaches
-        # the exact check; words-first crash ordering forbids false
-        # negatives).) ---
+        # --- ALSO NEW in round 12: the semantic-twin class, where one
+        # green row certifies an entire index family — trgm_search's
+        # twin is the DIRECT contains() scan (candidate superset
+        # lossless by the gram-containment argument), bloom_new_rows'
+        # twin the DIRECT fingerprint anti-join (only the maybe-sliver
+        # ever reaches the exact check; words-first crash ordering
+        # forbids false negatives). ---
         "trgm_search": _q_trgm_search,
         "bloom_new_rows": _q_bloom_new_rows,
-        # --- NEW in round 11 (promoted from candidate_queries(); the
-        # 4-in/3-out triage written and simulator-verified in round 10
-        # — NOTES.md "Round 11 registration triage" — paired with
-        # retiring length_outliers + bm25_retrieval + corpus_mix from
-        # r11's due set, see _RETIRED_TIER3. Each carries an algorithm
-        # family no other registered entry hashes: the Lee et al.
+        # --- NEW in round 11. Each carries an algorithm family no
+        # other registered entry hashes: the Lee et al.
         # occurrence-aggregate + gap-merge shape, the maintained
         # gram-count index read path, the partition-pruned postings
         # query ≡ from-scratch equality, and the shared-template BPE
-        # merge fold.) ---
+        # merge fold. ---
         "dup_spans": _q_dup_spans,
         "dup_spans_incremental": _q_dup_spans_incremental,
         "bm25_index_retrieval": _q_bm25_index_retrieval,
         "bpe_merges": _q_bpe_merges,
-        # --- NEW in round 10 (promoted from candidate_queries(); the
-        # 2-in/2-out plan pre-verified at end of round 9 with
-        # tools/plan_rotation.py — paired with retiring
-        # minhash_lsh_pairs + corpus_ingest_stream from r10's due set,
-        # see _RETIRED_TIER3) ---
-        "winnow_fingerprints": _q_winnow_fingerprints,
+        # --- NEW in round 10 ---
         "winnow_matches": _q_winnow_matches,
-        # --- NEW in round 9 (promoted from candidate_queries(); the
-        # 4-in/4-out registration plan pre-verified in round 8 with
-        # tools/plan_rotation.py — each pairs with one retirement from
-        # r9's due set, see _RETIRED_TIER3) ---
+        # --- NEW in round 9 ---
         "ngram_lm_score": _q_ngram_lm_score,
         "scd2_history": _q_scd2_history,
         "ivf_drift_report": _q_ivf_drift_report,
         "mmr_diversify": _q_mmr_diversify,
-        # --- NEW in round 8 (promoted from candidate_queries(); the
-        # registration plan pre-computed in round 7 — VERDICT r7 ask
-        # #1: all five fit the 50-entry gate window exactly) ---
+        # --- NEW in round 8 ---
         "quality_classifier": _q_quality_classifier,
         "decontaminate_semantic": _q_decontaminate_semantic,
         "mine_hard_negatives": _q_mine_hard_negatives,
         "corpus_ingest_stream_scored": _q_corpus_ingest_stream_scored,
-        "bm25_retrieval_batch": _q_bm25_retrieval_batch,
-        # --- NEW in round 7 (promoted from candidate_queries(); the
-        # registration plan pre-computed in round 6 — see NOTES.md and
-        # tools/plan_rotation.py) ---
+        # --- NEW in round 7 ---
         "dsir_importance": _q_dsir_importance,
         "dedup_near_batch": _q_dedup_near_batch,
         "dedup_passages": _q_dedup_passages,
@@ -2876,23 +2432,18 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "prototypicality": _q_prototypicality,
         "semdedup_prune": _q_semdedup_prune,
         "boilerplate_ngrams": _q_boilerplate_ngrams,
-        "length_outliers": _q_length_outliers,
         "snapshot_diff": _q_snapshot_diff,
         "cross_source_overlap": _q_cross_source_overlap,
         "embedding_qa": _q_embedding_qa,
         # --- NEW in round 5 ---
         "corpus_ingest_stream_ttl": _q_corpus_ingest_stream_ttl,
         "ann_recall_lsh_ivf": _q_ann_recall,
-        "bm25_retrieval": _q_bm25_retrieval,
         "corpus_mix_tokens": _q_corpus_mix_tokens,
         "cluster_representatives": _q_cluster_representatives,
         "token_rarity": _q_token_rarity,
         "decontaminate_train": _q_decontaminate_train,
-        "trending_terms_stream": _q_trending_terms_stream,
         # --- NEW in round 4 (never driver-checked) ---
         "corpus_pipeline": _q_corpus_pipeline,
-        "activity_heatmap": _q_activity_heatmap,
-        "corpus_ingest_stream": _q_corpus_ingest_stream,
         "detect_pii": _q_detect_pii,
         "stratified_sample": _q_stratified_sample,
         "hybrid_retrieval_rrf": _q_hybrid_retrieval,
@@ -2903,7 +2454,6 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tumbling_window": _q_tumbling_window,
         "sliding_window": _q_sliding_window,
         "sessionize": _q_sessionize,
-        "session_window_native": _q_session_window_native,
         "flagship_monthly_trend": _q_flagship,
         "keyword_cnf_filter": _q_keyword_cnf,
         "date_attribute_filter": _q_date_attribute_filter,
@@ -2913,11 +2463,8 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scalar_insights": _q_scalar_insights,
         "arg_extreme": _q_arg_extreme,
         "histogram_numeric": _q_histogram_numeric,
-        "histogram_month_of_year": _q_histogram_month_of_year,
         "distinct_count": _q_distinct_count,
         "top_k": _q_top_k,
-        "limit_preview": _q_limit_preview,
-        "join_broadcast_dim": _q_join_broadcast_dim,
         "star_join_revenue": _q_star_join_revenue,
         "semi_join": _q_semi_join,
         "anti_join": _q_anti_join,
@@ -2927,14 +2474,10 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_grouping_sets": _q_rollup_grouping_sets,
         "set_ops": _q_set_ops,
         "dedup_exact": _q_dedup_exact,
-        "duplicate_groups": _q_duplicate_groups,
         "ngram_jaccard_pairs": _q_ngram_jaccard,
         "dedup_clusters": _q_dedup_clusters,
-        "minhash_lsh_pairs": _q_minhash_lsh_pairs,
         "simhash_pairs": _q_simhash_pairs,
         "sim_topk_brute": _q_sim_topk_brute,
-        "sim_topk_lsh": _q_sim_topk_lsh,
-        "sim_topk_ivf": _q_sim_topk_ivf,
         "text_token_count": _q_text_token_count,
         "text_quality": _q_text_quality,
         "text_language_id": _q_text_language_id,
@@ -2946,20 +2489,14 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q3_shipping_priority": _q_tpch_q3,
         "tpch_q6_forecast_revenue": _q_tpch_q6,
         "tpch_q18_large_orders": _q_tpch_q18,
-        "pivot_counts": _q_pivot_counts,
         "cube_agg": _q_cube_agg,
         # --- round-2 driver-green (CORRECTNESS_r02) ---
-        "percentiles": _q_percentiles,
         "asof_join": _q_asof_join,
         "range_join": _q_range_join,
-        "embedding_normalize": _q_embedding_normalize,
         "tpch_q4_late_orders": _q_tpch_q4,
-        "tpch_q12_priority_mix": _q_tpch_q12,
-        "tpch_q14_promo_share": _q_tpch_q14,
         "tpch_q17_small_qty": _q_tpch_q17,
         "tpch_q19_brand_ranges": _q_tpch_q19,
         "tpch_q22_idle_rich": _q_tpch_q22,
-        "window_cumulative": _q_window_cumulative,
         "window_ntile": _q_window_ntile,
         "corpus_curation": _q_corpus_curation,
         "embedding_cosine_pairs": _q_embedding_cosine_pairs,
@@ -2969,7 +2506,6 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bucketed_join_revenue": _q_bucketed_join_revenue,
         "tpch_q21_waiting_suppliers": _q_tpch_q21,
         "train_test_split": _q_train_test_split,
-        "sample_per_group": _q_sample_per_group,
         "mad_by_event_type": _q_mad_by_event_type,
         "chunk_text": _q_chunk_text,
         "latest_by_key": _q_latest_by_key,
@@ -2982,23 +2518,16 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_profile": _q_skew_profile,
         "repetition_stats": _q_repetition_stats,
         "ngram_contamination": _q_ngram_contamination,
-        "normalize_text": _q_normalize_text,
-        "passage_dedup": _q_passage_dedup,
         "pii_pseudonymize": _q_pii_pseudonymize,
         "tfidf_top_terms": _q_tfidf_top_terms,
-        "corpus_mix": _q_corpus_mix,
         "quantile_band": _q_quantile_band,
         "shuffle_shard": _q_shuffle_shard,
         "scrub_terms": _q_scrub_terms,
-        "mode_per_group": _q_mode_per_group,
         "tpch_q2_min_cost_supplier": _q_tpch_q2,
         "tpch_q9_product_profit": _q_tpch_q9,
         "tpch_q11_important_stock": _q_tpch_q11,
         "tpch_q16_supplier_count": _q_tpch_q16,
         "tpch_q20_excess_stock": _q_tpch_q20,
-        "sim_topk_lsh_precomputed": _q_sim_topk_lsh_precomputed,
-        "sim_topk_ivf_precomputed": _q_sim_topk_ivf_precomputed,
-        "embedding_cosine_allpairs": _q_embedding_cosine_allpairs,
         # --- round-3 driver-green (CORRECTNESS_r03, newest signal) ---
         "correlated_subquery": _q_correlated_subquery,
         "tpch_q7_nation_volume": _q_tpch_q7,
@@ -3007,25 +2536,20 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_moving_avg": _q_window_moving_avg,
         "tpch_q8_market_share": _q_tpch_q8,
         "tpch_q15_top_supplier": _q_tpch_q15,
-        "hourly_distinct_users": _q_hourly_distinct_users,
         "window_range_frame": _q_window_range_frame,
         "json_props_rollup": _q_json_props_rollup,
         "supplier_revenue": _q_supplier_revenue,
         "full_outer_monthly": _q_full_outer_monthly,
-        "except_all_multiplicity": _q_except_all,
         "salted_join": _q_salted_join,
         "intermediary_pipeline": _q_intermediary_pipeline,
-        "chart_histogram_categorical": _q_chart_histogram_categorical,
         "chart_line_monthly": _q_chart_line_monthly,
         "multimodal_resize_plan": _q_multimodal_resize,
         "multimodal_frame_sample": _q_multimodal_frames,
         "multimodal_image_features": _q_multimodal_features,
         "multimodal_audio_chunks": _q_multimodal_audio_chunks,
-        "text_top_terms": _q_text_top_terms,
         "grouping_sets": _q_grouping_sets,
         "null_safe_join": _q_null_safe_join,
         "unpivot_metrics": _q_unpivot_metrics,
-        "lateral_topk": _q_lateral_topk,
         "cohort_retention": _q_cohort_retention,
     }
 
@@ -3240,21 +2764,6 @@ def _semdedup_greedy_sql() -> str:
         FROM a2m
     """
 
-
-_COSINE_PAIRS_SQL = """
-WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         / ((CASE WHEN sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) = 0 THEN 1.0 ELSE sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) END)
-            * (CASE WHEN sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) = 0 THEN 1.0 ELSE sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) END))
-         AS similarity
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, round(similarity, 4) AS similarity
-FROM p WHERE similarity >= 0.35
-"""
 
 _COSINE_Q_SQL = """
   list_sum(list_transform(list_zip(e.embedding, q.qv),
@@ -3755,214 +3264,6 @@ FROM sid GROUP BY user_id, session_id
 """
 
 
-# Tier-3 variants RETIRED from the driver registry (round 6, VERDICT
-# r5 ask #2): the 50-entry gate × 3-round freshness window caps the
-# registry at 150 and round 5 closed at 148 — two entries of headroom.
-# Each retiree is a variant/superset of a still-registered entry (the
-# tier list in the queries() docstring), keeps its implementation,
-# entry callable and oracle twin, and stays VALUE-CHECKED locally:
-# tests/test_driver_contract.py::test_retired_entries_match_oracle runs
-# the same Arrow-normalized comparison the driver gate uses, every
-# pytest run. Retirement frees driver-gate slots; it does not drop
-# coverage.
-_RETIRED_TIER3 = frozenset(
-    {
-        # keep sim_topk_lsh / sim_topk_ivf (same oracle SQL twins)
-        "sim_topk_lsh_precomputed",
-        "sim_topk_ivf_precomputed",
-        # capped exact baseline of embedding_cosine_pairs
-        "embedding_cosine_allpairs",
-        # superset of dedup_exact
-        "duplicate_groups",
-        # batch twin of sessionize (same session semantics family)
-        "session_window_native",
-        # complete-mode twin: the APPEND-mode (state-bounded) form is
-        # the registered one from round 6 (VERDICT r5 ask #5)
-        "trending_terms_stream",
-        # round-7 retirements (the pre-computed registration plan):
-        # limit_preview's LIMIT shape is exercised by top_k /
-        # window_topk_per_group; histogram_month_of_year's 1-12
-        # scaffold by histogram_numeric + chart_line_monthly. Both
-        # r4-green, both still value-checked every pytest run.
-        "limit_preview",
-        "histogram_month_of_year",
-        # round-9 retirements (the pre-planned tranche, NOTES.md — all
-        # four were DUE in r9's gate window, the only retirement kind
-        # that frees a slot at the 150 cap):
-        # passage_dedup: shared-passage STATS variant; its 16-token
-        # posexplode + count-distinct shape is a strict subset of
-        # registered dedup_passages (adds first-occurrence vote +
-        # rebuild on the same lineage).
-        "passage_dedup",
-        # normalize_text: pure codegen select; the identical
-        # canonicalization expression runs inside registered
-        # corpus_curation's lineage (its twin embeds the same regexes).
-        "normalize_text",
-        # chart_histogram_categorical: C4 categorical branch ≡
-        # value_counts aggregate + chart_bar_priority top-N shape; the
-        # numeric branch of the same dispatcher is histogram_numeric.
-        "chart_histogram_categorical",
-        # hourly_distinct_users: time-bucketed distinct ≡ distinct_count
-        # (A8) + activity_heatmap time bucketing.
-        "hourly_distinct_users",
-        # FIFTH r9 retirement (unplanned, forced by the r8 red row:
-        # bm25_retrieval_batch registered in r8 but hash-failed, so it
-        # bought no freshness and re-enters r9's must-check set as
-        # never-green — 51 must > 50 window without one more slot).
-        # except_all_multiplicity: EXCEPT ALL multiplicity-preserving
-        # variant; the §2.7 set-ops family keeps its driver row via
-        # the registered set_ops (INTERSECT/EXCEPT/UNION, r7-green).
-        "except_all_multiplicity",
-        # round-10 retirements (the pre-verified 2-in/2-out plan from
-        # end of round 9, funding the winnow pair registrations; both
-        # were in r10's computed due set — the r7-green cohort):
-        # minhash_lsh_pairs: the candidate STAGE of registered
-        # minhash_dedup_pairs (r8-green), which runs the identical
-        # arith banding lineage and then Jaccard-verifies; the shape
-        # keeps its driver hash via that consumer.
-        "minhash_lsh_pairs",
-        # corpus_ingest_stream: the dedup-only streaming form strictly
-        # contained in registered corpus_ingest_stream_ttl (same
-        # front-end + TTL state bound, r8-green) and _scored (r8-green),
-        # and tripled by corpus_ingest_stream_dup_spans in the
-        # candidate pool.
-        "corpus_ingest_stream",
-        # THIRD r10 retirement (unplanned, forced by the r9 red row —
-        # the same mechanism as r9's except_all_multiplicity:
-        # bm25_retrieval_batch stayed never-green in r9, so the
-        # end-of-r9 simulation's assumption that the full r9 window
-        # would go green was off by one and r10's must-check set is 51).
-        # join_broadcast_dim: nation ⋈ broadcast(region) + group-count —
-        # strictly contained in registered star_join_revenue (5-table
-        # star over the same two dims, in r10's gate window) and in the
-        # driver-green TPC-H q5/q8 broadcast-dim chains (r9/r8).
-        "join_broadcast_dim",
-        # round-11 retirements (the pre-verified 4-in/3-out triage
-        # written in round 10 — NOTES.md; all three in r11's due set,
-        # the r8-green cohort):
-        # length_outliers: continuous-percentile twin of registered
-        # quantile_band + the length features inside text_quality;
-        # the queries() docstring's tier-3 example since round 5.
-        "length_outliers",
-        # bm25_retrieval: single-query form strictly dominated by
-        # registered bm25_retrieval_batch (same integer scoring,
-        # r10-green) and by bm25_index_retrieval registering THIS
-        # round with the SAME shared twin.
-        "bm25_retrieval",
-        # corpus_mix: proportional-rate hash filter whose constructs
-        # all keep driver rows — the Knuth-hash selection via
-        # train_test_split/sample_per_group (r9-green), the
-        # count→broadcast-rate shape via its registered sibling
-        # corpus_mix_tokens (same module, same group frame).
-        "corpus_mix",
-        # round-12 retirement (the pre-verified 2-in/1-out triage
-        # written in round 11 — NOTES.md; in r12's due set, the
-        # r9-green cohort):
-        # lateral_topk: LATERAL correlated top-2 per group — Catalyst
-        # rewrites it to exactly the ranked-window join that registered
-        # window_topk_per_group (r10-green) hashes, and the
-        # correlated-subquery surface keeps its own driver row via
-        # registered correlated_subquery (same due set).
-        "lateral_topk",
-        # round-12 drain-wave retirements (VERDICT r11 ask #2 — fund
-        # pulling the r13 shortlist's top two forward; both in r12's
-        # due set, the r9-green cohort):
-        # text_top_terms: per-doc top-k TF terms — the tf ranking is
-        # inside registered tfidf_top_terms (r11-green) and the
-        # per-group rank shape is window_topk_per_group (r10-green).
-        "text_top_terms",
-        # sample_per_group: per-group smallest-Knuth-hash selection ≡
-        # the registered train_test_split + stratified_sample family
-        # (same knuth_hash ordering, same per-group window cut), and
-        # the weighted generalization weighted_sample[_per_group] sits
-        # value-checked in the candidate pool.
-        "sample_per_group",
-        # round-13 retirements (the pre-verified 5-in/5-out triage
-        # written in round 12 — NOTES.md "r13 registration triage";
-        # all five in r13's due set, the r10-green cohort):
-        # bm25_retrieval_batch: the from-scratch scoring path, strictly
-        # dominated by registered bm25_index_retrieval (r11-green, the
-        # SAME shared twin _bm25_retrieval_batch_sql(k=5) — the index
-        # path must reproduce the from-scratch path bit-exactly); the
-        # index path is the steady-state 100 TB shape, and this retires
-        # the lap's single slowest non-streaming query.
-        "bm25_retrieval_batch",
-        # winnow_fingerprints: the candidate STAGE of registered
-        # winnow_matches (identical k=5-gram two-channel fingerprint
-        # lineage, then the match join) — the minhash_lsh_pairs
-        # precedent from r10.
-        "winnow_fingerprints",
-        # activity_heatmap: (dow, hour) count grid ≡ the registered
-        # groupby_count / monthly_rollup aggregate shapes on derived
-        # calendar keys (same dayofweek/hour exprs run inside
-        # chart_line_monthly's lineage).
-        "activity_heatmap",
-        # sim_topk_lsh + sim_topk_ivf: both probes run INSIDE
-        # registered ann_recall_lsh_ivf (r11-green — computes LSH and
-        # IVF top-k against the brute baseline in one row), and the
-        # IVF partition-pruned scan + ranking is also hashed by
-        # registered ivfpq_adc_batch (r12-green). The family keeps
-        # brute/recall/drift/kmeans/mmr/adc/stream driver rows.
-        "sim_topk_lsh",
-        "sim_topk_ivf",
-        # round-14 retirements (the pre-verified EXPANDED 7-in/7-out
-        # triage written in round 13 — NOTES.md "r14 registration
-        # triage"; all seven in r14's due set, the r11-green cohort):
-        # window_cumulative: running-sum ROWS frame ⊂ registered
-        # window_range_frame's RANGE-frame family (r12-green), and the
-        # cumulative shape also runs inside the scd2_history /
-        # retention lineages.
-        "window_cumulative",
-        # mode_per_group: max_by-over-counts ≡ registered arg_extreme
-        # (max_by/min_by, r13-green) composed with the value_counts
-        # aggregate shape on a derived count.
-        "mode_per_group",
-        # pivot_counts: pivot ≡ groupBy + conditional agg; the
-        # grouping-set API surface keeps driver rows via cube_agg +
-        # grouping_sets + rollup_grouping_sets (cube_agg shares r14's
-        # due set and stays registered).
-        "pivot_counts",
-        # percentiles: continuous-percentile twin of registered
-        # quantile_band (same due set keeps quantile_band) — the
-        # length_outliers precedent from r11.
-        "percentiles",
-        # embedding_normalize: pure codegen select whose normalize
-        # lineage runs inside registered ann_recall_lsh_ivf /
-        # cluster_representatives / embedding_qa rows.
-        "embedding_normalize",
-        # tpch_q12_priority_mix + tpch_q14_promo_share: single-join
-        # conditional-agg shapes strictly dominated by the registered
-        # q8/q19-class rows (multi-way joins over the same tables with
-        # the same CASE-sum form); both stay value-checked as retired
-        # tier-3 per the "retire TPC-H LAST" rule's pre-vetted
-        # alternates list.
-        "tpch_q12_priority_mix",
-        "tpch_q14_promo_share",
-    }
-)
-
-
-def oracle_sql() -> dict[str, str]:
-    """Driver-checked oracle twins: the full impl map minus retired
-    tier-3 variants (kept value-checked locally via
-    retired_oracle_sql)."""
-    return {
-        k: v for k, v in _oracle_sql_impls().items() if k not in _RETIRED_TIER3
-    }
-
-
-def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Tier-3 entries retired from the driver gate but still executed
-    and value-checked by pytest against their DuckDB twins."""
-    return {k: v for k, v in _query_impls().items() if k in _RETIRED_TIER3}
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    return {
-        k: v for k, v in _oracle_sql_impls().items() if k in _RETIRED_TIER3
-    }
-
-
 def _q_ngram_lm_score(spark, sf):
     """Bigram stupid-backoff LM fluency gate (operators/textan.
     ngram_lm_score): counts trained on the English slice, every doc
@@ -4115,50 +3416,6 @@ def _q_mmr_diversify(spark, sf):
     emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     return S.mmr_diversify(emb, qvec, k=5, pool=40, lam=0.7)
-
-
-def _q_winnow_fingerprints(spark, sf):
-    """Winnowing positional fingerprints (operators/textan.
-    winnow_fingerprints, MOSS selection rule): k=5-gram two-channel
-    poly hashes, window w=4, rightmost-min selection, over the
-    doc_id%5=0 slice (fixture compactness — the operator is
-    corpus-wide). ROUND-10-pool candidate."""
-    docs = load_table(spark, sf, "documents").filter(F.col("doc_id") % 5 == 0)
-    return X.winnow_fingerprints(docs, k=5, w=4)
-
-
-def _winnow_sql(k: int = 5, w: int = 4) -> str:
-    """DuckDB twin of _q_winnow_fingerprints: same tokenizer, same
-    k-gram construction, same two-channel poly hash mod P31, and the
-    same order-theoretic selection — min(struct(h, -pos)) over a
-    ROWS w-1 PRECEDING frame (struct comparison is lexicographic on
-    both engines)."""
-    p131 = _DUCK_POLY.format(s="g", mult=131)
-    p137 = _DUCK_POLY.format(s="g", mult=137)
-    return f"""
-WITH d AS (
-  SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE doc_id % 5 = 0
-),
-g AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         array_to_string(toks[CAST(i + 1 AS INT):CAST(i + {k} AS INT)], ' ') AS g
-  FROM d, unnest(range(greatest(len(toks) - {k} + 1, 0))) AS u(i)
-),
-h AS (
-  SELECT doc_id, pos,
-         (({p131}) * 131 + ({p137})) % 2147483647 AS h
-  FROM g
-),
-sel AS (
-  SELECT doc_id, pos,
-         min(struct_pack(h := h, np := -pos)) OVER (
-           PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW) AS s
-  FROM h
-)
-SELECT DISTINCT doc_id, -(s.np) AS fp_pos, s.h AS fp_hash
-FROM sel WHERE pos >= {w - 1}
-"""
 
 
 def _mmr_sql(k: int = 5, pool: int = 40, lam: float = 0.7) -> str:
@@ -4325,15 +3582,6 @@ def _q_dup_spans(spark, sf):
     return X.dup_spans(docs, length=8)
 
 
-def _q_dup_span_stats(spark, sf):
-    """Per-document duplicated-token budget over dup_spans (the Lee
-    et al. drop/trim decision signal): n_tokens, dup_tokens, n_spans,
-    exact-integer dup_ppm; zero-span docs report 0-ppm rows.
-    ROUND-11-pool candidate."""
-    docs = load_table(spark, sf, "documents")
-    return X.dup_span_stats(docs, length=8)
-
-
 def _dup_spans_core_sql(
     length: int = 8, min_count: int = 2, source_sql: str = "SELECT * FROM documents"
 ) -> str:
@@ -4397,91 +3645,6 @@ def _dup_spans_sql(length: int = 8, min_count: int = 2) -> str:
 WITH {_dup_spans_core_sql(length, min_count)}
 SELECT doc_id, span_start, span_end, span_len, n_dup_grams FROM spans
 """
-
-
-def _dup_span_stats_sql(length: int = 8, min_count: int = 2) -> str:
-    return f"""
-WITH {_dup_spans_core_sql(length, min_count)},
-per AS (
-  SELECT doc_id, CAST(sum(span_len) AS BIGINT) AS dup_tokens,
-         CAST(count(*) AS BIGINT) AS n_spans
-  FROM spans GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(len(d.toks) AS BIGINT) AS n_tokens,
-       coalesce(per.dup_tokens, 0) AS dup_tokens,
-       coalesce(per.n_spans, 0) AS n_spans,
-       CAST((1000000 * coalesce(per.dup_tokens, 0))
-            // greatest(CAST(len(d.toks) AS BIGINT), 1) AS BIGINT) AS dup_ppm
-FROM d LEFT JOIN per USING (doc_id)
-"""
-
-
-def _q_strip_dup_spans(spark, sf):
-    """The removal step of Lee et al. 2021 (operators/textan.
-    strip_dup_spans): each document reassembled with its duplicated
-    spans' tokens cut out, plus before/after token counts.
-    ROUND-11-pool candidate."""
-    docs = load_table(spark, sf, "documents")
-    return X.strip_dup_spans(docs, length=8)
-
-
-def _strip_dup_spans_sql(length: int = 8, min_count: int = 2) -> str:
-    """DuckDB twin of strip_dup_spans: the dup_spans CTE chain, spans
-    list-aggregated per doc, tokens posexploded and cut with a
-    list_filter containment test, then string_agg(ORDER BY pos) —
-    the same cut-and-reassemble, same all-stripped '' contract."""
-    return f"""
-WITH {_dup_spans_core_sql(length, min_count)},
-per AS (
-  SELECT doc_id,
-         list(struct_pack(s := span_start, e := span_end)) AS sp
-  FROM spans GROUP BY 1
-),
-tok AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos, toks[CAST(i + 1 AS INT)] AS tok
-  FROM d, unnest(range(len(toks))) AS u(i)
-),
-kept AS (
-  SELECT t.doc_id, t.pos, t.tok
-  FROM tok t LEFT JOIN per USING (doc_id)
-  WHERE per.sp IS NULL
-     OR len(list_filter(per.sp,
-                        x -> t.pos >= x.s AND t.pos <= x.e)) = 0
-),
-ka AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
-         CAST(count(*) AS BIGINT) AS kept_tokens
-  FROM kept GROUP BY 1
-)
-SELECT d.doc_id,
-       coalesce(ka.clean_text, '') AS clean_text,
-       CAST(len(d.toks) AS BIGINT) AS n_tokens,
-       coalesce(ka.kept_tokens, 0) AS kept_tokens
-FROM d LEFT JOIN ka USING (doc_id)
-"""
-
-
-def _q_pq_adc_topk(spark, sf):
-    """Product-quantization ADC retrieval (operators/pq, Jégou et al.
-    TPAMI 2011): train a m=4 × ksub=4 codebook over the embeddings
-    (2 Lloyd rounds, lowest-id init — the kmeans_clusters convention),
-    PQ-encode the corpus, and rank it against vec 0's embedding by
-    asymmetric distance. Scores are exact BIGINT micro-unit sums of a
-    literal LUT (no float in the hashed output — the bm25 lesson);
-    assignment distances round to 4dp before the argmin with ties to
-    the lowest code (coarser than ivf_drift's 6dp: the sf0.1 fixture
-    measured a 6dp pre-round margin inside drift distance, so the PQ
-    grid keeps three orders of safety; margins probed by
-    tools/audit_round_boundaries.py). ROUND-12-pool
-    candidate."""
-    from data_pengadaan_agent_spark.operators import pq as PQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    cb = PQ.train_pq(emb, dim=64, m=4, ksub=4, iters=2)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    codes = PQ.pq_encode(emb, cb)
-    return PQ.pq_adc_topk(codes, cb, qvec, k=10)
 
 
 def _pq_subspace_parts(
@@ -4567,167 +3730,11 @@ k_{s} AS (
     return parts
 
 
-def _pq_adc_sql(
-    m: int = 4,
-    ksub: int = 4,
-    dim: int = 64,
-    k: int = 10,
-    tail: str | None = None,
-) -> str:
-    """DuckDB twin of _q_pq_adc_topk: per subspace, the identical
-    2-round Lloyd (lowest-id init, round(d,4)-then-argmin with
-    lowest-code ties, empty-cluster carryover), the identical
-    floor(d·1e6 + 0.5) BIGINT LUT, integer score sum, rank by
-    (score, vec_id). ``tail`` swaps the final SELECT — used by
-    tools/audit_round_boundaries.py to emit the PRE-round assignment
-    and LUT distances for margin probing from the same CTE bodies
-    (one source of truth)."""
-    dsub = dim // m
-    parts = [
-        """
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0)"""
-    ] + _pq_subspace_parts(m, ksub, dsub, src="e", lut_cte="q")
-    if tail is not None:
-        return f"WITH {','.join(parts)}\n{tail}"
-    code_joins = " ".join(f"JOIN k_{s} USING (vec_id)" for s in range(1, m))
-    lut_joins = " ".join(
-        f"JOIN lut_{s} l{s} ON l{s}.code = k_{s}.code" for s in range(m)
-    )
-    score = " + ".join(f"l{s}.lv" for s in range(m))
-    return f"""
-WITH {",".join(parts)},
-scored AS (
-  SELECT k_0.vec_id, CAST({score} AS BIGINT) AS adc_score
-  FROM k_0 {code_joins} {lut_joins}
-)
-SELECT CAST(row_number() OVER (ORDER BY adc_score, vec_id) AS INT) AS rank,
-       vec_id, adc_score
-FROM scored ORDER BY adc_score, vec_id LIMIT {k}
-"""
-
-
-def _q_ivfpq_adc_topk(spark, sf):
-    """IVF-PQ composition (operators/pq — Jégou et al. TPAMI 2011
-    §III, IVFADC): coarse quantizer = the EXACT vectors of ids 0..3
-    (no training drift by construction), residual PQ m=4 × ksub=4
-    (2 Lloyd rounds), codes written PARTITIONED BY coarse list, query
-    = vec 0's embedding probing n_probe=2 lists — the scan carries a
-    LITERAL PartitionFilter and each probed list scores against its
-    own residual LUT in exact BIGINT micro-units. ROUND-12-pool
-    candidate."""
-    from data_pengadaan_agent_spark.operators import pq as PQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    path = _warehouse_path(spark, sf, "ivfpq_codes")
-    expected = emb.count()
-    try:
-        coarse, cb = PQ.load_ivfpq_codebooks(spark, path)
-        fresh = (
-            len(coarse) == 4
-            and len(cb) == 4
-            and len(cb[0]) == 4
-            and spark.read.parquet(path).count() == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        coarse, cb = PQ.build_ivfpq_table(
-            emb, path, dim=64, kc=4, m=4, ksub=4, iters=2
-        )
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return PQ.ivfpq_adc_topk(spark, path, coarse, cb, qvec, k=10, n_probe=2)
-
-
-def _ivfpq_adc_sql(
-    kc: int = 4,
-    m: int = 4,
-    ksub: int = 4,
-    dim: int = 64,
-    k: int = 10,
-    n_probe: int = 2,
-    tail: str | None = None,
-) -> str:
-    """DuckDB twin of _q_ivfpq_adc_topk: exact coarse codebook (ids
-    0..kc-1 verbatim), coarse assignment by round(d,4)-argmin with
-    lowest-list ties, exact residual subtraction, the SHARED
-    subspace-training CTEs over the residual frame, per-probed-list
-    LUTs, and the pruned scoring restricted to the probed lists."""
-    dsub = dim // m
-    fulldist = (
-        f"list_sum(list_transform(range(1, {dim} + 1), "
-        f"i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])))"
-    )
-    qfulldist = (
-        f"list_sum(list_transform(range(1, {dim} + 1), "
-        f"i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i])))"
-    )
-    parts = [
-        f"""
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-cc AS (
-  SELECT CAST(vec_id AS INT) AS list, v AS cv FROM e WHERE vec_id < {kc}
-),
-asgraw AS (
-  SELECT e.vec_id, c.list, {fulldist} AS d_pre FROM e, cc c
-),
-asg AS (
-  SELECT vec_id, (min(struct_pack(d := d, list := list))).list AS list
-  FROM (SELECT vec_id, list, round(d_pre, 4) AS d FROM asgraw) GROUP BY 1
-),
-r AS (
-  SELECT e.vec_id, a.list,
-         list_transform(range(1, {dim} + 1), i -> e.v[i] - c.cv[i]) AS v
-  FROM e JOIN asg a USING (vec_id) JOIN cc c ON c.list = a.list
-),
-proberaw AS (
-  SELECT c.list, {qfulldist} AS d_pre FROM cc c, q
-),
-probe AS (
-  SELECT list FROM (SELECT list, round(d_pre, 4) AS d FROM proberaw)
-  ORDER BY d, list LIMIT {n_probe}
-),
-qres AS (
-  SELECT c.list,
-         list_transform(range(1, {dim} + 1), i -> q.qv[i] - c.cv[i]) AS qv
-  FROM cc c JOIN probe USING (list), q
-)"""
-    ] + _pq_subspace_parts(m, ksub, dsub, src="r", lut_cte="qres", lut_keys="list")
-    if tail is not None:
-        return f"WITH {','.join(parts)}\n{tail}"
-    code_joins = " ".join(f"JOIN k_{s} USING (vec_id)" for s in range(1, m))
-    lut_joins = " ".join(
-        f"JOIN lut_{s} l{s} ON l{s}.code = k_{s}.code AND l{s}.list = a.list"
-        for s in range(m)
-    )
-    score = " + ".join(f"l{s}.lv" for s in range(m))
-    return f"""
-WITH {",".join(parts)},
-scored AS (
-  SELECT k_0.vec_id, CAST({score} AS BIGINT) AS adc_score
-  FROM k_0 {code_joins}
-  JOIN asg a ON a.vec_id = k_0.vec_id
-  JOIN probe pr ON pr.list = a.list
-  {lut_joins}
-)
-SELECT CAST(row_number() OVER (ORDER BY adc_score, vec_id) AS INT) AS rank,
-       vec_id, adc_score
-FROM scored ORDER BY adc_score, vec_id LIMIT {k}
-"""
-
-
 def _q_ivfpq_adc_batch(spark, sf):
     """Batched multi-query ADC over the IVF-PQ index
     (operators/pq.ivfpq_adc_batch — VERDICT r10 ask #4): the same
-    kc=4 coarse / m=4 × ksub=4 residual geometry and warehouse table
-    as ivfpq_adc_topk, queried by every vec_id%200==0 embedding at
+    kc=4 coarse / m=4 × ksub=4 residual geometry over the warehouse
+    IVF-PQ table, queried by every vec_id%200==0 embedding at
     once with n_probe=2 — the scan reads ONLY the union of the
     queries' probed lists (one literal PartitionFilter), each row
     scored only for the queries that probed its list with that
@@ -4855,613 +3862,6 @@ FROM rk WHERE rnk <= {k}
 """
 
 
-def _q_pq_adc_batch(spark, sf):
-    """Batched multi-query ADC (operators/pq.pq_adc_batch): the same
-    m=4 × ksub=4 geometry as pq_adc_topk, queried by every
-    vec_id%200==0 embedding at once — the compressed-corpus analog of
-    mine_hard_negatives, top-5 per query. One Arrow scan of the codes
-    scores all queries; the only exchange carries partition-partial
-    top-k rows. ROUND-12-pool candidate."""
-    from data_pengadaan_agent_spark.operators import pq as PQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    cb = PQ.train_pq(emb, dim=64, m=4, ksub=4, iters=2)
-    codes = PQ.pq_encode(emb, cb)
-    queries = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") % 200 == 0).collect()
-    ]
-    return PQ.pq_adc_batch(codes, cb, queries, k=5)
-
-
-def _pq_adc_batch_sql(
-    m: int = 4,
-    ksub: int = 4,
-    dim: int = 64,
-    k: int = 5,
-    tail: str | None = None,
-) -> str:
-    """DuckDB twin of _q_pq_adc_batch: the SAME shared training CTEs
-    as the single-query twin, with per-qid LUTs (lut_keys='qid') and
-    a per-qid ranking over the full cross of codes × queries."""
-    dsub = dim // m
-    parts = [
-        """
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % 200 = 0)"""
-    ] + _pq_subspace_parts(m, ksub, dsub, src="e", lut_cte="qs", lut_keys="qid")
-    if tail is not None:
-        return f"WITH {','.join(parts)}\n{tail}"
-    code_joins = " ".join(f"JOIN k_{s} USING (vec_id)" for s in range(1, m))
-    lut_joins = " ".join(
-        f"JOIN lut_{s} l{s} ON l{s}.qid = q.qid AND l{s}.code = k_{s}.code"
-        for s in range(m)
-    )
-    score = " + ".join(f"l{s}.lv" for s in range(m))
-    return f"""
-WITH {",".join(parts)},
-scored AS (
-  SELECT q.qid, k_0.vec_id, CAST({score} AS BIGINT) AS adc_score
-  FROM k_0 {code_joins} CROSS JOIN (SELECT DISTINCT qid FROM qs) q
-  {lut_joins}
-),
-r AS (
-  SELECT qid, vec_id, adc_score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY adc_score, vec_id) AS rk
-  FROM scored
-)
-SELECT qid, CAST(rk AS INT) AS rank, vec_id, adc_score
-FROM r WHERE rk <= {k}
-"""
-
-
-def _q_sq_topk(spark, sf):
-    """Scalar-quantization retrieval (operators/sq, SQ8): per-dim
-    min/max quantizer trained in ONE codegen aggregate, corpus encoded
-    by a pure zip_with expression (no Python worker anywhere — the
-    codegen-only compression tier between raw vectors and PQ), vec 0's
-    embedding quantized under the same rule and ranked by exact BIGINT
-    symmetric L2 over the codes. Cross-engine equality is STRUCTURAL:
-    both engines run the identical (x−mn)·sc floor(+0.5) ops on
-    bit-identical doubles. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import sq as SQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    mins, scales = SQ.train_sq(emb, dim=64)
-    codes = SQ.sq_encode(emb, mins, scales)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return SQ.sq_topk(codes, SQ.encode_query(qvec, mins, scales), k=10)
-
-
-def _q_sq_quant_report(spark, sf):
-    """SQ quantizer-staleness monitor (operators/sq.
-    sq_quantization_report): exact integer reconstruction-error totals
-    + the clamp counter (out-of-range saturation = the retrain signal)
-    under the corpus-trained quantizer, one summary row, all codegen.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import sq as SQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    mins, scales = SQ.train_sq(emb, dim=64)
-    return SQ.sq_quantization_report(emb, mins, scales)
-
-
-def _sq_core_sql(dim: int = 64, levels: int = 255) -> str:
-    """Shared CTE chain for the SQ twins: per-dim exact min/max, the
-    (mn, sc) quantizer, and per-vector code lists via the IDENTICAL
-    clamp(floor((x − mn)·sc + 0.5)) expression the Spark side runs —
-    one subtraction, one multiply, one floor on bit-identical doubles,
-    so equality is structural (operators/sq.py docstring)."""
-    return f"""
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-dims AS (
-  SELECT i, min(e.v[i]) AS mn, max(e.v[i]) AS mx
-  FROM e, UNNEST(range(1, {dim} + 1)) AS u(i)
-  GROUP BY 1
-),
-quant AS (
-  SELECT i, mn,
-         CASE WHEN mx = mn THEN 0.0
-              ELSE {float(levels)} / (mx - mn) END AS sc
-  FROM dims
-),
-qlists AS (
-  SELECT list(mn ORDER BY i) AS mns, list(sc ORDER BY i) AS scs FROM quant
-),
-coderaw AS (
-  -- scaled value BEFORE the +0.5: floor(x + 0.5) flips when x sits on
-  -- an integer half, so the margin probe's danger grid is decimals=0
-  -- halves of THIS column (the pq lutraw convention)
-  SELECT e.vec_id, q.i, (e.v[q.i] - q.mn) * q.sc AS scaled
-  FROM e, quant q
-),
-codes AS (
-  SELECT vec_id,
-         list(least({levels}, greatest(0, CAST(floor(scaled + 0.5) AS BIGINT)))
-              ORDER BY i) AS c
-  FROM coderaw GROUP BY 1
-)"""
-
-
-def _sq_topk_sql(
-    dim: int = 64, levels: int = 255, k: int = 10, tail: str | None = None
-) -> str:
-    """DuckDB twin of _q_sq_topk. ``tail`` exposes the pre-floor
-    encode values for tools/audit_round_boundaries.py (decimals=0 —
-    the floor grid), belt-and-braces on top of the structural-equality
-    argument."""
-    core = _sq_core_sql(dim, levels)
-    if tail is not None:
-        return f"WITH {core}\n{tail}"
-    return f"""
-WITH {core},
-qc AS (SELECT c AS qc FROM codes WHERE vec_id = 0),
-scored AS (
-  SELECT codes.vec_id,
-         CAST(list_sum(list_transform(range(1, {dim} + 1),
-              i -> (c[i] - qc[i]) * (c[i] - qc[i]))) AS BIGINT) AS sq_score
-  FROM codes, qc
-)
-SELECT CAST(row_number() OVER (ORDER BY sq_score, vec_id) AS INT) AS rank,
-       vec_id, sq_score
-FROM scored ORDER BY sq_score, vec_id LIMIT {k}
-"""
-
-
-def _sq_quant_report_sql(
-    dim: int = 64, levels: int = 255, err_dp: int = 6
-) -> str:
-    """DuckDB twin of _q_sq_quant_report: decode = c/sc + mn (sc=0 →
-    mn), the per-vector error fold in the SAME array order as Spark's
-    sequential aggregate, exact integer micro-units, clamp counter
-    from the UNCLAMPED floor value."""
-    return f"""
-WITH {_sq_core_sql(dim, levels)},
-per AS (
-  SELECT e.vec_id,
-         CAST(floor(list_sum(list_transform(range(1, {dim} + 1), i ->
-             (e.v[i] - (CASE WHEN ql.scs[i] = 0.0 THEN 0.0
-                             ELSE CAST(c.c[i] AS DOUBLE) / ql.scs[i] END
-                        + ql.mns[i]))
-             * (e.v[i] - (CASE WHEN ql.scs[i] = 0.0 THEN 0.0
-                               ELSE CAST(c.c[i] AS DOUBLE) / ql.scs[i] END
-                          + ql.mns[i]))))
-           * {float(10 ** err_dp)} + 0.5) AS BIGINT) AS err_micro,
-         CAST(list_sum(list_transform(range(1, {dim} + 1), i ->
-             CASE WHEN floor((e.v[i] - ql.mns[i]) * ql.scs[i] + 0.5) < 0
-                    OR floor((e.v[i] - ql.mns[i]) * ql.scs[i] + 0.5)
-                       > {levels}
-                  THEN 1 ELSE 0 END)) AS BIGINT) AS n_clamped
-  FROM e JOIN codes c USING (vec_id), qlists ql
-)
-SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-       CAST(sum(err_micro) AS BIGINT) AS err_micro_sum,
-       CAST(sum(err_micro) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         AS mean_err_micro,
-       CAST(max(err_micro) AS BIGINT) AS err_micro_max,
-       CAST(sum(n_clamped) AS BIGINT) AS n_clamped
-FROM per
-"""
-
-
-def _q_bq_topk(spark, sf):
-    """Binary-quantization retrieval (operators/bq): per-dimension
-    midrange thresholds trained in ONE codegen aggregate, corpus
-    packed to 63-bit sign words by a pure zip_with expression, vec 0
-    packed under the same rule and ranked by exact BIGINT Hamming
-    distance (bit_count(xor)). Cross-engine equality is STRUCTURAL —
-    (mn+mx)/2 is one add + one exact halving, the bit test is a strict
-    > on bit-identical doubles, everything after is integers.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import bq as BQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    thr = BQ.train_bq(emb, dim=64)
-    codes = BQ.bq_encode(emb, thr)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return BQ.bq_topk(codes, BQ.encode_query_bq(qvec, thr), k=10)
-
-
-def _q_bq_rerank_topk(spark, sf):
-    """The production two-stage BQ shape (operators/bq.
-    bq_rerank_topk): the 1-bit Hamming scan cuts the corpus to a
-    50-candidate shortlist (the only full-corpus pass — 16 B/vector,
-    pure codegen), then exact integer micro-unit L2 re-ranks the
-    shortlist to k=10. Hamming ties then L2 ties break by id — one
-    deterministic trajectory. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import bq as BQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    thr = BQ.train_bq(emb, dim=64)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return BQ.bq_rerank_topk(emb, thr, qvec, k=10, shortlist=50)
-
-
-def _q_bq_topk_batch(spark, sf):
-    """Batched BQ retrieval (operators/bq.bq_topk_batch): four query
-    vectors (vec_id % 125 == 0, first four by id) packed under the
-    corpus thresholds, every Hamming fold in ONE words scan, per-qid
-    row_number <= 5 with WindowGroupLimit partial top-k ahead of the
-    single qid exchange — the pure-codegen batch miner.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import bq as BQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    thr = BQ.train_bq(emb, dim=64)
-    qrows = (
-        emb.filter(F.col("vec_id") % 125 == 0)
-        .orderBy("vec_id")
-        .limit(4)
-        .collect()
-    )
-    queries = [
-        (int(r["vec_id"]), BQ.encode_query_bq(r["embedding"], thr))
-        for r in qrows
-    ]
-    return BQ.bq_topk_batch(BQ.bq_encode(emb, thr), queries, k=5)
-
-
-def _bq_topk_batch_sql(dim: int = 64, k: int = 5) -> str:
-    """DuckDB twin of _q_bq_topk_batch: the shared BQ word CTEs, the
-    same four queries selected by the same rule, Hamming per
-    (qid, vec) via one cross join, per-qid row_number <= k."""
-    from data_pengadaan_agent_spark.operators.bq import n_words
-
-    return f"""
-WITH {_bq_core_sql(dim)},
-qsel AS (
-  SELECT vec_id AS qid, w AS qw FROM words
-  WHERE vec_id % 125 = 0 ORDER BY vec_id LIMIT 4
-),
-pairs AS (
-  SELECT q.qid, words.vec_id,
-         CAST(list_sum(list_transform(range(1, {n_words(dim)} + 1),
-              t -> bit_count(xor(words.w[t], q.qw[t])))) AS BIGINT)
-           AS hamming
-  FROM words, qsel q
-),
-r AS (
-  SELECT qid, vec_id, hamming,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY hamming, vec_id) AS rk
-  FROM pairs
-)
-SELECT qid, CAST(rk AS INT) AS rank, vec_id, hamming
-FROM r WHERE rk <= {k}
-"""
-
-
-def _q_kcenter_coreset(spark, sf):
-    """Greedy k-center coreset (operators/coreset, Gonzalez 1985):
-    k=5 farthest-point selections over the exact BIGINT micro-unit
-    grid — seed = lowest id, every argmax ties to the lowest id, all
-    distances exact integers, so the trajectory is reproducible
-    bit-for-bit by the unrolled 5-level DuckDB twin. Returns
-    (sel_rank, vec_id, dist_micro) with non-increasing radii.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import coreset as CS
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    return CS.kcenter_coreset(emb, k=5)
-
-
-def _bq_core_sql(dim: int = 64) -> str:
-    """Shared CTE chain for the BQ twins: exact per-dim min/max, the
-    midrange thresholds, the strict > bit test, and the 63-bit word
-    packing — every float-touching step the IDENTICAL IEEE ops the
-    Spark side runs (operators/bq.py determinism contract), everything
-    downstream pure positive BIGINT arithmetic."""
-    from data_pengadaan_agent_spark.operators.bq import BITS_PER_WORD, n_words
-
-    words = []
-    for w in range(n_words(dim)):
-        start = w * BITS_PER_WORD  # 0-based dim offset
-        width = min(BITS_PER_WORD, dim - start)
-        words.append(
-            f"CAST(list_sum(list_transform(range({start + 1}, "
-            f"{start + width + 1}), j -> b[j] * (CAST(1 AS BIGINT) "
-            f"<< (j - {start + 1})))) AS BIGINT)"
-        )
-    word_list = ", ".join(words)
-    return f"""
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-dims AS (
-  SELECT i, min(e.v[i]) AS mn, max(e.v[i]) AS mx
-  FROM e, UNNEST(range(1, {dim} + 1)) AS u(i)
-  GROUP BY 1
-),
-thr AS (
-  SELECT list((mn + mx) / 2 ORDER BY i) AS ts FROM dims
-),
-bits AS (
-  SELECT e.vec_id,
-         list_transform(range(1, {dim} + 1),
-           i -> CASE WHEN e.v[i] > thr.ts[i]
-                     THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS b
-  FROM e, thr
-),
-words AS (
-  SELECT vec_id, [{word_list}] AS w FROM bits
-),
-qw AS (SELECT w FROM words WHERE vec_id = 0),
-scored AS (
-  SELECT words.vec_id,
-         CAST(list_sum(list_transform(range(1, {n_words(dim)} + 1),
-              t -> bit_count(xor(words.w[t], qw.w[t])))) AS BIGINT)
-           AS hamming
-  FROM words, qw
-)"""
-
-
-def _bq_topk_sql(dim: int = 64, k: int = 10) -> str:
-    """DuckDB twin of _q_bq_topk."""
-    return f"""
-WITH {_bq_core_sql(dim)}
-SELECT CAST(row_number() OVER (ORDER BY hamming, vec_id) AS INT) AS rank,
-       vec_id, hamming
-FROM scored ORDER BY hamming, vec_id LIMIT {k}
-"""
-
-
-def _bq_rerank_sql(
-    dim: int = 64,
-    k: int = 10,
-    shortlist: int = 50,
-    dp: int = 6,
-    tail: str | None = None,
-) -> str:
-    """DuckDB twin of _q_bq_rerank_topk: the shared BQ CTEs cut the
-    Hamming shortlist, then exact integer micro-unit L2 re-ranks it.
-    ``tail`` exposes the PRE-floor micro values (mraw.scaled) for
-    tools/audit_round_boundaries.py — decimals=0, the floor(x + 0.5)
-    grid (the sq_topk.encode convention; kcenter_coreset shares this
-    identical grid over the identical fixture)."""
-    scale = float(10**dp)
-    core = f"""{_bq_core_sql(dim)},
-mraw AS (
-  -- pre-floor micro value: floor(x*scale + 0.5) flips on integer
-  -- halves of THIS column (probe decimals=0)
-  SELECT e.vec_id, u.i, e.v[u.i] * {scale} AS scaled
-  FROM e, UNNEST(range(1, {dim} + 1)) AS u(i)
-),
-micro AS (
-  SELECT vec_id,
-         list(CAST(floor(scaled + 0.5) AS BIGINT) ORDER BY i) AS m
-  FROM mraw GROUP BY 1
-)"""
-    if tail is not None:
-        return f"WITH {core}\n{tail}"
-    return f"""
-WITH {core},
-stage1 AS (
-  SELECT vec_id, hamming FROM scored
-  ORDER BY hamming, vec_id LIMIT {shortlist}
-),
-qm AS (SELECT m FROM micro WHERE vec_id = 0),
-rr AS (
-  SELECT s.vec_id, s.hamming,
-         CAST(list_sum(list_transform(range(1, {dim} + 1),
-              i -> (mi.m[i] - qm.m[i]) * (mi.m[i] - qm.m[i])))
-           AS BIGINT) AS l2_micro
-  FROM stage1 s JOIN micro mi USING (vec_id), qm
-)
-SELECT CAST(row_number() OVER (ORDER BY l2_micro, vec_id) AS INT) AS rank,
-       vec_id, hamming, l2_micro
-FROM rr ORDER BY l2_micro, vec_id LIMIT {k}
-"""
-
-
-def _q_kcenter_coverage(spark, sf):
-    """The 100 TB k-center shape (operators/coreset.
-    kcenter_coverage_sampled): greedy k=4 selection on a
-    deterministic Knuth-hash quarter-sample (the sampling.py split
-    hash — the greedy loop's passes touch only the sample), coverage
-    measured over the FULL corpus in exactly ONE scan. One summary
-    row of exact integers. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import coreset as CS
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    return CS.kcenter_coverage_sampled(emb, k=4, sample_frac=0.25)
-
-
-def _kcenter_coverage_sql(
-    k: int = 4, dim: int = 64, dp: int = 6, sample_frac: float = 0.25
-) -> str:
-    """DuckDB twin of _q_kcenter_coverage: the unrolled greedy chain
-    over the hash-filtered sample (the split_hash_col expression
-    re-emitted verbatim — ids are non-negative so pmod ≡ %), then the
-    full-corpus coverage aggregate with the argmin CASE keeping the
-    lowest center index on exact-integer ties (the coverage_report
-    fold's semantics)."""
-    scale = float(10**dp)
-    thresh = int(sample_frac * (1 << 32))
-    dist = (
-        "CAST(list_sum(list_transform(range(1, {dim} + 1), "
-        "i -> ({a}.q[i] - {c}.q[i]) * ({a}.q[i] - {c}.q[i]))) AS BIGINT)"
-    )
-    parts = [
-        f"""
-qv AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT))
-           AS q
-  FROM embeddings
-),
-s AS (
-  SELECT * FROM qv
-  WHERE ((vec_id % 2147483648) * 2654435761) % 4294967296 < {thresh}
-),
-c1 AS (SELECT vec_id, q FROM s ORDER BY vec_id LIMIT 1),
-d1 AS (
-  SELECT s.vec_id, s.q, {dist.format(dim=dim, a='s', c='c1')} AS mind
-  FROM s, c1
-)"""
-    ]
-    for t in range(2, k + 1):
-        prior = " UNION ALL ".join(
-            f"SELECT vec_id FROM c{s}" for s in range(1, t)
-        )
-        parts.append(
-            f"""
-c{t} AS (SELECT vec_id, q, mind FROM d{t - 1}
-        WHERE vec_id NOT IN ({prior})
-        ORDER BY mind DESC, vec_id LIMIT 1)"""
-        )
-        if t < k:
-            parts.append(
-                f"""
-d{t} AS (
-  SELECT d.vec_id, d.q,
-         least(d.mind, {dist.format(dim=dim, a='d', c='c')}) AS mind
-  FROM d{t - 1} d, c{t} c
-)"""
-            )
-    dists = ", ".join(
-        f"{dist.format(dim=dim, a='qv', c=f'c{t}')} AS e{t}"
-        for t in range(1, k + 1)
-    )
-    froms = ", ".join(f"c{t}" for t in range(1, k + 1))
-    least = "least(" + ", ".join(f"e{t}" for t in range(1, k + 1)) + ")"
-    case = " ".join(
-        f"WHEN e{t} = {least} THEN {t - 1}" for t in range(1, k)
-    )
-    parts.append(
-        f"""
-per AS (SELECT qv.vec_id, {dists} FROM qv, {froms}),
-agg AS (
-  SELECT vec_id, {least} AS mind,
-         CASE {case} ELSE {k - 1} END AS cidx
-  FROM per
-)"""
-    )
-    return f"""WITH {','.join(parts)}
-SELECT CAST(count(*) AS BIGINT) AS n_points,
-       CAST((SELECT count(*) FROM s) AS BIGINT) AS n_sample,
-       CAST(max(mind) AS BIGINT) AS max_radius_micro,
-       CAST(sum(mind) AS BIGINT) AS sum_radius_micro,
-       CAST(count(DISTINCT cidx) AS BIGINT) AS n_centers_used
-FROM agg
-"""
-
-
-def _kcenter_sql(k: int = 5, dim: int = 64, dp: int = 6) -> str:
-    """DuckDB twin of _q_kcenter_coreset: the greedy trajectory
-    unrolled to k levels — c1 = lowest id; d_t = least(d_{t-1},
-    dist to c_t); c_{t+1} = argmax d_t with ties to the lowest id,
-    EXCLUDING already-selected ids (the operator's contract).
-    All-integer distances on the micro grid, so the unrolled chain is
-    bit-identical to Spark's iterative loop."""
-    scale = float(10**dp)
-    dist = (
-        "CAST(list_sum(list_transform(range(1, {dim} + 1), "
-        "i -> ({a}.q[i] - {c}.q[i]) * ({a}.q[i] - {c}.q[i]))) AS BIGINT)"
-    )
-    parts = [
-        f"""
-qv AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT))
-           AS q
-  FROM embeddings
-),
-c1 AS (SELECT vec_id, q FROM qv ORDER BY vec_id LIMIT 1),
-d1 AS (
-  SELECT qv.vec_id, qv.q,
-         {dist.format(dim=dim, a='qv', c='c1')} AS mind
-  FROM qv, c1
-)"""
-    ]
-    for t in range(2, k + 1):
-        prior = " UNION ALL ".join(
-            f"SELECT vec_id FROM c{s}" for s in range(1, t)
-        )
-        parts.append(
-            f"""
-c{t} AS (SELECT vec_id, q, mind FROM d{t - 1}
-        WHERE vec_id NOT IN ({prior})
-        ORDER BY mind DESC, vec_id LIMIT 1)"""
-        )
-        if t < k:
-            parts.append(
-                f"""
-d{t} AS (
-  SELECT d.vec_id, d.q,
-         least(d.mind, {dist.format(dim=dim, a='d', c='c')}) AS mind
-  FROM d{t - 1} d, c{t} c
-)"""
-            )
-    selects = ["SELECT CAST(1 AS INT) AS sel_rank, vec_id, "
-               "CAST(0 AS BIGINT) AS dist_micro FROM c1"]
-    for t in range(2, k + 1):
-        selects.append(
-            f"SELECT CAST({t} AS INT) AS sel_rank, vec_id, "
-            f"CAST(mind AS BIGINT) AS dist_micro FROM c{t}"
-        )
-    union = "\nUNION ALL\n".join(selects)
-    return f"WITH {','.join(parts)}\n{union}\nORDER BY sel_rank"
-
-
-def _q_pq_quant_report(spark, sf):
-    """PQ quantization-error report (operators/pq.
-    pq_quantization_report): per-subspace reconstruction-error totals
-    under the same m=4 × ksub=4 codebook as pq_adc_topk — the
-    codebook-staleness monitor (the PQ analog of ivf_drift_report).
-    Exact integer error sums at the 4dp grid. ROUND-12-pool
-    candidate."""
-    from data_pengadaan_agent_spark.operators import pq as PQ
-
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    cb = PQ.train_pq(emb, dim=64, m=4, ksub=4, iters=2)
-    return PQ.pq_quantization_report(emb, cb)
-
-
-def _pq_quant_report_sql(m: int = 4, ksub: int = 4, dim: int = 64) -> str:
-    """DuckDB twin of _q_pq_quant_report: the SAME shared training
-    CTEs; each vector's chosen code (k_{s}) joins back to its raw
-    distance (kraw_{s}), floored to the 4dp integer grid, summed
-    exactly per subspace."""
-    dsub = dim // m
-    parts = [
-        """
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-)"""
-    ] + _pq_subspace_parts(m, ksub, dsub, src="e", lut_cte=None)
-    per_sub = "\nUNION ALL\n".join(
-        f"""
-  SELECT {s} AS sub,
-         CAST(count(*) AS BIGINT) AS n_vecs,
-         CAST(sum(CAST(floor(r.d_pre * 10000 + 0.5) AS BIGINT)) AS BIGINT)
-           AS err_micro_sum,
-         CAST(max(CAST(floor(r.d_pre * 10000 + 0.5) AS BIGINT)) AS BIGINT)
-           AS err_micro_max
-  FROM k_{s} k JOIN kraw_{s} r ON r.vec_id = k.vec_id AND r.code = k.code"""
-        for s in range(m)
-    )
-    return f"""
-WITH {",".join(parts)}
-SELECT sub, n_vecs, err_micro_sum,
-       CAST(err_micro_sum AS DOUBLE) / CAST(n_vecs AS DOUBLE)
-         AS mean_err_micro,
-       err_micro_max
-FROM ({per_sub})
-ORDER BY sub
-"""
-
-
 def _q_ann_ingest_stream_codes(spark, sf):
     """FIFTH value-checked streaming-ingest form: a maintained IVF-PQ
     index built on the base slice (vec_id < 300), then the REST of the
@@ -5471,9 +3871,9 @@ def _q_ann_ingest_stream_codes(spark, sf):
     to hashable ints: (vec_id, list, c0..c3). The twin recomputes from
     raw embeddings — training on the base slice only, encoding
     everything — so a hash match certifies the whole frozen-geometry
-    append semantics end to end. Fresh index + checkpoint per call
-    (the corpus_ingest_stream determinism convention).
-    ROUND-12-pool candidate."""
+    append semantics end to end. Fresh index + checkpoint per call;
+    the stream's source and checkpoint temp directories are removed
+    once it stops (the returned frame reads only the index)."""
     import shutil
     import tempfile
 
@@ -5487,17 +3887,22 @@ def _q_ann_ingest_stream_codes(spark, sf):
     shutil.rmtree(ack, ignore_errors=True)
     PQ.build_ivfpq_table(base, idx, dim=64, kc=4, m=4, ksub=4, iters=2)
     srcdir = tempfile.mkdtemp(prefix="ann_ingest_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_ivfpq_sink(
-        stream, idx, ack, tempfile.mkdtemp(prefix="ann_ingest_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
+    ckpt = tempfile.mkdtemp(prefix="ann_ingest_ckpt_")
+    try:
+        rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
+        stream = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .format("parquet")
+            .load(srcdir)
+        )
+        q = SW.foreach_batch_ivfpq_sink(stream, idx, ack, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(srcdir, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     codes = spark.read.parquet(idx)
     return codes.select(
         "vec_id",
@@ -5575,24 +3980,6 @@ def _q_bpe_merges(spark, sf):
     return B.learn_bpe_merges(docs, k=3)
 
 
-def _q_bpe_encode_vocab(spark, sf):
-    """Encode-side BPE (operators/bpe.learn_bpe_merges with
-    return_vocab=True): the trained tokenizer's segmentation of every
-    distinct corpus word after k=3 learned merges — (w, n, seg). The
-    merge table never leaves the cluster (no driver collection); the
-    segmentation is the same fold template both engines share.
-    ROUND-12-pool candidate."""
-    from data_pengadaan_agent_spark.operators import bpe as B
-
-    docs = load_table(spark, sf, "documents")
-    vocab = B.learn_bpe_merges(docs, k=3, return_vocab=True)
-    return vocab.select(
-        "w",
-        F.col("n").cast("bigint").alias("n"),
-        F.array_join("syms", " ").alias("seg"),
-    )
-
-
 def _bpe_merges_sql(k: int = 3, vocab: bool = False) -> str:
     """DuckDB twin of _q_bpe_merges: the identical k rounds unrolled
     as CTEs — vocab-sized pair counts, min(struct(-cnt, x, y))
@@ -5657,236 +4044,13 @@ v{r} AS (
     return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def _q_zorder_key_orders(spark, sf):
-    """Morton / Z-order clustering key over orders
-    (operators/layout.zorder_key): interleave o_custkey with the
-    order-date day number (days since 1992-01-01) — the layout key a
-    write job sorts by so parquet footer min/max stats skip files on
-    BOTH columns (multi-dimensional data skipping; see
-    tests/test_layout.py for the measured skip-fraction payoff).
-    Exact integer bit arithmetic; the twin replays the identical
-    fold emitted by layout.zorder_key_sql. ROUND-11-pool candidate."""
-    from data_pengadaan_agent_spark.operators import layout as L
-
-    orders = load_table(spark, sf, "orders")
-    day = F.datediff(F.col("o_orderdate"), F.to_date(F.lit("1992-01-01")))
-    return orders.select(
-        F.col("o_orderkey"),
-        L.zorder_key([F.col("o_custkey"), day], bits=21).alias("zkey"),
-    )
-
-
-def _zorder_key_orders_sql() -> str:
-    from data_pengadaan_agent_spark.operators.layout import zorder_key_sql
-
-    fold = zorder_key_sql(
-        ["o_custkey", "(CAST(o_orderdate AS DATE) - DATE '1992-01-01')"],
-        bits=21,
-    )
-    return f"""
-SELECT o_orderkey, CAST({fold} AS BIGINT) AS zkey FROM orders
-"""
-
-
-def _q_corpus_ingest_stream_dup_spans(spark, sf):
-    """FOURTH value-checked streaming-ingest form: readStream.text →
-    per-epoch append to the maintained gram-count index → incremental
-    duplicated-token budget gate (streaming/windows.
-    foreach_batch_dup_span_sink). Runs the PURE PRODUCTION hash path
-    (xxhash64 gram law) — the oracle twin counts RAW L-grams instead
-    of replaying a hash, so a hash collision anywhere would hash-fail
-    the row: the check verifies zero collisions as a side effect.
-    The fixture directory is one micro-batch (static dir, no
-    maxFilesPerTrigger), so the single-epoch verdicts equal the batch
-    dup budget over the DISTINCT-by-content corpus; cross-batch
-    first-wins semantics is pinned separately by pytest.
-    ROUND-11-pool candidate."""
-    import shutil
-    import tempfile
-
-    from data_pengadaan_agent_spark.operators import dupindex as DI
-    from data_pengadaan_agent_spark.sources.readers import read_text_corpus_stream
-
-    corpus = read_text_corpus_stream(spark, _ensure_text_corpus(sf))
-    idx = _warehouse_path(spark, sf, "stream_gram_counts")
-    sink = _warehouse_path(spark, sf, "stream_dup_span_sink")
-    shutil.rmtree(sink, ignore_errors=True)
-    # fresh empty index + fresh checkpoint per call: the whole corpus
-    # reprocesses as epoch 0, so repeated calls are deterministic
-    DI.build_gram_counts(
-        spark.createDataFrame([], "doc_id long, text string"),
-        idx,
-        length=8,
-        n_buckets=64,
-        arith_hash=False,
-    )
-    q = SW.foreach_batch_dup_span_sink(
-        corpus, idx, sink, tempfile.mkdtemp(prefix="dup_span_ckpt_"),
-        max_ppm=500_000,
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.read.parquet(sink).select(
-        "text", "n_tokens", "dup_tokens", "dup_ppm", "keep"
-    )
-
-
-def _corpus_ingest_dup_spans_sql(length: int = 8, max_ppm: int = 500_000) -> str:
-    """DuckDB twin of _q_corpus_ingest_stream_dup_spans: the
-    DISTINCT-by-content collapsed corpus (the streaming relational
-    model shared by every ingest-stream twin), RAW L-gram occurrence
-    counts (no hash — stronger than replaying one), per-text
-    gap-merge spans, exact-integer ppm, keep threshold."""
-    return f"""
-WITH corpus AS (
-  SELECT DISTINCT regexp_replace(text, '[\\r\\n]+', ' ', 'g') AS text
-  FROM documents WHERE length(trim(text)) > 0
-),
-d AS (
-  SELECT text, {_DUCK_TOKS} AS toks FROM corpus
-),
-g AS (
-  SELECT text, CAST(i AS BIGINT) AS pos,
-         array_to_string(toks[CAST(i + 1 AS INT):CAST(i + {length} AS INT)], ' ') AS g
-  FROM d, unnest(range(greatest(len(toks) - {length} + 1, 0))) AS u(i)
-),
-occ AS (
-  SELECT g, count(*) AS n_occ FROM g GROUP BY 1
-),
-dup AS (
-  SELECT g.text, g.pos FROM g JOIN occ USING (g) WHERE occ.n_occ >= 2
-),
-fl AS (
-  SELECT text, pos,
-         CASE WHEN lag(pos) OVER (PARTITION BY text ORDER BY pos) IS NULL
-                OR pos > lag(pos) OVER (PARTITION BY text ORDER BY pos)
-                         + {length}
-              THEN 1 ELSE 0 END AS nw
-  FROM dup
-),
-runs AS (
-  SELECT text, pos,
-         sum(nw) OVER (PARTITION BY text ORDER BY pos
-                       ROWS UNBOUNDED PRECEDING) AS run
-  FROM fl
-),
-spans AS (
-  SELECT text,
-         max(pos) + {length - 1} - min(pos) + 1 AS span_len
-  FROM runs GROUP BY text, run
-),
-per AS (
-  SELECT text, CAST(sum(span_len) AS BIGINT) AS dup_tokens
-  FROM spans GROUP BY 1
-)
-SELECT d.text,
-       CAST(len(d.toks) AS BIGINT) AS n_tokens,
-       coalesce(per.dup_tokens, 0) AS dup_tokens,
-       CAST((1000000 * coalesce(per.dup_tokens, 0))
-            // greatest(CAST(len(d.toks) AS BIGINT), 1) AS BIGINT) AS dup_ppm,
-       CAST((1000000 * coalesce(per.dup_tokens, 0))
-            // greatest(CAST(len(d.toks) AS BIGINT), 1) AS BIGINT)
-         <= {max_ppm} AS keep
-FROM d LEFT JOIN per USING (text)
-"""
-
-
-def _q_dup_run_pairs(spark, sf):
-    """Exact maximal shared token runs between two corpora
-    (operators/textan.dup_run_pairs, the diagonal construction):
-    corpus A = the doc_id%4==0 slice, corpus B = the same docs
-    re-identified (+1000000) with a 2-token prelude — every A doc
-    shares its FULL text run with its B twin at positions shifted by
-    2, plus whatever organic duplication the fixture carries.
-    length=6, max_df=50. ROUND-11-pool candidate."""
-    docs = load_table(spark, sf, "documents")
-    a = docs.filter(F.col("doc_id") % 4 == 0).select("doc_id", "text")
-    b = a.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.lit("pre1 pre2 "), F.col("text")).alias("text"),
-    )
-    return X.dup_run_pairs(a, b, length=6, max_df=50)
-
-
-def _dup_run_pairs_sql(length: int = 6, max_df: int = 50) -> str:
-    """DuckDB twin of _q_dup_run_pairs: same grams, same 62-bit
-    two-channel hash, same per-side document-frequency caps, same
-    (a, b, a_pos−b_pos) diagonal clustering of consecutive matches."""
-    p131 = _DUCK_POLY.format(s="g", mult=131)
-    p137 = _DUCK_POLY.format(s="g", mult=137)
-    return f"""
-WITH corpus_a AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
-),
-corpus_b AS (
-  SELECT doc_id + 1000000 AS doc_id, 'pre1 pre2 ' || text AS text
-  FROM documents WHERE doc_id % 4 = 0
-),
-ga AS (
-  SELECT doc_id AS a_id, CAST(i AS BIGINT) AS a_pos,
-         (({p131}) * 2147483647 + ({p137})) AS h
-  FROM (
-    SELECT doc_id, {_DUCK_TOKS} AS toks FROM corpus_a
-  ), unnest(range(greatest(len(toks) - {length} + 1, 0))) AS u(i),
-  LATERAL (SELECT array_to_string(
-             toks[CAST(i + 1 AS INT):CAST(i + {length} AS INT)], ' ') AS g)
-),
-gb AS (
-  SELECT doc_id AS b_id, CAST(i AS BIGINT) AS b_pos,
-         (({p131}) * 2147483647 + ({p137})) AS h
-  FROM (
-    SELECT doc_id, {_DUCK_TOKS} AS toks FROM corpus_b
-  ), unnest(range(greatest(len(toks) - {length} + 1, 0))) AS u(i),
-  LATERAL (SELECT array_to_string(
-             toks[CAST(i + 1 AS INT):CAST(i + {length} AS INT)], ' ') AS g)
-),
-fa AS (
-  SELECT ga.* FROM ga JOIN (
-    SELECT h FROM ga GROUP BY h HAVING count(DISTINCT a_id) <= {max_df}
-  ) USING (h)
-),
-fb AS (
-  SELECT gb.* FROM gb JOIN (
-    SELECT h FROM gb GROUP BY h HAVING count(DISTINCT b_id) <= {max_df}
-  ) USING (h)
-),
-m AS (
-  SELECT fa.a_id, fb.b_id, fa.a_pos, fb.b_pos,
-         fa.a_pos - fb.b_pos AS diag
-  FROM fa JOIN fb USING (h)
-),
-fl AS (
-  SELECT a_id, b_id, diag, a_pos,
-         CASE WHEN lag(a_pos) OVER (PARTITION BY a_id, b_id, diag
-                                    ORDER BY a_pos) IS NULL
-                OR a_pos > lag(a_pos) OVER (PARTITION BY a_id, b_id, diag
-                                            ORDER BY a_pos) + 1
-              THEN 1 ELSE 0 END AS nw
-  FROM m
-),
-runs AS (
-  SELECT a_id, b_id, diag, a_pos,
-         sum(nw) OVER (PARTITION BY a_id, b_id, diag ORDER BY a_pos
-                       ROWS UNBOUNDED PRECEDING) AS run
-  FROM fl
-)
-SELECT a_id, b_id,
-       min(a_pos) AS a_start,
-       max(a_pos) + {length - 1} AS a_end,
-       min(a_pos) - diag AS b_start,
-       max(a_pos) + {length - 1} - diag AS b_end,
-       max(a_pos) + {length - 1} - min(a_pos) + 1 AS run_tokens
-FROM runs GROUP BY a_id, b_id, diag, run
-HAVING max(a_pos) + {length - 1} - min(a_pos) + 1 >= {length}
-"""
-
-
 def _q_bm25_index_retrieval(spark, sf):
     """Batched BM25 over the MATERIALIZED postings index
-    (operators/lexindex.bm25_from_index): same query batch and k as
-    bm25_retrieval_batch, but the corpus is tokenized once at ingest
-    into a bucket-partitioned inverted index and the query scan is
-    partition-pruned to the query terms' buckets. The oracle twin is
+    (operators/lexindex.bm25_from_index): the query batch of the
+    from-scratch textan.bm25_retrieval_batch, but the corpus is
+    tokenized once at ingest into a bucket-partitioned inverted index
+    and the query scan is partition-pruned to the query terms'
+    buckets. The oracle twin is
     _bm25_retrieval_batch_sql — the index path must reproduce the
     from-scratch path bit-exactly (shared textan.bm25_int_coeffs
     arithmetic). ROUND-11-pool candidate."""
@@ -6008,40 +4172,6 @@ FROM spans WHERE doc_id >= 1000000
 """
 
 
-def _q_lexical_diversity(spark, sf):
-    """Integer-exact lexical-richness signals (operators/textan.
-    lexical_diversity): TTR / hapax share / Simpson repeat
-    concentration as parts-per-million integers — no logs, no
-    doubles, bit-exact by construction. ROUND-11-pool candidate."""
-    docs = load_table(spark, sf, "documents")
-    return X.lexical_diversity(docs)
-
-
-_LEXICAL_DIVERSITY_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, unnest({_DUCK_TOKS}) AS t FROM documents
-),
-c AS (
-  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c FROM tk GROUP BY 1, 2
-),
-agg AS (
-  SELECT doc_id,
-         CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_types,
-         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-         CAST(sum(c * (c - 1)) AS BIGINT) AS rep
-  FROM c GROUP BY 1
-)
-SELECT doc_id, n_tokens, n_types, n_hapax,
-       CAST((1000000 * n_types) // n_tokens AS BIGINT) AS ttr_ppm,
-       CAST((1000000 * n_hapax) // n_types AS BIGINT) AS hapax_ppm,
-       CAST(CASE WHEN n_tokens < 2 THEN 0
-            ELSE (1000000 * rep) // (n_tokens * (n_tokens - 1))
-            END AS BIGINT) AS simpson_ppm
-FROM agg
-"""
-
-
 def _trgm_index_path(spark, sf):
     """Shared ingest-once trigram index over documents (registry count
     gates the rebuild, like the postings/gram-count indexes)."""
@@ -6088,57 +4218,6 @@ SELECT pats.pattern, d.doc_id
 FROM documents d CROSS JOIN pats
 WHERE contains(lower(d.text), lower(pats.pattern))
 ORDER BY pats.pattern, d.doc_id
-"""
-
-
-def _q_trgm_similar(spark, sf):
-    """pg_trgm threshold similarity from the index alone
-    (operators/trgm.trgm_similar): sim_ppm = 1e6·|A∩B| DIV |A∪B| over
-    DISTINCT trigram sets, exact integer end to end; the intersection
-    folds from the hash-pruned postings slice, |A| off the registry —
-    no text scan at all. The twin recomputes the gram SETS from raw
-    text (no hash replay), so the hash-match also proves zero xxhash64
-    gram collisions on the fixture, the dup_spans discipline.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import trgm as TG
-
-    path, _ = _trgm_index_path(spark, sf)
-    return TG.trgm_similar(
-        spark, path, "the fast key order sort table scan merge",
-        min_sim_ppm=250_000,
-    )
-
-
-def _trgm_similar_sql(pattern: str, min_sim_ppm: int) -> str:
-    """DuckDB twin of _q_trgm_similar: distinct interior 3-grams of
-    lower(text), set intersection with the pattern's gram set, same
-    integer-DIV ppm. range(1, greatest(len-1, 1)) spells the same
-    short-string guard as char_grams' when() (DuckDB range is empty
-    when stop <= start; Spark sequence would DESCEND — the round-9
-    lesson lives on the Spark side)."""
-    return f"""
-WITH q AS (
-  SELECT DISTINCT substr(p, CAST(i AS INT), 3) AS g
-  FROM (SELECT lower('{pattern}') AS p),
-       unnest(range(1, greatest(len(p) - 1, 1))) AS u(i)
-),
-dg AS (
-  SELECT DISTINCT doc_id, substr(lt, CAST(i AS INT), 3) AS g
-  FROM (SELECT doc_id, lower(text) AS lt FROM documents),
-       unnest(range(1, greatest(len(lt) - 1, 1))) AS u(i)
-),
-nd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM dg GROUP BY doc_id),
-nq AS (SELECT CAST(count(*) AS BIGINT) AS n_q FROM q),
-it AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS inter
-  FROM dg JOIN q USING (g) GROUP BY doc_id
-)
-SELECT it.doc_id, it.inter, nd.n_grams,
-       CAST((1000000 * it.inter) // (nd.n_grams + nq.n_q - it.inter)
-            AS BIGINT) AS sim_ppm
-FROM it JOIN nd USING (doc_id) CROSS JOIN nq
-WHERE (1000000 * it.inter) // (nd.n_grams + nq.n_q - it.inter) >= {min_sim_ppm}
-ORDER BY sim_ppm DESC, it.doc_id
 """
 
 
@@ -6193,36 +4272,6 @@ FROM u a JOIN u b
  AND abs(len(a.nm) - len(b.nm)) <= 1
 WHERE levenshtein(a.nm, b.nm) <= 1
 ORDER BY a_id, b_id
-"""
-
-
-def _q_weighted_sample(spark, sf):
-    """Sequential Poisson sampling (operators/sampling.weighted_sample,
-    Ohlsson 1998): keep the 100 documents with the smallest
-    knuth_hash(id)/n_chars priority keys — selection probability
-    proportional to length, membership a pure function of (id, weight).
-    Cross-engine equality is STRUCTURAL (one exact int→double
-    conversion + one IEEE division, ties broken by id identically), so
-    the boundary needs no margin probe — a tie cannot reorder.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import sampling as SA
-
-    docs = load_table(spark, sf, "documents")
-    return SA.weighted_sample(docs, "n_chars", 100).select(
-        "doc_id", F.col("n_chars").cast("bigint").alias("weight")
-    )
-
-
-_WEIGHTED_SAMPLE_SQL = """
-WITH k AS (
-  SELECT doc_id, n_chars,
-         CAST(((doc_id % 2147483648) * 2654435761) % 4294967296 AS DOUBLE)
-           / CAST(n_chars AS DOUBLE) AS key
-  FROM documents
-  WHERE n_chars IS NOT NULL AND n_chars > 0
-)
-SELECT doc_id, CAST(n_chars AS BIGINT) AS weight
-FROM k ORDER BY key ASC, doc_id ASC LIMIT 100
 """
 
 
@@ -6333,281 +4382,6 @@ SELECT event_type, q_ppm, bin,
        cum_cnt, total
 FROM hit WHERE rk = 1
 ORDER BY event_type, q_ppm
-"""
-
-
-def _q_exact_quantiles(spark, sf):
-    """Exact distributed quantile VALUES by iterative histogram
-    refinement (operators/selection.exact_quantiles — the
-    distributed-selection classic): p50/p99 of event value per
-    event_type, nearest-rank, with NO per-group global sort — each
-    pass is one scan folding to ≤ groups·|q|·n_bins counter rows, the
-    range narrows ~n_bins× per pass, and only the residual slice is
-    ever sorted. Slices narrow to OBSERVED bin extremes (inclusive),
-    so float rounding at arithmetic bin edges can never leak a
-    counted row out of the slice. The twin computes the same
-    nearest-rank definition by direct per-group ranking — value-exact
-    equality, doubles straight from the data. ROUND-13-pool
-    candidate."""
-    from data_pengadaan_agent_spark.operators import selection as SEL
-
-    ev = load_table(spark, sf, "events")
-    return SEL.exact_quantiles(
-        ev, "event_type", "value", [500_000, 990_000], n_bins=64, max_passes=8
-    )
-
-
-_EXACT_QUANTILES_SQL = """
-WITH t AS (
-  SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-  FROM events WHERE value IS NOT NULL
-),
-n AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY g),
-r AS (
-  SELECT g, v,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY v) AS BIGINT) AS rn
-  FROM t
-),
-q AS (SELECT CAST(unnest([500000, 990000]) AS INT) AS q_ppm),
-tgt AS (
-  SELECT n.g, q.q_ppm,
-         (CAST(q.q_ppm AS BIGINT) * n.n + 999999) // 1000000 AS rank, n.n
-  FROM n, q
-)
-SELECT tgt.g AS event_type, tgt.q_ppm, r.v AS value,
-       CAST(tgt.rank AS BIGINT) AS rank, tgt.n
-FROM tgt JOIN r ON r.g = tgt.g AND r.rn = tgt.rank
-ORDER BY event_type, q_ppm
-"""
-
-
-def _q_skyline(spark, sf):
-    """2-D skyline / pareto front (operators/relational.skyline_2d,
-    Börzsönyi et al. ICDE 2001): the maximal (value, props-length)
-    events of the %50 slice. Distributed shape: distinct-x collapse →
-    range-partitioned LOCAL running max + a numPartitions-row
-    boundary-prefix broadcast — never the textbook one-partition
-    global window. Twin is the definitional NOT EXISTS dominance test
-    (independent implementation) on the parameter-bounded slice.
-    ROUND-13-pool candidate."""
-    ev = load_table(spark, sf, "events")
-    pts = ev.filter(
-        (F.col("event_id") % 50 == 0)
-        & F.col("value").isNotNull()
-        & F.col("props").isNotNull()
-    ).select(
-        "event_id",
-        F.col("value").cast("double").alias("x"),
-        F.length("props").cast("bigint").alias("y"),
-    )
-    return (
-        R.skyline_2d(pts, "x", "y")
-        .select("event_id", "x", "y")
-        .orderBy("event_id")
-    )
-
-
-_SKYLINE_SQL = """
-WITH p AS (
-  SELECT event_id, CAST(value AS DOUBLE) AS x,
-         CAST(len(props) AS BIGINT) AS y
-  FROM events
-  WHERE event_id % 50 = 0 AND value IS NOT NULL AND props IS NOT NULL
-)
-SELECT a.event_id, a.x, a.y FROM p a
-WHERE NOT EXISTS (
-  SELECT 1 FROM p b
-  WHERE b.x >= a.x AND b.y >= a.y AND (b.x > a.x OR b.y > a.y)
-)
-ORDER BY a.event_id
-"""
-
-
-def _q_group_trend(spark, sf):
-    """Exact per-group OLS trend (operators/aggregates.group_trend):
-    is each priority's order spend rising — slope of cents over epoch
-    days with fit quality, all sufficient statistics folded as
-    DECIMAL(38,0) (order-free), slope_ppm one exact integer division,
-    r2_ppm the staged integer recipe both engines evaluate
-    identically (truncation-toward-zero on negatives pinned by the
-    TPC-H fixture's near-zero, sign-varying slopes).
-    ROUND-13-pool candidate."""
-    orders = load_table(spark, sf, "orders")
-    pts = orders.select(
-        "o_orderpriority",
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        ).alias("x"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("y"),
-    )
-    return A.group_trend(pts, "o_orderpriority", "x", "y")
-
-
-_GROUP_TREND_SQL = """
-WITH p AS (
-  SELECT o_orderpriority AS g,
-         CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(o_orderdate AS DATE)) AS HUGEINT) AS x,
-         CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-              AS HUGEINT) AS y
-  FROM orders
-  WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
-),
-a AS (
-  SELECT g, CAST(count(*) AS HUGEINT) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-         sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM p GROUP BY g
-)
-SELECT g AS o_orderpriority,
-       CAST(n AS BIGINT) AS n,
-       CAST(CASE WHEN (n * sxx - sx * sx) = 0 THEN NULL
-            ELSE (1000000 * (n * sxy - sx * sy)) // (n * sxx - sx * sx)
-            END AS BIGINT) AS slope_ppm,
-       CAST(CASE WHEN (n * sxx - sx * sx) = 0 OR (n * syy - sy * sy) = 0
-            THEN NULL
-            ELSE (((1000000 * (n * sxy - sx * sy)) // (n * sxx - sx * sx))
-                  * (n * sxy - sx * sy)) // (n * syy - sy * sy)
-            END AS BIGINT) AS r2_ppm
-FROM a ORDER BY o_orderpriority
-"""
-
-
-def _q_collocations(spark, sf):
-    """Exact-lift collocation mining (operators/textan.collocations):
-    top-20 adjacent bigrams by 10⁶·N·c(w1w2) DIV (c(w1)·c(w2)) with
-    min_count 3 — PMI's ranking without PMI's log, so the twin is
-    bit-exact integer arithmetic. ROUND-13-pool candidate."""
-    docs = load_table(spark, sf, "documents")
-    return X.collocations(docs, k=20, min_count=3)
-
-
-_COLLOCATIONS_SQL = f"""
-WITH tk AS (
-  SELECT unnest({_DUCK_TOKS}) AS w FROM documents
-),
-n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM tk),
-c1 AS (SELECT w, CAST(count(*) AS HUGEINT) AS c FROM tk GROUP BY w),
-bg AS (
-  SELECT b AS bigram, CAST(count(*) AS HUGEINT) AS cnt
-  FROM (
-    SELECT array_to_string(toks[CAST(i AS INT):CAST(i + 1 AS INT)], ' ') AS b
-    FROM (SELECT {_DUCK_TOKS} AS toks FROM documents),
-         unnest(range(1, greatest(len(toks), 1))) AS u(i)
-  )
-  GROUP BY b HAVING count(*) >= 3
-),
-lifted AS (
-  SELECT bg.bigram, CAST(bg.cnt AS BIGINT) AS cnt,
-         CAST((1000000 * n.n * bg.cnt) // (a.c * b.c) AS BIGINT) AS lift_ppm
-  FROM bg
-  JOIN c1 a ON a.w = string_split(bg.bigram, ' ')[1]
-  JOIN c1 b ON b.w = string_split(bg.bigram, ' ')[2]
-  CROSS JOIN n
-)
-SELECT bigram, cnt, lift_ppm,
-       CAST(row_number() OVER (ORDER BY lift_ppm DESC, bigram) AS INT) AS rank
-FROM lifted
-ORDER BY lift_ppm DESC, bigram LIMIT 20
-"""
-
-
-def _q_trgm_ingest_stream(spark, sf):
-    """Streaming trigram-index ingest, hash-certified end to end (the
-    SIXTH streaming form as a driver row, the ann_ingest_stream_codes
-    pattern on the lexical side): the index is built on the
-    doc_id%3!=0 base slice, the %3==0 remainder arrives through
-    foreach_batch_trgm_sink, and the query is substring_search over
-    the union — whose oracle twin is the DIRECT substring scan over
-    ALL documents, so the hash-match certifies build + streamed
-    append + pruned search in one row. ROUND-13-pool candidate."""
-    import shutil
-    import tempfile
-
-    from data_pengadaan_agent_spark.operators import trgm as TG
-
-    docs = load_table(spark, sf, "documents")
-    base = docs.filter(F.col("doc_id") % 3 != 0)
-    rest = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-    idx = _warehouse_path(spark, sf, "stream_trgm")
-    ack = _warehouse_path(spark, sf, "stream_trgm_ack")
-    shutil.rmtree(ack, ignore_errors=True)
-    TG.build_trgm_index(base, idx, n_buckets=64)
-    srcdir = tempfile.mkdtemp(prefix="trgm_ingest_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_trgm_sink(
-        stream, idx, ack, tempfile.mkdtemp(prefix="trgm_ingest_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
-    return TG.substring_search(spark, idx, docs, ["window window"])
-
-
-_TRGM_INGEST_STREAM_SQL = """
-SELECT 'window window' AS pattern, doc_id
-FROM documents
-WHERE contains(lower(text), 'window window')
-ORDER BY doc_id
-"""
-
-
-def _q_hist_cube_stream(spark, sf):
-    """Streaming histogram-cube ingest, hash-certified end to end (the
-    EIGHTH streaming form as a driver row): cube built on the
-    event_id%3!=0 base, the remainder streamed through
-    foreach_batch_hist_cube_sink (epoch-id batch registry =
-    exactly-once counts), rollup read back — the twin is direct
-    bucketing over ALL events, exact integers. ROUND-13-pool
-    candidate."""
-    import shutil
-    import tempfile
-
-    from data_pengadaan_agent_spark.operators import histcube as HC
-
-    ev = load_table(spark, sf, "events").select(
-        "event_id", "event_type", "value"
-    )
-    base = ev.filter(F.col("event_id") % 3 != 0)
-    rest = ev.filter(F.col("event_id") % 3 == 0)
-    path = _warehouse_path(spark, sf, "stream_hist_cube")
-    shutil.rmtree(path, ignore_errors=True)
-    HC.build_hist_cube(
-        base, path, dims=["event_type"], value_col="value",
-        lo=0.0, hi=500.0, n_bins=50,
-    )
-    srcdir = tempfile.mkdtemp(prefix="histcube_src_")
-    rest.coalesce(1).write.mode("overwrite").parquet(srcdir)
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, value double")
-        .format("parquet")
-        .load(srcdir)
-    )
-    q = SW.foreach_batch_hist_cube_sink(
-        stream, path, tempfile.mkdtemp(prefix="histcube_ckpt_")
-    )
-    q.processAllAvailable()
-    q.stop()
-    return HC.hist_rollup(spark, path, ["event_type"])
-
-
-_HIST_CUBE_STREAM_SQL = """
-WITH b AS (
-  SELECT event_type,
-         CAST(greatest(0, least(49,
-           CAST(floor((CAST(value AS DOUBLE) - 0.0) / 10.0) AS BIGINT)
-         )) AS INT) AS bin
-  FROM events WHERE value IS NOT NULL
-)
-SELECT event_type, bin, CAST(count(*) AS BIGINT) AS cnt
-FROM b GROUP BY 1, 2
-ORDER BY event_type, bin
 """
 
 
@@ -6776,37 +4550,6 @@ ORDER BY pv.triangles DESC, pv.vertex
 """
 
 
-def _q_graph_pagerank(spark, sf):
-    """Deterministic integer PageRank, 2 iterations, top 20
-    (operators/graph.pagerank_int): micro-unit ranks, rank DIV degree
-    contributions, 150000 + 85·sum DIV 100 damping — bit-identical on
-    any engine/partitioning because no float ever enters. The twin
-    unrolls both iterations in SQL (the kmeans-twin pattern).
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import graph as G
-
-    edges = G.copurchase_edges(load_table(spark, sf, "lineitem"), min_co=2)
-    return G.pagerank_int(edges, iters=2, top_k=20)
-
-
-_GRAPH_PAGERANK_SQL = f"""
-WITH {_GRAPH_EDGES_CTE},
-dirs AS (SELECT u s, v d FROM ed UNION ALL SELECT v, u FROM ed),
-r0 AS (SELECT vertex, CAST(1000000 AS BIGINT) AS rank_ppm FROM deg),
-c1 AS (SELECT d.d vertex, sum(r0.rank_ppm // deg.degree) s
-       FROM r0 JOIN deg USING (vertex) JOIN dirs d ON d.s = r0.vertex GROUP BY 1),
-r1 AS (SELECT deg.vertex,
-              CAST(150000 + 85 * coalesce(c1.s, 0) // 100 AS BIGINT) AS rank_ppm
-       FROM deg LEFT JOIN c1 USING (vertex)),
-c2 AS (SELECT d.d vertex, sum(r1.rank_ppm // deg.degree) s
-       FROM r1 JOIN deg USING (vertex) JOIN dirs d ON d.s = r1.vertex GROUP BY 1),
-r2 AS (SELECT deg.vertex,
-              CAST(150000 + 85 * coalesce(c2.s, 0) // 100 AS BIGINT) AS rank_ppm
-       FROM deg LEFT JOIN c2 USING (vertex))
-SELECT vertex, rank_ppm FROM r2 ORDER BY rank_ppm DESC, vertex LIMIT 20
-"""
-
-
 def _q_dq_report(spark, sf):
     """Declarative data-quality suite over orders (operators/dq):
     seven constraints — null, uniqueness, value domain, range, regex,
@@ -6871,61 +4614,6 @@ SELECT rule, violations, checked FROM (
          CAST(count(*) FILTER (o_custkey IS NOT NULL) AS BIGINT) FROM t
 )
 ORDER BY rule
-"""
-
-
-def _q_retention_cohorts(spark, sf):
-    """Daily cohort retention matrix over events
-    (operators/relational.retention_cohorts, grain='day'): integer
-    epoch-day arithmetic, distinct (user, day) then min-day per user
-    — both exchanges on the user key. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import relational as R
-
-    return R.retention_cohorts(load_table(spark, sf, "events"), grain="day")
-
-
-_RETENTION_COHORTS_SQL = """
-WITH active AS (
-  SELECT DISTINCT user_id u,
-         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) m
-  FROM events
-),
-first AS (SELECT u, min(m) c FROM active GROUP BY 1)
-SELECT DATE '1970-01-01' + CAST(c AS INT) AS cohort_start,
-       CAST(m - c AS BIGINT) AS offset_periods,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM active JOIN first USING (u)
-GROUP BY 1, 2
-ORDER BY cohort_start, offset_periods
-"""
-
-
-def _q_event_transitions(spark, sf):
-    """First-order behavior transition matrix
-    (operators/relational.event_transitions): per-user lag under the
-    total (ts, event_id) order, exact integer outgoing-share ppm.
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import relational as R
-
-    return R.event_transitions(load_table(spark, sf, "events"))
-
-
-_EVENT_TRANSITIONS_SQL = """
-WITH seq AS (
-  SELECT event_type AS to_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS from_type
-  FROM events
-),
-pairs AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) n
-  FROM seq WHERE from_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n,
-       CAST(n * 1000000 // sum(n) OVER (PARTITION BY from_type) AS BIGINT)
-         AS prob_ppm
-FROM pairs
-ORDER BY from_type, to_type
 """
 
 
@@ -6997,85 +4685,6 @@ ORDER BY langs.lang, ks.key
 """
 
 
-def _q_event_ngrams(spark, sf):
-    """Behavioral sequence mining, n-gram tier
-    (operators/relational.event_ngrams): contiguous 3-step event-type
-    sequences per user under the total (ts, event_id) order, support
-    >= 2. One user-keyed window pass (two leads) + one small count.
-    Pattern emitted as 'a>b>c' for the driver hash (the op returns
-    the array). ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import relational as R
-
-    out = R.event_ngrams(load_table(spark, sf, "events"), n=3, min_support=2)
-    return out.select(
-        F.array_join("pattern", ">").alias("pattern"), "support"
-    ).orderBy(F.desc("support"), "pattern")
-
-
-_EVENT_NGRAMS_SQL = """
-WITH seq AS (
-  SELECT event_type t0,
-         lead(event_type, 1) OVER w t1,
-         lead(event_type, 2) OVER w t2
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT t0 || '>' || t1 || '>' || t2 AS pattern,
-       CAST(count(*) AS BIGINT) AS support
-FROM seq WHERE t1 IS NOT NULL AND t2 IS NOT NULL
-GROUP BY 1 HAVING count(*) >= 2
-ORDER BY support DESC, pattern
-"""
-
-
-def _q_peak_concurrency(spark, sf):
-    """Exact interval-overlap sweep
-    (operators/relational.concurrency_timeline): each event holds a
-    5-minute half-open activity interval; +1/−1 deltas cumulative-sum
-    per event_type (one window shuffle, O(2·rows) points — never a
-    per-minute explode); reported as peak simultaneous activity per
-    type. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import relational as R
-
-    ev = load_table(spark, sf, "events").select(
-        "event_type",
-        F.col("ts").alias("start"),
-        (F.col("ts") + F.expr("INTERVAL 5 MINUTES")).alias("end"),
-    )
-    tl = R.concurrency_timeline(ev, "start", "end", ["event_type"])
-    return (
-        tl.groupBy("event_type")
-        .agg(
-            F.max("concurrent").cast("bigint").alias("peak_concurrent"),
-            F.count(F.lit(1)).cast("bigint").alias("n_points"),
-        )
-        .orderBy("event_type")
-    )
-
-
-_PEAK_CONCURRENCY_SQL = """
-WITH iv AS (
-  SELECT event_type, ts AS s, ts + INTERVAL 5 MINUTE AS e FROM events
-),
-pts AS (
-  SELECT event_type, s AS ts, 1 AS d FROM iv
-  UNION ALL SELECT event_type, e, -1 FROM iv
-),
-merged AS (
-  SELECT event_type, ts, sum(d) AS delta FROM pts GROUP BY 1, 2
-),
-tl AS (
-  SELECT event_type, ts,
-         sum(delta) OVER (PARTITION BY event_type ORDER BY ts
-                          ROWS UNBOUNDED PRECEDING) AS concurrent
-  FROM merged
-)
-SELECT event_type, CAST(max(concurrent) AS BIGINT) AS peak_concurrent,
-       CAST(count(*) AS BIGINT) AS n_points
-FROM tl GROUP BY 1 ORDER BY event_type
-"""
-
-
 def _q_incremental_components(spark, sf):
     """Incremental connected-components maintenance
     (operators/graph.merge_components): CC over the first-150-docs
@@ -7108,144 +4717,6 @@ def _q_incremental_components(spark, sf):
     return merged.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep")
     ).orderBy("doc_id")
-
-
-def _zonemap_table_path(spark, sf):
-    """Ingest-once: orders range-clustered on o_totalprice into 16
-    files + a persisted zone map over that column (the layout that
-    makes a price box skip most files)."""
-    from data_pengadaan_agent_spark.operators import zonemap as ZM
-
-    orders = load_table(spark, sf, "orders")
-    data_p = _warehouse_path(spark, sf, "orders_ranged")
-    zm_p = _warehouse_path(spark, sf, "orders_zonemap")
-    n = orders.count()
-    try:
-        fresh = (
-            spark.read.parquet(data_p).count() == n
-            and ZM._read_meta(spark, zm_p) == ["o_totalprice"]
-            and ZM.audit_zonemap(spark, data_p, zm_p).count() == 0
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        orders.repartitionByRange(16, "o_totalprice").write.mode(
-            "overwrite"
-        ).parquet(data_p)
-        ZM.build_zonemap(spark, data_p, zm_p, ["o_totalprice"])
-    return data_p, zm_p
-
-
-def _q_zonemap_scan(spark, sf):
-    """Zone-map pruned box scan (operators/zonemap — the NINTH index
-    family: file-level data skipping as a persisted stats TABLE; the
-    pruned file list comes from kilobytes of zone rows, and only the
-    surviving range-clustered files are opened). The twin is the
-    DIRECT filtered scan of the base table — lossless-skipping is the
-    certified equality (semantic-twin class). ROUND-13-pool
-    candidate."""
-    from data_pengadaan_agent_spark.operators import zonemap as ZM
-
-    data_p, zm_p = _zonemap_table_path(spark, sf)
-    out = ZM.zonemap_pruned_scan(
-        spark, data_p, zm_p, {"o_totalprice": (400_000.0, 450_000.0)}
-    )
-    return out.select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
-
-
-_ZONEMAP_SCAN_SQL = """
-SELECT o_orderkey, o_totalprice
-FROM orders
-WHERE o_totalprice >= 400000.0 AND o_totalprice <= 450000.0
-ORDER BY o_orderkey
-"""
-
-
-def _q_change_point(spark, sf):
-    """Offline CUSUM change-point per event_type
-    (operators/drift.change_point): argmax_k |n·prefix_k − k·S| over
-    the milli-gridded value series under the total (ts, event_id)
-    order — the cumulative deviation kept in cross-multiplied BIGINT
-    form so no mean is ever divided; earliest k wins ties. One window
-    shuffle per group. ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import drift as DR
-
-    return DR.change_point(
-        load_table(spark, sf, "events"), ["event_type"], "ts", "value", "event_id"
-    )
-
-
-_CHANGE_POINT_SQL = """
-WITH g AS (
-  SELECT event_type, ts, event_id,
-         CAST(floor(CAST(value AS DOUBLE) * 1000 + 0.5) AS BIGINT) AS x
-  FROM events WHERE value IS NOT NULL
-),
-r AS (
-  SELECT event_type, ts, event_id, x,
-         row_number() OVER w AS k,
-         sum(x) OVER (PARTITION BY event_type ORDER BY ts, event_id
-                      ROWS UNBOUNDED PRECEDING) AS prefix,
-         count(*) OVER (PARTITION BY event_type) AS n,
-         sum(x) OVER (PARTITION BY event_type) AS s
-  FROM g
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-),
-d AS (
-  SELECT event_type, ts, k, n, abs(n * prefix - k * s) AS dev,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY abs(n * prefix - k * s) DESC, k) AS pick
-  FROM r
-)
-SELECT event_type, ts AS cp_ts, CAST(k AS BIGINT) AS cp_k,
-       CAST(n AS BIGINT) AS n, CAST(dev AS BIGINT) AS score
-FROM d WHERE pick = 1
-ORDER BY event_type
-"""
-
-
-def _q_hist_drift(spark, sf):
-    """Exact-integer distribution drift (operators/drift.
-    histogram_drift): L1 distance between the click- and view-event
-    value share vectors over 20 structural bins — the PSI/KL question
-    without the log (0 = identical shape, 2·10^6 = disjoint).
-    ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import drift as DR
-
-    ev = load_table(spark, sf, "events")
-    return DR.histogram_drift(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "view"),
-        "value",
-        lo=0.0,
-        hi=400.0,
-        n_bins=20,
-    )
-
-
-_HIST_DRIFT_SQL = """
-WITH a AS (
-  SELECT CAST(greatest(0, least(19,
-           CAST(floor((CAST(value AS DOUBLE) - 0.0) / 20.0) AS BIGINT)
-         )) AS INT) AS bin, count(*) AS cnt
-  FROM events WHERE event_type = 'click' AND value IS NOT NULL GROUP BY 1
-),
-b AS (
-  SELECT CAST(greatest(0, least(19,
-           CAST(floor((CAST(value AS DOUBLE) - 0.0) / 20.0) AS BIGINT)
-         )) AS INT) AS bin, count(*) AS cnt
-  FROM events WHERE event_type = 'view' AND value IS NOT NULL GROUP BY 1
-),
-j AS (
-  SELECT coalesce(a.cnt, 0) AS ca, coalesce(b.cnt, 0) AS cb
-  FROM a FULL JOIN b USING (bin)
-),
-t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM j)
-SELECT CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-       CAST(sum(abs(j.ca * 1000000 // t.na - j.cb * 1000000 // t.nb))
-            AS BIGINT) AS drift_ppm
-FROM j, t GROUP BY t.na, t.nb
-"""
 
 
 def _q_kmv_distinct(spark, sf):
@@ -7432,55 +4903,6 @@ ORDER BY f.event_id
 """
 
 
-def _q_valueset_scan(spark, sf):
-    """Categorical file-skipping through the value-set index
-    (operators/zonemap.valueset_pruned_scan — the zonemap's sibling
-    for UNCLUSTERED equality predicates: per-(file, value) existence
-    rows, an IN query keeps exactly the files containing any wanted
-    value). Twin = the direct filtered scan (lossless by the
-    existence argument; the pruning payoff is pinned in pytest on a
-    planted layout). ROUND-13-pool candidate."""
-    from data_pengadaan_agent_spark.operators import zonemap as ZM
-
-    data_p, _ = _zonemap_table_path(spark, sf)
-    vs_p = _warehouse_path(spark, sf, "orders_valueset")
-    try:
-        fresh = (
-            ZM._vs_read_meta(spark, vs_p) == "o_orderstatus"
-            and not [
-                f
-                for f in ZM._data_files(data_p)
-                if f
-                not in {
-                    r.file
-                    for r in spark.read.parquet(f"{vs_p}/values")
-                    .select("file")
-                    .distinct()
-                    .collect()
-                }
-            ]
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        ZM.build_valueset_index(spark, data_p, vs_p, "o_orderstatus")
-    out = ZM.valueset_pruned_scan(spark, data_p, vs_p, ["P"])
-    return (
-        out.select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderkey")
-        .limit(2000)
-    )
-
-
-_VALUESET_SCAN_SQL = """
-SELECT o_orderkey, o_orderstatus, o_totalprice
-FROM orders
-WHERE o_orderstatus IN ('P')
-ORDER BY o_orderkey
-LIMIT 2000
-"""
-
-
 def _q_zorder_zonemap_scan(spark, sf):
     """The layout + skipping COMPOSITION, end to end as one certified
     row: lineitem written Z-ORDERED on (l_partkey, l_suppkey)
@@ -7531,87 +4953,6 @@ LIMIT 2000
 """
 
 
-def candidate_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration CANDIDATES for future rounds: fully built entries
-    with bit-exact DuckDB twins, held out of queries() only because
-    the current round's rotation gate window is full (see
-    tools/plan_rotation.py for the registration arithmetic).
-    Registering one = moving its name into _query_impls()/
-    _oracle_sql_impls() and bumping the floors. Locally they are
-    swept by tools/check_oracle.py and value-checked by pytest like
-    everything else.
-
-    Round 7 promoted all three round-6 candidates; round 8 promoted
-    all five round-7 candidates; round 9 promoted its four pre-planned
-    candidates paired with due-set retirements; round 10 promoted the
-    winnow pair paired with retiring minhash_lsh_pairs +
-    corpus_ingest_stream (coverage arguments in _RETIRED_TIER3 and
-    NOTES). Round 11 promoted dup_spans / dup_spans_incremental /
-    bm25_index_retrieval / bpe_merges (the pre-verified 4-in/3-out
-    triage) — their lineage consumers dup_span_stats /
-    strip_dup_spans and the self-contained lexical_diversity /
-    dup_run_pairs / corpus_ingest_stream_dup_spans /
-    zorder_key_orders stay here, locally swept + value-checked.
-    Round 10 added seven to the r12 pool: pq_adc_topk, ivfpq_adc_topk,
-    pq_adc_batch and pq_quant_report (product quantization, its IVF
-    composition, the batched multi-query ADC, and the
-    codebook-staleness monitor), bpe_encode_vocab (encode-side BPE),
-    ann_ingest_stream_codes (the fifth streaming form, hash-certified
-    end to end), and bm25_components_probe (a diagnostic probe that
-    stays unregistered — its contingency branch died when
-    bm25_retrieval_batch went driver-green in r10). Round 11 added
-    ivfpq_adc_batch (batched ADC composed with IVF pruning — the r12
-    registration pick), the SQ8 pair sq_topk / sq_quant_report
-    (the codegen-only compression tier, r13 pool), the BQ pair
-    bq_topk / bq_rerank_topk (the 1-bit Hamming tier + its two-stage
-    exact re-rank, r13 pool), kcenter_coreset (greedy farthest-point
-    selection on the exact integer micro grid, r13 pool),
-    kcenter_coverage (the sampled selection + one-scan full-corpus
-    coverage composition — the large-k 100 TB shape, r13 pool), and
-    bq_topk_batch (the pure-codegen batch miner: every Hamming fold
-    in one scan, WindowGroupLimit partial top-k ahead of the single
-    qid exchange, r13 pool). The r12 staging triage is recorded in
-    NOTES ("Round 12 registration triage")."""
-    return {
-        "dup_span_stats": _q_dup_span_stats,
-        "lexical_diversity": _q_lexical_diversity,
-        "strip_dup_spans": _q_strip_dup_spans,
-        "dup_run_pairs": _q_dup_run_pairs,
-        "corpus_ingest_stream_dup_spans": _q_corpus_ingest_stream_dup_spans,
-        "zorder_key_orders": _q_zorder_key_orders,
-        "pq_adc_topk": _q_pq_adc_topk,
-        "ivfpq_adc_topk": _q_ivfpq_adc_topk,
-        "bpe_encode_vocab": _q_bpe_encode_vocab,
-        "bm25_components_probe": _q_bm25_components_probe,
-        "pq_adc_batch": _q_pq_adc_batch,
-        "pq_quant_report": _q_pq_quant_report,
-        "sq_topk": _q_sq_topk,
-        "sq_quant_report": _q_sq_quant_report,
-        "bq_topk": _q_bq_topk,
-        "bq_rerank_topk": _q_bq_rerank_topk,
-        "kcenter_coreset": _q_kcenter_coreset,
-        "kcenter_coverage": _q_kcenter_coverage,
-        "bq_topk_batch": _q_bq_topk_batch,
-        "trgm_similar": _q_trgm_similar,
-        "weighted_sample": _q_weighted_sample,
-        "exact_quantiles": _q_exact_quantiles,
-        "skyline": _q_skyline,
-        "group_trend": _q_group_trend,
-        "collocations": _q_collocations,
-        "trgm_ingest_stream": _q_trgm_ingest_stream,
-        "hist_cube_stream": _q_hist_cube_stream,
-        "graph_pagerank": _q_graph_pagerank,
-        "retention_cohorts": _q_retention_cohorts,
-        "event_transitions": _q_event_transitions,
-        "event_ngrams": _q_event_ngrams,
-        "peak_concurrency": _q_peak_concurrency,
-        "zonemap_scan": _q_zonemap_scan,
-        "change_point": _q_change_point,
-        "hist_drift": _q_hist_drift,
-        "valueset_scan": _q_valueset_scan,
-    }
-
-
 # incremental_components twin: the recursive-CTE transitive closure —
 # certifies that the iterative large-star/small-star Spark path
 # converges to the exact connected-components labeling.
@@ -7651,52 +4992,8 @@ _INCREMENTAL_COMPONENTS_SQL = """
         """
 
 
-def candidate_oracle_sql() -> dict[str, str]:
-    return {
-        "dup_span_stats": _dup_span_stats_sql(length=8, min_count=2),
-        "lexical_diversity": _LEXICAL_DIVERSITY_SQL,
-        "strip_dup_spans": _strip_dup_spans_sql(length=8, min_count=2),
-        "dup_run_pairs": _dup_run_pairs_sql(length=6, max_df=50),
-        "corpus_ingest_stream_dup_spans": _corpus_ingest_dup_spans_sql(
-            length=8, max_ppm=500_000
-        ),
-        "zorder_key_orders": _zorder_key_orders_sql(),
-        "pq_adc_topk": _pq_adc_sql(m=4, ksub=4, dim=64, k=10),
-        "ivfpq_adc_topk": _ivfpq_adc_sql(kc=4, m=4, ksub=4, dim=64, k=10, n_probe=2),
-        "bpe_encode_vocab": _bpe_merges_sql(k=3, vocab=True),
-        "bm25_components_probe": _bm25_retrieval_batch_sql(tail=_BM25_PROBE_TAIL),
-        "pq_adc_batch": _pq_adc_batch_sql(m=4, ksub=4, dim=64, k=5),
-        "pq_quant_report": _pq_quant_report_sql(m=4, ksub=4, dim=64),
-        "sq_topk": _sq_topk_sql(dim=64, k=10),
-        "sq_quant_report": _sq_quant_report_sql(dim=64),
-        "bq_topk": _bq_topk_sql(dim=64, k=10),
-        "bq_rerank_topk": _bq_rerank_sql(dim=64, k=10, shortlist=50),
-        "kcenter_coreset": _kcenter_sql(k=5, dim=64),
-        "kcenter_coverage": _kcenter_coverage_sql(k=4, sample_frac=0.25),
-        "bq_topk_batch": _bq_topk_batch_sql(dim=64, k=5),
-        "trgm_similar": _trgm_similar_sql(
-            "the fast key order sort table scan merge", 250_000
-        ),
-        "weighted_sample": _WEIGHTED_SAMPLE_SQL,
-        "exact_quantiles": _EXACT_QUANTILES_SQL,
-        "skyline": _SKYLINE_SQL,
-        "group_trend": _GROUP_TREND_SQL,
-        "collocations": _COLLOCATIONS_SQL,
-        "trgm_ingest_stream": _TRGM_INGEST_STREAM_SQL,
-        "hist_cube_stream": _HIST_CUBE_STREAM_SQL,
-        "graph_pagerank": _GRAPH_PAGERANK_SQL,
-        "retention_cohorts": _RETENTION_COHORTS_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "event_ngrams": _EVENT_NGRAMS_SQL,
-        "peak_concurrency": _PEAK_CONCURRENCY_SQL,
-        "zonemap_scan": _ZONEMAP_SCAN_SQL,
-        "change_point": _CHANGE_POINT_SQL,
-        "hist_drift": _HIST_DRIFT_SQL,
-        "valueset_scan": _VALUESET_SCAN_SQL,
-    }
-
-
-def _oracle_sql_impls() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
+    """Driver-checked DuckDB twins, one per ``queries()`` entry."""
     return {
         # --- round-14 registrations (promoted candidates) ---
         "incremental_components": _INCREMENTAL_COMPONENTS_SQL,
@@ -7724,12 +5021,11 @@ def _oracle_sql_impls() -> dict[str, str]:
         "dup_spans_incremental": _dup_spans_incremental_sql(
             length=8, min_count=2
         ),
-        # the index path must reproduce the from-scratch path
-        # bit-exactly, so the two share ONE twin
+        # the index path must reproduce the from-scratch batch
+        # scoring bit-exactly, so its twin is that path's SQL
         "bm25_index_retrieval": _bm25_retrieval_batch_sql(k=5),
         "bpe_merges": _bpe_merges_sql(k=3),
         # --- round-10 registrations (promoted candidates) ---
-        "winnow_fingerprints": _winnow_sql(k=5, w=4),
         "winnow_matches": _winnow_matches_sql(k=5, w=4, min_shared=2),
         # --- round-9 registrations (promoted candidates) ---
         "ngram_lm_score": _NGRAM_LM_SQL,
@@ -7741,30 +5037,10 @@ def _oracle_sql_impls() -> dict[str, str]:
         "decontaminate_semantic": _decontaminate_semantic_sql(),
         "mine_hard_negatives": _mine_hard_negatives_sql(),
         "corpus_ingest_stream_scored": _corpus_ingest_scored_sql(),
-        "bm25_retrieval_batch": _bm25_retrieval_batch_sql(),
         # --- round-7 registrations (promoted candidates) ---
         "dsir_importance": _dsir_sql(),
         "dedup_near_batch": _dedup_near_sql(),
         "dedup_passages": _dedup_passages_sql(),
-        "passage_dedup": r"""
-            WITH t AS (
-              SELECT doc_id, string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS tk
-              FROM documents
-            ), p AS (
-              SELECT doc_id,
-                     array_to_string(tk[(1 + i*16):(i*16 + 16)], ' ') AS passage
-              FROM t, UNNEST(range(CAST(ceil(greatest(len(tk), 1)/16.0) AS BIGINT))) AS u(i)
-            ), d AS (
-              SELECT passage, count(DISTINCT doc_id) AS ndocs FROM p GROUP BY 1
-            )
-            SELECT p.doc_id,
-                   CAST(count(*) AS BIGINT) AS n_passages,
-                   CAST(sum(CASE WHEN d.ndocs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_shared_passages,
-                   round(CAST(sum(CASE WHEN d.ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                         / count(*), 6) AS shared_ratio
-            FROM p JOIN d USING (passage) GROUP BY 1
-        """,
         "pii_pseudonymize": """
             WITH g AS (
               SELECT c_custkey, md5(c_name) AS name_pseudo, r_name AS region,
@@ -7809,21 +5085,6 @@ def _oracle_sql_impls() -> dict[str, str]:
               FROM tf JOIN dfq USING (term), n
             ) WHERE rnk <= 3
         """,
-        "corpus_mix": """
-            WITH w(lang, w) AS (VALUES ('en', 0.4), ('es', 0.2), ('de', 0.2),
-                                       ('fr', 0.15), ('zh', 0.05)),
-            c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-                  FROM documents GROUP BY 1),
-            cw AS (SELECT c.lang, c.n, w.w FROM c JOIN w USING (lang)),
-            s AS (SELECT min(CAST(n AS DOUBLE) / w) AS s FROM cw),
-            r AS (SELECT cw.lang,
-                         CAST(floor((cw.w * s.s / CAST(cw.n AS DOUBLE))
-                                    * 4294967296) AS BIGINT) AS thresh
-                  FROM cw, s)
-            SELECT d.doc_id, d.lang, d.source
-            FROM documents d JOIN r ON d.lang = r.lang
-            WHERE (d.doc_id * 2654435761) % 4294967296 < r.thresh
-        """,
         "shuffle_shard": """
             WITH h AS (
               SELECT doc_id, lang,
@@ -7844,17 +5105,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                      text, '\b(customer|vector|stream)\b')) AS BIGINT)
                      AS n_redactions
             FROM documents
-        """,
-        "mode_per_group": """
-            WITH c AS (
-              SELECT lang, source, CAST(count(*) AS BIGINT) AS n_mode
-              FROM documents GROUP BY 1, 2
-            )
-            SELECT lang, source AS mode_value, n_mode FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY lang ORDER BY n_mode DESC, source) AS rk
-              FROM c
-            ) WHERE rk = 1
         """,
         "quantile_band": """
             WITH b AS (
@@ -7907,14 +5157,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                    CAST(sum(doc_id) AS BIGINT) AS id_sum,
                    CAST(sum(n_chars) AS BIGINT) AS chars_sum
             FROM s GROUP BY 1, 2
-        """,
-        "sample_per_group": """
-            SELECT source, doc_id, lang, n_chars FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY source
-                ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS rk
-              FROM documents
-            ) WHERE rk <= 5
         """,
         "mad_by_event_type": """
             SELECT event_type, round(CAST(mad(value) AS DOUBLE), 6) AS mad
@@ -8145,30 +5387,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             FROM c, mx
             WHERE n >= 5 AND wstart + 600 <= mxoff - 1800
         """,
-        # Relational model of the complete-mode streaming aggregation:
-        # same newline-collapse + empty-line filter as the shard
-        # writer, ingest time from line length, epoch-aligned windows.
-        "trending_terms_stream": """
-            WITH lines AS (
-              SELECT regexp_replace(text, '[\\r\\n]+', ' ', 'g') AS text
-              FROM documents WHERE length(trim(text)) > 0
-            ), w AS (
-              SELECT text,
-                     (length(text) * 2654435761) % 3600 AS off
-              FROM lines
-            ), tok AS (
-              SELECT off,
-                     unnest(string_split_regex(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+')) AS term
-              FROM w
-            ), c AS (
-              SELECT strftime(make_timestamp(
-                       (1704067200 + (off // 600) * 600) * 1000000),
-                       '%Y-%m-%d %H:%M') AS window_start,
-                     term, CAST(count(*) AS BIGINT) AS n
-              FROM tok WHERE term <> '' GROUP BY 1, 2
-            )
-            SELECT window_start, term, n FROM c WHERE n >= 5
-        """,
         "corpus_report": """
             WITH u AS (
               SELECT * FROM documents
@@ -8270,22 +5488,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                    coalesce(h.n_boiler, 0) * 2 >= t.n_ngrams
                      AS mostly_boilerplate
             FROM tot t LEFT JOIN hit h USING (doc_id)
-        """,
-        "length_outliers": """
-            WITH base AS (
-              SELECT doc_id,
-                     CAST(len(string_split_regex(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+'))
-                          AS BIGINT) AS n_tokens
-              FROM documents
-            ), b AS (
-              SELECT quantile_cont(n_tokens, 0.10) AS lo,
-                     quantile_cont(n_tokens, 0.90) AS hi
-              FROM base
-            )
-            SELECT doc_id, n_tokens,
-                   round(lo, 6) AS p_lo, round(hi, 6) AS p_hi,
-                   (n_tokens >= lo AND n_tokens <= hi) AS in_band
-            FROM base, b
         """,
         "snapshot_diff": """
             WITH old AS (
@@ -8398,21 +5600,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             WHERE doc_id % 10 <> 0
               AND doc_id NOT IN (SELECT doc_id FROM bad)
         """,
-        "normalize_text": """
-            WITH dirty AS (
-              SELECT doc_id,
-                     upper(text) || ' [Rev-' || CAST(doc_id AS VARCHAR) || '.0]' AS text
-              FROM documents
-            ), n AS (
-              SELECT doc_id,
-                     trim(regexp_replace(regexp_replace(lower(text),
-                          '[^a-z0-9 \\t\\n\\x0B\\f\\r]', ' ', 'g'), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS text_norm
-              FROM dirty
-            )
-            SELECT doc_id, text_norm,
-                   CAST(length(text_norm) AS BIGINT) AS n_chars_norm
-            FROM n
-        """,
         "latest_by_key": """
             SELECT user_id, event_id, event_type, value,
                    strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts
@@ -8518,14 +5705,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             WHERE l_extendedprice IS NOT NULL
             GROUP BY 1 ORDER BY 1
         """,
-        "histogram_month_of_year": """
-            WITH months AS (SELECT unnest(range(1, 13)) AS month_no),
-            c AS (SELECT CAST(month(o_orderdate) AS INT) AS month_no, count(*) AS cnt
-                  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1)
-            SELECT CAST(months.month_no AS INT) AS month_no, coalesce(c.cnt, 0) AS cnt
-            FROM months LEFT JOIN c ON months.month_no = c.month_no
-            ORDER BY 1
-        """,
         "distinct_count": """
             SELECT event_type, count(DISTINCT user_id) AS n_distinct
             FROM events GROUP BY 1 ORDER BY 1
@@ -8533,12 +5712,6 @@ def _oracle_sql_impls() -> dict[str, str]:
         "top_k": """
             SELECT p_partkey, p_name, p_retailprice FROM part
             ORDER BY p_retailprice DESC, p_partkey LIMIT 10
-        """,
-        "limit_preview": "SELECT * FROM orders ORDER BY o_orderkey LIMIT 5",
-        "join_broadcast_dim": """
-            SELECT r_name, count(*) AS n_nations
-            FROM nation JOIN region ON n_regionkey = r_regionkey
-            GROUP BY 1 ORDER BY 1
         """,
         "star_join_revenue": """
             SELECT r_name, n_name,
@@ -8618,10 +5791,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                              WHERE text IS NOT NULL GROUP BY text)
                OR text IS NULL
         """,
-        "duplicate_groups": """
-            SELECT text, count(*) AS n_dups, min(doc_id) AS rep_id
-            FROM documents GROUP BY text HAVING count(*) > 1
-        """,
         "ngram_jaccard_pairs": _JACCARD_SQL,
         "corpus_curation": """
             WITH t AS (
@@ -8665,52 +5834,6 @@ def _oracle_sql_impls() -> dict[str, str]:
               AND doc_id IN (SELECT doc_id FROM q WHERE quality_score >= 0.55)
               AND doc_id IN (SELECT doc_id FROM eng)
             GROUP BY source ORDER BY source
-        """,
-        # BM25 with the integer idf proxy ((N*1e6) DIV df) and a FIXED
-        # IEEE expression order — no libm, so the doubles agree
-        # bit-for-bit with Spark before the round.
-        "bm25_retrieval": """
-            WITH d AS (
-              SELECT doc_id, string_split_regex(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+') AS toks
-              FROM documents
-            ), base AS (
-              SELECT doc_id,
-                     CAST(len(toks) AS DOUBLE) AS dl,
-                     CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf0,
-                     CAST(len(list_filter(toks, x -> x = 'window')) AS DOUBLE) AS tf1,
-                     CAST(len(list_filter(toks, x -> x = 'join')) AS DOUBLE) AS tf2
-              FROM d
-            ), stats AS (
-              SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE) AS sum_dl,
-                     CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
-                     CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-                     CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2
-              FROM base
-            ), scored AS (
-              SELECT doc_id,
-                (CASE WHEN tf0 > 0
-                      THEN (CAST((n_docs * 1000000) // greatest(df0, 1) AS DOUBLE)
-                            * (tf0 * 2.5))
-                           / (tf0 + 1.5 * (0.25 + (0.75 * dl)
-                              / (sum_dl / CAST(n_docs AS DOUBLE))))
-                      ELSE 0.0 END
-                 + CASE WHEN tf1 > 0
-                      THEN (CAST((n_docs * 1000000) // greatest(df1, 1) AS DOUBLE)
-                            * (tf1 * 2.5))
-                           / (tf1 + 1.5 * (0.25 + (0.75 * dl)
-                              / (sum_dl / CAST(n_docs AS DOUBLE))))
-                      ELSE 0.0 END)
-                 + CASE WHEN tf2 > 0
-                      THEN (CAST((n_docs * 1000000) // greatest(df2, 1) AS DOUBLE)
-                            * (tf2 * 2.5))
-                           / (tf2 + 1.5 * (0.25 + (0.75 * dl)
-                              / (sum_dl / CAST(n_docs AS DOUBLE))))
-                      ELSE 0.0 END AS bm25
-              FROM base, stats
-            )
-            SELECT doc_id, round(bm25, 4) AS bm25 FROM scored
-            WHERE bm25 > 0 ORDER BY round(bm25, 4) DESC, doc_id LIMIT 20
         """,
         "corpus_mix_tokens": """
             WITH d AS (
@@ -8832,10 +5955,7 @@ def _oracle_sql_impls() -> dict[str, str]:
             GROUP BY dd.doc_id ORDER BY dd.doc_id
         """,
         "embedding_cosine_pairs": _cosine_pairs_lsh_sql(),
-        "embedding_cosine_allpairs": _COSINE_PAIRS_SQL,
         "minhash_dedup_pairs": _minhash_dedup_sql(),
-        "sim_topk_lsh_precomputed": _lsh_topk_sql(),
-        "sim_topk_ivf_precomputed": _ivf_topk_sql(),
         "sim_topk_brute": _SIM_TOPK_SQL,
         # Composition of the three sim_topk oracles: recall@10 of each
         # ANN path against the exact top-10 (same codebook literals).
@@ -8852,9 +5972,7 @@ def _oracle_sql_impls() -> dict[str, str]:
                          AS DOUBLE) / 10.0, 4)
             ORDER BY method
         """,
-        "sim_topk_lsh": _lsh_topk_sql(),
         "keyword_retrieval": _keyword_retrieval_sql(),
-        "sim_topk_ivf": _ivf_topk_sql(),
         "text_token_count": f"""
             SELECT doc_id,
                    CAST(len({_DUCK_TOKS}) AS BIGINT) AS n_tokens,
@@ -8864,7 +5982,6 @@ def _oracle_sql_impls() -> dict[str, str]:
         "text_quality": _QUALITY_SQL,
         "text_language_id": _LANGID_SQL,
         "simhash_pairs": _simhash_pairs_sql(),
-        "minhash_lsh_pairs": _minhash_lsh_sql(),
         "text_fingerprint": _fingerprint_sql(),
         "text_vocabulary": f"""
             SELECT token, count(*) AS df FROM (
@@ -8901,30 +6018,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             FROM starts GROUP BY 1, 2
         """,
         "sessionize": _SESSIONIZE_SQL,
-        "session_window_native": """
-            WITH g AS (
-              SELECT user_id, ts,
-                     lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-              FROM events
-            ), f AS (
-              -- session_window is end-exclusive: [start, last + gap),
-              -- so an event at exactly prev + gap opens a NEW session
-              SELECT user_id, ts,
-                     CASE WHEN prev_ts IS NULL OR ts >= prev_ts + INTERVAL 30 MINUTE
-                          THEN 1 ELSE 0 END AS new_session
-              FROM g
-            ), sid AS (
-              SELECT user_id, ts,
-                     sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                            ROWS UNBOUNDED PRECEDING) AS session_id
-              FROM f
-            )
-            SELECT user_id,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-                   strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS session_end,
-                   count(*) AS n_events
-            FROM sid GROUP BY user_id, session_id
-        """,
         "chart_pie_shares": """
             WITH t AS (
               SELECT event_type,
@@ -8971,26 +6064,11 @@ def _oracle_sql_impls() -> dict[str, str]:
             JOIN customer ON o_custkey = c_custkey
             ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
         """,
-        "pivot_counts": """
-            SELECT o_orderstatus,
-                   count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS p_urgent,
-                   count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS p_high,
-                   count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS p_medium,
-                   count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p_notspec,
-                   count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS p_low
-            FROM orders GROUP BY 1 ORDER BY 1
-        """,
         "cube_agg": """
             SELECT l_returnflag, l_linestatus, count(*) AS n,
                    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
             FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
             ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-        """,
-        "percentiles": """
-            SELECT round(quantile_cont(value, 0.25), 4) AS p25,
-                   round(quantile_cont(value, 0.50), 4) AS p50,
-                   round(quantile_cont(value, 0.75), 4) AS p75
-            FROM events
         """,
         "asof_join": """
             WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts
@@ -9012,18 +6090,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             FROM p JOIN c ON p.user_id = c.user_id
              AND c.c_ts <= p.p_ts AND c.c_ts >= p.p_ts - INTERVAL 600 SECOND
         """,
-        "embedding_normalize": """
-            WITH e AS (SELECT vec_id, embedding,
-                              sqrt(list_sum(list_transform(embedding,
-                                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-                       FROM embeddings WHERE vec_id < 100)
-            SELECT vec_id,
-                   unnest(range(len(embedding))) AS dim,
-                   round(unnest(list_transform(embedding,
-                         x -> CAST(x AS DOUBLE)
-                              / (CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END))), 6) AS v
-            FROM e
-        """,
         "tpch_q4_late_orders": """
             SELECT o_orderpriority, count(*) AS order_count
             FROM orders
@@ -9033,24 +6099,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                 AND l_shipdate > o_orderdate + INTERVAL 90 DAY
             )
             GROUP BY 1 ORDER BY 1
-        """,
-        "tpch_q12_priority_mix": """
-            SELECT l_returnflag,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                            THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                            THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            GROUP BY 1 ORDER BY 1
-        """,
-        "tpch_q14_promo_share": """
-            SELECT 100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-                         THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                              * CAST(1 - l_discount AS DECIMAL(8,2)) END) AS DOUBLE)
-                   / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                              * CAST(1 - l_discount AS DECIMAL(8,2))) AS DOUBLE)
-                   AS promo_revenue_pct
-            FROM lineitem JOIN part ON l_partkey = p_partkey
         """,
         "tpch_q17_small_qty": """
             WITH avg_q AS (
@@ -9087,18 +6135,6 @@ def _oracle_sql_impls() -> dict[str, str]:
                               WHERE o_custkey = c_custkey
                                 AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
             GROUP BY 1 ORDER BY 1
-        """,
-        "window_cumulative": """
-            WITH m AS (
-              SELECT o_orderstatus, strftime(o_orderdate, '%Y-%m') AS bulan,
-                     sum(CAST(o_totalprice AS DECIMAL(18,2))) AS m_total
-              FROM orders GROUP BY 1, 2
-            )
-            SELECT o_orderstatus, bulan,
-                   CAST(sum(m_total) OVER (PARTITION BY o_orderstatus ORDER BY bulan
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-                   AS cum_total
-            FROM m ORDER BY o_orderstatus, bulan
         """,
         "window_ntile": """
             SELECT c_custkey, c_mktsegment, c_acctbal,
@@ -9205,27 +6241,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             ORDER BY s_suppkey
         """,
         "corpus_pipeline": _corpus_pipeline_sql(),
-        "corpus_ingest_stream": f"""
-            WITH corpus AS (
-              SELECT DISTINCT regexp_replace(text, '[\\r\\n]+', ' ', 'g') AS text
-              FROM documents WHERE length(trim(text)) > 0
-            ), t AS (
-              SELECT text, string_split_regex(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+') AS toks,
-                     length(text) AS nc
-              FROM corpus
-            ), q AS (
-              SELECT text, nc AS n_chars,
-                     least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.4
-                       + least((CAST(len(list_filter(toks, x -> x IN
-                           ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-                           / greatest(len(toks), 1)) * 5.0, 1.0) * 0.3
-                       + (CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE)
-                           / greatest(nc, 1)) * 0.3 AS quality_score
-              FROM t
-            )
-            SELECT text, n_chars, quality_score FROM q
-            WHERE quality_score >= {_PIPE_QUALITY_MIN}
-        """,
         # Content-derived ingest timestamps give byte-identical
         # duplicates identical event times, so the within-watermark
         # dedup's output is exactly DISTINCT-by-content: same
@@ -9357,18 +6372,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             SELECT r.doc_id, r.lang, r.source FROM r JOIN q USING (lang)
             WHERE rk <= q.q
         """,
-        "activity_heatmap": """
-            SELECT CAST(isodow(ts) - 1 AS INTEGER) AS dow,
-                   CAST(hour(ts) AS INTEGER) AS hod,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        "hourly_distinct_users": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour,
-                   count(DISTINCT user_id) AS n_users, count(*) AS n_events
-            FROM events GROUP BY 1 ORDER BY 1
-        """,
         "cohort_retention": """
             WITH user_weeks AS (
               SELECT DISTINCT user_id,
@@ -9434,15 +6437,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             FROM om FULL OUTER JOIN em ON o_month = e_month
             ORDER BY month
         """,
-        "except_all_multiplicity": """
-            WITH diff AS (
-              SELECT o_custkey AS custkey FROM orders
-              EXCEPT ALL
-              SELECT c_custkey FROM customer
-            )
-            SELECT custkey, count(*) AS multiplicity
-            FROM diff GROUP BY 1 ORDER BY 1
-        """,
         "salted_join": """
             WITH dim AS (SELECT user_id, count(*) AS user_n FROM events GROUP BY 1)
             SELECT e.user_id, d.user_n, count(*) AS n_joined
@@ -9457,10 +6451,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             SELECT source, count(*) AS n,
                    CAST(sum(n_chars) AS BIGINT) AS total_chars
             FROM intermediary GROUP BY source ORDER BY source
-        """,
-        "chart_histogram_categorical": """
-            SELECT source, count(*) AS cnt FROM documents
-            GROUP BY source ORDER BY source
         """,
         "chart_line_monthly": """
             SELECT strftime(o_orderdate, '%Y-%m') AS bulan,
@@ -9522,18 +6512,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             UNPIVOT (metric_value FOR metric IN (sum_qty, sum_base_price, sum_disc_price, sum_charge))
             ORDER BY l_returnflag, l_linestatus, metric
         """,
-        "lateral_topk": """
-            SELECT r.r_name, t.n_name, t.n_customers
-            FROM region r,
-            LATERAL (
-              SELECT n.n_name, count(*) AS n_customers
-              FROM nation n JOIN customer c ON c.c_nationkey = n.n_nationkey
-              WHERE n.n_regionkey = r.r_regionkey
-              GROUP BY n.n_name
-              ORDER BY n_customers DESC, n.n_name LIMIT 2
-            ) t
-            ORDER BY r.r_name, t.n_customers DESC, t.n_name
-        """,
         "multimodal_audio_chunks": """
             WITH m AS (
               SELECT doc_id AS media_id, CAST(doc_id % 3 AS INT) AS mt,
@@ -9547,19 +6525,6 @@ def _oracle_sql_impls() -> dict[str, str]:
             SELECT media_id, CAST(start_ms // 5000 AS INT) AS chunk_idx, start_ms,
                    least(start_ms + 5000, duration_ms) AS end_ms
             FROM s
-        """,
-        "text_top_terms": f"""
-            WITH counts AS (
-              SELECT doc_id, token, count(*) AS tf FROM (
-                SELECT doc_id, unnest({_DUCK_TOKS}) AS token
-                FROM documents WHERE doc_id < 100
-              ) WHERE token <> '' GROUP BY 1, 2
-            )
-            SELECT doc_id, token, tf, CAST(rnk AS INT) AS rnk FROM (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                         ORDER BY tf DESC, token) AS rnk
-              FROM counts
-            ) WHERE rnk <= 3
         """,
         "grouping_sets": """
             SELECT o_orderstatus, o_orderpriority, count(*) AS n

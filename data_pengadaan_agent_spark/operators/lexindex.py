@@ -88,7 +88,8 @@ def read_meta_stats(spark: SparkSession, path: str) -> tuple[int, int, int]:
     #8): BM25's global statistics (N, Σdl) are properties of the INDEX,
     maintained by build/append (recounted from the committed doclen
     table after each append — recount, not increment, so crash-replay
-    states self-heal on the next successful append) and carried through
+    states self-heal on the next append, a replay that adds no rows
+    included) and carried through
     compact (which never touches doclen). Callers gating freshness
     compare ``n_docs`` against the expected source cardinality instead
     of re-counting doclen per call, and the query path scores with the
@@ -182,8 +183,8 @@ def append_postings_index(
     a function of the SHARD, not the base — the append_ivf_table
     base-independence contract."""
     spark = shard.sparkSession
-    n_buckets = _read_meta(spark, path)
-    posts_p, doclen_p, _ = _paths(path)
+    n_buckets, meta_docs, meta_dl = read_meta_stats(spark, path)
+    posts_p, doclen_p, meta_p = _paths(path)
 
     from data_pengadaan_agent_spark.sources.catalog import spread
 
@@ -195,6 +196,13 @@ def append_postings_index(
     fresh = fresh.localCheckpoint(eager=True)
     n_new = fresh.count()
     if n_new == 0:
+        # a replay after a crash between the doclen write and the meta
+        # rewrite adds no rows, so it is the one chance to heal the
+        # stale-low stats: recommit them when the committed doclen
+        # disagrees with the meta
+        stats = _doclen_stats(spark, doclen_p)
+        if stats != (meta_docs, meta_dl):
+            _write_meta(spark, meta_p, n_buckets, *stats)
         return 0
 
     toks = tokens(text_col)
@@ -224,7 +232,6 @@ def append_postings_index(
     # recount, not increment, so a replayed or crashed append can never
     # double-count; a crash before this rewrite leaves stats stale-low,
     # which the freshness-gate law catches as a mismatch → rebuild)
-    _, _, meta_p = _paths(path)
     n_docs, sum_dl = _doclen_stats(spark, doclen_p)
     _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
     return n_new

@@ -86,26 +86,50 @@ def test_probe_registry_renders_and_names_real_queries():
     import __spark_entry__ as E
     from tools.audit_round_boundaries import connect, gap_probes, tie_margin_probes
 
-    known = (
-        set(E.oracle_sql())
-        | set(E.retired_oracle_sql())
-        | set(E.candidate_oracle_sql())
-    )
+    known = set(E.oracle_sql())
     con = connect("/root/testdata/sf0.001", identity_round=0)
-    for name, spec in tie_margin_probes().items():
-        sql, decimals = spec[0], spec[1]
-        structural = len(spec) > 2 and spec[2] == "structural"
+    for name, (sql, decimals) in tie_margin_probes().items():
         targets = name.split(".")[0].split("+")
         assert all(t in known for t in targets), name
         assert decimals >= 0
-        rec = audit_probe(sql, decimals, con, structural=structural)
+        rec = audit_probe(sql, decimals, con)
         assert rec["err"] is None, (name, rec["err"])
         assert rec["cols"], name  # at least one float column measured
-        if structural:  # the structural class can never flag
-            assert not any(d.get("flag") for d in rec["cols"].values()), name
     for name, sql in gap_probes().items():
         targets = name.split(".")[0].split("+")
         assert all(t in known for t in targets), name
         rec = audit_gap_probe(sql, con)
         assert rec["err"] is None, (name, rec["err"])
         assert rec["n_vectors"] > 0, name
+
+
+def test_fixture_fingerprint_tracks_content_not_mtime(tmp_path):
+    """The audit artifact pins the fixtures it certified. A redeploy
+    that rewrites identical bytes (new mtimes) must keep the
+    fingerprint; a single changed byte must break it."""
+    import os
+    import shutil
+
+    from tools.audit_round_boundaries import fixture_fingerprint
+
+    src = "/root/testdata/sf0.001"
+    for fn in os.listdir(src):
+        if fn.endswith(".parquet"):
+            shutil.copyfile(os.path.join(src, fn), tmp_path / fn)
+    before = fixture_fingerprint(str(tmp_path))
+    assert before == fixture_fingerprint(src)
+
+    for fn in before:
+        st = os.stat(tmp_path / fn)
+        os.utime(tmp_path / fn, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert fixture_fingerprint(str(tmp_path)) == before
+
+    victim = tmp_path / "region.parquet"
+    data = bytearray(victim.read_bytes())
+    data[len(data) // 2] ^= 0x01
+    victim.write_bytes(bytes(data))
+    after = fixture_fingerprint(str(tmp_path))
+    assert after["region.parquet"] != before["region.parquet"]
+    assert {k: v for k, v in after.items() if k != "region.parquet"} == {
+        k: v for k, v in before.items() if k != "region.parquet"
+    }

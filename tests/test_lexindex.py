@@ -123,6 +123,12 @@ def test_postings_meta_stats_marker(spark, tmp_path):
     # replayed append (n_new == 0) leaves the stats untouched and right
     assert LX.append_postings_index(shard, path) == 0
     assert LX.read_meta_stats(spark, path) == (8, *doclen_agg())
+    # ADVICE low #1: a crash after doclen+postings committed but before
+    # the meta rewrite leaves the stats stale-low; the replay appends
+    # nothing yet must heal them from the committed doclen
+    LX._write_meta(spark, f"{path}/meta", 8, 1, 1)
+    assert LX.append_postings_index(shard, path) == 0
+    assert LX.read_meta_stats(spark, path) == (8, *doclen_agg())
     # a v1 meta (n_buckets only) is rejected loudly
     from data_pengadaan_agent_spark.sources.catalog import local_df
 

@@ -77,6 +77,20 @@ def test_cartesian_flags():
     # the broadcast-scalar-total pattern: BNLJ over an aggregate
     ok = bnlj + "\n+- HashAggregate(keys=[], functions=[sum(v)])"
     assert audit_plan(ok) == []
+    # ADVICE low #2: BuildLeft with ONE detected child root (the first
+    # child printed deeper than the second) scans the first-child
+    # subtree, the build side — never the last root's, the stream side
+    build_left = (
+        "BroadcastNestedLoopJoin BuildLeft, Inner\n"
+        "  :  +- HashAggregate(keys=[], functions=[count(1)])\n"
+        "  :     +- Scan parquet documents\n"
+        "+- Scan parquet documents\n"
+    )
+    assert audit_plan(build_left) == []
+    unbounded = build_left.replace(
+        "HashAggregate(keys=[], functions=[count(1)])", "Project [doc_id]"
+    )
+    assert any(f.startswith("CARTESIAN") for f in audit_plan(unbounded))
 
 
 def test_bnlj_not_rescued_by_distant_aggregate():

@@ -927,3 +927,25 @@ def test_parquet_sink_fresh_checkpoint_over_live_root_refuses(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
     assert spark.read.parquet(sink).count() >= 1
+
+
+def test_ann_ingest_stream_codes_leaves_no_temp_dirs(spark):
+    """The streaming IVF-PQ ingest entry stages its source slice and
+    its checkpoint in temp directories; both are removed once the
+    stream stops, and the returned frame (read from the warehouse
+    index alone) still collects afterwards."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as E
+
+    def leftovers():
+        return {
+            d for d in os.listdir(tempfile.gettempdir())
+            if d.startswith("ann_ingest_")
+        }
+
+    before = leftovers()
+    rows = E.queries()["ann_ingest_stream_codes"](spark, SF_DIR).collect()
+    assert rows
+    assert leftovers() - before == set()

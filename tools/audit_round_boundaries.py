@@ -8,7 +8,7 @@ SHORTEST decimal representation (BigDecimal.valueOf) while DuckDB's
 engines can disagree by 1e-N on a value whose scaled fraction sits at
 a representation boundary (~0.5·10^-N away from the grid). Whether the
 boundary is HIT is a property of the DATA, and the fixtures are static
-parquet — so for every registered/retired/candidate oracle twin we can
+parquet — so for every registered oracle twin we can
 MEASURE the minimum distance of every pre-round value from its nearest
 rounding boundary and certify the margin.
 
@@ -40,6 +40,7 @@ Writes a summary table to stdout and tools/round_audit.json.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -205,41 +206,16 @@ SELECT f.vec_id, c.cid,
           * (CASE WHEN c.cn = 0 THEN 1 ELSE c.cn END)) AS cos_pre
 FROM fv f, cb c
 """
-    from __spark_entry__ import _pq_adc_sql
-
-    m, ksub = 4, 4
+    m = 4
     assign_tail = "\nUNION ALL\n".join(
         f"SELECT vec_id, {s} AS sub, code, d_pre FROM a1raw_{s}\n"
         f"UNION ALL\nSELECT vec_id, {s} AS sub, code, d_pre FROM kraw_{s}"
         for s in range(m)
     )
-    # ql is the LUT value BEFORE floor(x + 0.5): its danger grid is the
-    # integer halves of the raw value, i.e. decimals=0
-    lut_tail = "\nUNION ALL\n".join(
-        f"SELECT {s} AS sub, code, ql FROM lutraw_{s}" for s in range(m)
-    )
-    from __spark_entry__ import (
-        _ann_ingest_codes_sql,
-        _bq_rerank_sql,
-        _ivfpq_adc_batch_sql,
-        _ivfpq_adc_sql,
-        _pq_adc_batch_sql,
-        _sq_topk_sql,
-    )
+    from __spark_entry__ import _ann_ingest_codes_sql, _ivfpq_adc_batch_sql
 
-    ivfpq_assign_tail = (
-        "SELECT vec_id, -1 AS sub, list AS code, d_pre FROM asgraw\n"
-        "UNION ALL\nSELECT NULL AS vec_id, -2 AS sub, list AS code, d_pre "
-        "FROM proberaw\nUNION ALL\n" + assign_tail
-    )
     return {
         "ivf_drift_report.assignment": (ivf, 6),
-        "pq_adc_topk.assignment": (_pq_adc_sql(m, ksub, tail=assign_tail), 4),
-        "pq_adc_topk.lut": (_pq_adc_sql(m, ksub, tail=lut_tail), 0),
-        "ivfpq_adc_topk.assignment": (
-            _ivfpq_adc_sql(tail=ivfpq_assign_tail), 4,
-        ),
-        "ivfpq_adc_topk.lut": (_ivfpq_adc_sql(tail=lut_tail), 0),
         # streaming-ANN ingest: same 4dp argmin discipline, but the
         # residual PQ trains on the BASE slice — its own margin story
         # (no probe/LUT CTEs in this twin: coarse asgraw + subspace raws)
@@ -252,11 +228,10 @@ FROM fv f, cb c
             ),
             4,
         ),
-        # batched IVF-PQ ADC: the corpus coarse assignment + residual
-        # training raws are the SAME populations as ivfpq_adc_topk's
-        # (identical CTEs), but the per-qid probe ranking (proberaw,
-        # one row per query×list) and the per-(qid, list) LUT grid are
-        # new surfaces — probe both
+        # batched IVF-PQ ADC: the corpus coarse assignment, the
+        # residual training raws and the per-qid probe ranking
+        # (proberaw, one row per query×list), then the per-(qid, list)
+        # LUT grid — probe both
         "ivfpq_adc_batch.assignment": (
             _ivfpq_adc_batch_sql(
                 tail=(
@@ -277,60 +252,25 @@ FROM fv f, cb c
             ),
             0,
         ),
-        # SQ8 encode: equality is STRUCTURAL (identical ops on
-        # identical doubles — operators/sq.py), so this probe is
-        # belt-and-braces; pre_floor sits on the floor grid, danger =
-        # integer values of pre_floor itself (decimals=0)
-        "sq_topk.encode": (
-            _sq_topk_sql(tail="SELECT vec_id, i, scaled FROM coderaw"),
-            0,
-            "structural",  # same class as bq_rerank_topk.micro below
-        ),
-        # BQ re-rank / k-center coreset micro grid: both quantize the
-        # SAME corpus by the SAME floor(x*1e6 + 0.5) expression
-        # (structural equality like SQ encode — belt-and-braces);
-        # danger = integer halves of the pre-floor scaled value
-        # (decimals=0). ONE probe covers both operators' identical
-        # grid over the identical fixture.
-        "bq_rerank_topk.micro": (
-            _bq_rerank_sql(tail="SELECT vec_id, i, scaled FROM mraw"),
-            0,
-            # STRUCTURAL: every engine (Spark JVM corpus side, Python
-            # driver query side, DuckDB twin) evaluates the IDENTICAL
-            # floor(x*1e6 + 0.5) op sequence on bit-identical doubles,
-            # so a value NEAR a half still floors identically
-            # everywhere — the margin is reported for the record but
-            # cannot flip cross-engine. Contrast the PQ LUT probes
-            # above, where NumPy pairwise summation vs DuckDB
-            # sequential list_sum are genuinely different computation
-            # paths and the margin is the safety argument.
-            "structural",
-        ),
-        # batched ADC: same training population as pq_adc_topk (already
-        # probed above); the NEW surface is the per-qid LUT grid
-        "pq_adc_batch.lut": (
-            _pq_adc_batch_sql(
-                tail="\nUNION ALL\n".join(
-                    f"SELECT qid, {s} AS sub, code, ql FROM lutraw_{s}"
-                    for s in range(m)
-                )
-            ),
-            0,
-        ),
     }
 
 
-def fixture_fingerprint(sf_dir: str) -> dict[str, list]:
-    """(size, mtime_ns) of every fixture parquet — recorded into the
-    artifact so a FIXTURE change without a fresh audit run is loudly
-    detectable (ADVICE r10: the hash-exact LUT guarantee is certified
-    per fixture by measurement, so any data refresh must re-run the
-    probes; tests/test_driver_contract.py pins artifact-vs-disk)."""
+def fixture_fingerprint(sf_dir: str) -> dict[str, str]:
+    """Content sha256 of every fixture parquet, streamed in 1 MiB
+    blocks — recorded into the artifact so a FIXTURE change without a
+    fresh audit run is loudly detectable (ADVICE r10: the hash-exact
+    LUT guarantee is certified per fixture by measurement, so any data
+    refresh must re-run the probes; tests/test_driver_contract.py pins
+    artifact-vs-disk). Content, not (size, mtime): a redeploy of the
+    same bytes keeps the fingerprint, one changed byte breaks it."""
     out = {}
     for fn in sorted(os.listdir(sf_dir)):
         if fn.endswith(".parquet"):
-            st = os.stat(os.path.join(sf_dir, fn))
-            out[fn] = [st.st_size, st.st_mtime_ns]
+            h = hashlib.sha256()
+            with open(os.path.join(sf_dir, fn), "rb") as f:
+                for block in iter(lambda: f.read(1 << 20), b""):
+                    h.update(block)
+            out[fn] = h.hexdigest()
     return out
 
 
@@ -440,17 +380,12 @@ def audit_gap_probe(sql: str, con) -> dict:
     return out
 
 
-def audit_probe(sql: str, decimals: int, con, structural: bool = False) -> dict:
+def audit_probe(sql: str, decimals: int, con) -> dict:
     """Margin-check every float column of a pre-round probe at the
-    given rounding scale (same margin formula as the main audit).
-    ``structural`` probes belong to the sq/bq equality class — every
-    engine evaluates the IDENTICAL op sequence on bit-identical
-    doubles, so a small margin cannot flip cross-engine; their margins
-    are recorded for the fixture record but never flagged."""
+    given rounding scale (same margin formula as the main audit)."""
     import pyarrow as pa
 
-    out = {"cols": {}, "err": None, "kind": "tie-margin-probe",
-           "structural": bool(structural)}
+    out = {"cols": {}, "err": None, "kind": "tie-margin-probe"}
     try:
         tbl = con.execute(sql).arrow()
     except Exception as e:  # pragma: no cover - surfaced in report
@@ -476,9 +411,7 @@ def audit_probe(sql: str, decimals: int, con, structural: bool = False) -> dict:
             "on_grid": on_grid,
             "min_margin": min(margins) if margins else None,
         }
-        rec["flag"] = bool(
-            not structural and margins and rec["min_margin"] < FLAG_MARGIN
-        )
+        rec["flag"] = bool(margins and rec["min_margin"] < FLAG_MARGIN)
         out["cols"][field.name] = rec
     return out
 
@@ -489,14 +422,7 @@ def main():
 
     import __spark_entry__ as E
 
-    oracles = dict(E.oracle_sql())
-    tier = {k: "registered" for k in oracles}
-    for k, v in E.retired_oracle_sql().items():
-        oracles[k] = v
-        tier[k] = "retired"
-    for k, v in E.candidate_oracle_sql().items():
-        oracles[k] = v
-        tier[k] = "candidate"
+    oracles = E.oracle_sql()
 
     con_norm = connect(sf_dir, identity_round=0)
     con_ident = connect(sf_dir, identity_round=2)
@@ -508,7 +434,7 @@ def main():
         if only and name not in only:
             continue
         rec = audit_entry(name, sql, con_norm, con_ident, con_ident1)
-        rec["tier"] = tier[name]
+        rec["tier"] = "registered"
         rounded = {
             c: d for c, d in rec["cols"].items() if d.get("kind") == "rounded"
         }
@@ -530,12 +456,10 @@ def main():
                 flagged.append(name)
         report[name] = rec
 
-    for name, spec in sorted(tie_margin_probes().items()):
-        sql, decimals = spec[0], spec[1]
-        structural = len(spec) > 2 and spec[2] == "structural"
+    for name, (sql, decimals) in sorted(tie_margin_probes().items()):
         if only and name.split(".")[0] not in only and name not in only:
             continue
-        rec = audit_probe(sql, decimals, con_norm, structural=structural)
+        rec = audit_probe(sql, decimals, con_norm)
         rec["tier"] = "probe"
         if rec["err"]:
             print(f"{name:34s} ERROR {rec['err'][:80]}")

@@ -123,34 +123,17 @@ def spark_to_arrow(df) -> pa.Table:
     return df.toArrow()
 
 
-# Regression floors (VERDICT r3 ask #8, amended r6 for the tier-3
-# retirement policy): REGISTRY_FLOOR is the driver-checked registry
-# size; TOTAL_FLOOR additionally counts retired tier-3 entries, which
-# stay implemented and locally value-checked — so total covered
-# surface can only grow even when driver slots are freed. Bump the
-# floors when (and only when) adding entries.
+# Regression floor (VERDICT r3 ask #8): the driver-checked registry
+# size. Bump it when (and only when) adding entries.
 REGISTRY_FLOOR = 150
-TOTAL_FLOOR = 184
 
 
 def check_registry(E) -> None:
     qs, oracles = E.queries(), E.oracle_sql()
-    retired = E.retired_queries() if hasattr(E, "retired_queries") else {}
     assert len(qs) >= REGISTRY_FLOOR, (
         f"queries() shrank: {len(qs)} < floor {REGISTRY_FLOOR} — "
-        "entries must never be dropped, only rotated or retired to "
-        "the locally-checked tier-3 set"
+        "entries must never be dropped, only rotated"
     )
-    assert len(qs) + len(retired) >= TOTAL_FLOOR, (
-        f"total covered surface shrank: {len(qs)} registered + "
-        f"{len(retired)} retired < {TOTAL_FLOOR}"
-    )
-    # a typo'd name in the retirement set would silently retire
-    # NOTHING (the filters intersect with the impl map) — require
-    # every declared retiree to actually exist as an implementation
-    if hasattr(E, "_RETIRED_TIER3"):
-        ghost = set(E._RETIRED_TIER3) - set(retired)
-        assert not ghost, f"retired names with no implementation: {sorted(ghost)}"
     missing = sorted(set(qs) - set(oracles))
     assert not missing, f"queries() entries with no oracle_sql() twin: {missing}"
     orphans = sorted(set(oracles) - set(qs))
@@ -161,7 +144,7 @@ def main():
     # --vanilla: run the Spark side under a DRIVER-STYLE session
     # (bare local[32], none of session.get_spark's tuned confs) — the
     # one divergence between this replica and the real gate. The r13
-    # continuation proved all 220 entries green under it; keep it that
+    # continuation proved every entry green under it; keep it that
     # way by re-running `check_oracle.py --vanilla <sf_dir>` whenever
     # an operator starts depending on a session conf (nanosAsLong,
     # Arrow, shuffle partitions are the usual suspects — load_table
@@ -197,17 +180,8 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    # The LOCAL sweep covers the retired tier-3 entries AND future-
-    # round registration candidates too — out of the driver gate is
-    # not out of the correctness contract.
-    qs = dict(E.queries())
-    oracles = dict(E.oracle_sql())
-    if hasattr(E, "retired_queries"):
-        qs.update(E.retired_queries())
-        oracles.update(E.retired_oracle_sql())
-    if hasattr(E, "candidate_queries"):
-        qs.update(E.candidate_queries())
-        oracles.update(E.candidate_oracle_sql())
+    qs = E.queries()
+    oracles = E.oracle_sql()
     results = {}
     t_start = time.time()
     for name, fn in qs.items():

@@ -16,13 +16,9 @@ HEADLINERS = {
     "tpch_q18_large_orders": "pre-aggregated HAVING before the star join",
     "top_k": "TakeOrderedAndProject — never a full sort",
     "asof_join": "one hash exchange + one sort-window, no per-key pandas",
-    "minhash_lsh_pairs": "signature-sized shuffle, equi-join on band buckets",
-    "sim_topk_ivf": "codebook pruning then exact rescoring",
-    "window_cumulative": "keyed running total over the pre-aggregated rollup",
     "chart_pie_shares": "share via broadcast 1-row scalar total — no unpartitioned WindowExec (r13 lockstep fix)",
     "corpus_curation": "three semi-join gates off one documents scan",
     "bucketed_join_revenue": "bucketed SMJ: zero join-side exchanges, only the final agg shuffles",
-    "sim_topk_lsh_precomputed": "ingest-time signatures: PartitionFilters prune to one bucket",
     "embedding_cosine_pairs": "banded-LSH near-dup: signature equi-join, vectors only re-joined for candidates",
     "tpch_q9_product_profit": "derived-dim star: part/supplier broadcast, one lineitem-orders shuffle",
     "tpch_q5_local_supplier": "region-filtered nation broadcast into both customer and supplier sides",
@@ -35,14 +31,12 @@ HEADLINERS = {
     "hybrid_retrieval_rrf": "two TakeOrdered lists, bounded rank windows, tiny full-outer fusion",
     "incremental_dedup": "anti-join on 8-byte content hashes, never text",
     "minhash_dedup_pairs": "LSH candidates checkpointed once; verify joins pinned shuffle (explode-derived sides never broadcast)",
-    "bm25_retrieval": "one corpus scan + 1-row stats broadcast: no explode, no vocabulary shuffle, TakeOrdered top-20",
     "corpus_mix_tokens": "token-budget mix: exactly one per-group window exchange, budget map as CASE (no join)",
     "cluster_representatives": "near-dup clusters collapsed to best-quality member: 1:1 id join + one small window",
     "ann_recall_lsh_ivf": "both ANN lists TakeOrdered-capped at k before 10-row broadcast semi-joins",
     "token_rarity": "explode -> term-tf shuffle -> shuffle_hash-pinned join back; 1-row n_total broadcast is the only explode-lineage broadcast",
     "decontaminate_train": "hashed-ngram semi/anti joins: text never crosses an exchange",
     "boilerplate_ngrams": "distinct (id, int64-ngram) reused 3x; both joins pinned shuffle_hash (explode lineage)",
-    "length_outliers": "two passes (bounds agg + flagged output), 1-row percentile broadcast, zero row exchanges",
     "snapshot_diff": "full-outer join of (key, xxhash64) projections: 16-byte exchange rows, text never shuffles",
     "cross_source_overlap": "distinct (hash, source) self-join: sort-merge, no corpus-sized broadcast",
     "embedding_qa": "one scan, mapper-side norm fold, single partial-aggregated exchange on the group key",
@@ -55,60 +49,29 @@ HEADLINERS = {
     "dedup_passages": "posexplode -> hash-keyed first-occurrence vote -> one pinned join -> rebuild aggregate; only 8-byte hashes shuffle",
     "dedup_near_batch": "one stateless Arrow signature kernel (spread-fanned on starved inputs), (band,sig) equi-join candidates, exact verify",
     "mine_hard_negatives": "broadcast query-batch into a gold-masked Arrow top-k kernel; one window exchange of partitions x |Q| x k rows",
-    "bm25_retrieval_batch": "postings semi-joined against the broadcast query vocabulary before any shuffle; all joins broadcast the query-bounded side",
     "ngram_lm_score": "stupid-backoff LM gate: vocab-sized c1/c2 count tables, all three count joins pinned shuffle_hash (explode lineage), 1-row N broadcast",
     "scd2_history": "SCD2 validity intervals: ONE key exchange shared by lag, running version sum, run aggregate, and valid_to lead",
     "ivf_drift_report": "frozen-codebook drift monitor: broadcast-literal centroids into one Arrow assignment scan, <=k-row aggregate",
     "mmr_diversify": "MMR top-k: distributed rounded-relevance pool cut (TakeOrdered), then one pool-bounded single-partition greedy kernel",
-    "winnow_fingerprints": "MOSS winnowing as ONE window pass: struct-min over a w-row frame, distinct reuses the same doc_id exchange",
     "winnow_matches": "span-level overlap: per-side document-frequency caps before the fingerprint equi-join, merge-pinned explode-derived sides",
     "dup_spans": "exact-substring dedup: occurrence COUNT (never a pair join) gates the grams, then one doc_id exchange drives lag + run-sum + span aggregate",
-    "dup_span_stats": "per-doc dup budget: the spans aggregate left-joined back onto one doclen projection, exact-integer ppm",
-    "strip_dup_spans": "removal step: spans collect_list'd per doc, exists()-filtered posexplode, array_sort reassembly — no UDF, no pair join",
-    "lexical_diversity": "two chained integer aggregates: (id, token) counts partial-combine, id fold rides the same hash prefix",
     "bm25_index_retrieval": "materialized postings path: literal bucket predicate in PartitionFilters, doclen 1-row stats fold, broadcast query joins only",
     "dup_spans_incremental": "maintained gram-count index: shard-only tokenize, 16-byte (h,cnt) count-table exchange, merge-pinned semi-join, same gap-merge window",
-    "dup_run_pairs": "exact shared runs via the diagonal trick: df-capped gram join (merge-pinned), one (a,b,diag) window clusters consecutive matches",
-    "zorder_key_orders": "Morton layout key: one static shift/mask fold, pure map — whole-stage codegen, zero exchanges",
     "bpe_merges": "BPE training rounds: corpus collapses once to word frequencies; per round one vocab-sized pair aggregate + 1-row argmax + broadcast merge fold",
-    "pq_adc_topk": "PQ ADC: literal BIGINT LUT inside one codegen select — joinless, shuffle-free — then TakeOrderedAndProject",
-    "ivfpq_adc_topk": "IVF-PQ: literal PartitionFilter prunes to n_probe lists, per-list LUT CASE chain, same joinless scoring",
-    "bpe_encode_vocab": "encode-side BPE: the training loop's final vocab frame, merge folds applied via broadcast 1-row frames",
-    "bm25_components_probe": "bm25 batch's own contribution lineage emitted raw: same semi-join + broadcast shape, sliced output",
     "ivfpq_adc_batch": "batched pruned ADC: union-of-probed-lists literal PartitionFilter, per-(qid,list) LUTs in the partition-cut kernel, exchange <= partitions x |Q| x k",
-    "sq_topk": "SQ8 symmetric retrieval: pure codegen aggregate(zip_with) fold over the codes, no Python worker, no exchange before TakeOrderedAndProject",
-    "sq_quant_report": "SQ staleness monitor: codegen decode+error fold, one partial-aggregated summary row",
-    "bq_topk": "1-bit Hamming retrieval: integer bit_count(xor) codegen fold over 16-byte word rows, TakeOrderedAndProject",
-    "bq_rerank_topk": "two-stage BQ: Hamming TakeOrdered cuts a 50-row shortlist, exact micro-unit L2 re-ranks only those rows",
-    "kcenter_coreset": "greedy k-center trajectory: k-1 literal-center codegen folds, each pass one TakeOrdered(1), state checkpointed flat",
     "trgm_search": "trigram index: literal bucket+hash IN-lists prune the postings scan, ALL-grams count filter, broadcast candidate verify against the doc table",
-    "trgm_similar": "index-only set similarity: hash-pruned postings fold + registry join, exact integer ppm, no text scan anywhere",
     "fuzzy_dup_pairs": "PassJoin: segment/probe equi-join (never cartesian), distinct pair cut, one banded levenshtein per candidate",
-    "weighted_sample": "sequential Poisson: one scan, TakeOrderedAndProject on the hash/weight key — no global sort",
     "heavy_hitters": "MG sketch pass (Arrow kernel), broadcast semi-join gates the exact recount — the exchange carries candidate-key rows only",
-    "skyline": "distinct-x collapse, range-partitioned LOCAL running max + boundary-prefix broadcast — no one-partition global window",
-    "exact_quantiles": "iterative selection: per-pass counter aggregates (parameter-sized), residual-slice sort only",
-    "group_trend": "exact OLS: one order-free DECIMAL(38,0) partial-aggregated exchange, integer slope/r2 recipes",
-    "collocations": "exact-lift bigrams: two explode aggregates, shuffle_hash-pinned count joins, TakeOrdered top-k",
     "hist_quantiles": "cube-only quantile bins: integer cum-sum windows over <= dims x bins rows",
     "bloom_new_rows": "bloom pre-filter: broadcast grouped words into the probe, only the maybe-sliver reaches the exact anti-join",
     "bloom_fill_report": "filter saturation: bit_or group + bit_count fold over geometry-sized word rows, never the corpus",
     "graph_triangles": "degree-ordered triangle census: oriented wedge join bounded by out-degree O(sqrt m), left-semi closure",
-    "graph_pagerank": "integer PageRank: two contribution shuffles on the vertex key, rank DIV degree — no float anywhere",
     "dq_report": "constraint suite: ONE scan for all row-local rules (stack over a single agg), one one-pass unique exchange, one broadcast FK LEFT join (orphans + checked from the same pass, r14)",
     "cms_freq": "Count-Min point lookups: driver-side slots -> literal-filtered counter scan, min-over-rows fold",
-    "retention_cohorts": "cohort matrix: distinct (user,period) + min-period, both exchanges on the user key",
-    "event_transitions": "transition matrix: one user-keyed lag window + a tiny from-type share window",
-    "event_ngrams": "sequence n-grams: n-1 leads in one user-keyed window pass, small support count",
-    "peak_concurrency": "interval sweep: +1/-1 deltas, one (group, ts) cum-sum window over O(2 rows) points",
     "incremental_components": "label contraction: distinct label-pair graph to a driver union-find, broadcast relabel map back",
-    "zonemap_scan": "file-level skipping: zone rows select the surviving file list; the scan opens only those files",
-    "change_point": "CUSUM: one group-keyed window carrying row_number + running sum + group totals, argmax pick window",
-    "hist_drift": "share-vector L1: two bin aggregates + a bins-sized full join, integer DIV shares",
     "kmv_distinct": "bottom-k distinct: cube-only distinct + rank cut, integer estimator — never the corpus",
     "kmv_overlap": "sketch-tier overlap: <= 2k sample rows, union re-cut, integer Jaccard ppm",
     "pit_join": "point-in-time join: union+window as-of plan (one key exchange), row-local expiry check — never a theta join",
-    "valueset_scan": "categorical file skipping: (file, value) existence rows pick the file list, residual IN filter",
     "zorder_zonemap_scan": "z-order + 2-D zonemap composition: both box predicates prune files before the scan",
 }
 
@@ -120,11 +83,7 @@ def main() -> None:
 
     spark = get_spark("plans")
     sf = "/root/testdata/sf0.01"
-    qs = dict(E.queries())
-    if hasattr(E, "retired_queries"):
-        qs.update(E.retired_queries())  # retired tier-3 plans still audited
-    if hasattr(E, "candidate_queries"):
-        qs.update(E.candidate_queries())  # pre-registration plans audited too
+    qs = E.queries()
     out = [
         "# PLANS — final physical plans of the headline queries",
         "",

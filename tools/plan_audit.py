@@ -1,5 +1,5 @@
-"""Automated physical-plan anti-pattern audit over EVERY entry-file
-query (registered + retired + candidates).
+"""Automated physical-plan anti-pattern audit over every registered
+``queries()`` entry.
 
 Born from a real find: the r13 triangle census inlined its basket
 self-join into every consumer — 94 parquet scans of lineitem and zero
@@ -39,16 +39,6 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 SCAN_THRESHOLD = 10
-
-# Documented exceptions — each entry must say WHY the anti-pattern is
-# the point there, so the allowlist can't silently grow.
-ALLOWED = {
-    # retired tier-3 row: the O(N²) exact all-pairs VERIFICATION
-    # BASELINE of embedding_cosine_pairs, loudly capped to vec_id<300
-    # in its docstring — the BNLJ over the capped slice IS the
-    # operator; the production path is the LSH-bucketed sibling.
-    ("retired", "embedding_cosine_allpairs", "CARTESIAN"),
-}
 
 
 def audit_plan(plan: str) -> list[str]:
@@ -127,6 +117,12 @@ def audit_plan(plan: str) -> list[str]:
             roots = [j for j, x in enumerate(kids) if _depth(x) == child_d]
             if "BuildLeft" in line and len(roots) > 1:
                 build = "\n".join(kids[roots[0] : roots[1]])
+            elif "BuildLeft" in line:
+                # one detected root (collapsed or log-extracted child
+                # text): the first child subtree is everything above
+                # that root, or the whole block when the root leads —
+                # never the last root's subtree, the stream side
+                build = "\n".join(kids[: roots[0]] or kids)
             else:
                 build = "\n".join(kids[roots[-1] :])
         else:
@@ -154,31 +150,19 @@ def main() -> int:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-    groups = {
-        "registered": E.queries(),
-        "retired": E.retired_queries(),
-        "candidate": E.candidate_queries(),
-    }
     bad = 0
     total = 0
-    for group, qs in groups.items():
-        for name, fn in qs.items():
-            total += 1
-            try:
-                plan = (
-                    fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception as exc:  # noqa: BLE001 - audit must report, not die
-                bad += 1
-                print(f"ERROR     {group}/{name}: {str(exc)[:100]}")
-                continue
-            for f in audit_plan(plan):
-                kind = f.split(":", 1)[0]
-                if (group, name, kind) in ALLOWED:
-                    print(f"ALLOWED   {group}/{name}: {f}")
-                    continue
-                bad += 1
-                print(f"FLAG      {group}/{name}: {f}")
+    for name, fn in E.queries().items():
+        total += 1
+        try:
+            plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        except Exception as exc:  # noqa: BLE001 - audit must report, not die
+            bad += 1
+            print(f"ERROR     {name}: {str(exc)[:100]}")
+            continue
+        for f in audit_plan(plan):
+            bad += 1
+            print(f"FLAG      {name}: {f}")
     print(f"\nplan audit: {total} queries, {bad} findings")
     return 1 if bad else 0
 

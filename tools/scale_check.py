@@ -95,14 +95,10 @@ for k in (1, 4, 10):
     t("profile_columns", 150000 * k,
       lambda: E._q_profile_columns(spark, f"/tmp/spark_graft_scale/orders_x{k}").count())
 # round-5 composites (VERDICT r4 #5): the full curation pipeline and
-# both streaming ingest front-ends (unbounded + watermark-TTL state)
+# the watermark-TTL streaming ingest front-end
 for k in (1, 4, 16):
     d = f"/tmp/spark_graft_scale/docs_x{k}"
     t("corpus_pipeline", 5000 * k, lambda d=d: E._q_corpus_pipeline(spark, d).count())
-for k in (1, 4, 16):
-    d = f"/tmp/spark_graft_scale/docs_x{k}"
-    t("corpus_ingest_stream", 5000 * k,
-      lambda d=d: E._q_corpus_ingest_stream(spark, d).count())
 for k in (1, 4, 16):
     d = f"/tmp/spark_graft_scale/docs_x{k}"
     t("corpus_ingest_stream_ttl", 5000 * k,

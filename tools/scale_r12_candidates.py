@@ -74,7 +74,6 @@ results: dict[str, dict[int, float]] = {
     "train": {}, "encode": {}, "adc": {}, "adc_batch8": {},
     "ivfpq_build": {}, "ivfpq_query": {}, "ivfpq_append": {},
     "ivfpq_batch8": {},
-    "sq_train": {}, "sq_encode": {}, "sq_topk": {},
 }
 for k in SPANS:
     emb = spark.read.parquet(f"{ROOT}/emb_x{k}/embeddings.parquet").select(
@@ -114,35 +113,6 @@ for k in SPANS:
         f"adc={t_adc:.2f}s top1={top[0]['vec_id']} "
         f"codes_bytes={code_b} raw_bytes={raw_b} "
         f"compression={raw_b / max(code_b, 1):.1f}x",
-        flush=True,
-    )
-
-    # SQ8: the codegen-only tier — train is ONE 2·dim-expression
-    # aggregate, encode a pure zip_with select, topk a codegen fold +
-    # TakeOrdered; no Python worker at any stage
-    from data_pengadaan_agent_spark.operators import sq as SQ
-
-    t_sqt, (mins, scales) = lap(lambda: SQ.train_sq(emb, dim=64))
-    results["sq_train"][k] = t_sqt
-    sq_path = f"{ROOT}/sq_codes_x{k}"
-    t_sqe, _ = lap(
-        lambda: SQ.sq_encode(emb, mins, scales)
-        .write.mode("overwrite")
-        .parquet(sq_path)
-    )
-    results["sq_encode"][k] = t_sqe
-    sq_codes = spark.read.parquet(sq_path)
-    qsq = SQ.encode_query(qvec, mins, scales)
-    t_sqq, _ = lap(lambda: SQ.sq_topk(sq_codes, qsq, k=10).collect())
-    results["sq_topk"][k] = t_sqq
-    sq_b = sum(
-        os.path.getsize(os.path.join(sq_path, f))
-        for f in os.listdir(sq_path)
-        if f.endswith(".parquet")
-    )
-    print(
-        f"x{k}: sq train={t_sqt:.2f}s encode={t_sqe:.2f}s topk={t_sqq:.2f}s "
-        f"sq_bytes={sq_b} compression={raw_b / max(sq_b, 1):.1f}x",
         flush=True,
     )
 

@@ -197,17 +197,8 @@ lap(
     ).count(),
 )
 
-# --- exact quantile selection: P scans replace the per-group sort ---
+# --- distributed pareto front ---
 from data_pengadaan_agent_spark.operators import relational as R  # noqa: E402
-from data_pengadaan_agent_spark.operators import selection as SEL  # noqa: E402
-
-lap(
-    "exact_quantiles",
-    lambda k: SEL.exact_quantiles(
-        docs[k].select("lang", F.col("n_chars").cast("double").alias("v")),
-        "lang", "v", [500_000, 990_000], n_bins=64,
-    ).count(),
-)
 
 lap(
     "skyline_2d",

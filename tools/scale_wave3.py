@@ -1,11 +1,11 @@
 """Scale-lap the third wave of continuation-2 ops: KMV cube (build /
 cube-only estimate / overlap), zonemap (executor footer sweep + pruned
 scan), incremental components (merge onto growing bases — the
-base-independence axis), and the drift pair.
+base-independence axis).
 
 Fixtures: the shared /tmp/spark_graft_scale replicas (lineitem with
-shifted order+part keys per replica; events with shifted user+event
-ids). Warm pass first, then timed; exponent = log(t_hi/t1)/log(hi).
+shifted order+part keys per replica). Warm pass first, then timed;
+exponent = log(t_hi/t1)/log(hi).
 Usage: python tools/scale_wave3.py        (x1/x4/x16)
        python tools/scale_wave3.py x64    (x1/x16/x64)
 """
@@ -40,19 +40,10 @@ for k in SPANS:
               FROM read_parquet('{BASE}/lineitem.parquet'),
                    (SELECT unnest(range({k})) AS r))
         TO '{lp}' (FORMAT PARQUET, ROW_GROUP_SIZE 65536)""")
-    ep = f"{d}/events.parquet"
-    if not os.path.exists(ep):
-        _con.execute(f"""
-        COPY (SELECT event_id + r*1000000 AS event_id, ts,
-                     user_id + r*1000000 AS user_id, event_type, value, props
-              FROM read_parquet('{BASE}/events.parquet'),
-                   (SELECT unnest(range({k})) AS r))
-        TO '{ep}' (FORMAT PARQUET, ROW_GROUP_SIZE 65536)""")
 print("fixtures ready", flush=True)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_pengadaan_agent_spark.operators import drift as DR  # noqa: E402
 from data_pengadaan_agent_spark.operators import graph as G  # noqa: E402
 from data_pengadaan_agent_spark.operators import kmv as KV  # noqa: E402
 from data_pengadaan_agent_spark.operators import zonemap as ZM  # noqa: E402
@@ -62,7 +53,6 @@ spark = get_spark("scale-wave3")
 spark.range(8).mapInPandas(lambda it: it, schema="id long").count()
 
 line = {k: spark.read.parquet(f"{ROOT}/docs_x{k}/lineitem.parquet") for k in SPANS}
-evts = {k: spark.read.parquet(f"{ROOT}/docs_x{k}/events.parquet") for k in SPANS}
 
 res = {}
 
@@ -137,18 +127,6 @@ for k in (1, SPANS[-1]):
     print(f"merge_components onto x{k} base: {time.time() - t0:.2f} s "
           f"({n} labeled)", flush=True)
 
-lap(
-    "change_point",
-    lambda k: DR.change_point(evts[k], ["event_type"], "ts", "value", "event_id").count(),
-)
-lap(
-    "hist_drift",
-    lambda k: DR.histogram_drift(
-        evts[k].filter(F.col("event_type") == "click"),
-        evts[k].filter(F.col("event_type") == "view"),
-        "value", 0.0, 400.0, n_bins=20,
-    ).count(),
-)
 
 print()
 for name, (times, exp) in res.items():
