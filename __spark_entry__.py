@@ -22,7 +22,7 @@ from data_pengadaan_agent_spark.operators import relational as R
 from data_pengadaan_agent_spark.operators import similarity as S
 from data_pengadaan_agent_spark.operators import textan as X
 from data_pengadaan_agent_spark.operators.filters import filter_keywords
-from data_pengadaan_agent_spark.sources.catalog import load_table, spread
+from data_pengadaan_agent_spark.sources.catalog import ensure_index, load_table, spread
 from data_pengadaan_agent_spark.streaming import windows as SW
 
 SF0001 = "/root/testdata/sf0.001"
@@ -3744,21 +3744,11 @@ def _q_ivfpq_adc_batch(spark, sf):
 
     emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
     path = _warehouse_path(spark, sf, "ivfpq_codes")
-    expected = emb.count()
-    try:
-        coarse, cb = PQ.load_ivfpq_codebooks(spark, path)
-        fresh = (
-            len(coarse) == 4
-            and len(cb) == 4
-            and len(cb[0]) == 4
-            and spark.read.parquet(path).count() == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        coarse, cb = PQ.build_ivfpq_table(
-            emb, path, dim=64, kc=4, m=4, ksub=4, iters=2
-        )
+    ensure_index(
+        spark, path, sf, ("embeddings",), (64, 4, 4, 4, 2),  # dim, kc, m, ksub, iters
+        lambda: PQ.build_ivfpq_table(emb, path, dim=64, kc=4, m=4, ksub=4, iters=2),
+    )
+    coarse, cb = PQ.load_ivfpq_codebooks(spark, path)
     queries = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") % 200 == 0).collect()
@@ -4058,26 +4048,15 @@ def _q_bm25_index_retrieval(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     path = _warehouse_path(spark, sf, "postings_index")
-    # gate law (r15, the bloom n_keys shape): the meta stats marker's
-    # n_docs vs the source row count — ONE 1-row read replaces the
-    # per-call doclen parquet count (meta n_docs == doclen count at
-    # every committed state by maintenance; a crashed append leaves
-    # them mismatched against the source and rebuilds here)
-    try:
-        meta = LX.read_meta_stats(spark, path)
-        fresh = meta[1] == docs.count() and meta[0] == 64
-    except Exception:
-        fresh = False
-    if not fresh:
-        LX.build_postings_index(docs, path, n_buckets=64)
-        meta = LX.read_meta_stats(spark, path)
+    ensure_index(
+        spark, path, sf, ("documents",), (64,),
+        lambda: LX.build_postings_index(docs, path, n_buckets=64),
+    )
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("qid"),
         F.slice(X.tokens("text"), 1, 3).alias("terms"),
     )
-    # the gate just validated (or the build just wrote) the meta —
-    # forward it instead of re-reading the sidecar (r14)
-    return LX.bm25_from_index(spark, path, queries, k=5, _meta=meta)
+    return LX.bm25_from_index(spark, path, queries, k=5)
 
 
 def _q_dup_spans_incremental(spark, sf):
@@ -4088,8 +4067,9 @@ def _q_dup_spans_incremental(spark, sf):
     base twin at SHIFTED positions, the winnow_matches twin
     construction. The query answers "which spans of the daily shard
     duplicate anything seen so far" WITHOUT re-tokenizing the base;
-    ingest is once-per-round (registry count gates the rebuild;
-    append replay is a registered no-op). ROUND-11-pool candidate."""
+    ingest is once per source content (ensure_index gates the
+    rebuild; append replay is a registered no-op). ROUND-11-pool
+    candidate."""
     from data_pengadaan_agent_spark.operators import dupindex as DI
 
     docs = load_table(spark, sf, "documents")
@@ -4098,17 +4078,13 @@ def _q_dup_spans_incremental(spark, sf):
         F.concat(F.lit("pre1 pre2 "), F.col("text")).alias("text"),
     )
     path = _warehouse_path(spark, sf, "gram_counts")
-    expected = docs.count() + shard.count()
-    try:
-        fresh = (
-            spark.read.parquet(f"{path}/docs").count() == expected
-            and DI._read_meta(spark, path) == (8, 64, True)
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+    spec = (8, 64, True)  # (length, n_buckets, arith_hash)
+
+    def build():
         DI.build_gram_counts(docs, path, length=8, n_buckets=64)
         DI.append_gram_counts(shard, path)
+
+    rebuilt = ensure_index(spark, path, sf, ("documents",), spec, build)
     # Bucketed counts promoted to the default (r15, VERDICT r14 ask
     # #5; guide §2.4 / §6): the counts table re-laid-out as a managed
     # table bucketed on h removes the count side's per-query exchange
@@ -4121,36 +4097,24 @@ def _q_dup_spans_incremental(spark, sf):
     # index rebuild above forces the rewrite. The bucket count is
     # SCALE-ADAPTIVE (~32 MB/bucket, floor 8, cap 4096 — a constant
     # tuned to either local mode or the cluster would violate the
-    # scale-parameterization rule); override: $SPARK_GRAFT_COUNT_BUCKETS.
-    import os as _os
-
+    # scale-parameterization rule).
     from data_pengadaan_agent_spark.sources.readers import write_bucketed
 
     tag = sf.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     tbl = f"gram_counts_bucketed_{tag}"
-    if (not fresh) or (not spark.catalog.tableExists(tbl)):
-        env_buckets = _os.environ.get("SPARK_GRAFT_COUNT_BUCKETS")
-        if env_buckets:
-            n_buckets = int(env_buckets)
-        else:
-            try:
-                jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-                p = jvm_path(f"{path}/counts")
-                fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-                nbytes = fs.getContentSummary(p).getLength()
-            except Exception:
-                nbytes = 0
-            n_buckets = min(4096, max(8, int(nbytes // (32 << 20))))
+    if rebuilt or not spark.catalog.tableExists(tbl):
+        p = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/counts")
+        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        nbytes = fs.getContentSummary(p).getLength()
+        n_buckets = min(4096, max(8, int(nbytes // (32 << 20))))
         write_bucketed(
             spark.read.parquet(f"{path}/counts").select("h", "cnt"),
             tbl,
             "h",
             n_buckets=n_buckets,
         )
-    # the gram law (8, 64, True) was just validated (or built) by the
-    # freshness gate — forward it instead of re-reading the meta (r14)
     return DI.dup_spans_incremental(
-        spark, path, shard, _meta=(8, 64, True), counts_source=spark.table(tbl)
+        spark, path, shard, _meta=spec, counts_source=spark.table(tbl)
     )
 
 
@@ -4172,25 +4136,6 @@ FROM spans WHERE doc_id >= 1000000
 """
 
 
-def _trgm_index_path(spark, sf):
-    """Shared ingest-once trigram index over documents (registry count
-    gates the rebuild, like the postings/gram-count indexes)."""
-    from data_pengadaan_agent_spark.operators import trgm as TG
-
-    docs = load_table(spark, sf, "documents")
-    path = _warehouse_path(spark, sf, "trgm_index")
-    try:
-        fresh = (
-            spark.read.parquet(f"{path}/docs").count() == docs.count()
-            and TG._read_meta(spark, path) == 64
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        TG.build_trgm_index(docs, path, n_buckets=64)
-    return path, docs
-
-
 def _q_trgm_search(spark, sf):
     """Substring search through the MATERIALIZED trigram index
     (operators/trgm.substring_search, pg_trgm re-expressed
@@ -4202,9 +4147,12 @@ def _q_trgm_search(spark, sf):
     index's correctness contract. ROUND-13-pool candidate."""
     from data_pengadaan_agent_spark.operators import trgm as TG
 
-    path, docs = _trgm_index_path(spark, sf)
-    # n_buckets=64 was just validated (or built) by the freshness
-    # gate — forward it instead of re-reading the meta sidecar (r14)
+    docs = load_table(spark, sf, "documents")
+    path = _warehouse_path(spark, sf, "trgm_index")
+    ensure_index(
+        spark, path, sf, ("documents",), (64,),
+        lambda: TG.build_trgm_index(docs, path, n_buckets=64),
+    )
     return TG.substring_search(
         spark, path, docs, ["window window", "scan merge part"], _n_buckets=64
     )
@@ -4328,22 +4276,13 @@ def _q_hist_quantiles(spark, sf):
 
     ev = load_table(spark, sf, "events")
     path = _warehouse_path(spark, sf, "hist_cube")
-    expected = ev.filter(F.col("value").isNotNull()).count()
-    try:
-        fresh = (
-            HC._read_meta(spark, path) == (["event_type"], "value", 0.0, 500.0, 50)
-            and spark.read.parquet(f"{path}/cube")
-            .agg(F.sum("cnt"))
-            .collect()[0][0]
-            == expected
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        HC.build_hist_cube(
+    ensure_index(
+        spark, path, sf, ("events",), (("event_type",), "value", 0.0, 500.0, 50),
+        lambda: HC.build_hist_cube(
             ev, path, dims=["event_type"], value_col="value",
             lo=0.0, hi=500.0, n_bins=50,
-        )
+        ),
+    )
     return HC.hist_quantile_bins(
         spark, path, ["event_type"], [500_000, 990_000]
     )
@@ -4389,46 +4328,21 @@ def _bloom_index_path(spark, sf):
     """Shared ingest-once bloom index over the 80%-corpus slice of
     documents, keyed on the ARITHMETIC content fingerprint (so the
     filter answers "is this CONTENT already ingested", not "this id").
-    Geometry 8×4096×63 bits holds <20% fill at sf0.1."""
+    Geometry 8×4096×63 bits holds <20% fill at sf0.1. Returns the
+    (n_buckets, n_words, k, key_col) spec the index was built under,
+    forwarded to the probes as their ``_meta``."""
     from data_pengadaan_agent_spark.operators import bloom as BL
-    from data_pengadaan_agent_spark.operators import textan as X
-
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     docs = load_table(spark, sf, "documents")
     path = _warehouse_path(spark, sf, "bloom_index")
-    # r15 (VERDICT r14 ask #8): the old gate re-fingerprinted and
-    # distinct-counted the WHOLE 80% corpus slice on EVERY call (a
-    # full text scan + shuffle, ~45% extra scan work per probe) and
-    # then distinct-counted keys/ too. The gate law is now the same
-    # one the trgm/postings/gram-count gates already use — source ROW
-    # count (a metadata-only parquet count) against a 1-row sidecar
-    # this entry writes after a successful build — plus the meta
-    # commit-marker read, whose validated 4-tuple forwards into the
-    # probe call. (The bloom meta additionally carries the n_keys
-    # count marker, maintained by build/ingest/compact, so any
-    # gate that does want the registered-key cardinality gets it for
-    # free with the meta read instead of a keys/ distinct-count.)
-    # Sidecar written AFTER the build: a crash between the two leaves
-    # the gate stale and the next call rebuilds — never a fresh-
-    # looking half-built index.
     meta = (8, 4096, 7, "fingerprint")
-    n_docs = docs.count()
-    gate_p = f"{path}/entry_gate"
-    try:
-        fresh = [
-            r["n_source_rows"] for r in spark.read.parquet(gate_p).collect()
-        ] == [n_docs] and BL.read_meta_counts(spark, path)[0] == meta
-    except Exception:
-        fresh = False
-    if not fresh:
-        corpus = X.fingerprint_arith(docs.filter(F.col("doc_id") % 10 < 8))
-        BL.build_bloom_index(
-            corpus, path, key_col="fingerprint", n_buckets=8, n_words=4096, k=7
-        )
-        local_df(spark, [(int(n_docs),)], "n_source_rows bigint").write.mode(
-            "overwrite"
-        ).parquet(gate_p)
+    ensure_index(
+        spark, path, sf, ("documents",), meta,
+        lambda: BL.build_bloom_index(
+            X.fingerprint_arith(docs.filter(F.col("doc_id") % 10 < 8)),
+            path, key_col="fingerprint", n_buckets=8, n_words=4096, k=7,
+        ),
+    )
     return path, docs, meta
 
 
@@ -4637,12 +4551,12 @@ def _q_cms_freq(spark, sf):
         "lang", F.explode(X.tokens("text")).alias("tok")
     ).filter(F.col("tok") != "")
     path = _warehouse_path(spark, sf, "cms_cube")
-    try:
-        fresh = CM._read_meta(spark, path) == (["lang"], "tok", 4, 512, 424242)
-    except Exception:
-        fresh = False
-    if not fresh:
-        CM.build_cms_cube(toks, path, dims=["lang"], key_col="tok", d=4, w=512)
+    ensure_index(
+        spark, path, sf, ("documents",), (("lang",), "tok", 4, 512, 424242),
+        lambda: CM.build_cms_cube(
+            toks, path, dims=["lang"], key_col="tok", d=4, w=512, seed=424242
+        ),
+    )
     return CM.cms_estimate(spark, path, _CMS_KEYS, ["lang"])
 
 
@@ -4719,6 +4633,22 @@ def _q_incremental_components(spark, sf):
     ).orderBy("doc_id")
 
 
+def _kmv_cube(spark, sf):
+    """Shared ingest-once KMV cube over lineitem: k=64 smallest
+    Knuth-hash values of l_partkey per (returnflag, linestatus)."""
+    from data_pengadaan_agent_spark.operators import kmv as KV
+
+    li = load_table(spark, sf, "lineitem")
+    path = _warehouse_path(spark, sf, "kmv_cube")
+    ensure_index(
+        spark, path, sf, ("lineitem",), (("l_returnflag", "l_linestatus"), "l_partkey", 64),
+        lambda: KV.build_kmv_cube(
+            li, path, dims=["l_returnflag", "l_linestatus"], key_col="l_partkey", k=64
+        ),
+    )
+    return path
+
+
 def _q_kmv_distinct(spark, sf):
     """KMV bottom-k distinct cube (operators/kmv — the HLL cube's
     ORACLE-CERTIFIABLE sibling): k=64 smallest Knuth-hash values of
@@ -4728,20 +4658,7 @@ def _q_kmv_distinct(spark, sf):
     estimator — in DuckDB. ROUND-13-pool candidate."""
     from data_pengadaan_agent_spark.operators import kmv as KV
 
-    li = load_table(spark, sf, "lineitem")
-    path = _warehouse_path(spark, sf, "kmv_cube")
-    try:
-        fresh = KV._read_meta(spark, path) == (
-            ["l_returnflag", "l_linestatus"], "l_partkey", 64,
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
-        KV.build_kmv_cube(
-            li, path, dims=["l_returnflag", "l_linestatus"],
-            key_col="l_partkey", k=64,
-        )
-    return KV.kmv_distinct(spark, path, ["l_returnflag", "l_linestatus"])
+    return KV.kmv_distinct(spark, _kmv_cube(spark, sf), ["l_returnflag", "l_linestatus"])
 
 
 _KMV_DISTINCT_SQL = """
@@ -4782,9 +4699,7 @@ def _q_kmv_overlap(spark, sf):
     integer estimators. ROUND-13-pool candidate."""
     from data_pengadaan_agent_spark.operators import kmv as KV
 
-    path, _ = _warehouse_path(spark, sf, "kmv_cube"), None
-    _q_kmv_distinct(spark, sf)  # ensures the cube is built/fresh
-    return KV.kmv_overlap(spark, path, "l_returnflag", "A", "N")
+    return KV.kmv_overlap(spark, _kmv_cube(spark, sf), "l_returnflag", "A", "N")
 
 
 _KMV_OVERLAP_SQL = """
@@ -4918,20 +4833,14 @@ def _q_zorder_zonemap_scan(spark, sf):
     from data_pengadaan_agent_spark.operators import zonemap as ZM
 
     li = load_table(spark, sf, "lineitem")
-    data_p = _warehouse_path(spark, sf, "lineitem_zordered")
     zm_p = _warehouse_path(spark, sf, "lineitem_zm2d")
-    n = li.count()
-    try:
-        fresh = (
-            spark.read.parquet(data_p).count() == n
-            and ZM._read_meta(spark, zm_p) == ["l_partkey", "l_suppkey"]
-            and ZM.audit_zonemap(spark, data_p, zm_p).count() == 0
-        )
-    except Exception:
-        fresh = False
-    if not fresh:
+    data_p = f"{zm_p}/data"  # the z-ordered copy lives under the gated map
+
+    def build():
         LY.write_zordered(li, data_p, ["l_partkey", "l_suppkey"], n_files=16)
         ZM.build_zonemap(spark, data_p, zm_p, ["l_partkey", "l_suppkey"])
+
+    ensure_index(spark, zm_p, sf, ("lineitem",), (("l_partkey", "l_suppkey"), 16), build)
     out = ZM.zonemap_pruned_scan(
         spark, data_p, zm_p,
         {"l_partkey": (50.0, 150.0), "l_suppkey": (1.0, 8.0)},

@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import read_meta, write_meta
+
 # Mixing constants: Knuth's 32-bit multiplicative constant and two
 # xxhash32 primes. Products stay < 2^63 for any 31-bit folded key:
 # 2^31 · 3266489917 ≈ 7.0e18 < 2^63−1 ≈ 9.2e18.
@@ -157,80 +159,40 @@ def _word_rows(batch: DataFrame, key_col: str, n_buckets: int, n_words: int, k: 
     )
 
 
-def _read_meta_row(spark: SparkSession, path: str):
-    _, _, meta_p = _paths(path)
-    try:
-        row = spark.read.parquet(meta_p).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"bloom index at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_bloom_index"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"bloom index meta at {path!r} must be exactly 1 row")
-    r = row[0]
-    if "key_col" not in r.asDict():
-        # meta v1 (pre key_col freeze): the index is structurally fine
-        # but its key-column contract is unverifiable — the exact
-        # miskeyed-append hazard the freeze exists to close. Loud
-        # rebuild beats silently trusting the caller's convention.
-        raise ValueError(
-            f"bloom index meta at {path!r} predates the key_col freeze "
-            "(meta v1); rebuild with build_bloom_index"
-        )
-    if "n_keys" not in r.asDict():
-        # meta v2 (pre count marker, r15): probes would have to
-        # re-count the key registry per call to gate freshness — the
-        # exact per-call job the marker exists to remove. Same loud-
-        # rebuild policy as the v1 key_col freeze.
-        raise ValueError(
-            f"bloom index meta at {path!r} predates the n_keys count "
-            "marker (meta v2); rebuild with build_bloom_index"
-        )
-    return r
-
-
-def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, int, str]:
-    r = _read_meta_row(spark, path)
-    return int(r["n_buckets"]), int(r["n_words"]), int(r["k"]), str(r["key_col"])
-
-
 def read_meta_counts(
     spark: SparkSession, path: str
 ) -> tuple[tuple[int, int, int, str], int]:
     """(geometry+key 4-tuple, registered distinct key count) in ONE
-    meta read — the r15 count marker (VERDICT r14 ask #8): a caller
-    gating index freshness compares ``n_keys`` against its expected
-    source cardinality instead of re-counting keys/ per call, and
-    forwards the 4-tuple onward (``_meta``), so the whole gate costs
-    one 1-row read. ``n_keys`` is maintained by build (exact),
+    meta read. ``n_keys`` is maintained by build (exact),
     ingest_bloom_batch (recounted from the registry after the append
     — self-healing under crash-replay) and compact (carried through:
     compaction never changes the key set)."""
-    r = _read_meta_row(spark, path)
+    r = read_meta(
+        spark, _paths(path)[2], "bloom index",
+        require=(
+            ("key_col", "the key_col freeze (meta v1)"),
+            ("n_keys", "the n_keys count marker (meta v2)"),
+        ),
+    )
     return (
         (int(r["n_buckets"]), int(r["n_words"]), int(r["k"]), str(r["key_col"])),
         int(r["n_keys"]),
     )
 
 
-def _write_meta(
-    spark: SparkSession,
-    meta_p: str,
-    n_buckets: int,
-    n_words: int,
-    k: int,
-    key_col: str,
-    n_keys: int,
-) -> None:
-    from data_pengadaan_agent_spark.sources.catalog import local_df
+def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, int, str]:
+    return read_meta_counts(spark, path)[0]
 
-    local_df(
-        spark,
-        [(int(n_buckets), int(n_words), int(k), str(key_col), int(n_keys))],
+
+def _write_meta(
+    spark: SparkSession, meta_p: str, n_buckets: int, n_words: int, k: int,
+    key_col: str, n_keys: int,
+) -> None:
+    write_meta(
+        spark, meta_p,
         "n_buckets int, n_words int, k int, key_col string, n_keys bigint",
-    ).write.mode("overwrite").parquet(meta_p)
+        (int(n_buckets), int(n_words), int(k), str(key_col), int(n_keys)),
+    )
 
 
 def _resolve_key(frozen: str, key_col: str | None, fn: str) -> str:
@@ -359,11 +321,9 @@ def bloom_new_rows(
     direct anti-join, so a green row certifies the invariant, the
     probe law, and the verify in one equality.
 
-    ``_meta``: a caller that already read (and gated on) the meta
-    sidecar this call forwards the 4-tuple instead of paying the
-    read + collect again (r15 — the probe_bloom convention one level
-    up; with the entry gate's n_keys marker this makes the whole
-    call single-meta-read)."""
+    ``_meta``: a caller that built the index under a known 4-tuple
+    (its ensure_index spec) forwards it instead of paying the meta
+    read + collect (the probe_bloom convention one level up)."""
     # NULL keys carry no identity: a NULL can never be registered (its
     # probe rows explode to nothing, so its bits are never set) and
     # would be re-classified "new" on every ingest forever — drop them
@@ -486,8 +446,8 @@ def compact_bloom_index(
     Purely physical: the grouped view is unchanged (bit_or is the
     read law), so compaction needs no audit gate. Returns live word
     rows after compaction."""
-    n_buckets, n_words, k, frozen = _read_meta(spark, path)
-    key_col = _resolve_key(frozen, key_col, "compact_bloom_index")
+    meta4, n_keys = read_meta_counts(spark, path)
+    key_col = _resolve_key(meta4[3], key_col, "compact_bloom_index")
     words_p, keys_p, meta_p = _paths(path)
     staged_w, staged_k = f"{words_p}__staged", f"{keys_p}__staged"
     grouped = grouped_words(spark, path)
@@ -499,8 +459,6 @@ def compact_bloom_index(
 
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    meta_df = spark.read.parquet(meta_p).collect()
-    _meta_schema = spark.read.parquet(meta_p).schema
     fs.delete(jvm_path(meta_p), True)  # meta OUT: index invalid during swap
     fs.delete(jvm_path(words_p), True)
     if not fs.rename(jvm_path(staged_w), jvm_path(words_p)):
@@ -518,9 +476,7 @@ def compact_bloom_index(
             f"compact_bloom_index: rename {staged_k} -> {keys_p} failed; "
             "meta left absent (index invalid), staged data preserved"
         )
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, meta_df, _meta_schema).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, *meta4, n_keys)
     return n_rows
 
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_pengadaan_agent_spark.operators.dedup import P31, _lcg_coeffs, poly_hash_col
+from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
 
 
 def _paths(path: str) -> tuple[str, str, str]:
@@ -47,18 +48,7 @@ def _paths(path: str) -> tuple[str, str, str]:
 
 
 def _read_meta(spark: SparkSession, path: str):
-    _, _, meta = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid cube
-        raise ValueError(
-            f"cms cube at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_cms_cube"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"cms cube meta at {path!r} must be exactly 1 row")
-    r = row[0]
+    r = read_meta(spark, _paths(path)[2], "cms cube")
     return list(r["dims"]), str(r["key_col"]), int(r["d"]), int(r["w"]), int(r["seed"])
 
 
@@ -126,16 +116,14 @@ def build_cms_cube(
         if fs.exists(jvm_path(stale)):
             fs.delete(jvm_path(stale), True)
     _cube_rows(df, dims, key_col, d, w, seed).write.mode("overwrite").parquet(cube_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     local_df(spark, [("__build__",)], "batch_id string").write.mode(
         "overwrite"
     ).parquet(batches_p)
-    local_df(
-        spark,
-        [(list(dims), str(key_col), int(d), int(w), int(seed))],
-        "dims array<string>, key_col string, d int, w int, seed int",
-    ).write.mode("overwrite").parquet(meta_p)
+    write_meta(
+        spark, meta_p, "dims array<string>, key_col string, d int, w int, seed int",
+        (list(dims), str(key_col), int(d), int(w), int(seed)),
+    )
 
 
 def append_cms_cube(shard: DataFrame, path: str, batch_id: str) -> int:
@@ -157,7 +145,6 @@ def append_cms_cube(shard: DataFrame, path: str, batch_id: str) -> int:
         return 0
     rows = _cube_rows(shard, dims, key_col, d, w, seed).localCheckpoint(eager=True)
     n = rows.count()
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     local_df(spark, [(str(batch_id),)], "batch_id string").write.mode(
         "append"
@@ -206,7 +193,6 @@ def cms_estimate(
         for key in keys
         for row, col in py_slots(str(key), d, w, seed)
     ]
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     wanted = local_df(spark, slot_rows, "key string, row int, col int")
     # ONE materialization of the rollup: the distinct-group list and

@@ -66,6 +66,13 @@ from data_pengadaan_agent_spark.operators.textan import (
     tokens,
     word_ngrams,
 )
+from data_pengadaan_agent_spark.sources.catalog import (
+    local_df,
+    read_meta,
+    spread,
+    swap_dirs,
+    write_meta,
+)
 
 
 # batch tag on compacted count rows: compaction collapses per-append
@@ -105,19 +112,19 @@ def _intent_batches(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, bool]:
-    _, _, meta, _ = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"gram-count index at {path!r} has no readable meta table — "
-            "absent, corrupt, or a build crashed before commit; rebuild "
-            "with build_gram_counts"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"gram-count index meta at {path!r} must be exactly 1 row")
-    r = row[0]
+    r = read_meta(spark, _paths(path)[2], "gram-count index")
     return int(r["length"]), int(r["n_buckets"]), bool(r["arith_hash"])
+
+
+def _write_meta(
+    spark: SparkSession, meta_p: str, length: int, n_buckets: int, arith_hash: bool
+) -> None:
+    # the explicit schema is the contract: re-inferring from Python
+    # values widens the int columns to bigint across rewrites
+    write_meta(
+        spark, meta_p, "length int, n_buckets int, arith_hash boolean",
+        (int(length), int(n_buckets), bool(arith_hash)),
+    )
 
 
 def _shard_counts(
@@ -129,8 +136,6 @@ def _shard_counts(
     id_col: str,
     batch: int,
 ) -> DataFrame:
-    from data_pengadaan_agent_spark.sources.catalog import spread
-
     return (
         spread(shard, id_col)
         .select(F.explode(word_ngrams(text_col, length)).alias("g"))
@@ -145,8 +150,6 @@ def _shard_counts(
 
 
 def _write_markers(spark: SparkSession, commits_p: str, batches: list[int]) -> None:
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     local_df(spark, [(int(b),) for b in batches], "batch bigint").write.mode(
         "append"
     ).parquet(commits_p)
@@ -215,16 +218,11 @@ def build_gram_counts(
     docs.select(
         F.col(id_col), F.lit(0).cast("bigint").alias("batch")
     ).write.mode("overwrite").parquet(docs_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     local_df(spark, [(0,)], "batch bigint").write.mode("overwrite").parquet(
         commits_p
     )
-    local_df(
-        spark,
-        [(int(length), int(n_buckets), bool(arith_hash))],
-        "length int, n_buckets int, arith_hash boolean",
-    ).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, length, n_buckets, arith_hash)
 
 
 def append_gram_counts(
@@ -358,8 +356,6 @@ def repair_gram_counts(
     # crashed repair's id is (a) never reused and (b) audit-flagged
     # until a successful repair marks it, so convergence holds from
     # any crash point with appends interleaved anywhere.
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     local_df(spark, [(int(repair_batch),)], "batch bigint").write.mode(
         "append"
     ).parquet(_intents_path(path))
@@ -456,19 +452,8 @@ def compact_gram_counts(
     # aborts with the original restored (restore itself checked)
     # rather than deleting the live copy; meta stays absent on abort
     # (index loudly invalid)
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
     swap_dirs(fs, jvm_path, tmp, counts_p, old, "compact_gram_counts")
-    # recommit meta with the ORIGINAL explicit schema — re-inferring
-    # from collected Rows widened the int columns to bigint, silently
-    # drifting the meta schema after the first compaction
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(
-        spark,
-        [(int(length), int(n_buckets), bool(arith_hash))],
-        "length int, n_buckets int, arith_hash boolean",
-    ).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, length, n_buckets, arith_hash)
     return before_files - _n_files(counts_p), before_rows - after_rows
 
 
@@ -500,9 +485,9 @@ def dup_spans_incremental(
     parquet layout stays the default because it keeps the index
     vanilla-session-portable.
 
-    ``_meta``: a caller that already read the meta sidecar this call
-    (the entry's freshness gate) passes it through instead of paying
-    the read + collect again (the bloom _meta convention, r14)."""
+    ``_meta``: a caller that built the index under a known gram law
+    (its ensure_index spec) passes it through instead of paying the
+    meta read + collect (the bloom _meta convention)."""
     length, n_buckets, arith_hash = _meta or _read_meta(spark, path)
     counts_p, docs_p, _, _ = _paths(path)
     if min_count < 2:
@@ -518,7 +503,6 @@ def dup_spans_incremental(
             "count table must include the shard for within-shard repeats "
             "to be counted)"
         )
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     grams = spread(shard, id_col).select(
         F.col(id_col),

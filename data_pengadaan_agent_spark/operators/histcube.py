@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
+
 
 def _paths(path: str) -> tuple[str, str, str]:
     p = path.rstrip("/")
@@ -50,18 +52,7 @@ def _paths(path: str) -> tuple[str, str, str]:
 
 
 def _read_meta(spark: SparkSession, path: str):
-    _, _, meta = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid cube
-        raise ValueError(
-            f"hist cube at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_hist_cube"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"hist cube meta at {path!r} must be exactly 1 row")
-    r = row[0]
+    r = read_meta(spark, _paths(path)[2], "hist cube")
     return (
         list(r["dims"]), str(r["value_col"]), float(r["lo"]), float(r["hi"]),
         int(r["n_bins"]),
@@ -129,16 +120,15 @@ def build_hist_cube(
     _cube_rows(df, dims, value_col, lo, hi, n_bins).write.mode(
         "overwrite"
     ).parquet(cube_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     local_df(spark, [("__build__",)], "batch_id string").write.mode(
         "overwrite"
     ).parquet(batches_p)
-    local_df(
-        spark,
-        [(list(dims), str(value_col), float(lo), float(hi), int(n_bins))],
+    write_meta(
+        spark, meta_p,
         "dims array<string>, value_col string, lo double, hi double, n_bins int",
-    ).write.mode("overwrite").parquet(meta_p)
+        (list(dims), str(value_col), float(lo), float(hi), int(n_bins)),
+    )
 
 
 def append_hist_cube(shard: DataFrame, path: str, batch_id: str) -> int:
@@ -167,7 +157,6 @@ def append_hist_cube(shard: DataFrame, path: str, batch_id: str) -> int:
         eager=True
     )
     n = rows.count()
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     local_df(spark, [(str(batch_id),)], "batch_id string").write.mode(
         "append"

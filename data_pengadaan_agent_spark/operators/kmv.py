@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from data_pengadaan_agent_spark.operators.sampling import split_hash_col
+from data_pengadaan_agent_spark.sources.catalog import read_meta, write_meta
 
 _HASH_SPACE = 1 << 32
 
@@ -49,18 +50,17 @@ def _paths(path: str) -> tuple[str, str]:
 
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[list[str], str, int]:
-    _, meta_p = _paths(path)
-    try:
-        row = spark.read.parquet(meta_p).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid cube
-        raise ValueError(
-            f"kmv cube at {path!r} has no readable meta table — absent, corrupt, "
-            "or a build crashed before commit; rebuild with build_kmv_cube"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"kmv cube meta at {path!r} must be exactly 1 row")
-    r = row[0]
+    r = read_meta(spark, _paths(path)[1], "kmv cube")
     return list(r["dims"]), str(r["key_col"]), int(r["k"])
+
+
+def _write_meta(
+    spark: SparkSession, meta_p: str, dims: list[str], key_col: str, k: int
+) -> None:
+    write_meta(
+        spark, meta_p, "dims array<string>, key_col string, k int",
+        (list(dims), str(key_col), int(k)),
+    )
 
 
 def _sample_rows(df: DataFrame, dims: list[str], key_col: str, k: int) -> DataFrame:
@@ -104,14 +104,8 @@ def build_kmv_cube(
         fs.delete(meta_fs, True)
     if fs.exists(jvm_path(samples_p)):
         fs.delete(jvm_path(samples_p), True)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     _sample_rows(df, dims, key_col, k).write.mode("overwrite").parquet(samples_p)
-    local_df(
-        spark,
-        [(list(dims), str(key_col), int(k))],
-        "dims array<string>, key_col string, k int",
-    ).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, dims, key_col, k)
 
 
 def append_kmv_cube(shard: DataFrame, path: str) -> int:
@@ -188,8 +182,6 @@ def compact_kmv_cube(spark: SparkSession, path: str) -> int:
     n = spark.read.parquet(staged).count()
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    meta_df = spark.read.parquet(meta_p).collect()
-    _meta_schema = spark.read.parquet(meta_p).schema
     fs.delete(jvm_path(meta_p), True)  # meta OUT: cube invalid during swap
     fs.delete(jvm_path(samples_p), True)
     if not fs.rename(jvm_path(staged), jvm_path(samples_p)):
@@ -199,9 +191,7 @@ def compact_kmv_cube(spark: SparkSession, path: str) -> int:
             f"compact_kmv_cube: rename {staged} -> {samples_p} failed; "
             "meta left absent (cube invalid), staged data preserved"
         )
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, meta_df, _meta_schema).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, dims, key_col, k)
     return n
 
 

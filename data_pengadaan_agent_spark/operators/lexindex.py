@@ -42,6 +42,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.operators.textan import bm25_int_coeffs, tokens
+from data_pengadaan_agent_spark.sources.catalog import (
+    read_meta,
+    spread,
+    swap_dirs,
+    write_meta,
+)
 
 
 def _paths(path: str) -> tuple[str, str, str]:
@@ -53,65 +59,34 @@ def _bucket(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(int(n_buckets))).cast("int")
 
 
-def _read_meta_row(spark: SparkSession, path: str):
-    _, _, meta = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"postings index at {path!r} has no readable meta table — "
-            "absent, corrupt, or a build crashed before commit; rebuild "
-            "with build_postings_index"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"postings index meta at {path!r} must be exactly 1 row")
-    r = row[0]
-    if "n_docs" not in r.asDict():
-        # meta v1 (pre corpus-stats marker, r15): every query re-scanned
-        # and re-aggregated the corpus-sized doclen table for (N, Σdl) —
-        # the exact per-call pass the marker exists to remove. Same
-        # loud-rebuild policy as the bloom v2→v3 n_keys bump.
-        raise ValueError(
-            f"postings index meta at {path!r} predates the corpus-stats "
-            "marker (meta v1); rebuild with build_postings_index"
-        )
-    return r
+def read_meta_stats(spark: SparkSession, path: str) -> tuple[int, int, int]:
+    """(n_buckets, n_docs, sum_dl) in ONE 1-row meta read — the r15
+    corpus-stats marker: BM25's global statistics (N, Σdl) are
+    properties of the INDEX, maintained by build/append (recounted
+    from the committed doclen table after each append — recount, not
+    increment, so crash-replay states self-heal on the next append, a
+    replay that adds no rows included) and carried through compact
+    (which never touches doclen). The query path scores with them
+    instead of re-aggregating the corpus-sized doclen table on every
+    batch. Meta v1 predates the marker and is rebuilt loudly."""
+    r = read_meta(
+        spark, _paths(path)[2], "postings index",
+        require=(("n_docs", "the corpus-stats marker (meta v1)"),),
+    )
+    return int(r["n_buckets"]), int(r["n_docs"]), int(r["sum_dl"])
 
 
 def _read_meta(spark: SparkSession, path: str) -> int:
-    return int(_read_meta_row(spark, path)["n_buckets"])
-
-
-def read_meta_stats(spark: SparkSession, path: str) -> tuple[int, int, int]:
-    """(n_buckets, n_docs, sum_dl) in ONE 1-row meta read — the r15
-    corpus-stats marker (the bloom n_keys discipline, VERDICT r14 ask
-    #8): BM25's global statistics (N, Σdl) are properties of the INDEX,
-    maintained by build/append (recounted from the committed doclen
-    table after each append — recount, not increment, so crash-replay
-    states self-heal on the next append, a replay that adds no rows
-    included) and carried through
-    compact (which never touches doclen). Callers gating freshness
-    compare ``n_docs`` against the expected source cardinality instead
-    of re-counting doclen per call, and the query path scores with the
-    meta stats instead of re-aggregating the corpus-sized doclen table
-    on every batch. The one crash window (doclen appended, meta rewrite
-    died) leaves stats stale-low; the gate law sees the mismatch and
-    rebuilds — never silently serves a half-updated meta (an absent or
-    torn meta is rejected loudly above)."""
-    r = _read_meta_row(spark, path)
-    return int(r["n_buckets"]), int(r["n_docs"]), int(r["sum_dl"])
+    return read_meta_stats(spark, path)[0]
 
 
 def _write_meta(
     spark: SparkSession, meta_p: str, n_buckets: int, n_docs: int, sum_dl: int
 ) -> None:
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(
-        spark,
-        [(int(n_buckets), int(n_docs), int(sum_dl))],
-        "n_buckets int, n_docs bigint, sum_dl bigint",
-    ).write.mode("overwrite").parquet(meta_p)
+    write_meta(
+        spark, meta_p, "n_buckets int, n_docs bigint, sum_dl bigint",
+        (int(n_buckets), int(n_docs), int(sum_dl)),
+    )
 
 
 def _doclen_stats(spark: SparkSession, doclen_p: str) -> tuple[int, int]:
@@ -141,7 +116,6 @@ def build_postings_index(
     old mix that serves wrong scores."""
     if n_buckets < 1:
         raise ValueError("build_postings_index: n_buckets must be >= 1")
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     posts_p, doclen_p, meta_p = _paths(path)
     spark = docs.sparkSession
@@ -186,8 +160,6 @@ def append_postings_index(
     n_buckets, meta_docs, meta_dl = read_meta_stats(spark, path)
     posts_p, doclen_p, meta_p = _paths(path)
 
-    from data_pengadaan_agent_spark.sources.catalog import spread
-
     fresh = shard.dropDuplicates([id_col])
     seen = spark.read.parquet(doclen_p).select(id_col)
     fresh = fresh.join(seen, id_col, "left_anti")
@@ -231,7 +203,7 @@ def append_postings_index(
     # meta stats recommit LAST (recounted from the committed doclen —
     # recount, not increment, so a replayed or crashed append can never
     # double-count; a crash before this rewrite leaves stats stale-low,
-    # which the freshness-gate law catches as a mismatch → rebuild)
+    # which the replay of this append recommits above)
     n_docs, sum_dl = _doclen_stats(spark, doclen_p)
     _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
     return n_new
@@ -285,7 +257,7 @@ def compact_postings_index(
     index readers loudly reject — never one silently serving doubled
     or missing postings. doclen and the index CONTENT are untouched:
     a compacted index answers bit-identically (pinned by test)."""
-    n_buckets = _read_meta(spark, path)
+    n_buckets, n_docs, sum_dl = read_meta_stats(spark, path)
     posts_p, _, meta_p = _paths(path)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(posts_p).getFileSystem(spark._jsc.hadoopConfiguration())
@@ -318,21 +290,10 @@ def compact_postings_index(
         .partitionBy("bucket")
         .parquet(tmp)
     )
-    meta_fs = jvm_path(meta_p)
-    meta_df = spark.read.parquet(meta_p).collect()
-    # recommit with the READ schema (not inference — it widened
-    # n_buckets int -> bigint, the dupindex lesson); check rename
-    # returns (Hadoop reports failure as false — an unchecked failure
-    # followed by the old-copy delete destroys the live postings)
-    # (self-review r12)
-    _meta_schema = spark.read.parquet(meta_p).schema
-    fs.delete(meta_fs, True)  # index invalid from here until recommit
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
+    fs.delete(jvm_path(meta_p), True)  # index invalid from here until recommit
 
     swap_dirs(fs, jvm_path, tmp, posts_p, old, "compact_postings_index")
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, meta_df, _meta_schema).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
     return before - _n_files(posts_p)
 
 
@@ -346,7 +307,6 @@ def bm25_from_index(
     id_col: str = "doc_id",
     k1: float = 1.5,
     b: float = 0.75,
-    _meta: tuple[int, int, int] | None = None,
 ) -> DataFrame:
     """Top-``k`` BM25 per query over the MATERIALIZED index — same
     output contract and same exact-integer arithmetic as
@@ -359,12 +319,7 @@ def bm25_from_index(
     is broadcast-sized by contract, exactly as in
     bm25_retrieval_batch."""
     coef_a, coef_b, coef_c, scale_l = bm25_int_coeffs(k1, b)
-    # _meta: a caller that already validated the meta this call passes
-    # (n_buckets, n_docs, sum_dl) through instead of paying the 1-row
-    # read again (the bloom _meta convention, r14)
-    n_buckets, n_docs, sum_dl = (
-        _meta if _meta is not None else read_meta_stats(spark, path)
-    )
+    n_buckets, n_docs, sum_dl = read_meta_stats(spark, path)
     posts_p, _, _ = _paths(path)
 
     # materialize the exploded query batch ONCE: it is broadcast-sized

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import read_meta, swap_dirs, write_meta
+
 
 def _paths(path: str) -> tuple[str, str]:
     p = path.rstrip("/")
@@ -42,19 +44,17 @@ def _paths(path: str) -> tuple[str, str]:
 
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[list[str], str, int]:
-    _, meta = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid cube
-        raise ValueError(
-            f"distinct cube at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_distinct_cube"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"distinct cube meta at {path!r} must be exactly 1 row")
-    r = row[0]
+    r = read_meta(spark, _paths(path)[1], "distinct cube")
     return list(r["dims"]), str(r["key_col"]), int(r["lg_k"])
+
+
+def _write_meta(
+    spark: SparkSession, meta_p: str, dims: list[str], key_col: str, lg_k: int
+) -> None:
+    write_meta(
+        spark, meta_p, "dims array<string>, key_col string, lg_k int",
+        (list(dims), str(key_col), int(lg_k)),
+    )
 
 
 def _sketch_rows(
@@ -96,13 +96,7 @@ def build_distinct_cube(
     _sketch_rows(df, dims, key_col, int(lg_k)).write.mode("overwrite").parquet(
         cube_p
     )
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(
-        spark,
-        [(list(dims), str(key_col), int(lg_k))],
-        "dims array<string>, key_col string, lg_k int",
-    ).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, dims, key_col, lg_k)
 
 
 def append_distinct_cube(shard: DataFrame, path: str) -> int:
@@ -171,21 +165,12 @@ def compact_distinct_cube(spark: SparkSession, path: str) -> int:
         F.sum("n_rows").cast("bigint").alias("n_rows"),
     )
     merged.write.mode("overwrite").parquet(tmp)
-    meta_rows = spark.read.parquet(meta_p).collect()
-    meta_schema = spark.read.parquet(meta_p).schema
     fs.delete(jvm_path(meta_p), True)  # cube invalid until recommit
     # Hadoop rename reports failure by RETURNING false: deleting the
     # old copy after an unchecked failed rename would destroy the only
     # surviving cube while the meta recommit marked it valid
     # (self-review r12). swap_dirs aborts with the original restored
     # (restore itself checked) and meta left absent (loudly invalid).
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
     swap_dirs(fs, jvm_path, tmp, cube_p, old, "compact_distinct_cube")
-    # recommit with the READ schema, not inference: createDataFrame
-    # over Python ints would silently widen lg_k int -> bigint and
-    # drift the on-disk meta from the build schema (self-review r12)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, meta_rows, meta_schema).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, dims, key_col, lg_k)
     return before - spark.read.parquet(cube_p).count()

@@ -54,6 +54,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import (
+    local_df,
+    read_meta,
+    spread,
+    write_meta,
+)
+
 GRAM_N = 3
 
 
@@ -81,23 +88,17 @@ def _bucket(h: Column, n_buckets: int) -> Column:
 
 
 def _read_meta(spark: SparkSession, path: str) -> int:
-    _, _, meta = _paths(path)
-    try:
-        row = spark.read.parquet(meta).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"trigram index at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_trgm_index"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"trigram index meta at {path!r} must be exactly 1 row")
-    if int(row[0]["gram_n"]) != GRAM_N:
+    r = read_meta(spark, _paths(path)[2], "trigram index")
+    if int(r["gram_n"]) != GRAM_N:
         raise ValueError(
             f"trigram index at {path!r} was built with gram_n="
-            f"{int(row[0]['gram_n'])}, this module reads gram_n={GRAM_N}"
+            f"{int(r['gram_n'])}, this module reads gram_n={GRAM_N}"
         )
-    return int(row[0]["n_buckets"])
+    return int(r["n_buckets"])
+
+
+def _write_meta(spark: SparkSession, meta_p: str, n_buckets: int) -> None:
+    write_meta(spark, meta_p, "n_buckets int, gram_n int", (int(n_buckets), GRAM_N))
 
 
 def _gram_rows(docs: DataFrame, text_col: str, id_col: str, n_buckets: int):
@@ -131,7 +132,6 @@ def build_trgm_index(
     build_ivfpq_table lesson)."""
     if n_buckets < 1:
         raise ValueError("build_trgm_index: n_buckets must be >= 1")
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     posts_p, docs_p, meta_p = _paths(path)
     spark = docs.sparkSession
@@ -154,12 +154,8 @@ def build_trgm_index(
     fresh = spread(docs.dropDuplicates([id_col]), id_col)
     postings, registry = _gram_rows(fresh, text_col, id_col, n_buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(posts_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     registry.write.mode("overwrite").parquet(docs_p)
-    local_df(
-        spark, [(int(n_buckets), GRAM_N)], "n_buckets int, gram_n int"
-    ).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, n_buckets)
 
 
 def append_trgm_index(
@@ -179,7 +175,6 @@ def append_trgm_index(
     spark = shard.sparkSession
     n_buckets = _read_meta(spark, path)
     posts_p, docs_p, _ = _paths(path)
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     fresh = shard.dropDuplicates([id_col])
     seen = spark.read.parquet(docs_p).select(id_col)
@@ -293,7 +288,6 @@ def repair_trgm_index(
             "the registered n_grams — the source drifted since ingest; "
             "rebuild the index instead of repairing"
         )
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     postings, _ = _gram_rows(spread(todo, id_col), text_col, id_col, n_buckets)
     postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
@@ -323,15 +317,11 @@ def compact_trgm_index(
 
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    meta_rows = spark.read.parquet(meta_p).collect()
-    _meta_schema = spark.read.parquet(meta_p).schema
     fs.delete(jvm_path(meta_p), True)  # index invalid until recommit
     removed = _compact_partitioned_table(
         spark, posts_p, "bucket", int(target_files_per_bucket), "h"
     )
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, meta_rows, _meta_schema).write.mode("overwrite").parquet(meta_p)
+    _write_meta(spark, meta_p, n_buckets)
     return removed
 
 
@@ -344,8 +334,6 @@ def _pattern_grams(
     engine that built the index, so the two can never drift (the
     merge_fold_sql no-drift discipline). One parameter-bounded collect:
     |patterns| × |pattern grams| rows."""
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     pat_df = local_df(spark, [(p,) for p in patterns], "pattern string")
     rows = (
         pat_df.select("pattern", F.explode(char_grams("pattern")).alias("_g"))
@@ -397,16 +385,14 @@ def substring_search(
                 f"length ({GRAM_N}) — the index cannot prune it; use the "
                 "full-scan keyword filter for sub-gram patterns"
             )
-    # _n_buckets: a caller that already validated the meta this call
-    # passes it through instead of paying the sidecar read + collect
-    # again (the bloom probe_bloom _meta convention, r14)
+    # _n_buckets: a caller that built the index under this bucket
+    # count (its ensure_index spec) passes it through instead of
+    # paying the meta read + collect (the bloom _meta convention)
     n_buckets = _n_buckets if _n_buckets is not None else _read_meta(spark, path)
     posts_p, _, _ = _paths(path)
     pairs, counts = _pattern_grams(spark, patterns)
     hashes = sorted({h for h, _ in pairs})
     buckets = sorted({h % n_buckets for h in hashes})
-
-    from data_pengadaan_agent_spark.sources.catalog import local_df
 
     pat_grams = local_df(spark, pairs, "h bigint, pattern string")
     need = local_df(

@@ -59,6 +59,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
+
 
 def _paths(path: str) -> tuple[str, str]:
     p = path.rstrip("/")
@@ -74,17 +76,7 @@ def _data_files(data_path: str) -> list[str]:
 
 
 def _read_meta(spark: SparkSession, path: str) -> list[str]:
-    _, meta_p = _paths(path)
-    try:
-        row = spark.read.parquet(meta_p).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid map
-        raise ValueError(
-            f"zonemap at {path!r} has no readable meta table — absent, corrupt, "
-            "or a build crashed before commit; rebuild with build_zonemap"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"zonemap meta at {path!r} must be exactly 1 row")
-    return list(row[0]["cols"])
+    return list(read_meta(spark, _paths(path)[1], "zonemap")["cols"])
 
 
 def _footer_sweep(spark: SparkSession, files: list[str], want: list[str]) -> DataFrame:
@@ -152,8 +144,6 @@ def _footer_sweep(spark: SparkSession, files: list[str], want: list[str]) -> Dat
                     out["n_rows"].append(md.num_rows)
             yield pd.DataFrame(out)
 
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     flist = local_df(
         spark, [(f,) for f in files], "file string", slices=min(len(files), 32)
     )
@@ -191,11 +181,7 @@ def build_zonemap(
 
     zones = _footer_sweep(spark, files, list(cols))
     zones.write.mode("overwrite").parquet(zones_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, [(list(cols),)], "cols array<string>").write.mode(
-        "overwrite"
-    ).parquet(meta_p)
+    write_meta(spark, meta_p, "cols array<string>", (list(cols),))
     return len(files)
 
 
@@ -222,8 +208,6 @@ def _manifest_df(spark: SparkSession, data_path: str) -> DataFrame:
     directory listing here; a production 100 TB table would read its
     manifest table (Delta log / Iceberg manifest) instead, and every
     consumer below already treats it as a distributed frame."""
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     files = _data_files(data_path)
     return local_df(
         spark, [(f,) for f in files], "file string", slices=min(max(len(files), 1), 32)
@@ -392,18 +376,7 @@ def _vs_paths(path: str) -> tuple[str, str]:
 
 
 def _vs_read_meta(spark: SparkSession, path: str) -> str:
-    _, meta_p = _vs_paths(path)
-    try:
-        row = spark.read.parquet(meta_p).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"value-set index at {path!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild with "
-            "build_valueset_index"
-        ) from exc
-    if len(row) != 1:
-        raise ValueError(f"value-set index meta at {path!r} must be exactly 1 row")
-    return str(row[0]["col"])
+    return str(read_meta(spark, _vs_paths(path)[1], "value-set index")["col"])
 
 
 def _value_rows(spark: SparkSession, files: list[str], col: str) -> DataFrame:
@@ -435,8 +408,6 @@ def _value_rows(spark: SparkSession, files: list[str], col: str) -> DataFrame:
                     out["value"].append(None)
             yield pd.DataFrame(out)
 
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     flist = local_df(
         spark, [(f,) for f in files], "file string", slices=min(len(files), 32)
     )
@@ -460,11 +431,7 @@ def build_valueset_index(
     if fs.exists(meta_fs):
         fs.delete(meta_fs, True)
     _value_rows(spark, files, col).write.mode("overwrite").parquet(values_p)
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
-    local_df(spark, [(str(col),)], "col string").write.mode("overwrite").parquet(
-        meta_p
-    )
+    write_meta(spark, meta_p, "col string", (str(col),))
     return len(files)
 
 

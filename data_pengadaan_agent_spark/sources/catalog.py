@@ -18,7 +18,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterable
+import hashlib
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -190,6 +191,85 @@ def spread(df: DataFrame, key: str | None = None, min_parts: int | None = None) 
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, key) if key else df.repartition(target)
+
+
+def ensure_index(
+    spark: SparkSession,
+    path: str,
+    sf: str,
+    tables: Iterable[str],
+    spec,
+    build: Callable[[], object],
+) -> bool:
+    """The one freshness gate of a materialized index: rebuild unless
+    the index was built from exactly these source files under exactly
+    this ``spec``. Returns True iff ``build()`` ran.
+
+    The marker is sha256 over ``repr(spec)`` and the ``(path, length,
+    modificationTime)`` of every file under ``{sf}/{t}.parquet`` for
+    each source table ``t`` — a driver-side Hadoop listing, no Spark
+    job. The index is fresh iff the empty file ``{path}/_gate/<sha>``
+    exists (one ``exists`` call). Otherwise ``_gate`` is deleted,
+    ``build()`` runs and the marker is created after it returns, so a
+    build that raises or dies leaves no marker and the next call
+    rebuilds. A content change that keeps the row count still changes
+    the listing, so the gate never serves an index of older content.
+    ``_gate`` starts with an underscore, so Spark's file listing skips
+    it when ``path`` itself is a parquet dataset."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    digest = hashlib.sha256(repr(spec).encode())
+    for t in tables:
+        src = jvm_path(f"{sf.rstrip('/')}/{t}.parquet")
+        files, it = [], src.getFileSystem(conf).listFiles(src, True)
+        while it.hasNext():
+            st = it.next()
+            files.append(f"{st.getPath()}\t{st.getLen()}\t{st.getModificationTime()}")
+        digest.update("\n".join(sorted(files)).encode() + b"\n\n")
+    gate = f"{path.rstrip('/')}/_gate"
+    marker = jvm_path(f"{gate}/{digest.hexdigest()}")
+    fs = marker.getFileSystem(conf)
+    if fs.exists(marker):
+        return False
+    fs.delete(jvm_path(gate), True)
+    build()
+    fs.create(marker, True).close()
+    return True
+
+
+def read_meta(
+    spark: SparkSession,
+    meta_p: str,
+    label: str,
+    require: Iterable[tuple[str, str]] = (),
+):
+    """The 1-row meta table an index writes LAST as its commit marker.
+    Absent or unreadable (a build that crashed before commit), not
+    exactly one row, or missing a column of ``require`` — ``(column,
+    the meta change that added it)`` pairs, so an index written before
+    that change is rebuilt — is a loud ValueError naming ``label``,
+    never a guess."""
+    try:
+        rows = spark.read.parquet(meta_p).collect()
+    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
+        raise ValueError(
+            f"{label} at {meta_p!r} has no readable meta table — absent, "
+            "corrupt, or a build crashed before commit; rebuild it"
+        ) from exc
+    if len(rows) != 1:
+        raise ValueError(f"{label} meta at {meta_p!r} must be exactly 1 row")
+    have = rows[0].asDict()
+    for col, change in require:
+        if col not in have:
+            raise ValueError(f"{label} meta at {meta_p!r} predates {change}; rebuild it")
+    return rows[0]
+
+
+def write_meta(spark: SparkSession, meta_p: str, ddl, values) -> None:
+    """Commit the 1-row meta table under an explicit schema (a DDL
+    string or StructType): inferring it from the values would widen
+    int columns to bigint and drift the schema across rewrites."""
+    local_df(spark, [tuple(values)], ddl).write.mode("overwrite").parquet(meta_p)
 
 
 def swap_dirs(fs, jvm_path, tmp: str, live: str, old: str, label: str) -> None:
