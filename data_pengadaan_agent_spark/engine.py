@@ -19,6 +19,14 @@ Catalyst sees it; every result the LLM loop would consume is a small
 schema+rows dict — full frames never cross the driver boundary. The
 LLM orchestration itself (threads/runs or LangGraph) is out of scope
 by design: these methods are exactly the tool bodies it would call.
+
+A question turn pays fixed cost per call, not scan work, so the facade
+keeps the per-call Spark work small: the first ``retrieve_keywords``
+embeds the vocabulary once (one job) and every question after it ranks
+on the driver with no Spark job (``similarity.KeywordIndex``); each
+chart call is one Spark action that returns its plot rows and insights
+together (two for a numeric histogram); ``materialize`` releases the
+intermediary it replaces.
 """
 
 from __future__ import annotations
@@ -47,6 +55,7 @@ class Engine:
         self.base_name = base_name
         base_df.createOrReplaceTempView(base_name)
         self.vocab = vocab_df
+        self._keywords: _sim.KeywordIndex | None = None  # built on first use
 
     @classmethod
     def from_sqlite(
@@ -70,8 +79,9 @@ class Engine:
     def retrieve_keywords(self, query_text: str, top_k: int = 10) -> list[dict]:
         if self.vocab is None:
             raise ValueError("no keyword vocabulary configured")
-        out = _sim.retrieve_similar_keywords(self.vocab, query_text, k=top_k)
-        return [r.asDict() for r in out.collect()]
+        if self._keywords is None:
+            self._keywords = _sim.KeywordIndex(self.vocab)
+        return self._keywords.top_k(query_text, k=top_k)
 
     # 2. schema introspection (M1–M4)
     def schema_check(self) -> dict:
@@ -88,23 +98,23 @@ class Engine:
 
     # 5–7. chart-data pipelines over the intermediary (C1–C4): each
     # runs the caller's stage-2 SQL through the gate, then returns the
-    # small plot frame + the insights dict the reference's tools embed
-    # in their replies.
+    # small plot rows + the insights dict the reference's tools embed
+    # in their replies, both from one Spark action.
     def _stage2(self, sql: str) -> DataFrame:
         return _gate.safe_sql(self.spark, sql)
 
     def bar_chart(self, sql: str, x: str, y: str) -> tuple[list[dict], dict]:
-        data, insights = _charts.bar_chart_data(self._stage2(sql), x, y)
-        return [r.asDict() for r in data.collect()], insights
+        rows, insights = _charts.bar_chart_data(self._stage2(sql), x, y)
+        return [r.asDict() for r in rows], insights
 
     def line_chart(self, sql: str, ts_col: str, id_col: str, measure_col: str) -> tuple[list[dict], dict]:
-        data, insights = _charts.line_chart_data(self._stage2(sql), ts_col, id_col, measure_col)
-        return [r.asDict() for r in data.collect()], insights
+        rows, insights = _charts.line_chart_data(self._stage2(sql), ts_col, id_col, measure_col)
+        return [r.asDict() for r in rows], insights
 
     def pie_chart(self, sql: str, label: str, value: str) -> tuple[list[dict], dict]:
-        data, insights = _charts.pie_chart_data(self._stage2(sql), label, value)
-        return [r.asDict() for r in data.collect()], insights
+        rows, insights = _charts.pie_chart_data(self._stage2(sql), label, value)
+        return [r.asDict() for r in rows], insights
 
     def histogram(self, sql: str, col: str, bins: int = 12) -> tuple[list[dict], dict]:
-        data, insights = _charts.histogram_data(self._stage2(sql), col, bins)
-        return [r.asDict() for r in data.collect()], insights
+        rows, insights = _charts.histogram_data(self._stage2(sql), col, bins)
+        return [r.asDict() for r in rows], insights

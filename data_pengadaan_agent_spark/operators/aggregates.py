@@ -34,6 +34,7 @@ def monthly_rollup(
     month_alias: str = "bulan",
     count_alias: str = "jumlah_paket",
     sum_alias: str = "total_pagu",
+    ordered: bool = True,
 ) -> DataFrame:
     """A2: the canonical line-chart query —
     strftime('%Y-%m') → count(id) + sum(measure) → ORDER BY month
@@ -42,21 +43,22 @@ def monthly_rollup(
     DECIMAL — the module contract (self-review r12: this operator was
     the one float-sum holdout; float partial-aggregate merge order is
     partitioning-dependent, and the entry file's registered query had
-    to hand-bypass it)."""
-    return (
-        df.groupBy(F.date_format(F.col(ts_col), "yyyy-MM").alias(month_alias))
-        .agg(
-            F.count(F.col(id_col)).alias(count_alias),
-            F.sum(F.col(measure_col).cast("decimal(28,2)")).alias(sum_alias),
-        )
-        .orderBy(month_alias)
+    to hand-bypass it). ``ordered=False`` leaves out the ORDER BY (its
+    sampling job and range shuffle) for a caller that orders the
+    month rows itself."""
+    out = df.groupBy(F.date_format(F.col(ts_col), "yyyy-MM").alias(month_alias)).agg(
+        F.count(F.col(id_col)).alias(count_alias),
+        F.sum(F.col(measure_col).cast("decimal(28,2)")).alias(sum_alias),
     )
+    return out.orderBy(month_alias) if ordered else out
 
 
-def value_counts(df: DataFrame, col: str, alias: str = "cnt") -> DataFrame:
+def value_counts(df: DataFrame, col: str, alias: str = "cnt", ordered: bool = True) -> DataFrame:
     """A3: pandas value_counts().sort_index()
-    (openai/list_of_tools.py:75,100,107)."""
-    return df.groupBy(col).agg(F.count(F.lit(1)).alias(alias)).orderBy(col)
+    (openai/list_of_tools.py:75,100,107); ``ordered`` as in
+    ``monthly_rollup``."""
+    out = df.groupBy(col).agg(F.count(F.lit(1)).alias(alias))
+    return out.orderBy(col) if ordered else out
 
 
 def scalar_insights(df: DataFrame, col: str) -> DataFrame:
@@ -91,10 +93,17 @@ def histogram_numeric(df: DataFrame, col: str, bins: int = 12) -> DataFrame:
     the last bin is closed on both sides (x == max falls in bin n-1).
 
     Two jobs: a scalar min/max pass, then one groupBy — the Spark way
-    to bin without a UDF. The bin expression is pure arithmetic →
-    codegen'd; the shuffle carries ≤ ``bins`` rows.
+    to bin without a UDF (see ``histogram_bins``).
     """
     lo, hi = df.agg(F.min(col), F.max(col)).first()
+    return histogram_bins(df, col, lo, hi, bins).orderBy("bucket")
+
+
+def histogram_bins(df: DataFrame, col: str, lo, hi, bins: int = 12) -> DataFrame:
+    """A6's binning pass, given the column's ``lo``/``hi`` (None for an
+    empty or all-NULL column, which yields no bins), unordered. The bin
+    expression is pure arithmetic → codegen'd; the shuffle carries ≤
+    ``bins`` rows."""
     if lo is None:
         return df.sparkSession.createDataFrame(
             [], T.StructType([
@@ -110,15 +119,16 @@ def histogram_numeric(df: DataFrame, col: str, bins: int = 12) -> DataFrame:
         df.filter(F.col(col).isNotNull())
         .groupBy(bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("bucket")
     )
 
 
-def histogram_month_of_year(df: DataFrame, ts_col: str, alias: str = "month_no") -> DataFrame:
+def histogram_month_of_year(
+    df: DataFrame, ts_col: str, alias: str = "month_no", ordered: bool = True
+) -> DataFrame:
     """A7: month-of-year histogram — **collapses years** (dt.month,
     openai/list_of_tools.py:47-55), with a 1..12 scaffold so empty
     months appear with count 0. The scaffold is 12 rows → broadcast
-    join, free at any scale."""
+    join, free at any scale. ``ordered`` as in ``monthly_rollup``."""
     spark = df.sparkSession
     months = spark.range(1, 13).select(F.col("id").cast("int").alias(alias))
     counts = (
@@ -126,11 +136,10 @@ def histogram_month_of_year(df: DataFrame, ts_col: str, alias: str = "month_no")
         .groupBy(F.month(F.col(ts_col)).alias(alias))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return (
-        months.join(counts, alias, "left")
-        .select(alias, F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
-        .orderBy(alias)
+    out = months.join(counts, alias, "left").select(
+        alias, F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
     )
+    return out.orderBy(alias) if ordered else out
 
 
 def distinct_count(df: DataFrame, key: str, col: str, approx: bool = False) -> DataFrame:

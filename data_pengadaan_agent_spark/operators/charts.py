@@ -4,14 +4,19 @@ Each reference chart tool = scan intermediary → validate columns →
 transform → render PNG → scalar insights (openai/list_of_tools.py:
 14-112,204-449; langchain/my_toolkit.py:183-410). The *engine* part is
 the transform + insights; rendering is presentation. Every function
-here returns ``(data: DataFrame, insights: dict)`` where ``data`` is
-the small aggregated frame a renderer would plot — only that small
-frame ever crosses to the driver.
+here returns ``(rows: list[Row], insights: dict)``: the small plot
+frame a renderer would draw, already on the driver, and the insights
+the reference's tools embed in their replies. Both come from ONE Spark
+action — one aggregate carries the plot rows as a
+``collect_list(struct(...))`` beside the scalar insights — except the
+numeric histogram, whose bin edges need a min/max pass first (that
+pass also yields its insights), and the string histogram, whose
+datetime dispatch needs a parse probe first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,89 +34,132 @@ def _require(df: DataFrame, *cols: str) -> None:
         raise ChartColumnError(f"columns not in result: {missing}; have {df.columns}")
 
 
-def bar_chart_data(df: DataFrame, x: str, y: str, insights: bool = True) -> tuple[DataFrame, dict]:
+def _rows_and(data: DataFrame, cols: list[str], *insights: Column, keyed: bool = False) -> DataFrame:
+    """One aggregate over ``data``: ``_rows`` = ``data.select(*cols)``
+    as an array of structs beside the scalar ``insights``.
+
+    A global collect_list gathers partitions in no fixed order, so the
+    order is restored with ``sort_array``. ``keyed``: ``cols[0]`` is a
+    unique key (a group-by's output) and the rows come back in its
+    ascending order, NULL first — ORDER BY's order, without the sort's
+    sampling job and range shuffle. Otherwise the rows keep ``data``'s
+    own order, including a caller's ORDER BY: each carries its
+    monotonically_increasing_id (partition index in the high bits,
+    position in the low bits) as a sort tag that is dropped again."""
+    if keyed:
+        rows = F.sort_array(F.collect_list(F.struct(*cols)))
+        return data.agg(rows.alias("_rows"), *insights)
+    tag = "_row"
+    while tag in data.columns:  # collision-proof vs caller frames
+        tag += "_"
+    tagged = data.withColumn(
+        tag,
+        F.struct(F.monotonically_increasing_id().alias("i"), F.struct(*cols).alias("r")),
+    )
+    rows = F.transform(F.sort_array(F.collect_list(tag)), lambda s: s["r"])
+    return tagged.agg(rows.alias("_rows"), *insights)
+
+
+def _peak(key: str, value: str) -> Column:
+    """``max_by(key, value)`` as taken over rows in ascending ``key``
+    order, where Spark's max_by keeps the later row of a tie, so the
+    greatest tied key wins. Ordering by ``(value, key)`` gives that
+    answer whatever order the rows reach the aggregate in, so a keyed
+    ``_rows_and`` needs no sort; a NULL value is skipped as before."""
+    k, v = F.col(f"`{key}`"), F.col(f"`{value}`")
+    return F.max_by(k, F.when(v.isNotNull(), F.struct(v, k)))
+
+
+def _first(agg: DataFrame) -> tuple[list[Row], dict]:
+    out = agg.first().asDict()
+    return out.pop("_rows"), out
+
+
+def bar_chart_data(df: DataFrame, x: str, y: str) -> tuple[list[Row], dict]:
     """C1: categorical x vs numeric y + count/max/min/mean/sum insights
-    (openai/list_of_tools.py:204-269). ``insights=False`` returns only
-    the plottable frame, skipping the eager insights action."""
+    (openai/list_of_tools.py:204-269)."""
     _require(df, x, y)
-    data = df.select(x, y)
-    if not insights:
-        return data, {}
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(y).alias("max_v"),
-        F.min(y).alias("min_v"),
-        F.avg(y).alias("mean_v"),
-        F.sum(y).alias("sum_v"),
-        # backtick-quoted: stage-2 columns can be named `count(1)` or
-        # carry spaces — raw interpolation re-parsed them as SQL
-        # (self-review r12)
-        F.expr(f"max_by(`{x}`, `{y}`)").alias("top_category"),
-        F.expr(f"min_by(`{x}`, `{y}`)").alias("bottom_category"),
-    ).first()
-    return data, row.asDict()
+    return _first(
+        _rows_and(
+            df,
+            [x, y],
+            F.count(F.lit(1)).alias("n"),
+            F.max(y).alias("max_v"),
+            F.min(y).alias("min_v"),
+            F.avg(y).alias("mean_v"),
+            F.sum(y).alias("sum_v"),
+            # backtick-quoted: stage-2 columns can be named `count(1)` or
+            # carry spaces — raw interpolation re-parsed them as SQL
+            # (self-review r12)
+            F.expr(f"max_by(`{x}`, `{y}`)").alias("top_category"),
+            F.expr(f"min_by(`{x}`, `{y}`)").alias("bottom_category"),
+        )
+    )
 
 
 def line_chart_data(
-    df: DataFrame, ts_col: str, id_col: str, measure_col: str, insights: bool = True
-) -> tuple[DataFrame, dict]:
+    df: DataFrame, ts_col: str, id_col: str, measure_col: str
+) -> tuple[list[Row], dict]:
     """C2: dual-axis monthly series (A2) + period insights
-    (openai/list_of_tools.py:272-385). ``insights=False`` skips the
-    eager insights action (and the cache that amortizes it) when the
-    caller only wants the plottable frame — e.g. the correctness gate,
-    which would otherwise pay a second full aggregation per call."""
+    (openai/list_of_tools.py:272-385); rows ordered by month."""
     _require(df, ts_col, id_col, measure_col)
-    if not insights:
-        return A.monthly_rollup(df, ts_col, id_col, measure_col), {}
-    # localCheckpoint, not cache (self-review r12): cached frames are
-    # held by the session's cache manager FOREVER unless explicitly
-    # unpersisted — repeated chart calls leaked storage; a checkpointed
-    # RDD is released by the ContextCleaner when the frame is GC'd
-    data = A.monthly_rollup(df, ts_col, id_col, measure_col).localCheckpoint(
-        eager=True
-    )
-    row = data.agg(
-        F.min("bulan").alias("first_month"),
-        F.max("bulan").alias("last_month"),
-        F.sum("jumlah_paket").alias("total_count"),
-        F.sum("total_pagu").alias("total_value"),
-        F.avg("total_pagu").alias("avg_monthly_value"),
-        F.expr("max_by(bulan, total_pagu)").alias("peak_value_month"),
-        F.expr("max_by(bulan, jumlah_paket)").alias("peak_count_month"),
-    ).first()
-    return data, row.asDict()
-
-
-def pie_chart_data(df: DataFrame, label: str, value: str) -> tuple[DataFrame, dict]:
-    """C3: label/value shares + largest/smallest contributor
-    (openai/list_of_tools.py:388-449). Share = value / sum(value) OVER ()
-    — a windowed total, no second scan."""
-    _require(df, label, value)
-    # broadcast scalar total, not sum() OVER () with no partition keys
-    # (self-review r12): the unpartitioned window moved EVERY input row
-    # to one partition — a single-partition shuffle that serializes or
-    # OOMs on a large stage-2 frame; the values are identical
-    tot_col = "_tot"
-    while tot_col in df.columns:  # collision-proof vs caller frames
-        tot_col += "_"
-    tot = df.agg(F.sum(value).alias(tot_col))
-    data = (
-        df.crossJoin(F.broadcast(tot))
-        .select(
-            F.col(label),
-            F.col(value),
-            (F.col(value) / F.col(tot_col)).alias("share"),
+    data = A.monthly_rollup(df, ts_col, id_col, measure_col, ordered=False)
+    return _first(
+        _rows_and(
+            data,
+            data.columns,
+            F.min("bulan").alias("first_month"),
+            F.max("bulan").alias("last_month"),
+            F.sum("jumlah_paket").alias("total_count"),
+            F.sum("total_pagu").alias("total_value"),
+            F.avg("total_pagu").alias("avg_monthly_value"),
+            _peak("bulan", "total_pagu").alias("peak_value_month"),
+            _peak("bulan", "jumlah_paket").alias("peak_count_month"),
+            keyed=True,
         )
     )
-    row = df.agg(
+
+
+def pie_chart_data(df: DataFrame, label: str, value: str) -> tuple[list[Row], dict]:
+    """C3: label/value shares + largest/smallest contributor
+    (openai/list_of_tools.py:388-449). Share = value / sum(value), the
+    total taken from the same aggregate that gathers the rows — not
+    sum() OVER () with no partition keys (self-review r12), which moved
+    every input row to one partition before the rows were gathered."""
+    _require(df, label, value)
+    agg = _rows_and(
+        df,
+        [label, value],
         F.sum(value).alias("total"),
         F.expr(f"max_by(`{label}`, `{value}`)").alias("largest"),
         F.expr(f"min_by(`{label}`, `{value}`)").alias("smallest"),
-    ).first()
-    return data, row.asDict()
+    )
+    share = F.transform(
+        "_rows",
+        lambda r: F.struct(
+            r[label].alias(label),
+            r[value].alias(value),
+            (r[value] / F.col("total")).alias("share"),
+        ),
+    )
+    return _first(agg.select(share.alias("_rows"), "total", "largest", "smallest"))
 
 
-def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[DataFrame, dict]:
+def _counts(data: DataFrame, key: str, peak: str) -> tuple[list[Row], dict]:
+    """Rows of an unordered (key, cnt) frame in key order + its peak
+    key and total count."""
+    return _first(
+        _rows_and(
+            data,
+            data.columns,
+            _peak(key, "cnt").alias(peak),
+            F.sum("cnt").alias("n"),
+            keyed=True,
+        )
+    )
+
+
+def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[list[Row], dict]:
     """C4: dtype-dispatched histogram mirroring
     openai/list_of_tools.py:42-58 —
     numeric → equal-width bins (A6); timestamp (or parsable string) →
@@ -119,18 +167,17 @@ def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[DataFrame, 
     _require(df, col)
     dtype = df.schema[col].dataType
     if isinstance(dtype, T.NumericType):
-        data = A.histogram_numeric(df, col, bins)
         row = df.agg(
             F.count(col).alias("n"),
             F.min(col).alias("min_v"),
             F.max(col).alias("max_v"),
             F.avg(col).alias("mean_v"),
         ).first()
-        return data, row.asDict()
+        data = A.histogram_bins(df, col, row["min_v"], row["max_v"], bins)
+        # ≤ bins rows with non-NULL int buckets: ordered here, not by a sort
+        return sorted(data.collect(), key=lambda r: r["bucket"]), row.asDict()
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        data = A.histogram_month_of_year(df, col)
-        row = data.agg(F.expr("max_by(month_no, cnt)").alias("peak_month"), F.sum("cnt").alias("n")).first()
-        return data, row.asDict()
+        return _counts(A.histogram_month_of_year(df, col, ordered=False), "month_no", "peak_month")
     if isinstance(dtype, T.StringType):
         # ALL-or-nothing datetime parse like the pandas reference
         # (to_datetime raises on the first bad value → fallback):
@@ -144,21 +191,13 @@ def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[DataFrame, 
         ).first()
         if probe["_n"] > 0 and probe["_ok"] == probe["_n"]:
             dd = parsed.filter(F.col("_ts").isNotNull())
-            data = A.histogram_month_of_year(dd, "_ts")
-            row = data.agg(
-                F.expr("max_by(month_no, cnt)").alias("peak_month"), F.sum("cnt").alias("n")
-            ).first()
-            return data, row.asDict()
-    data = A.value_counts(df, col)
-    row = data.agg(
-        F.expr(f"max_by(`{col}`, cnt)").alias("mode"), F.sum("cnt").alias("n")
-    ).first()
-    return data, row.asDict()
+            return _counts(A.histogram_month_of_year(dd, "_ts", ordered=False), "month_no", "peak_month")
+    return _counts(A.value_counts(df, col, ordered=False), col, "mode")
 
 
-def render_png(data: DataFrame, kind: str, path: str, x: str, y: str | None = None, title: str = "") -> str:
-    """S5 driver-side adapter: small aggregated frame → matplotlib PNG.
-    Import-gated; the engine never requires matplotlib."""
+def render_png(rows: list[Row], kind: str, path: str, x: str, y: str | None = None, title: str = "") -> str:
+    """S5 driver-side adapter: the rows a chart function returned →
+    matplotlib PNG. Import-gated; the engine never requires matplotlib."""
     try:
         import matplotlib
 
@@ -173,16 +212,16 @@ def render_png(data: DataFrame, kind: str, path: str, x: str, y: str | None = No
         # (or a blank 'success' PNG for a typo'd kind) helped nobody
         # (self-review r12)
         raise ValueError("render_png: y column is required")
-    pdf = data.toPandas()
+    xs, ys = [str(r[x]) for r in rows], [r[y] for r in rows]
     fig, ax = plt.subplots(figsize=(10, 6))
     if kind == "bar":
-        ax.bar(pdf[x].astype(str), pdf[y])
+        ax.bar(xs, ys)
     elif kind == "line":
-        ax.plot(pdf[x].astype(str), pdf[y], marker="o")
+        ax.plot(xs, ys, marker="o")
     elif kind == "pie":
-        ax.pie(pdf[y], labels=pdf[x].astype(str), autopct="%1.1f%%")
+        ax.pie(ys, labels=xs, autopct="%1.1f%%")
     elif kind == "hist":
-        ax.bar(pdf[x].astype(str), pdf[y], width=1.0)
+        ax.bar(xs, ys, width=1.0)
     ax.set_title(title)
     fig.savefig(path, format="png", bbox_inches="tight")
     plt.close(fig)

@@ -95,20 +95,18 @@ def _intent_batches(spark: SparkSession, path: str) -> DataFrame | None:
     (absent on indexes that never ran a repair). See
     ``repair_gram_counts`` for why they exist.
 
-    Only a MISSING intents table means "no repair ever ran" — a
-    transient read error on a REAL intents table must propagate
-    (self-review r12, the ivf codebook auto-detect rule): silently
-    ignoring it would hand a new append a crashed repair's batch id
-    and legitimize its partial negations, the exact ADVICE-r10
-    corruption the sidecar exists to prevent."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(_intents_path(path)).select("batch")
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    Only a MISSING intents table means "no repair ever ran", and it is
+    checked with one driver-side ``exists`` rather than a failed read
+    (which logged a JVM stack trace on every cold build). A read error
+    on a REAL intents table must propagate (self-review r12, the ivf
+    codebook auto-detect rule): silently ignoring it would hand a new
+    append a crashed repair's batch id and legitimize its partial
+    negations, the exact ADVICE-r10 corruption the sidecar exists to
+    prevent."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(_intents_path(path))
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
         return None
+    return spark.read.parquet(_intents_path(path)).select("batch")
 
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, bool]:

@@ -7,9 +7,12 @@ the base table (openai/list_of_tools.py:152, langchain/my_toolkit.py:
 
 Spark realization: cached temp view (in-memory columnar, shared by
 every follow-up query in the session) with an optional durable Parquet
-overwrite for cross-session parity. The LangChain variant's hard-coded
-column alias list (my_toolkit.py:32,59) becomes an explicit, optional
-rename map — silently mislabeling columns is a bug we do not port.
+overwrite for cross-session parity. Overwrite means release, too: the
+relation the view named before is unpersisted once the new view is in
+place, so a session holds one cached intermediary, not one per turn.
+The LangChain variant's hard-coded column alias list
+(my_toolkit.py:32,59) becomes an explicit, optional rename map —
+silently mislabeling columns is a bug we do not port.
 """
 
 from __future__ import annotations
@@ -34,8 +37,15 @@ def materialize(
     if rename:
         for old, new in rename.items():
             df = df.withColumnRenamed(old, new)
+    spark = df.sparkSession
+    old = spark.table(view_name) if spark.catalog.tableExists(view_name) else None
     df = df.cache()
     df.createOrReplaceTempView(view_name)
+    # after the swap: a new SQL that reads the old view was planned
+    # against it, and Spark re-plans a dependent cache that has not
+    # been filled yet once the old one is released
+    if old is not None and not old.sameSemantics(df):
+        old.unpersist()
     if durable_path:
         df.write.mode("overwrite").parquet(durable_path)
     return schema_head_echo(df, echo_rows)

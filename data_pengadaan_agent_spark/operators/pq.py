@@ -495,8 +495,14 @@ def ivfpq_adc_topk(
 
 
 def _ivfpq_sidecars(path: str) -> tuple[str, str, str]:
+    """The ids registry and the two codebooks, as ``_``-prefixed
+    subdirectories of the codes table: Spark's file listing skips
+    them when it reads the codes, and they live and die with the index
+    directory (its freshness marker and any cleanup of it). The
+    build's ``overwrite`` of the codes clears them first, so it writes
+    them after the codes."""
     p = path.rstrip("/")
-    return f"{p}_ids", f"{p}_coarse", f"{p}_pqcb"
+    return f"{p}/_ids", f"{p}/_coarse", f"{p}/_pqcb"
 
 
 def save_ivfpq_codebooks(
@@ -724,14 +730,16 @@ def compact_ivfpq_table(
             "index — run repair_ivfpq_table (re-encodes the flagged "
             "vectors with the frozen geometry) before compacting"
         )
-    _, coarse_p, pqcb_p = _ivfpq_sidecars(path)
+    ids_p, coarse_p, pqcb_p = _ivfpq_sidecars(path)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     def _n_files(p: str) -> int:
         it, n = fs.listFiles(jvm_path(p), True), 0
         while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
+            f = it.next().getPath()
+            # codes only: the sidecars are _-prefixed subdirectories
+            if f.getName().endswith(".parquet") and not f.getParent().getName().startswith("_"):
                 n += 1
         return n
 
@@ -756,6 +764,10 @@ def compact_ivfpq_table(
     from data_pengadaan_agent_spark.sources.catalog import swap_dirs
 
     fs.delete(jvm_path(pqcb_p), True)
+    # the ids registry rides along into the rewritten directory
+    tmp_ids = _ivfpq_sidecars(tmp)[0]
+    if not fs.rename(jvm_path(ids_p), jvm_path(tmp_ids)):
+        raise OSError(f"compact_ivfpq_table: could not move {ids_p!r} to {tmp_ids!r}")
     swap_dirs(fs, jvm_path, tmp, path, old, "compact_ivfpq_table")
     save_ivfpq_codebooks(spark, path, coarse, cb)
     return before - _n_files(path)

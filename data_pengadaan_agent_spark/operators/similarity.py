@@ -60,9 +60,12 @@ def cosine_similarity_col(vec: Column, query: Sequence[float]) -> Column:
     norm is folded into one Python-side constant (broadcast literal).
     Zero-norm sides score 0 (see _norm_safe), matching the Arrow
     kernels and the guarded oracle twins."""
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
     qlit = F.array(*[F.lit(float(x)) for x in query])
-    return _dot(vec, qlit) / (_norm_safe(vec) * F.lit(qnorm))
+    return _dot(vec, qlit) / (_norm_safe(vec) * F.lit(_qnorm(query)))
+
+
+def _qnorm(query: Sequence[float]) -> float:
+    return math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
 
 
 def cosine_topk(
@@ -980,11 +983,11 @@ def retrieve_similar_keywords(
     keyword vocabulary, return top-k (keyword, similarity).
 
     The external embedding API (S6) is replaced by the deterministic
-    hash-ngram embedder; swap the two embed calls for an API client and
-    the operator is production-shaped: the query embeds ONCE
-    driver-side and ships as a broadcast literal, the vocab embeds
-    in-plan (codegen'd column expression, or a precomputed embedding
-    column when the vocab is stored with vectors)."""
+    hash-ngram embedder. This is the registry operator and the
+    reference plan: the query embeds once driver-side and ships as a
+    broadcast literal, and the vocab embeds in-plan on every call. The
+    ``Engine`` facade instead embeds its vocabulary once and ranks on
+    the driver (``KeywordIndex``), with the same answers."""
     from data_pengadaan_agent_spark.functions.vectors import (
         hash_ngram_embed,
         hash_ngram_embedding_col,
@@ -998,6 +1001,51 @@ def retrieve_similar_keywords(
         .orderBy(F.desc("similarity"), F.col(keyword_col))
         .limit(k)
     )
+
+
+class KeywordIndex:
+    """``retrieve_similar_keywords`` with the vocabulary side paid once:
+    one Spark job collects every ``(keyword, hash-ngram embedding)``,
+    and each query then embeds on the driver and ranks with NumPy —
+    no Spark job per query (the REPOSE / streaming-similarity split:
+    precompute the reference side, pay only the query side). A 1.5k ×
+    64 vocabulary is 0.8 MB of float64.
+
+    Same answers as the Spark plan, bit for bit: the embeddings are
+    small integers, so the integer dot product and sum of squares are
+    exact, and the score is ``dot / (norm_safe * qnorm)`` in that
+    order, as ``cosine_similarity_col`` computes it (zero-norm rows
+    score 0). The order is Spark's ``desc(similarity), keyword``:
+    ties break on keyword ascending, NULL keyword first (it embeds to
+    the zero vector, so it scores 0)."""
+
+    def __init__(self, vocab: DataFrame, keyword_col: str = "keyword", dim: int = 64) -> None:
+        import numpy as np
+
+        from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embedding_col
+
+        rows = vocab.select(
+            F.col(keyword_col), hash_ngram_embedding_col(F.col(keyword_col), dim)
+        ).collect()
+        self.keyword_col, self.dim = keyword_col, dim
+        self.keywords = [r[0] for r in rows]
+        self.emb = np.array([r[1] for r in rows], dtype=np.int64).reshape(len(rows), dim)
+        norms = np.sqrt((self.emb * self.emb).sum(axis=1).astype(np.float64))
+        self.norm_safe = np.where(norms == 0.0, 1.0, norms)
+
+    def top_k(self, query_text: str, k: int = 10) -> list[dict]:
+        import numpy as np
+
+        from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embed
+
+        qvec = hash_ngram_embed(query_text, self.dim)
+        dot = (self.emb @ np.array(qvec, dtype=np.int64)).astype(np.float64)
+        sim = dot / (self.norm_safe * _qnorm(qvec))
+        kw = self.keywords
+        order = sorted(
+            range(len(kw)), key=lambda i: (-sim[i], kw[i] is not None, kw[i] or "")
+        )
+        return [{self.keyword_col: kw[i], "similarity": float(sim[i])} for i in order[:k]]
 
 
 # --- Lloyd k-means (centroid training for the IVF index) --------------------

@@ -87,3 +87,19 @@ def pengadaan(spark):
         "tanggal_umumkan_paket STRING, filtered_keywords STRING",
     )
     return df
+
+
+def jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted from the status
+    store through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

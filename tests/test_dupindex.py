@@ -394,6 +394,27 @@ def test_intent_only_dead_repair_flagged_and_healed(spark, tmp_path):
     assert DI.audit_gram_counts(spark, path).count() == 0
 
 
+def test_absent_intents_are_not_read(spark, tmp_path, monkeypatch):
+    """An index that never ran a repair has no intents table: one
+    ``exists`` check answers that, with no failed read (whose JVM
+    stack trace every cold build used to log)."""
+    from pyspark.sql import DataFrameReader
+
+    docs = spark.createDataFrame([(1, "a b c d e f g h i j")], "doc_id LONG, text STRING")
+    idx = str(tmp_path / "gidx")
+    DI.build_gram_counts(docs, idx, length=4)
+    real = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        assert not any(str(p).endswith("/intents") for p in paths), paths
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    assert DI._intent_batches(spark, idx) is None
+    more = spark.createDataFrame([(3, "k l m n o p q r s t")], "doc_id LONG, text STRING")
+    DI.append_gram_counts(more, idx)
+
+
 def test_intents_read_error_propagates(spark, tmp_path):
     """Self-review r12: only a MISSING intents table means 'no repair
     ever ran' — a corrupt/unreadable intents table must raise, not

@@ -8,6 +8,7 @@ import pytest
 
 from data_pengadaan_agent_spark.engine import Engine
 from data_pengadaan_agent_spark.plans.sql_gate import SqlGateError
+from tests.conftest import jobs_in
 
 
 @pytest.fixture()
@@ -171,3 +172,75 @@ def test_sql_gate_semicolon_inside_literal_allowed(spark):
     check_select_only("SELECT 1 -- note; details")
     with _pt.raises(SqlGateError, match="multiple statements"):
         check_select_only("SELECT 1; DROP TABLE t")
+
+
+# ---- the facade's fast path: retrieval on the driver, one action per chart
+
+
+def test_retrieve_keywords_matches_the_spark_plan(spark, pengadaan):
+    """The Engine ranks its once-embedded vocabulary on the driver; the
+    answers must equal ``retrieve_similar_keywords``'s Spark plan
+    exactly — scores and order — on a vocabulary with duplicate
+    keywords, the empty string, a NULL keyword and a zero-norm
+    embedding, with k below and above the vocabulary size."""
+    from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embed
+    from data_pengadaan_agent_spark.operators.similarity import retrieve_similar_keywords
+
+    assert not any(hash_ngram_embed("cc"))  # its ±1 votes cancel: zero norm
+    words = ["alat", "alat", "", None, "cc", "kantor", "tulis", "peralatan", "gedung", "ATK"]
+    vocab = spark.createDataFrame([(w,) for w in words], "keyword string")
+    engine = Engine(spark, pengadaan, vocab_df=vocab)
+    for query in ("alat kantor", "", "cc", "peralatan tulis", "zzz", "Gedung"):
+        for k in (3, len(words) + 5):
+            want = [r.asDict() for r in retrieve_similar_keywords(vocab, query, k=k).collect()]
+            assert engine.retrieve_keywords(query, top_k=k) == want, (query, k)
+
+
+def test_turn_job_counts(spark, pengadaan):
+    """A warm retrieval starts no Spark job; bar, line and pie are one
+    action each (an aggregate over a grouped stage-2 frame: at most 3
+    jobs under AQE); the numeric histogram is its min/max pass plus
+    its binning pass."""
+    vocab = spark.createDataFrame([(w,) for w in "alat kantor gedung".split()], "keyword string")
+    engine = Engine(spark, pengadaan, vocab_df=vocab)
+    _, cold = jobs_in(spark, lambda: engine.retrieve_keywords("alat", top_k=2))
+    _, warm = jobs_in(spark, lambda: engine.retrieve_keywords("gedung kantor", top_k=2))
+    assert cold >= 1 and warm == 0  # the counter sees the one-time embedding job
+    engine.materialize(
+        "SELECT *, try_to_timestamp(tanggal_umumkan_paket) AS ts FROM data_pengadaan"
+    )
+    calls = {
+        "bar": lambda: engine.bar_chart(
+            "SELECT satuan_kerja, SUM(total_pagu) AS t FROM intermediary_table GROUP BY satuan_kerja",
+            "satuan_kerja", "t",
+        ),
+        "line": lambda: engine.line_chart(
+            "SELECT ts, kode_rup, total_pagu FROM intermediary_table", "ts", "kode_rup", "total_pagu"
+        ),
+        "pie": lambda: engine.pie_chart(
+            "SELECT satuan_kerja, COUNT(*) AS n FROM intermediary_table GROUP BY satuan_kerja",
+            "satuan_kerja", "n",
+        ),
+        "hist": lambda: engine.histogram("SELECT total_pagu FROM intermediary_table", "total_pagu"),
+    }
+    jobs = {kind: jobs_in(spark, fn)[1] for kind, fn in calls.items()}
+    assert all(jobs[k] <= 3 for k in ("bar", "line", "pie")), jobs
+    assert jobs["hist"] <= 4, jobs
+
+
+def test_chart_rows_keep_the_stage2_order(spark, pengadaan):
+    """Bar and pie rows come back in the stage-2 frame's own order — a
+    caller's ORDER BY … DESC included — although they are gathered by
+    one global aggregate over several partitions."""
+    src = spark.range(0, 400, numPartitions=8).selectExpr(
+        "concat('k', CAST(id % 37 AS STRING)) AS k", "(id * 7919) % 1000 AS v"
+    )
+    engine = Engine(spark, src, base_name="ordered_src")
+    sql = "SELECT k, SUM(v) AS s FROM ordered_src GROUP BY k ORDER BY s DESC, k DESC"
+    want = [r.asDict() for r in spark.sql(sql).collect()]
+    assert len(want) == 37
+    bar, _ = engine.bar_chart(sql, "k", "s")
+    assert bar == want
+    pie, ins = engine.pie_chart(sql, "k", "s")
+    assert [(r["k"], r["s"]) for r in pie] == [(r["k"], r["s"]) for r in want]
+    assert all(r["share"] == r["s"] / ins["total"] for r in pie)

@@ -66,7 +66,7 @@ def test_scenario_b_building_repairs_line(spark, pengadaan):
         F.col("ts").isNotNull()
     )
     data, insights = C.line_chart_data(parsed, "ts", "kode_rup", "total_pagu")
-    months = {r["bulan"]: (r["jumlah_paket"], r["total_pagu"]) for r in data.collect()}
+    months = {r["bulan"]: (r["jumlah_paket"], r["total_pagu"]) for r in data}
     # years NOT collapsed in the trend (unlike the A7 histogram)
     assert months == {"2023-01": (1, 750_000_000), "2024-01": (1, 2_000_000_000)}
     assert insights["peak_value_month"] == "2024-01"

@@ -8,7 +8,9 @@ the entries it guards.
   second copy keeps every row count but changes the content, each
   gated entry answers the second copy exactly like its DuckDB twin;
 - guard: every ``_warehouse_path`` in the entry file feeds an
-  ``ensure_index`` call, so no entry hand-rolls its own gate.
+  ``ensure_index`` call, and every managed-table write
+  (``write_bucketed``, ``saveAsTable``) runs inside a gate's build or
+  under its result, so no entry hand-rolls its own gate.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pathlib import Path
 import pytest
 
 from data_pengadaan_agent_spark.sources.catalog import ensure_index
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_in
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -33,20 +35,6 @@ def _write_table(spark, sf: str, rows) -> None:
     spark.createDataFrame(rows, "id bigint, v string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{sf}/t.parquet")
-
-
-def _jobs_in(spark, fn):
-    """(fn(), number of Spark jobs fn started), counted from the status
-    store through a job group of its own."""
-    sc = spark.sparkContext
-    group = f"gate-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _gate_files(path: str) -> list[str]:
@@ -64,9 +52,9 @@ def test_warm_gate_starts_no_spark_job(spark, tmp_path):
     def build():
         builds.append(spark.read.parquet(f"{sf}/t.parquet").count())
 
-    built, cold_jobs = _jobs_in(spark, lambda: ensure_index(spark, idx, sf, ("t",), (1,), build))
+    built, cold_jobs = jobs_in(spark, lambda: ensure_index(spark, idx, sf, ("t",), (1,), build))
     assert built and builds == [2] and cold_jobs > 0  # the counter sees jobs
-    built, warm_jobs = _jobs_in(spark, lambda: ensure_index(spark, idx, sf, ("t",), (1,), build))
+    built, warm_jobs = jobs_in(spark, lambda: ensure_index(spark, idx, sf, ("t",), (1,), build))
     assert not built and warm_jobs == 0 and builds == [2]
     assert len(_gate_files(idx)) == 1
 
@@ -116,6 +104,7 @@ GATED = (
     "kmv_distinct",
     "kmv_overlap",
     "zorder_zonemap_scan",
+    "bucketed_join_revenue",
 )
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -130,8 +119,9 @@ def _copy(src: str, dst: str) -> None:
 
 
 def _changed_copy(src: str, dst: str) -> None:
-    """Copy the fixtures, then rewrite documents, lineitem, events and
-    embeddings with the same row count and different content."""
+    """Copy the fixtures, then rewrite documents, lineitem, events,
+    embeddings and orders with the same row count and different
+    content."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -169,18 +159,24 @@ def _changed_copy(src: str, dst: str) -> None:
     rewrite("events", events)
     rewrite("embeddings", lambda t: rotate(t, "embedding", "vec_id"))
 
+    def orders(t):
+        price = pc.multiply(t.column("o_totalprice"), 2.0)
+        return t.set_column(t.schema.get_field_index("o_totalprice"), "o_totalprice", price)
+
+    rewrite("orders", orders)
+
 
 def _warehouse_leftovers(spark, tag: str) -> list[str]:
     roots = {str(REPO / "spark-warehouse")}
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     roots.add(os.path.abspath(wh))
     # the tag is unique to this run, so any name holding it is ours
-    # (the ivfpq sidecars append a suffix after it)
     return [p for r in roots for p in glob.glob(os.path.join(r, f"*_{tag}*"))]
 
 
 def _clean_warehouse(spark, tag: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS gram_counts_bucketed_{tag}")
+    for table in ("gram_counts_bucketed", "orders_bkt", "customer_bkt"):
+        spark.sql(f"DROP TABLE IF EXISTS {table}_{tag}")
     for p in _warehouse_leftovers(spark, tag):
         shutil.rmtree(p, ignore_errors=True)
 
@@ -226,35 +222,70 @@ def test_every_warehouse_path_feeds_ensure_index():
     path argument of an ``ensure_index`` call in the same function,
     directly or through the name it is assigned to. The streaming
     ingest entry's per-call stream index and ack log are the one
-    exception: they are rebuilt on every call, not gated."""
+    exception: they are rebuilt on every call, not gated.
+
+    Each managed-table write (``write_bucketed``, ``.saveAsTable``)
+    is gated too: it sits in the function passed as an
+    ``ensure_index`` build, or under an ``if`` that tests the result of
+    an ``ensure_index`` call (a session-scoped catalog may have to
+    re-register a table whose files are fresh)."""
     tree = ast.parse((REPO / "__spark_entry__.py").read_text())
     exempt = {"_q_ann_ingest_stream_codes"}
     bad = []
 
     def is_call(node, name):
-        return isinstance(node, ast.Call) and getattr(node.func, "id", None) == name
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        return getattr(f, "id", None) == name or getattr(f, "attr", None) == name
+
+    def arg(call, pos, kw):
+        if len(call.args) > pos:
+            return call.args[pos]
+        return next((k.value for k in call.keywords if k.arg == kw), None)
+
+    def inside(fn, target, found=()):
+        """The nodes enclosing ``target`` in ``fn``, outermost first."""
+        for child in ast.iter_child_nodes(fn):
+            if child is target:
+                return list(found)
+            hit = inside(child, target, (*found, child))
+            if hit is not None:
+                return hit
+        return None
 
     for fn in tree.body:
         if not isinstance(fn, ast.FunctionDef) or fn.name in exempt:
             continue
-        gated_args = []
-        for node in ast.walk(fn):
-            if is_call(node, "ensure_index"):
-                arg = node.args[1] if len(node.args) > 1 else next(
-                    (k.value for k in node.keywords if k.arg == "path"), None
-                )
-                gated_args.append(arg)
+        gates = [node for node in ast.walk(fn) if is_call(node, "ensure_index")]
+        gated_args = [arg(g, 1, "path") for g in gates]
         gated_names = {a.id for a in gated_args if isinstance(a, ast.Name)}
         gated_calls = {id(a) for a in gated_args}
+        builds = {a.id for a in (arg(g, 5, "build") for g in gates) if isinstance(a, ast.Name)}
+        results = set()
         assigned = {}
         for node in ast.walk(fn):
-            if isinstance(node, ast.Assign) and is_call(node.value, "_warehouse_path"):
-                for t in node.targets:
-                    if isinstance(t, ast.Name):
-                        assigned[id(node.value)] = t.id
+            if isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+                if is_call(node.value, "_warehouse_path"):
+                    for n in names:
+                        assigned[id(node.value)] = n
+                if is_call(node.value, "ensure_index"):
+                    results.update(names)
         for node in ast.walk(fn):
             if is_call(node, "_warehouse_path"):
                 ok = id(node) in gated_calls or assigned.get(id(node)) in gated_names
                 if not ok:
                     bad.append(f"{fn.name}:{node.lineno}")
-    assert bad == [], f"_warehouse_path not gated by ensure_index: {bad}"
+            if is_call(node, "write_bucketed") or is_call(node, "saveAsTable"):
+                ok = any(
+                    (isinstance(a, ast.FunctionDef) and a.name in builds)
+                    or (
+                        isinstance(a, ast.If)
+                        and any(isinstance(n, ast.Name) and n.id in results for n in ast.walk(a.test))
+                    )
+                    for a in inside(fn, node)
+                )
+                if not ok:
+                    bad.append(f"{fn.name}:{node.lineno} (managed table)")
+    assert bad == [], f"warehouse writes not gated by ensure_index: {bad}"

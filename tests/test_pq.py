@@ -223,6 +223,24 @@ def test_ivfpq_build_partitions_and_pruned_topk(spark, tmp_path):
     assert top2.count() == len(FIX)
 
 
+def test_ivfpq_sidecars_live_inside_the_index(spark, tmp_path):
+    """The ids registry and codebooks are ``_``-prefixed subdirectories
+    of the index: nothing is written beside it, the codes read skips
+    them, and a compaction keeps them."""
+    import os
+
+    path = str(tmp_path / "ivfpq")
+    PQ.build_ivfpq_table(_vecs(spark, FIX), path, dim=4, kc=2, m=2, ksub=2, iters=2)
+    assert os.listdir(tmp_path) == ["ivfpq"]
+    assert {"_ids", "_coarse", "_pqcb"} <= set(os.listdir(path))
+    assert spark.read.parquet(path).count() == len(FIX)
+    PQ.compact_ivfpq_table(spark, path)
+    assert sorted(os.listdir(tmp_path)) == ["ivfpq"]
+    assert PQ.audit_ivfpq_table(spark, path).count() == 0
+    assert PQ.append_ivfpq_table(_vecs(spark, FIX), path) == 0
+    PQ.load_ivfpq_codebooks(spark, path)
+
+
 def test_ivfpq_validation(spark, tmp_path):
     df = _vecs(spark, FIX)
     with pytest.raises(ValueError, match="init needs ids"):
@@ -300,7 +318,7 @@ def test_ivfpq_append_crash_contract_and_audit(spark, tmp_path):
     # uncommitted build: codebook sidecars absent -> loud ValueError
     import shutil
 
-    shutil.rmtree(f"{path}_pqcb")
+    shutil.rmtree(PQ._ivfpq_sidecars(path)[2])
     with pytest.raises(ValueError, match="codebooks"):
         PQ.load_ivfpq_codebooks(spark, path)
     with pytest.raises(ValueError, match="codebooks"):

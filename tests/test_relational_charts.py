@@ -62,7 +62,7 @@ def test_bar_chart_data(tables):
 
 def test_line_chart_data(tables):
     data, ins = C.line_chart_data(tables["orders"], "o_orderdate", "o_orderkey", "o_totalprice")
-    months = [r["bulan"] for r in data.collect()]
+    months = [r["bulan"] for r in data]
     assert months == sorted(months)
     assert ins["peak_value_month"] in months
 
@@ -70,18 +70,48 @@ def test_line_chart_data(tables):
 def test_pie_chart_data_shares_sum_to_one(tables):
     counts = tables["orders"].groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
     data, ins = C.pie_chart_data(counts, "o_orderpriority", "n")
-    total_share = sum(r["share"] for r in data.collect())
+    total_share = sum(r["share"] for r in data)
     assert abs(total_share - 1.0) < 1e-9
     assert ins["total"] == tables["orders"].count()
 
 
 def test_histogram_dispatch_numeric_vs_ts_vs_string(tables):
     d1, _ = C.histogram_data(tables["lineitem"], "l_extendedprice")
-    assert "bucket" in d1.columns
+    assert "bucket" in d1[0].asDict()
     d2, _ = C.histogram_data(tables["orders"], "o_orderdate")
-    assert "month_no" in d2.columns and d2.count() == 12
+    assert "month_no" in d2[0].asDict() and len(d2) == 12
     d3, _ = C.histogram_data(tables["orders"], "o_orderpriority")
-    assert d3.count() == 5  # categorical fallback
+    assert len(d3) == 5  # categorical fallback
+
+
+def test_render_png_draws_the_returned_rows(tables, monkeypatch, tmp_path):
+    """render_png takes the rows a chart function returns. matplotlib is
+    optional, so a recording stand-in takes its place here."""
+    import sys
+    import types
+
+    drawn = {}
+
+    class Ax:
+        def bar(self, xs, ys, **kw):
+            drawn["bar"] = (list(xs), list(ys))
+
+        def set_title(self, title):
+            drawn["title"] = title
+
+    class Fig:
+        def savefig(self, path, **kw):
+            drawn["path"] = path
+
+    pyplot = types.SimpleNamespace(subplots=lambda **kw: (Fig(), Ax()), close=lambda fig: None)
+    mpl = types.SimpleNamespace(use=lambda backend: None, pyplot=pyplot)
+    monkeypatch.setitem(sys.modules, "matplotlib", mpl)
+    monkeypatch.setitem(sys.modules, "matplotlib.pyplot", pyplot)
+    counts = tables["orders"].groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
+    rows, _ = C.bar_chart_data(counts, "o_orderstatus", "n")
+    out = C.render_png(rows, "bar", str(tmp_path / "bar.png"), "o_orderstatus", "n", "status")
+    assert out == drawn["path"] and drawn["title"] == "status"
+    assert drawn["bar"] == ([r["o_orderstatus"] for r in rows], [r["n"] for r in rows])
 
 
 def test_histogram_missing_column_raises(tables):
@@ -107,6 +137,37 @@ def test_materialize_overwrite_contract(spark, tables):
     materialize(tables["nation"])
     assert read_intermediary(spark).count() == 25
     drop_intermediary(spark)
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_materialize_releases_the_replaced_intermediary(spark):
+    """Each materialize caches the new intermediary and unpersists the
+    one it replaces: N calls leave exactly one cached relation."""
+    before = _cached_rdds(spark)
+    for i in range(5):
+        echo = materialize(spark.range(10 * (i + 1)).toDF("n"), view_name="leak_v")
+        assert echo["first_rows"][0] == {"n": 0}
+    assert len(_cached_rdds(spark) - before) == 1
+    assert read_intermediary(spark, "leak_v").count() == 50
+    drop_intermediary(spark, "leak_v")
+    assert _cached_rdds(spark) - before == set()
+
+
+def test_materialize_reading_the_previous_intermediary(spark):
+    """A stage-1 query over the intermediary it replaces still answers
+    from the old rows, though the old relation is released."""
+    materialize(spark.range(10).toDF("n"), view_name="chain_v")
+    for _ in range(2):
+        materialize(spark.sql("SELECT n * 2 AS n FROM chain_v WHERE n < 8"), view_name="chain_v")
+    got = sorted(r["n"] for r in read_intermediary(spark, "chain_v").collect())
+    assert got == [0, 4, 8, 12]
+    # re-materializing the same relation keeps it cached
+    materialize(spark.table("chain_v"), view_name="chain_v")
+    assert spark.catalog.isCached("chain_v")
+    drop_intermediary(spark, "chain_v")
 
 
 def test_catalog_ops(spark, tables):
@@ -246,14 +307,14 @@ def test_histogram_string_dispatch_is_all_or_nothing(spark):
         [("open",), ("closed",), ("closed",), ("2024-01-05",)], "status STRING"
     )
     data, row = C.histogram_data(df, "status")
-    got = {r.status: r.cnt for r in data.collect()}
+    got = {r.status: r.cnt for r in data}
     assert got == {"open": 1, "closed": 2, "2024-01-05": 1}
     assert row["n"] == 4
     all_dates = spark.createDataFrame(
         [("2024-01-05",), ("2024-02-11",)], "d STRING"
     )
     data2, row2 = C.histogram_data(all_dates, "d")
-    assert row2["n"] == 2 and "month_no" in data2.columns
+    assert row2["n"] == 2 and "month_no" in data2[0].asDict()
 
 
 def test_latest_by_key_fallback_skips_unorderable_columns(spark):
