@@ -102,7 +102,7 @@ def _q_monthly_rollup(spark, sf):
 
 
 def _q_value_counts(spark, sf):
-    return A.value_counts(load_table(spark, sf, "events"), "event_type", alias="cnt")
+    return A.value_counts(load_table(spark, sf, "events"), "event_type", alias="cnt").orderBy("event_type")
 
 
 def _q_scalar_insights(spark, sf):

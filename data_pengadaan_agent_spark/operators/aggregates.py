@@ -34,31 +34,27 @@ def monthly_rollup(
     month_alias: str = "bulan",
     count_alias: str = "jumlah_paket",
     sum_alias: str = "total_pagu",
-    ordered: bool = True,
 ) -> DataFrame:
     """A2: the canonical line-chart query —
-    strftime('%Y-%m') → count(id) + sum(measure) → ORDER BY month
+    strftime('%Y-%m') → count(id) + sum(measure)
     (openai/function_definition.py:153-159). date_format preserves the
     reference's *string* month dialect. The money sum goes through
     DECIMAL — the module contract (self-review r12: this operator was
     the one float-sum holdout; float partial-aggregate merge order is
     partitioning-dependent, and the entry file's registered query had
-    to hand-bypass it). ``ordered=False`` leaves out the ORDER BY (its
-    sampling job and range shuffle) for a caller that orders the
-    month rows itself."""
-    out = df.groupBy(F.date_format(F.col(ts_col), "yyyy-MM").alias(month_alias)).agg(
+    to hand-bypass it). Unordered: a caller that needs the reference's
+    ORDER BY month adds it (its sampling job and range shuffle)."""
+    return df.groupBy(F.date_format(F.col(ts_col), "yyyy-MM").alias(month_alias)).agg(
         F.count(F.col(id_col)).alias(count_alias),
         F.sum(F.col(measure_col).cast("decimal(28,2)")).alias(sum_alias),
     )
-    return out.orderBy(month_alias) if ordered else out
 
 
-def value_counts(df: DataFrame, col: str, alias: str = "cnt", ordered: bool = True) -> DataFrame:
-    """A3: pandas value_counts().sort_index()
-    (openai/list_of_tools.py:75,100,107); ``ordered`` as in
-    ``monthly_rollup``."""
-    out = df.groupBy(col).agg(F.count(F.lit(1)).alias(alias))
-    return out.orderBy(col) if ordered else out
+def value_counts(df: DataFrame, col: str, alias: str = "cnt") -> DataFrame:
+    """A3: pandas value_counts() (openai/list_of_tools.py:75,100,107),
+    unordered; the reference's sort_index() is the caller's
+    ``orderBy(col)``."""
+    return df.groupBy(col).agg(F.count(F.lit(1)).alias(alias))
 
 
 def scalar_insights(df: DataFrame, col: str) -> DataFrame:
@@ -122,13 +118,11 @@ def histogram_bins(df: DataFrame, col: str, lo, hi, bins: int = 12) -> DataFrame
     )
 
 
-def histogram_month_of_year(
-    df: DataFrame, ts_col: str, alias: str = "month_no", ordered: bool = True
-) -> DataFrame:
+def histogram_month_of_year(df: DataFrame, ts_col: str, alias: str = "month_no") -> DataFrame:
     """A7: month-of-year histogram — **collapses years** (dt.month,
     openai/list_of_tools.py:47-55), with a 1..12 scaffold so empty
     months appear with count 0. The scaffold is 12 rows → broadcast
-    join, free at any scale. ``ordered`` as in ``monthly_rollup``."""
+    join, free at any scale. Unordered, like ``monthly_rollup``."""
     spark = df.sparkSession
     months = spark.range(1, 13).select(F.col("id").cast("int").alias(alias))
     counts = (
@@ -136,10 +130,9 @@ def histogram_month_of_year(
         .groupBy(F.month(F.col(ts_col)).alias(alias))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    out = months.join(counts, alias, "left").select(
+    return months.join(counts, alias, "left").select(
         alias, F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
     )
-    return out.orderBy(alias) if ordered else out
 
 
 def distinct_count(df: DataFrame, key: str, col: str, approx: bool = False) -> DataFrame:

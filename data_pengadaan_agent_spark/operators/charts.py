@@ -103,7 +103,7 @@ def line_chart_data(
     """C2: dual-axis monthly series (A2) + period insights
     (openai/list_of_tools.py:272-385); rows ordered by month."""
     _require(df, ts_col, id_col, measure_col)
-    data = A.monthly_rollup(df, ts_col, id_col, measure_col, ordered=False)
+    data = A.monthly_rollup(df, ts_col, id_col, measure_col)
     return _first(
         _rows_and(
             data,
@@ -177,7 +177,7 @@ def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[list[Row], 
         # ≤ bins rows with non-NULL int buckets: ordered here, not by a sort
         return sorted(data.collect(), key=lambda r: r["bucket"]), row.asDict()
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        return _counts(A.histogram_month_of_year(df, col, ordered=False), "month_no", "peak_month")
+        return _counts(A.histogram_month_of_year(df, col), "month_no", "peak_month")
     if isinstance(dtype, T.StringType):
         # ALL-or-nothing datetime parse like the pandas reference
         # (to_datetime raises on the first bad value → fallback):
@@ -191,8 +191,8 @@ def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[list[Row], 
         ).first()
         if probe["_n"] > 0 and probe["_ok"] == probe["_n"]:
             dd = parsed.filter(F.col("_ts").isNotNull())
-            return _counts(A.histogram_month_of_year(dd, "_ts", ordered=False), "month_no", "peak_month")
-    return _counts(A.value_counts(df, col, ordered=False), col, "mode")
+            return _counts(A.histogram_month_of_year(dd, "_ts"), "month_no", "peak_month")
+    return _counts(A.value_counts(df, col), col, "mode")
 
 
 def render_png(rows: list[Row], kind: str, path: str, x: str, y: str | None = None, title: str = "") -> str:

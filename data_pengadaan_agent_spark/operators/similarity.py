@@ -1004,8 +1004,9 @@ def retrieve_similar_keywords(
 
 
 class KeywordIndex:
-    """``retrieve_similar_keywords`` with the vocabulary side paid once:
-    one Spark job collects every ``(keyword, hash-ngram embedding)``,
+    """``retrieve_similar_keywords`` with the vocabulary side paid once,
+    on its defaults (the ``keyword`` column, 64 dimensions): one Spark
+    job collects every ``(keyword, hash-ngram embedding)``,
     and each query then embeds on the driver and ranks with NumPy —
     no Spark job per query (the REPOSE / streaming-similarity split:
     precompute the reference side, pay only the query side). A 1.5k ×
@@ -1019,33 +1020,36 @@ class KeywordIndex:
     ties break on keyword ascending, NULL keyword first (it embeds to
     the zero vector, so it scores 0)."""
 
-    def __init__(self, vocab: DataFrame, keyword_col: str = "keyword", dim: int = 64) -> None:
+    def __init__(self, vocab: DataFrame) -> None:
         import numpy as np
 
         from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embedding_col
 
         rows = vocab.select(
-            F.col(keyword_col), hash_ngram_embedding_col(F.col(keyword_col), dim)
+            F.col("keyword"), hash_ngram_embedding_col(F.col("keyword"), 64)
         ).collect()
-        self.keyword_col, self.dim = keyword_col, dim
         self.keywords = [r[0] for r in rows]
-        self.emb = np.array([r[1] for r in rows], dtype=np.int64).reshape(len(rows), dim)
+        self.emb = np.array([r[1] for r in rows], dtype=np.int64).reshape(len(rows), 64)
         norms = np.sqrt((self.emb * self.emb).sum(axis=1).astype(np.float64))
         self.norm_safe = np.where(norms == 0.0, 1.0, norms)
 
     def top_k(self, query_text: str, k: int = 10) -> list[dict]:
+        """The top ``k`` keywords; a negative ``k`` raises, as Spark's
+        ``limit`` rejects it."""
         import numpy as np
 
         from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embed
 
-        qvec = hash_ngram_embed(query_text, self.dim)
+        if k < 0:
+            raise ValueError(f"top-k must be non-negative, got {k}")
+        qvec = hash_ngram_embed(query_text, 64)
         dot = (self.emb @ np.array(qvec, dtype=np.int64)).astype(np.float64)
         sim = dot / (self.norm_safe * _qnorm(qvec))
         kw = self.keywords
         order = sorted(
             range(len(kw)), key=lambda i: (-sim[i], kw[i] is not None, kw[i] or "")
         )
-        return [{self.keyword_col: kw[i], "similarity": float(sim[i])} for i in order[:k]]
+        return [{"keyword": kw[i], "similarity": float(sim[i])} for i in order[:k]]
 
 
 # --- Lloyd k-means (centroid training for the IVF index) --------------------

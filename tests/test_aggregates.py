@@ -21,7 +21,7 @@ def test_groupby_count_null_semantics(spark):
 
 def test_monthly_rollup_reference_shape(pengadaan):
     df = parse_ts_coerce(pengadaan, "tanggal_umumkan_paket")
-    out = A.monthly_rollup(df, "ts", "kode_rup", "total_pagu").collect()
+    out = A.monthly_rollup(df, "ts", "kode_rup", "total_pagu").orderBy("bulan").collect()
     assert [r["bulan"] for r in out] == ["2023-01", "2023-12", "2024-01", "2024-03"]
     jan24 = next(r for r in out if r["bulan"] == "2024-01")
     assert jan24["jumlah_paket"] == 2

@@ -182,7 +182,8 @@ def test_retrieve_keywords_matches_the_spark_plan(spark, pengadaan):
     answers must equal ``retrieve_similar_keywords``'s Spark plan
     exactly — scores and order — on a vocabulary with duplicate
     keywords, the empty string, a NULL keyword and a zero-norm
-    embedding, with k below and above the vocabulary size."""
+    embedding, with k zero, below and above the vocabulary size. A
+    negative k is an error on both paths."""
     from data_pengadaan_agent_spark.functions.vectors import hash_ngram_embed
     from data_pengadaan_agent_spark.operators.similarity import retrieve_similar_keywords
 
@@ -191,9 +192,13 @@ def test_retrieve_keywords_matches_the_spark_plan(spark, pengadaan):
     vocab = spark.createDataFrame([(w,) for w in words], "keyword string")
     engine = Engine(spark, pengadaan, vocab_df=vocab)
     for query in ("alat kantor", "", "cc", "peralatan tulis", "zzz", "Gedung"):
-        for k in (3, len(words) + 5):
+        for k in (0, 3, len(words) + 5):
             want = [r.asDict() for r in retrieve_similar_keywords(vocab, query, k=k).collect()]
             assert engine.retrieve_keywords(query, top_k=k) == want, (query, k)
+    with pytest.raises(Exception, match="(?i)limit"):
+        retrieve_similar_keywords(vocab, "alat", k=-1).collect()
+    with pytest.raises(ValueError):
+        engine.retrieve_keywords("alat", top_k=-1)
 
 
 def test_turn_job_counts(spark, pengadaan):
