@@ -55,7 +55,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pengadaan_agent_spark.sources.catalog import read_meta, write_meta
+from data_pengadaan_agent_spark.sources.catalog import (
+    compact,
+    logged,
+    read_meta,
+    write_meta,
+)
 
 # Mixing constants: Knuth's 32-bit multiplicative constant and two
 # xxhash32 primes. Products stay < 2^63 for any 31-bit folded key:
@@ -350,6 +355,7 @@ def bloom_new_rows(
     return definitely_new.unionByName(verified_new)
 
 
+@logged
 def ingest_bloom_batch(
     spark: SparkSession, path: str, batch: DataFrame, key_col: str | None = None
 ) -> int:
@@ -412,6 +418,7 @@ def audit_bloom_index(
     )
 
 
+@logged
 def repair_bloom_index(
     spark: SparkSession, path: str, key_col: str | None = None
 ) -> int:
@@ -440,44 +447,24 @@ def compact_bloom_index(
 ) -> int:
     """Physical maintenance for the append loop: collapse words/ to
     its grouped form (one row per live (bucket, word_idx)) and keys/
-    to distinct rows, with the meta-out/rename-swap/meta-in validity
-    discipline — readers between meta-delete and meta-rewrite reject
-    the index loudly rather than reading a half-swapped state.
+    to distinct rows, both through ``compact`` with the meta as the
+    validity marker (out before the first swap, in after the second).
     Purely physical: the grouped view is unchanged (bit_or is the
     read law), so compaction needs no audit gate. Returns live word
     rows after compaction."""
     meta4, n_keys = read_meta_counts(spark, path)
     key_col = _resolve_key(meta4[3], key_col, "compact_bloom_index")
     words_p, keys_p, meta_p = _paths(path)
-    staged_w, staged_k = f"{words_p}__staged", f"{keys_p}__staged"
-    grouped = grouped_words(spark, path)
-    grouped.write.mode("overwrite").partitionBy("bucket").parquet(staged_w)
-    spark.read.parquet(keys_p).select(key_col).distinct().write.mode(
-        "overwrite"
-    ).parquet(staged_k)
-    n_rows = spark.read.parquet(staged_w).count()
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jvm_path(meta_p), True)  # meta OUT: index invalid during swap
-    fs.delete(jvm_path(words_p), True)
-    if not fs.rename(jvm_path(staged_w), jvm_path(words_p)):
-        # Hadoop rename reports failure by RETURNING false — writing a
-        # valid meta over a missing words/ would hand readers a
-        # healthy-looking index with its bits gone (self-review r12).
-        # Meta stays absent = loudly invalid; __staged keeps the data.
-        raise OSError(
-            f"compact_bloom_index: rename {staged_w} -> {words_p} failed; "
-            "meta left absent (index invalid), staged data preserved"
-        )
-    fs.delete(jvm_path(keys_p), True)
-    if not fs.rename(jvm_path(staged_k), jvm_path(keys_p)):
-        raise OSError(
-            f"compact_bloom_index: rename {staged_k} -> {keys_p} failed; "
-            "meta left absent (index invalid), staged data preserved"
-        )
-    _write_meta(spark, meta_p, *meta4, n_keys)
-    return n_rows
+    compact(
+        spark, words_p, "compact_bloom_index", grouped_words(spark, path),
+        part_col="bucket", marker=meta_p,
+    )
+    compact(
+        spark, keys_p, "compact_bloom_index",
+        spark.read.parquet(keys_p).select(key_col).distinct(),
+        recommit=lambda: _write_meta(spark, meta_p, *meta4, n_keys),
+    )
+    return spark.read.parquet(words_p).count()
 
 
 def bloom_fill_report(

@@ -53,6 +53,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import (
+    audit_registry,
+    compact,
+    flagged_rows,
+    local_df,
+    logged,
+    new_rows,
+)
+
 BITS_PER_WORD = 63
 
 
@@ -199,8 +208,6 @@ def save_bq_thresholds(spark, path: str, thresholds: Sequence[float]) -> None:
     parameter-sized). Written LAST by the build — the commit marker:
     words without thresholds are a loudly-invalid index (the
     sq/lexindex/ivfpq meta discipline)."""
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     _, thr_p = _bq_sidecars(path)
     local_df(
         spark,
@@ -256,6 +263,7 @@ def build_bq_table(
     return thresholds
 
 
+@logged
 def append_bq_table(
     df: DataFrame,
     path: str,
@@ -265,45 +273,27 @@ def append_bq_table(
     """Incremental BQ maintenance: encode a NEW batch with the FROZEN
     thresholds (daily shards never retrain — a drifting distribution
     shows up as recall loss, and the re-rank stage absorbs it) and
-    append. Write order is the crash contract: ids FIRST (replay
-    after any crash is a no-op — words can never double), words
-    second; the surviving ids-without-words state is probe-invisible
-    under-recall only, flagged by ``audit_bq_table``, healed by
-    ``repair_bq_table``. Returns vectors appended."""
-    spark = df.sparkSession
-    thresholds = load_bq_thresholds(spark, path)
+    append, ids first, words second (README "Index lifecycle").
+    Returns vectors appended."""
+    thresholds = load_bq_thresholds(df.sparkSession, path)
     ids_p, _ = _bq_sidecars(path)
-    fresh = df.dropDuplicates([id_col])
-    seen = spark.read.parquet(ids_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti").localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return 0
-    fresh.select(id_col).write.mode("append").parquet(ids_p)
-    bq_encode(fresh, thresholds, vec_col, id_col).write.mode(
-        "append"
-    ).parquet(path)
+    fresh, n_new = new_rows(df, ids_p, id_col)
+    if n_new:
+        fresh.select(id_col).write.mode("append").parquet(ids_p)
+        bq_encode(fresh, thresholds, vec_col, id_col).write.mode(
+            "append"
+        ).parquet(path)
     return n_new
 
 
 def audit_bq_table(spark, path: str, id_col: str = "vec_id") -> DataFrame:
-    """Integrity audit for the append crash contract: registry ids
-    without words (an append whose second write died —
-    probe-invisible) and orphan words (registry damage; rebuild).
-    Returns (id, state); empty = consistent."""
+    """Registry ids without words (``missing_words``) and orphan words
+    (``orphan_words``); empty = consistent."""
     load_bq_thresholds(spark, path)  # validates the build committed
-    ids_p, _ = _bq_sidecars(path)
-    reg = spark.read.parquet(ids_p).select(id_col).distinct()
-    coded = spark.read.parquet(path).select(id_col).distinct()
-    missing = reg.join(coded, id_col, "left_anti").select(
-        id_col, F.lit("missing_words").alias("state")
-    )
-    orphan = coded.join(reg, id_col, "left_anti").select(
-        id_col, F.lit("orphan_words").alias("state")
-    )
-    return missing.unionByName(orphan)
+    return audit_registry(spark, _bq_sidecars(path)[0], path, id_col, "words")
 
 
+@logged
 def repair_bq_table(
     df: DataFrame,
     path: str,
@@ -311,49 +301,25 @@ def repair_bq_table(
     id_col: str = "vec_id",
 ) -> int:
     """Heal every ``missing_words`` id: re-encode exactly the flagged
-    vectors with the FROZEN thresholds and append their word rows —
-    append-only, replay-safe, crash-convergent. ``df`` must cover
-    every flagged id. Returns vectors re-encoded."""
+    vectors of ``df`` with the FROZEN thresholds and append their
+    words. Returns vectors re-encoded."""
     spark = df.sparkSession
     thresholds = load_bq_thresholds(spark, path)
-    flagged = (
-        audit_bq_table(spark, path, id_col)
-        .filter(F.col("state") == "missing_words")
-        .select(id_col)
+    flagged = audit_bq_table(spark, path, id_col).filter(
+        F.col("state") == "missing_words"
     )
-    todo = (
-        df.dropDuplicates([id_col])
-        .join(flagged, id_col, "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    n_todo = todo.count()
-    n_flagged = flagged.count()
-    if n_todo < n_flagged:
-        raise ValueError(
-            f"repair_bq_table: {n_flagged - n_todo} flagged id(s) not in "
-            "the provided source frame — repair must re-read the original "
-            "vector of every probe-invisible id"
-        )
-    if n_todo == 0:
-        return 0
-    bq_encode(todo, thresholds, vec_col, id_col).write.mode(
-        "append"
-    ).parquet(path)
+    todo, n_todo = flagged_rows(df, flagged.select(id_col), id_col, "repair_bq_table")
+    if n_todo:
+        bq_encode(todo, thresholds, vec_col, id_col).write.mode(
+            "append"
+        ).parquet(path)
     return n_todo
 
 
-def compact_bq_table(
-    spark,
-    path: str,
-    target_files: int = 1,
-    id_col: str = "vec_id",
-) -> int:
-    """Daily-append small-file maintenance: rewrite the flat words
-    table to ``target_files`` files, bit-identical rows. Refuses a
-    dirty audit. The thresholds sidecar is the validity marker:
-    deleted before the swap, re-committed after — a crash mid-swap
-    leaves a loudly-invalid index, never a silently half-compacted
-    one. Returns files removed."""
+def compact_bq_table(spark, path: str, id_col: str = "vec_id") -> int:
+    """Rewrite the words to one file, bit-identical rows,
+    with the thresholds as the validity marker. Refuses a dirty audit.
+    Returns files removed."""
     thresholds = load_bq_thresholds(spark, path)
     dirty = audit_bq_table(spark, path, id_col).count()
     if dirty:
@@ -361,37 +327,11 @@ def compact_bq_table(
             f"compact_bq_table: {dirty} inconsistent id(s) in the index — "
             "run repair_bq_table before compacting"
         )
-    _, thr_p = _bq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    before = _n_files(path)
-    tmp, old = f"{path}_compact_tmp", f"{path}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    (
-        spark.read.parquet(path)
-        .repartition(int(target_files), F.xxhash64(id_col))
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return compact(
+        spark, path, "compact_bq_table", key=id_col,
+        marker=_bq_sidecars(path)[1],
+        recommit=lambda: save_bq_thresholds(spark, path, thresholds),
     )
-    # index invalid until recommit; swap_dirs checks every rename
-    # return — an unchecked failed swap followed by the old-copy
-    # delete would destroy the only copy of the codes
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
-    fs.delete(jvm_path(thr_p), True)
-    swap_dirs(fs, jvm_path, tmp, path, old, "compact_bq_table")
-    save_bq_thresholds(spark, path, thresholds)
-    return before - _n_files(path)
 
 
 def bq_topk_batch(

@@ -10,8 +10,7 @@ the reference's tools embed in their replies. Both come from ONE Spark
 action — one aggregate carries the plot rows as a
 ``collect_list(struct(...))`` beside the scalar insights — except the
 numeric histogram, whose bin edges need a min/max pass first (that
-pass also yields its insights), and the string histogram, whose
-datetime dispatch needs a parse probe first.
+pass also yields its insights).
 """
 
 from __future__ import annotations
@@ -179,20 +178,39 @@ def histogram_data(df: DataFrame, col: str, bins: int = 12) -> tuple[list[Row], 
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
         return _counts(A.histogram_month_of_year(df, col), "month_no", "peak_month")
     if isinstance(dtype, T.StringType):
-        # ALL-or-nothing datetime parse like the pandas reference
-        # (to_datetime raises on the first bad value → fallback):
-        # any-one-parses dispatch silently dropped every non-parsing
-        # row from the chart (self-review r12). try_to_timestamp:
-        # NULL on failure instead of ANSI error.
-        parsed = df.withColumn("_ts", F.try_to_timestamp(F.col(col)))
-        probe = parsed.filter(F.col(col).isNotNull()).agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.count("_ts").alias("_ok"),
-        ).first()
-        if probe["_n"] > 0 and probe["_ok"] == probe["_n"]:
-            dd = parsed.filter(F.col("_ts").isNotNull())
-            return _counts(A.histogram_month_of_year(dd, "_ts"), "month_no", "peak_month")
+        return _string_histogram(df, col)
     return _counts(A.value_counts(df, col), col, "mode")
+
+
+def _string_histogram(df: DataFrame, col: str) -> tuple[list[Row], dict]:
+    """A string column is a datetime column only if EVERY non-NULL
+    value parses, like the pandas reference (to_datetime raises on the
+    first bad value → categorical fallback), so one parsing value
+    never moves the chart to months and drops every other row. The
+    verdict, the month-of-year rows and the categorical rows all come
+    from one aggregate over the grouped value counts; only the rows of
+    the branch taken reach the driver."""
+    counts = A.value_counts(df, col)
+    month = F.month(F.try_to_timestamp(F.col(col)))  # NULL, not an ANSI error
+    n_set = F.sum(F.when(F.col(col).isNotNull(), F.col("cnt")))
+    is_dates = (n_set > 0) & (F.sum(F.when(month.isNotNull(), F.col("cnt"))) == n_set)
+    months = F.array(*[
+        F.struct(F.lit(m).alias("month_no"), F.sum(F.when(month == m, F.col("cnt")).otherwise(0)).alias("cnt"))
+        for m in range(1, 13)
+    ])
+    agg = _rows_and(
+        counts, counts.columns, _peak(col, "cnt").alias("mode"), F.sum("cnt").alias("n"),
+        is_dates.alias("_dates"), months.alias("_months"), keyed=True,
+    )
+    out = agg.select(
+        F.when(F.col("_dates"), F.lit(None)).otherwise(F.col("_rows")).alias("_rows"),
+        "mode", "n", "_dates", F.when(F.col("_dates"), F.col("_months")).alias("_months"),
+    ).first()
+    if out["_dates"]:
+        rows = out["_months"]
+        peak = max(rows, key=lambda r: (r["cnt"], r["month_no"]))["month_no"]
+        return rows, {"peak_month": peak, "n": sum(r["cnt"] for r in rows)}
+    return out["_rows"], {"mode": out["mode"], "n": out["n"]}
 
 
 def render_png(rows: list[Row], kind: str, path: str, x: str, y: str | None = None, title: str = "") -> str:

@@ -61,16 +61,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pengadaan_agent_spark.operators.textan import (
-    dup_gram_hash,
-    tokens,
-    word_ngrams,
-)
+from data_pengadaan_agent_spark.operators.textan import dup_gram_hash, word_ngrams
 from data_pengadaan_agent_spark.sources.catalog import (
+    compact,
+    flagged_rows,
     local_df,
+    logged,
+    new_rows,
     read_meta,
     spread,
-    swap_dirs,
     write_meta,
 )
 
@@ -223,29 +222,25 @@ def build_gram_counts(
     _write_meta(spark, meta_p, length, n_buckets, arith_hash)
 
 
+@logged
 def append_gram_counts(
     shard: DataFrame,
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Per-shard ingest: registry commits FIRST (replay-safe — a
-    mid-append crash can never double gram counts, which would
+    """Per-shard ingest: registry commits FIRST (README "Index
+    lifecycle" — a replay can never double gram counts, which would
     fabricate duplicates corpus-wide), then the shard's count rows
     tagged with this append's batch id, then the batch's commit
-    marker. A crash between the registry write and the marker leaves
-    the batch's grams missing or partial — that state under-COUNTS
-    only, is flagged by ``audit_gram_counts`` (registered-or-present
-    batches with no marker), and is healed exactly by
-    ``repair_gram_counts``. Existing count files are never read or
-    rewritten. Returns docs appended."""
+    marker. A crash before the marker under-COUNTS only; it is flagged
+    by ``audit_gram_counts`` and healed by ``repair_gram_counts``.
+    Existing count files are never read or rewritten. Returns docs
+    appended."""
     spark = shard.sparkSession
     length, n_buckets, arith_hash = _read_meta(spark, path)
     counts_p, docs_p, _, commits_p = _paths(path)
-    fresh = shard.dropDuplicates([id_col])
-    seen = spark.read.parquet(docs_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti").localCheckpoint(eager=True)
-    n_new = fresh.count()
+    fresh, n_new = new_rows(shard, docs_p, id_col)
     if n_new == 0:
         return 0
     batch = _next_batch(spark, docs_p, commits_p, index_path=path)
@@ -299,6 +294,7 @@ def audit_gram_counts(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+@logged
 def repair_gram_counts(
     spark: SparkSession,
     path: str,
@@ -329,15 +325,7 @@ def repair_gram_counts(
         .select(id_col)
         .distinct()
     )
-    missing = flagged_ids.join(
-        docs.select(id_col).distinct(), id_col, "left_anti"
-    ).count()
-    if missing:
-        raise ValueError(
-            f"repair_gram_counts: {missing} flagged doc(s) not in the "
-            "provided source frame — repair must re-read the original "
-            "text of every doc in the dead batches"
-        )
+    todo, _ = flagged_rows(docs, flagged_ids, id_col, "repair_gram_counts")
     repair_batch = max(
         [_next_batch(spark, docs_p, commits_p, index_path=path)]
         + [b + 1 for b in dead]
@@ -371,7 +359,7 @@ def repair_gram_counts(
         .localCheckpoint(eager=True)
     )
     redo = _shard_counts(
-        docs.dropDuplicates([id_col]).join(flagged_ids, id_col, "left_semi"),
+        todo,
         length,
         n_buckets,
         arith_hash,
@@ -386,25 +374,16 @@ def repair_gram_counts(
     return len(dead)
 
 
-def compact_gram_counts(
-    spark: SparkSession,
-    path: str,
-    target_files_per_bucket: int = 1,
-) -> tuple[int, int]:
-    """Maintenance for the daily-append loop — with a twist postings
-    compaction doesn't have: count rows MERGE. Every append lays one
-    row per (shard, hash); compaction SUMS them to one row per hash,
-    shrinking both the file count (the listing-cost problem) and the
-    row count the incremental query's aggregate must re-reduce every
-    day. Readers are oblivious: they always SUM per hash, so a
-    half-compacted reading order cannot exist — the swap is atomic at
-    the meta level (same staged-copy + meta-out/rename/meta-in
-    discipline as compact_postings_index; a crash mid-swap leaves a
-    loudly-invalid index). Compaction collapses per-append batch
-    lineage into the COMPACTED_BATCH sentinel, so it refuses to run
-    while the audit shows any uncommitted batch (baking a dead batch's
-    partial counts into the merged rows would make it unrepairable).
-    Returns (files_removed, rows_merged)."""
+def compact_gram_counts(spark: SparkSession, path: str) -> tuple[int, int]:
+    """Compaction that also MERGES rows: every append lays one row per
+    (shard, hash); this SUMS them to one row per hash in one file per
+    bucket, shrinking both
+    the file count and the row count the incremental query re-reduces.
+    Readers always SUM per hash, so the answers are unchanged. The
+    merged rows carry the COMPACTED_BATCH sentinel, so it refuses to
+    run while the audit shows any uncommitted batch (baking a dead
+    batch's partial counts in would make it unrepairable). Returns
+    (files_removed, rows_merged)."""
     length, n_buckets, arith_hash = _read_meta(spark, path)
     counts_p, _, meta_p, _ = _paths(path)
     dirty = audit_gram_counts(spark, path).count()
@@ -414,45 +393,19 @@ def compact_gram_counts(
             "index — run repair_gram_counts first (compaction would bake "
             "their partial counts in irrecoverably)"
         )
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(counts_p).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    before_files = _n_files(counts_p)
     old_counts = spark.read.parquet(counts_p)
     before_rows = old_counts.count()
-    tmp = f"{counts_p}_compact_tmp"
-    old = f"{counts_p}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    sub = F.pmod(F.xxhash64("h"), F.lit(int(target_files_per_bucket)))
-    (
+    merged = (
         old_counts.groupBy("bucket", "h")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         .withColumn("batch", F.lit(COMPACTED_BATCH).cast("bigint"))
-        .repartition(
-            int(n_buckets) * int(target_files_per_bucket), F.col("bucket"), sub
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
     )
-    after_rows = spark.read.parquet(tmp).count()
-    fs.delete(jvm_path(meta_p), True)  # index invalid until recommit
-    # rename returns false on failure (self-review r12): swap_dirs
-    # aborts with the original restored (restore itself checked)
-    # rather than deleting the live copy; meta stays absent on abort
-    # (index loudly invalid)
-    swap_dirs(fs, jvm_path, tmp, counts_p, old, "compact_gram_counts")
-    _write_meta(spark, meta_p, length, n_buckets, arith_hash)
-    return before_files - _n_files(counts_p), before_rows - after_rows
+    removed = compact(
+        spark, counts_p, "compact_gram_counts", merged, part_col="bucket",
+        key="h", marker=meta_p,
+        recommit=lambda: _write_meta(spark, meta_p, length, n_buckets, arith_hash),
+    )
+    return removed, before_rows - spark.read.parquet(counts_p).count()
 
 
 def dup_spans_incremental(

@@ -39,7 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from data_pengadaan_agent_spark.operators.sampling import split_hash_col
-from data_pengadaan_agent_spark.sources.catalog import read_meta, write_meta
+from data_pengadaan_agent_spark.sources.catalog import (
+    compact,
+    logged,
+    read_meta,
+    write_meta,
+)
 
 _HASH_SPACE = 1 << 32
 
@@ -108,6 +113,7 @@ def build_kmv_cube(
     _write_meta(spark, meta_p, dims, key_col, k)
 
 
+@logged
 def append_kmv_cube(shard: DataFrame, path: str) -> int:
     """Incremental ingest: the shard's own k-cut sample rows are
     APPENDED — no registry, no marker: the sketch is a set and
@@ -172,27 +178,17 @@ def kmv_distinct(
 
 def compact_kmv_cube(spark: SparkSession, path: str) -> int:
     """Collapse samples/ to the canonical ≤ k rows per finest group
-    with the meta-out/rename-swap/meta-in validity discipline.
-    Purely physical: the distinct-then-cut read law is unchanged.
-    Returns live sample rows after compaction."""
+    through ``compact``, with the meta as the validity marker. Purely
+    physical: the distinct-then-cut read law is unchanged. Returns
+    live sample rows after compaction."""
     dims, key_col, k = _read_meta(spark, path)
     samples_p, meta_p = _paths(path)
-    staged = f"{samples_p}__staged"
-    kmv_state(spark, path, dims).drop("_r").write.mode("overwrite").parquet(staged)
-    n = spark.read.parquet(staged).count()
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jvm_path(meta_p), True)  # meta OUT: cube invalid during swap
-    fs.delete(jvm_path(samples_p), True)
-    if not fs.rename(jvm_path(staged), jvm_path(samples_p)):
-        # Hadoop rename reports failure by returning false — never
-        # rewrite a valid meta over a missing samples/ (self-review r12)
-        raise OSError(
-            f"compact_kmv_cube: rename {staged} -> {samples_p} failed; "
-            "meta left absent (cube invalid), staged data preserved"
-        )
-    _write_meta(spark, meta_p, dims, key_col, k)
-    return n
+    compact(
+        spark, samples_p, "compact_kmv_cube",
+        kmv_state(spark, path, dims).drop("_r"), marker=meta_p,
+        recommit=lambda: _write_meta(spark, meta_p, dims, key_col, k),
+    )
+    return spark.read.parquet(samples_p).count()
 
 
 def kmv_overlap(

@@ -16,12 +16,9 @@ pruned probe), with the same crash-safety discipline:
   holding the bucket law. Meta is written LAST — a crash mid-build
   leaves an index without meta, which every reader rejects, never a
   half-written index that silently serves wrong scores.
-- ``append_postings_index``: per-shard incremental ingest — validates
-  the bucket law from meta, drops in-shard duplicate ids, anti-joins
-  the shard against the EXISTING doclen ids (reading one pruned
-  column), and appends postings + doclen partitions. Existing
-  postings are never rescanned or rewritten: base-independent by
-  construction, like ``append_ivf_table``.
+- ``append_postings_index``: per-shard incremental ingest under the
+  README "Index lifecycle" contract, with doclen as the registry.
+  Existing postings are never rescanned or rewritten.
 - ``bm25_from_index``: query-batch BM25 over the index. Query terms
   hash to buckets driver-side via one parameter-bounded collect (the
   query batch is broadcast-sized by the same contract as
@@ -43,9 +40,12 @@ from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.operators.textan import bm25_int_coeffs, tokens
 from data_pengadaan_agent_spark.sources.catalog import (
+    audit_registry,
+    compact,
+    logged,
+    new_rows,
     read_meta,
     spread,
-    swap_dirs,
     write_meta,
 )
 
@@ -99,6 +99,23 @@ def _doclen_stats(spark: SparkSession, doclen_p: str) -> tuple[int, int]:
     return int(r["n"]), int(r["s"])
 
 
+def _rows(docs: DataFrame, text_col: str, id_col: str, n_buckets: int):
+    """(postings, doclen) frames of ``docs``: one (bucket, t, doc_id,
+    tf, dl) row per distinct (doc, term) and one (doc_id, dl) row per
+    doc."""
+    toks = tokens(text_col)
+    base = spread(docs, id_col).select(
+        F.col(id_col), F.size(toks).cast("bigint").alias("dl"), toks.alias("_tk")
+    )
+    postings = (
+        base.select(F.col(id_col), "dl", F.explode("_tk").alias("t"))
+        .groupBy(id_col, "t")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"), F.min("dl").alias("dl"))
+        .withColumn("bucket", _bucket(F.col("t"), n_buckets))
+    )
+    return postings, docs.select(F.col(id_col), F.size(toks).cast("bigint").alias("dl"))
+
+
 def build_postings_index(
     docs: DataFrame,
     path: str,
@@ -125,115 +142,53 @@ def build_postings_index(
     if fs.exists(meta_fs_path):
         fs.delete(meta_fs_path, True)
 
-    toks = tokens(text_col)
-    base = spread(docs, id_col).select(
-        F.col(id_col), F.size(toks).cast("bigint").alias("dl"), toks.alias("_tk")
-    )
-    postings = (
-        base.select(F.col(id_col), "dl", F.explode("_tk").alias("t"))
-        .groupBy(id_col, "t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"), F.min("dl").alias("dl"))
-        .withColumn("bucket", _bucket(F.col("t"), n_buckets))
-    )
+    postings, doclen = _rows(docs, text_col, id_col, n_buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(posts_p)
-    docs.select(
-        F.col(id_col), F.size(toks).cast("bigint").alias("dl")
-    ).write.mode("overwrite").parquet(doclen_p)
+    doclen.write.mode("overwrite").parquet(doclen_p)
     n_docs, sum_dl = _doclen_stats(spark, doclen_p)
     _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
 
 
+@logged
 def append_postings_index(
     shard: DataFrame,
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Incremental ingest of one shard: validate against meta, drop
-    in-shard duplicate ids, anti-join against the EXISTING doclen ids
-    (one pruned-column scan of the compact doclen table — never the
-    postings), and append. Returns the number of documents actually
-    appended. Existing partitions are untouched: the append's cost is
-    a function of the SHARD, not the base — the append_ivf_table
-    base-independence contract."""
+    """Incremental ingest of one shard: doclen (the registry) first,
+    postings second, the meta stats last (README "Index lifecycle").
+    The opposite order would corrupt corpus-wide: a replay would
+    re-append postings rows, doubling tf AND df for every term the
+    shard touches. Existing partitions are never rescanned. Returns
+    documents appended."""
     spark = shard.sparkSession
     n_buckets, meta_docs, meta_dl = read_meta_stats(spark, path)
     posts_p, doclen_p, meta_p = _paths(path)
-
-    fresh = shard.dropDuplicates([id_col])
-    seen = spark.read.parquet(doclen_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti")
-    # one small deterministic barrier so postings and doclen see the
-    # SAME anti-join verdict even if the source is re-evaluated
-    fresh = fresh.localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        # a replay after a crash between the doclen write and the meta
-        # rewrite adds no rows, so it is the one chance to heal the
-        # stale-low stats: recommit them when the committed doclen
-        # disagrees with the meta
-        stats = _doclen_stats(spark, doclen_p)
-        if stats != (meta_docs, meta_dl):
-            _write_meta(spark, meta_p, n_buckets, *stats)
-        return 0
-
-    toks = tokens(text_col)
-    base = spread(fresh, id_col).select(
-        F.col(id_col), F.size(toks).cast("bigint").alias("dl"), toks.alias("_tk")
-    )
-    postings = (
-        base.select(F.col(id_col), "dl", F.explode("_tk").alias("t"))
-        .groupBy(id_col, "t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"), F.min("dl").alias("dl"))
-        .withColumn("bucket", _bucket(F.col("t"), n_buckets))
-    )
-    # WRITE ORDER IS THE CRASH CONTRACT: doclen first, postings second.
-    # doclen is the append's commit marker (the anti-join above keys on
-    # it), so a replay after ANY mid-append crash is a no-op. The
-    # surviving failure mode is a shard whose doclen committed but
-    # whose postings write died: those docs under-rank (their postings
-    # are missing) but every OTHER score stays correct. The opposite
-    # order corrupts corpus-wide: a replay re-appends postings rows,
-    # doubling tf AND df for every term the shard touches.
-    # audit_postings_index() detects the lost-shard state for repair.
-    fresh.select(
-        F.col(id_col), F.size(toks).cast("bigint").alias("dl")
-    ).write.mode("append").parquet(doclen_p)
-    postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
-    # meta stats recommit LAST (recounted from the committed doclen —
-    # recount, not increment, so a replayed or crashed append can never
-    # double-count; a crash before this rewrite leaves stats stale-low,
-    # which the replay of this append recommits above)
-    n_docs, sum_dl = _doclen_stats(spark, doclen_p)
-    _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
+    fresh, n_new = new_rows(shard, doclen_p, id_col)
+    if n_new:
+        postings, doclen = _rows(fresh, text_col, id_col, n_buckets)
+        doclen.write.mode("append").parquet(doclen_p)
+        postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
+    # meta stats recommit LAST, recounted from the committed doclen
+    # (recount, not increment): a replay adds no rows, so it is the
+    # chance to heal stats a crash before this rewrite left stale-low
+    stats = _doclen_stats(spark, doclen_p)
+    if n_new or stats != (meta_docs, meta_dl):
+        _write_meta(spark, meta_p, n_buckets, *stats)
     return n_new
 
 
 def audit_postings_index(
     spark: SparkSession, path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Integrity audit for the crash contract above: documents present
-    in doclen (committed) but missing from postings (an append whose
-    second write died) and the converse orphans (a legacy
-    postings-first index interrupted mid-append). One pruned-column
-    scan of each table; returns (doc_id, state) with state in
-    ('missing_postings', 'orphan_postings'). Empty result = index
-    consistent. Repair for 'missing_postings' is re-tokenizing exactly
-    those documents and appending their postings rows directly — their
-    doclen rows are already correct."""
+    """Documents in doclen without postings (``missing_postings``: an
+    append whose second write died) and postings without a doclen row
+    (``orphan_postings``). Docs with empty text still emit the '' token,
+    so absence from postings is never legitimate. Empty = consistent."""
     _read_meta(spark, path)
     posts_p, doclen_p, _ = _paths(path)
-    dl_ids = spark.read.parquet(doclen_p).select(id_col).distinct()
-    # docs whose text is empty still emit >=1 posting (the '' token of
-    # the [''] tokenize), so absence from postings is never legitimate
-    post_ids = spark.read.parquet(posts_p).select(id_col).distinct()
-    missing = dl_ids.join(post_ids, id_col, "left_anti").select(
-        id_col, F.lit("missing_postings").alias("state")
-    )
-    orphan = post_ids.join(dl_ids, id_col, "left_anti").select(
-        id_col, F.lit("orphan_postings").alias("state")
-    )
-    return missing.unionByName(orphan)
+    return audit_registry(spark, doclen_p, posts_p, id_col, "postings")
 
 
 def compact_postings_index(
@@ -241,60 +196,19 @@ def compact_postings_index(
     path: str,
     target_files_per_bucket: int = 1,
 ) -> int:
-    """Maintenance for the daily-append loop: every append lays new
-    files into each touched bucket directory, so a year of shards
-    turns one pruned-bucket read into thousands of tiny file opens
-    (the classic small-file problem — at 100 TB the NameNode/listing
-    cost alone dominates). Compaction rewrites the postings with
-    ``target_files_per_bucket`` files per bucket and returns the
-    number of data files removed.
-
-    Crash discipline (same meta-commit-marker contract as build):
-    the compacted copy is written BESIDE the live table, then meta is
-    deleted (index goes invalid), the old postings directory is
-    swapped out for the compacted one with two FS renames, and meta
-    is rewritten LAST. A crash anywhere in the swap window leaves an
-    index readers loudly reject — never one silently serving doubled
-    or missing postings. doclen and the index CONTENT are untouched:
-    a compacted index answers bit-identically (pinned by test)."""
+    """Rewrite each posting bucket to ``target_files_per_bucket`` files
+    with the meta as the validity marker: every append lays new files
+    into each touched bucket, so a year of shards turns one
+    pruned-bucket read into thousands of tiny file opens. doclen and
+    the index content are untouched — a compacted index answers
+    bit-identically. Returns data files removed."""
     n_buckets, n_docs, sum_dl = read_meta_stats(spark, path)
     posts_p, _, meta_p = _paths(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(posts_p).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            f = it.next()
-            if f.getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-    before = _n_files(posts_p)
-    tmp = f"{posts_p}_compact_tmp"
-    old = f"{posts_p}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    # repartition on (bucket, subsplit): hashing on bucket alone sends
-    # every row of a bucket to ONE partition (one file per bucket no
-    # matter the target); the term-hash subsplit spreads each bucket
-    # over <= target partitions, so a huge bucket compacts to ~target
-    # files instead of one unsplittable giant
-    sub = F.pmod(F.xxhash64("t"), F.lit(int(target_files_per_bucket)))
-    (
-        spark.read.parquet(posts_p)
-        .repartition(
-            int(n_buckets) * int(target_files_per_bucket), F.col("bucket"), sub
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
+    return compact(
+        spark, posts_p, "compact_postings_index", part_col="bucket", key="t",
+        target_files=target_files_per_bucket, marker=meta_p,
+        recommit=lambda: _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl),
     )
-    fs.delete(jvm_path(meta_p), True)  # index invalid from here until recommit
-
-    swap_dirs(fs, jvm_path, tmp, posts_p, old, "compact_postings_index")
-    _write_meta(spark, meta_p, n_buckets, n_docs, sum_dl)
-    return before - _n_files(posts_p)
 
 
 def bm25_from_index(

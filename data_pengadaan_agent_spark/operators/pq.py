@@ -54,6 +54,16 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import (
+    audit_registry,
+    compact,
+    flagged_rows,
+    local_df,
+    logged,
+    new_rows,
+    spread,
+)
+
 
 def _check_geometry(dim: int, m: int) -> int:
     if m < 1 or dim < 1 or dim % m:
@@ -102,8 +112,6 @@ def train_pq(
         [[v[s * dsub : (s + 1) * dsub] for _, v in by_id] for s in range(m)],
         dtype=np.float64,
     )
-
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     src = spread(df.select(id_col, vec_col), id_col)
 
@@ -196,8 +204,6 @@ def pq_encode(
                 out[c] = pdf[c]
             out["codes"] = list(map(list, codes))
             yield pd.DataFrame(out)
-
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     src = spread(df.select(id_col, *extra, vec_col), id_col)
     extra_schema = "".join(
@@ -339,8 +345,6 @@ def ivfpq_residuals(
                     "resid": list(map(list, resid)),
                 }
             )
-
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     return spread(df.select(id_col, vec_col), id_col).mapInPandas(
         run, schema=f"{id_col} long, list int, resid array<double>"
@@ -515,8 +519,6 @@ def save_ivfpq_codebooks(
     frames). Written LAST by the build — the commit marker: a reader
     finding codes but no codebooks sees a loudly-invalid index, never
     a silently re-trainable one."""
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     _, coarse_p, pqcb_p = _ivfpq_sidecars(path)
     local_df(
         spark,
@@ -570,158 +572,85 @@ def append_ivfpq_table(
     id_col: str = "vec_id",
 ) -> int:
     """Incremental IVF-PQ maintenance: assign + encode a NEW batch
-    with the FROZEN geometry (read from the sidecars — the
-    append_ivf_table contract: daily shards must never retrain or
-    rescan the base; drift is the monitor's job — the coarse sidecar
-    plugs straight into similarity.ivf_drift_report) and append to
-    the list partitions. Write order is the crash contract: the ids
-    sidecar FIRST (the anti-join keys on it, so replay after any
-    crash is a no-op and codes can never double), codes second; the
-    surviving failure mode is ids-without-codes — those vectors are
-    invisible to probes (under-recall only), flagged by
-    ``audit_ivfpq_table``. Returns vectors appended."""
-    spark = df.sparkSession
-    coarse, cb = load_ivfpq_codebooks(spark, path)
-    ids_p, _, _ = _ivfpq_sidecars(path)
-    fresh = df.dropDuplicates([id_col])
-    seen = spark.read.parquet(ids_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti").localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return 0
-    fresh.select(id_col).hint("rebalance").write.mode("append").parquet(ids_p)
-    resid = ivfpq_residuals(fresh, coarse, vec_col, id_col)
+    with the FROZEN geometry (read from the sidecars — daily shards
+    never retrain or rescan the base; drift is the monitor's job, and
+    the coarse sidecar plugs straight into similarity.ivf_drift_report)
+    and append to the list partitions through
+    ``append_ivfpq_residuals``. Returns vectors appended."""
+    coarse, cb = load_ivfpq_codebooks(df.sparkSession, path)
+    resid = ivfpq_residuals(df, coarse, vec_col, id_col)
+    return append_ivfpq_residuals(resid, cb, path, id_col)
+
+
+def _append_codes(resid: DataFrame, cb, path: str, id_col: str) -> None:
     pq_encode(
         resid, cb, vec_col="resid", id_col=id_col, passthrough=["list"]
     ).hint("rebalance", "list").write.mode("append").partitionBy(
         "list"
     ).parquet(path)
-    return n_new
 
 
+@logged
 def append_ivfpq_residuals(
-    spark,
     resid: DataFrame,
     cb: Sequence[Sequence[Sequence[float]]],
     path: str,
     id_col: str = "vec_id",
 ) -> int:
-    """Append a PRE-COMPUTED residual frame (id, list, resid — already
-    deduped and materialized by the caller) to the index under the
-    caller-supplied frozen PQ codebooks. The crash contract is
-    append_ivfpq_table's, unchanged: the not-yet-seen subset is
-    materialized BEFORE any write (the anti-join keys on the ids
-    sidecar, which the first write itself mutates), ids land first,
-    codes second; replay is a no-op and the surviving failure mode is
-    probe-invisible ids-without-codes, flagged by audit_ivfpq_table.
+    """Append a residual frame (id, list, resid) to the index under the
+    caller's frozen PQ codebooks: the not-yet-registered rows are
+    materialized before any write, ids land first, codes second
+    (README "Index lifecycle"); replay is a no-op and the one crash
+    state, ids without codes, is flagged by ``audit_ivfpq_table``.
 
-    Exists so the streaming sink can share ONE coarse-assign pass
-    between the index append and its ack log (r14): the r13 sink paid
-    per epoch two dropDuplicates exchanges, two codebook sidecar loads
-    (4 collect jobs) and two full Arrow residual passes over the same
-    batch — one inside append_ivfpq_table, one rebuilt for the ack."""
+    The streaming sink calls it directly to share one coarse-assign
+    pass between the index append and its ack log."""
     ids_p, _, _ = _ivfpq_sidecars(path)
-    seen = spark.read.parquet(ids_p).select(id_col)
-    fresh = resid.join(seen, id_col, "left_anti").localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return 0
-    fresh.select(id_col).hint("rebalance").write.mode("append").parquet(ids_p)
-    pq_encode(
-        fresh, cb, vec_col="resid", id_col=id_col, passthrough=["list"]
-    ).hint("rebalance", "list").write.mode("append").partitionBy(
-        "list"
-    ).parquet(path)
+    fresh, n_new = new_rows(resid, ids_p, id_col)
+    if n_new:
+        fresh.select(id_col).hint("rebalance").write.mode("append").parquet(ids_p)
+        _append_codes(fresh, cb, path, id_col)
     return n_new
 
 
 def audit_ivfpq_table(spark, path: str, id_col: str = "vec_id") -> DataFrame:
-    """Integrity audit for the append crash contract: ids present in
-    the sidecar (committed) but missing from the codes table (an
-    append whose second write died — probe-invisible vectors) and the
-    converse orphans. Returns (id, state); empty = consistent.
-    'missing_codes' flags are healed by ``repair_ivfpq_table`` (re-
-    encodes exactly those vectors with the frozen geometry and
-    appends — their ids rows are already correct)."""
+    """Registry ids without codes (``missing_codes``: probe-invisible
+    vectors, healed by ``repair_ivfpq_table``) and orphan codes
+    (``orphan_codes``: the ids sidecar was damaged; rebuild). Empty =
+    consistent."""
     load_ivfpq_codebooks(spark, path)  # validates the build committed
-    ids_p, _, _ = _ivfpq_sidecars(path)
-    reg = spark.read.parquet(ids_p).select(id_col).distinct()
-    coded = spark.read.parquet(path).select(id_col).distinct()
-    missing = reg.join(coded, id_col, "left_anti").select(
-        id_col, F.lit("missing_codes").alias("state")
-    )
-    orphan = coded.join(reg, id_col, "left_anti").select(
-        id_col, F.lit("orphan_codes").alias("state")
-    )
-    return missing.unionByName(orphan)
+    return audit_registry(spark, _ivfpq_sidecars(path)[0], path, id_col, "codes")
 
 
+@logged
 def repair_ivfpq_table(
     df: DataFrame,
     path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> int:
-    """Heal every ``missing_codes`` id ``audit_ivfpq_table`` flags —
-    the surviving failure mode of the append crash contract (ids
-    committed, the codes write died): re-encode EXACTLY the flagged
-    vectors with the FROZEN sidecar geometry and append their code
-    rows, append-only (the ``repair_gram_counts`` discipline; the ids
-    rows are already correct, so nothing else is touched). ``df`` must
-    cover every flagged id — raises otherwise: silently skipping one
-    would leave it probe-invisible forever. A crash inside the repair
-    re-creates the state it was healing (some ids still without
-    codes), so a re-run converges; a replay after success is a no-op
-    (the flagged set is empty). ``orphan_codes`` flags are NOT
-    repairable from here — codes without registry ids mean the ids
-    sidecar itself was damaged; rebuild. Returns vectors re-encoded."""
+    """Heal every ``missing_codes`` id: re-encode exactly the flagged
+    vectors of ``df`` with the FROZEN sidecar geometry and append their
+    codes (their ids rows are already correct). Returns vectors
+    re-encoded."""
     spark = df.sparkSession
     coarse, cb = load_ivfpq_codebooks(spark, path)
-    flagged = (
-        audit_ivfpq_table(spark, path, id_col)
-        .filter(F.col("state") == "missing_codes")
-        .select(id_col)
+    flagged = audit_ivfpq_table(spark, path, id_col).filter(
+        F.col("state") == "missing_codes"
     )
-    todo = (
-        df.dropDuplicates([id_col])
-        .join(flagged, id_col, "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    n_todo = todo.count()
-    n_flagged = flagged.count()
-    if n_todo < n_flagged:
-        raise ValueError(
-            f"repair_ivfpq_table: {n_flagged - n_todo} flagged id(s) not "
-            "in the provided source frame — repair must re-read the "
-            "original vector of every probe-invisible id"
-        )
-    if n_todo == 0:
-        return 0
-    resid = ivfpq_residuals(todo, coarse, vec_col, id_col)
-    pq_encode(
-        resid, cb, vec_col="resid", id_col=id_col, passthrough=["list"]
-    ).hint("rebalance", "list").write.mode("append").partitionBy(
-        "list"
-    ).parquet(path)
+    todo, n_todo = flagged_rows(df, flagged.select(id_col), id_col, "repair_ivfpq_table")
+    if n_todo:
+        _append_codes(ivfpq_residuals(todo, coarse, vec_col, id_col), cb, path, id_col)
     return n_todo
 
 
-def compact_ivfpq_table(
-    spark,
-    path: str,
-    target_files_per_list: int = 1,
-    id_col: str = "vec_id",
-) -> int:
-    """Maintenance for the daily-append loop: every append lays new
-    files into each touched list partition, so a year of shards turns
-    one pruned-list probe into thousands of tiny file opens. Rewrites
-    each list to ``target_files_per_list`` files. Refuses a dirty
-    audit (compaction would bake probe-invisible ids in as
-    permanently-lost). Crash discipline mirrors compact_postings_index
-    with the CODEBOOK sidecar as the validity marker: it is deleted
-    before the swap and re-committed after, so a crash mid-swap leaves
-    a loudly-invalid index (load_ivfpq_codebooks raises), never a
-    silently half-compacted one. Returns files removed."""
+def compact_ivfpq_table(spark, path: str, id_col: str = "vec_id") -> int:
+    """Rewrite each inverted list to one file:
+    every append lays new files into each touched list, so a year of
+    shards turns one pruned-list probe into thousands of tiny file
+    opens. The PQ codebook is the validity marker; the ids registry
+    rides along. Refuses a dirty audit (it would bake probe-invisible
+    ids in as lost). Returns files removed."""
     coarse, cb = load_ivfpq_codebooks(spark, path)
     dirty = audit_ivfpq_table(spark, path, id_col).count()
     if dirty:
@@ -730,47 +659,11 @@ def compact_ivfpq_table(
             "index — run repair_ivfpq_table (re-encodes the flagged "
             "vectors with the frozen geometry) before compacting"
         )
-    ids_p, coarse_p, pqcb_p = _ivfpq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            f = it.next().getPath()
-            # codes only: the sidecars are _-prefixed subdirectories
-            if f.getName().endswith(".parquet") and not f.getParent().getName().startswith("_"):
-                n += 1
-        return n
-
-    before = _n_files(path)
-    tmp, old = f"{path}_compact_tmp", f"{path}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    sub = F.pmod(F.xxhash64(id_col), F.lit(int(target_files_per_list)))
-    n_lists = len(coarse)
-    (
-        spark.read.parquet(path)
-        .repartition(n_lists * int(target_files_per_list), F.col("list"), sub)
-        .write.mode("overwrite")
-        .partitionBy("list")
-        .parquet(tmp)
+    return compact(
+        spark, path, "compact_ivfpq_table", part_col="list", key=id_col,
+        marker=_ivfpq_sidecars(path)[2],
+        recommit=lambda: save_ivfpq_codebooks(spark, path, coarse, cb),
     )
-    # index invalid from here until the codebook recommit; swap_dirs
-    # checks every rename return — an unchecked failed second rename
-    # followed by the old-copy delete would destroy the only copy of
-    # the codes while the recommit marked the index valid
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
-    fs.delete(jvm_path(pqcb_p), True)
-    # the ids registry rides along into the rewritten directory
-    tmp_ids = _ivfpq_sidecars(tmp)[0]
-    if not fs.rename(jvm_path(ids_p), jvm_path(tmp_ids)):
-        raise OSError(f"compact_ivfpq_table: could not move {ids_p!r} to {tmp_ids!r}")
-    swap_dirs(fs, jvm_path, tmp, path, old, "compact_ivfpq_table")
-    save_ivfpq_codebooks(spark, path, coarse, cb)
-    return before - _n_files(path)
 
 
 def pq_adc_batch(
@@ -1025,8 +918,6 @@ def pq_quantization_report(
             yield pd.DataFrame(
                 rows, columns=["sub", "n", "err_sum", "err_max"]
             )
-
-    from data_pengadaan_agent_spark.sources.catalog import spread
 
     partial = spread(df.select(id_col, vec_col), id_col).mapInPandas(
         partials, schema="sub int, n long, err_sum long, err_max long"

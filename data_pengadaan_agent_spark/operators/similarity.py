@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import compact
+
 
 def _dot(a: Column, b: Column) -> Column:
     # Sequential left fold in array order → deterministic float sum.
@@ -429,17 +431,28 @@ def build_lsh_signature_table(
     probe after that is a partition-pruned read of one bucket —
     the scan never touches the other 2^n_planes buckets (Catalyst
     PartitionFilters, verified by a plan-shape test)."""
+    _signed(df, vec_col, dim, id_col, n_planes, seed).write.mode(
+        "overwrite"
+    ).partitionBy("_sig").parquet(path)
+
+
+def _signed(df: DataFrame, vec_col: str, dim: int, id_col: str, n_planes: int, seed: int):
+    """(id, vector, _sig) rows under the (dim, n_planes, seed) family."""
     planes = _hyperplanes(dim, n_planes, seed)
     # 'b' prefix keeps the partition value a STRING: bare bit-strings
     # would be parsed back as integers by partition-column type
     # inference, silently dropping leading zeros from directory names.
-    (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_sig", F.concat(F.lit("b"), signature_col(F.col(vec_col), planes)))
-        .write.mode("overwrite")
-        .partitionBy("_sig")
-        .parquet(path)
+    return df.select(F.col(id_col), F.col(vec_col)).withColumn(
+        "_sig", F.concat(F.lit("b"), signature_col(F.col(vec_col), planes))
     )
+
+
+def _require_table(spark, path: str, what: str) -> None:
+    """Appending to an absent table would silently create a partial
+    index — how a probe ends up answering from 1% of the corpus."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        raise ValueError(f"{what} at {path!r} — build one first")
 
 
 def append_lsh_signature_table(
@@ -457,120 +470,36 @@ def append_lsh_signature_table(
     reproducible, there is nothing trained to drift — and append into
     the signature partitions. append ∪ base ≡ rebuild, bit-for-bit;
     probes see the shard on their next partition listing. Raises on a
-    missing table rather than silently creating a partial index."""
-    spark = df.sparkSession
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise ValueError(
-            f"append_lsh_signature_table: no signature table at {path!r}"
-            " — build one first with build_lsh_signature_table"
-        )
-    planes = _hyperplanes(dim, n_planes, seed)
-    (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn(
-            "_sig", F.concat(F.lit("b"), signature_col(F.col(vec_col), planes))
-        )
-        .write.mode("append")
-        .partitionBy("_sig")
-        .parquet(path)
-    )
+    missing table."""
+    _require_table(df.sparkSession, path, "append_lsh_signature_table: no signature table")
+    _signed(df, vec_col, dim, id_col, n_planes, seed).write.mode(
+        "append"
+    ).partitionBy("_sig").parquet(path)
 
 
-def _compact_partitioned_table(
-    spark,
-    path: str,
-    part_col: str,
-    target_files_per_partition: int,
-    subsplit_col: str,
-) -> int:
-    """Shared small-file compaction for the vector index tables
-    (completes the maintenance story compact_postings_index /
-    compact_gram_counts / compact_ivfpq_table give the other three
-    indexes): rewrite each partition of a partitioned parquet table to
-    ``target_files_per_partition`` files, bit-identical rows. The
-    subsplit column (content hash — the dupindex lesson: repartitioning
-    on the partition column alone sends each partition to ONE task and
-    one file regardless of target) spreads a huge partition over
-    ~target files. Crash discipline: staged write to a tmp dir, then
-    rename-out/rename-in — a crash mid-swap leaves the table path
-    ABSENT (every reader raises loudly) or a stale *_compact_old dir
-    (cleaned by the next run), never a silently half-compacted mix.
-    Returns files removed."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path(path)):
-        raise ValueError(f"compact: no table at {path!r}")
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    before = _n_files(path)
-    tmp, old = f"{path}_compact_tmp", f"{path}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    rows = spark.read.parquet(path)
-    n_parts = rows.select(part_col).distinct().count()  # parameter-sized
-    sub = F.pmod(
-        F.xxhash64(subsplit_col), F.lit(int(target_files_per_partition))
-    )
-    (
-        rows.repartition(
-            max(int(n_parts), 1) * int(target_files_per_partition),
-            F.col(part_col),
-            sub,
-        )
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(tmp)
-    )
-    # Hadoop rename reports failure by RETURNING false (self-review
-    # r12): an unchecked failed second rename followed by the old-copy
-    # delete would destroy the only surviving table; swap_dirs aborts
-    # with the original restored (restore itself checked) instead.
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
-    swap_dirs(fs, jvm_path, tmp, path, old, "compact_partitioned_table")
-    return before - _n_files(path)
-
-
-def compact_lsh_signature_table(
-    spark, path: str, target_files_per_bucket: int = 1, id_col: str = "vec_id"
-) -> int:
-    """Maintenance for the LSH daily-append loop: every
-    ``append_lsh_signature_table`` lays new files into each touched
-    signature partition, so a year of shards turns one pruned-bucket
-    probe into thousands of tiny file opens. Rewrites each bucket to
-    ``target_files_per_bucket`` files; probe answers are pinned
-    bit-identical (the geometry lives in (dim, n_planes, seed) — no
-    sidecar to re-commit, so the swap alone is the whole operation and
-    a crash mid-swap leaves a loudly-absent table, never a wrong
-    one)."""
-    return _compact_partitioned_table(
-        spark, path, "_sig", target_files_per_bucket, id_col
+def compact_lsh_signature_table(spark, path: str, id_col: str = "vec_id") -> int:
+    """Rewrite each signature bucket to one file through ``compact``: every ``append_lsh_signature_table``
+    lays new files into each touched bucket, so a year of shards turns
+    one pruned-bucket probe into thousands of tiny file opens. Probe
+    answers are bit-identical; the geometry lives in (dim, n_planes,
+    seed), so there is no marker to re-commit and a crash mid-swap
+    leaves a loudly-absent table. Returns files removed."""
+    return compact(
+        spark, path, "compact_lsh_signature_table", part_col="_sig", key=id_col
     )
 
 
 def compact_ivf_table(
     spark, path: str, target_files_per_list: int = 1, id_col: str = "vec_id"
 ) -> int:
-    """Maintenance for the IVF daily-append loop (same motivation as
-    ``compact_ivfpq_table``). The ``{path}_codebook`` sidecar of a
-    TRAINED table is left untouched — compaction rewrites file layout,
-    never geometry — so the probe's auto-detected ranking is unchanged
-    by construction. Crash states: mid-swap leaves the list path
-    absent (probes and appends raise loudly; the trained codebook
-    without lists is the same invalid-index shape build_ivf_table's
-    staged-rename already defends) or a stale *_compact_old dir the
-    next run cleans."""
-    return _compact_partitioned_table(
-        spark, path, "centroid_id", target_files_per_list, id_col
+    """Rewrite each inverted list to ``target_files_per_list`` files
+    through ``compact`` (the ``compact_ivfpq_table`` motivation). The
+    ``{path}_codebook`` of a TRAINED table is untouched — compaction
+    rewrites file layout, never geometry — so the probe's ranking is
+    unchanged by construction. Returns files removed."""
+    return compact(
+        spark, path, "compact_ivf_table", part_col="centroid_id", key=id_col,
+        target_files=target_files_per_list,
     )
 
 
@@ -595,6 +524,16 @@ def lsh_topk_precomputed(
     )
     bucket = spark.read.parquet(path).filter(F.col("_sig") == qsig)
     return cosine_topk(bucket, vec_col, query, k=k, id_col=id_col)
+
+
+def _unit(vec_col: str) -> Column:
+    """``vec_col`` L2-normalized (a zero vector stays zero): the
+    spherical geometry trained IVF lists are assigned under."""
+    nrm = F.sqrt(
+        F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
+    )
+    safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
+    return F.transform(F.col(vec_col), lambda x: x.cast("double") / safe)
 
 
 def build_ivf_table(
@@ -623,16 +562,7 @@ def build_ivf_table(
         # the sf0.1 fixture before this normalization; 0.78 after).
         # Lists still store the ORIGINAL vectors for exact rescoring;
         # only the partitioning geometry is normalized.
-        nrm = F.sqrt(
-            F.aggregate(
-                F.col(vec_col),
-                F.lit(0.0),
-                lambda a, x: a + x.cast("double") * x.cast("double"),
-            )
-        )
-        safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
-        unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / safe)
-        ndf = df.select(F.col(id_col), unit.alias(vec_col))
+        ndf = df.select(F.col(id_col), _unit(vec_col).alias(vec_col))
         assign, cents = kmeans_lloyd(
             ndf,
             vec_col,
@@ -667,11 +597,10 @@ def build_ivf_table(
         # explode/aggregate exchange and no join-back of the vectors
         # (r14; the r13 shape shuffled the corpus twice to attach a
         # 4-byte column it could compute in place, guide §2.4)
-        cents = _hyperplanes(dim, n_centroids, seed)
         listed = df.select(
             F.col(id_col),
             F.col(vec_col),
-            ivf_centroid_col(F.col(vec_col), cents).alias("centroid_id"),
+            ivf_centroid_col(F.col(vec_col), _hyperplanes(dim, n_centroids, seed)).alias("centroid_id"),
         )
     (
         listed.write.mode("overwrite")
@@ -745,17 +674,9 @@ def append_ivf_table(
     (dim, n_centroids, seed) assigns — bit-identical to a full
     rebuild, which the invariant test pins (append ∪ base ≡ rebuild).
 
-    Appending to a path with no existing lists raises: silently
-    creating a partial index at a typo'd path is how a probe ends up
-    answering from 1% of the corpus."""
+    Appending to a path with no existing lists raises."""
     spark = df.sparkSession
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise ValueError(
-            f"append_ivf_table: no IVF table at {path!r} — build one "
-            "first with build_ivf_table"
-        )
+    _require_table(spark, path, "append_ivf_table: no IVF table")
     from pyspark.errors import AnalysisException
 
     try:
@@ -788,17 +709,8 @@ def append_ivf_table(
         # (same metric and lowest-cid tie-break as the probe ranking;
         # the interpreted-HOF per-centroid fold is the known slow
         # path, see kmeans_assign_blas's docstring)
-        nrm = F.sqrt(
-            F.aggregate(
-                F.col(vec_col),
-                F.lit(0.0),
-                lambda a, x: a + x.cast("double") * x.cast("double"),
-            )
-        )
-        safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
-        unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / safe)
         assign = kmeans_assign_blas(
-            df.select(F.col(id_col), unit.alias(vec_col)),
+            df.select(F.col(id_col), _unit(vec_col).alias(vec_col)),
             [(int(r["centroid_id"]), list(r["centroid"])) for r in cb_rows],
             vec_col=vec_col,
             id_col=id_col,
@@ -807,11 +719,10 @@ def append_ivf_table(
     else:
         # hyperplane assignment is a pure projection — no aggregate
         # exchange, no join-back (r14, same rewrite as build_ivf_table)
-        cents = _hyperplanes(dim, n_centroids, seed)
         listed = df.select(
             F.col(id_col),
             F.col(vec_col),
-            ivf_centroid_col(F.col(vec_col), cents).alias("centroid_id"),
+            ivf_centroid_col(F.col(vec_col), _hyperplanes(dim, n_centroids, seed)).alias("centroid_id"),
         )
     (
         listed.write.mode("append")

@@ -35,7 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pengadaan_agent_spark.sources.catalog import read_meta, swap_dirs, write_meta
+from data_pengadaan_agent_spark.sources.catalog import (
+    compact,
+    logged,
+    read_meta,
+    write_meta,
+)
 
 
 def _paths(path: str) -> tuple[str, str]:
@@ -99,6 +104,7 @@ def build_distinct_cube(
     _write_meta(spark, meta_p, dims, key_col, lg_k)
 
 
+@logged
 def append_distinct_cube(shard: DataFrame, path: str) -> int:
     """Incremental ingest: sketch the shard per group and APPEND the
     rows — no registry, no anti-join, no marker, because the reader
@@ -144,33 +150,20 @@ def distinct_rollup(
 
 
 def compact_distinct_cube(spark: SparkSession, path: str) -> int:
-    """Maintenance for the daily-append loop: union the per-append
-    sketch rows down to ONE row per group (readers always union, so
-    this is a no-op on every estimate — pinned by test; n_rows sums).
-    Staged write + meta-out/rename-swap/meta-in, the standard crash
-    discipline: a crash mid-swap leaves a cube readers loudly reject.
-    Returns rows removed."""
+    """Union the per-append sketch rows down to ONE row per group
+    through ``compact``, with the meta as the validity marker (readers
+    always union, so every estimate is unchanged — pinned by test;
+    n_rows sums). Returns rows removed."""
     dims, key_col, lg_k = _read_meta(spark, path)
     cube_p, meta_p = _paths(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(cube_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, old = f"{cube_p}_compact_tmp", f"{cube_p}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
     cube = spark.read.parquet(cube_p)
     before = cube.count()
     merged = cube.groupBy(*dims).agg(
         F.hll_union_agg("sketch").alias("sketch"),
         F.sum("n_rows").cast("bigint").alias("n_rows"),
     )
-    merged.write.mode("overwrite").parquet(tmp)
-    fs.delete(jvm_path(meta_p), True)  # cube invalid until recommit
-    # Hadoop rename reports failure by RETURNING false: deleting the
-    # old copy after an unchecked failed rename would destroy the only
-    # surviving cube while the meta recommit marked it valid
-    # (self-review r12). swap_dirs aborts with the original restored
-    # (restore itself checked) and meta left absent (loudly invalid).
-    swap_dirs(fs, jvm_path, tmp, cube_p, old, "compact_distinct_cube")
-    _write_meta(spark, meta_p, dims, key_col, lg_k)
+    compact(
+        spark, cube_p, "compact_distinct_cube", merged, marker=meta_p,
+        recommit=lambda: _write_meta(spark, meta_p, dims, key_col, lg_k),
+    )
     return before - spark.read.parquet(cube_p).count()

@@ -55,6 +55,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pengadaan_agent_spark.sources.catalog import (
+    audit_registry,
+    compact,
+    flagged_rows,
+    local_df,
+    logged,
+    new_rows,
+)
+
 
 def train_sq(
     df: DataFrame,
@@ -201,8 +210,6 @@ def save_sq_quantizer(
     parameter-sized). Written LAST by the build — the commit marker:
     codes without a quantizer are a loudly-invalid index (the
     lexindex/ivfpq meta discipline)."""
-    from data_pengadaan_agent_spark.sources.catalog import local_df
-
     _, quant_p = _sq_sidecars(path)
     local_df(
         spark,
@@ -266,6 +273,7 @@ def build_sq_table(
     return mins, scales
 
 
+@logged
 def append_sq_table(
     df: DataFrame,
     path: str,
@@ -275,47 +283,27 @@ def append_sq_table(
     """Incremental SQ maintenance: encode a NEW batch with the FROZEN
     quantizer (daily shards never retrain — drift is
     ``sq_quantization_report``'s job; out-of-range values CLAMP, which
-    the report's clamp counter surfaces) and append. Write order is
-    the crash contract: ids FIRST (replay after any crash is a no-op —
-    codes can never double), codes second; the surviving
-    ids-without-codes state is probe-invisible under-recall only,
-    flagged by ``audit_sq_table``, healed by ``repair_sq_table``.
-    Returns vectors appended."""
-    spark = df.sparkSession
-    mins, scales, levels = load_sq_quantizer(spark, path)
+    the report's clamp counter surfaces) and append, ids first, codes
+    second (README "Index lifecycle"). Returns vectors appended."""
+    mins, scales, levels = load_sq_quantizer(df.sparkSession, path)
     ids_p, _ = _sq_sidecars(path)
-    fresh = df.dropDuplicates([id_col])
-    seen = spark.read.parquet(ids_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti").localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return 0
-    fresh.select(id_col).write.mode("append").parquet(ids_p)
-    sq_encode(fresh, mins, scales, vec_col, id_col, levels).write.mode(
-        "append"
-    ).parquet(path)
+    fresh, n_new = new_rows(df, ids_p, id_col)
+    if n_new:
+        fresh.select(id_col).write.mode("append").parquet(ids_p)
+        sq_encode(fresh, mins, scales, vec_col, id_col, levels).write.mode(
+            "append"
+        ).parquet(path)
     return n_new
 
 
 def audit_sq_table(spark, path: str, id_col: str = "vec_id") -> DataFrame:
-    """Integrity audit for the append crash contract (the
-    audit_ivfpq_table shape): registry ids without codes (an append
-    whose second write died — probe-invisible) and orphan codes
-    (registry damage; rebuild). Returns (id, state); empty =
-    consistent."""
+    """Registry ids without codes (``missing_codes``) and orphan codes
+    (``orphan_codes``); empty = consistent."""
     load_sq_quantizer(spark, path)  # validates the build committed
-    ids_p, _ = _sq_sidecars(path)
-    reg = spark.read.parquet(ids_p).select(id_col).distinct()
-    coded = spark.read.parquet(path).select(id_col).distinct()
-    missing = reg.join(coded, id_col, "left_anti").select(
-        id_col, F.lit("missing_codes").alias("state")
-    )
-    orphan = coded.join(reg, id_col, "left_anti").select(
-        id_col, F.lit("orphan_codes").alias("state")
-    )
-    return missing.unionByName(orphan)
+    return audit_registry(spark, _sq_sidecars(path)[0], path, id_col, "codes")
 
 
+@logged
 def repair_sq_table(
     df: DataFrame,
     path: str,
@@ -323,52 +311,26 @@ def repair_sq_table(
     id_col: str = "vec_id",
 ) -> int:
     """Heal every ``missing_codes`` id: re-encode exactly the flagged
-    vectors with the FROZEN quantizer and append their code rows —
-    append-only, replay-safe (empty flagged set ⇒ no-op),
-    crash-convergent (a dead repair re-creates the state it was
-    healing). ``df`` must cover every flagged id. Returns vectors
-    re-encoded."""
+    vectors of ``df`` with the FROZEN quantizer and append their codes.
+    Returns vectors re-encoded."""
     spark = df.sparkSession
     mins, scales, levels = load_sq_quantizer(spark, path)
-    flagged = (
-        audit_sq_table(spark, path, id_col)
-        .filter(F.col("state") == "missing_codes")
-        .select(id_col)
+    flagged = audit_sq_table(spark, path, id_col).filter(
+        F.col("state") == "missing_codes"
     )
-    todo = (
-        df.dropDuplicates([id_col])
-        .join(flagged, id_col, "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    n_todo = todo.count()
-    n_flagged = flagged.count()
-    if n_todo < n_flagged:
-        raise ValueError(
-            f"repair_sq_table: {n_flagged - n_todo} flagged id(s) not in "
-            "the provided source frame — repair must re-read the original "
-            "vector of every probe-invisible id"
-        )
-    if n_todo == 0:
-        return 0
-    sq_encode(todo, mins, scales, vec_col, id_col, levels).write.mode(
-        "append"
-    ).parquet(path)
+    todo, n_todo = flagged_rows(df, flagged.select(id_col), id_col, "repair_sq_table")
+    if n_todo:
+        sq_encode(todo, mins, scales, vec_col, id_col, levels).write.mode(
+            "append"
+        ).parquet(path)
     return n_todo
 
 
-def compact_sq_table(
-    spark,
-    path: str,
-    target_files: int = 1,
-    id_col: str = "vec_id",
-) -> int:
-    """Daily-append small-file maintenance (the fifth index family to
-    get it): rewrite the flat codes table to ``target_files`` files,
-    bit-identical rows. Refuses a dirty audit (baking probe-invisible
-    ids in as permanently lost). The quantizer sidecar is the validity
-    marker: deleted before the swap, re-committed after — a crash
-    mid-swap leaves a loudly-invalid index (load_sq_quantizer raises),
-    never a silently half-compacted one. Returns files removed."""
+def compact_sq_table(spark, path: str, id_col: str = "vec_id") -> int:
+    """Rewrite the codes to one file, bit-identical rows,
+    with the quantizer as the validity marker. Refuses a dirty audit
+    (it would bake probe-invisible ids in as lost). Returns files
+    removed."""
     mins, scales, levels = load_sq_quantizer(spark, path)
     dirty = audit_sq_table(spark, path, id_col).count()
     if dirty:
@@ -376,37 +338,11 @@ def compact_sq_table(
             f"compact_sq_table: {dirty} inconsistent id(s) in the index — "
             "run repair_sq_table before compacting"
         )
-    _, quant_p = _sq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p: str) -> int:
-        it, n = fs.listFiles(jvm_path(p), True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    before = _n_files(path)
-    tmp, old = f"{path}_compact_tmp", f"{path}_compact_old"
-    for stale in (tmp, old):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    (
-        spark.read.parquet(path)
-        .repartition(int(target_files), F.xxhash64(id_col))
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return compact(
+        spark, path, "compact_sq_table", key=id_col,
+        marker=_sq_sidecars(path)[1],
+        recommit=lambda: save_sq_quantizer(spark, path, mins, scales, levels),
     )
-    # index invalid until recommit; swap_dirs checks every rename
-    # return — an unchecked failed swap followed by the old-copy
-    # delete would destroy the only copy of the codes
-    from data_pengadaan_agent_spark.sources.catalog import swap_dirs
-
-    fs.delete(jvm_path(quant_p), True)
-    swap_dirs(fs, jvm_path, tmp, path, old, "compact_sq_table")
-    save_sq_quantizer(spark, path, mins, scales, levels)
-    return before - _n_files(path)
 
 
 def sq_quantization_report(

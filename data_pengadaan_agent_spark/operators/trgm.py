@@ -31,14 +31,9 @@ gram-counts / LSH / IVF / IVF-PQ / SQ):
   grams, the |A| term of the similarity denominator); ``meta/`` =
   1-row commit marker written LAST (a crash mid-build leaves an index
   every reader rejects, never one silently missing hits).
-- append: registry FIRST (the anti-join keys on it, so replay after
-  any mid-append crash is a no-op), postings second. The surviving
-  crash state — registered docs with no postings — is under-recall
-  only, flagged by ``audit_trgm_index`` and healed by
-  ``repair_trgm_index`` (re-gram exactly the flagged docs with the
-  frozen gram law).
-- compaction: staged write + meta-out/rename-swap/meta-in, so a crash
-  mid-swap leaves a loudly-invalid index.
+- append / audit / repair / compaction: the README "Index lifecycle"
+  contract, with ``docs/`` as the registry and ``meta/`` as the
+  validity marker.
 
 Gram law: character 3-grams of ``lower(text)``, SET semantics
 (duplicates within a doc collapse — matching pg_trgm). Unlike
@@ -51,11 +46,15 @@ the gram length cannot be pruned and are rejected — route those to
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
+    compact,
+    flagged_rows,
     local_df,
+    logged,
+    new_rows,
     read_meta,
     spread,
     write_meta,
@@ -158,36 +157,24 @@ def build_trgm_index(
     _write_meta(spark, meta_p, n_buckets)
 
 
+@logged
 def append_trgm_index(
     shard: DataFrame,
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Incremental ingest of one shard: validate meta, drop in-shard
-    duplicate ids, anti-join the EXISTING registry ids (one
-    pruned-column scan of the compact registry — never the postings),
-    append. Registry commits FIRST — it is the append's commit marker,
-    so replay after any crash is a no-op; the surviving
-    registered-but-postings-less state under-recalls only and is
-    flagged by audit_trgm_index. Returns docs actually appended.
-    Base-independent: existing partitions are never rescanned."""
-    spark = shard.sparkSession
-    n_buckets = _read_meta(spark, path)
+    """Incremental ingest of one shard, registry first, postings second
+    (README "Index lifecycle"); existing partitions are never
+    rescanned. The registry-without-postings crash state is flagged by
+    ``audit_trgm_index``. Returns docs appended."""
+    n_buckets = _read_meta(shard.sparkSession, path)
     posts_p, docs_p, _ = _paths(path)
-
-    fresh = shard.dropDuplicates([id_col])
-    seen = spark.read.parquet(docs_p).select(id_col)
-    fresh = fresh.join(seen, id_col, "left_anti")
-    # one small deterministic barrier so registry and postings see the
-    # SAME anti-join verdict even if the source is re-evaluated
-    fresh = fresh.localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return 0
-    postings, registry = _gram_rows(spread(fresh, id_col), text_col, id_col, n_buckets)
-    registry.write.mode("append").parquet(docs_p)
-    postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
+    fresh, n_new = new_rows(shard, docs_p, id_col)
+    if n_new:
+        postings, registry = _gram_rows(spread(fresh, id_col), text_col, id_col, n_buckets)
+        registry.write.mode("append").parquet(docs_p)
+        postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
     return n_new
 
 
@@ -232,6 +219,7 @@ def audit_trgm_index(
     return missing.unionByName(orphan)
 
 
+@logged
 def repair_trgm_index(
     docs_source: DataFrame,
     path: str,
@@ -240,32 +228,17 @@ def repair_trgm_index(
 ) -> int:
     """Heal the audit's ``missing_postings`` state: re-gram EXACTLY
     the flagged docs under the frozen gram law and append their
-    posting rows (their registry rows are already correct — that is
-    what flagged them). Append-only and convergent: a repair that
-    itself crashes re-creates the state it was healing, and a repair
-    over a clean audit is a no-op. Refuses a source frame missing a
-    flagged id (repairing from a partial source would mark the doc
-    healed while leaving it unsearchable). orphan_postings stays
-    rebuild-only, like the other index families. Returns docs
-    repaired."""
+    posting rows (their registry rows are already correct).
+    ``orphan_postings`` stays rebuild-only. Returns docs repaired."""
     spark = docs_source.sparkSession
     n_buckets = _read_meta(spark, path)
     posts_p, docs_p, _ = _paths(path)
-    flagged = (
-        audit_trgm_index(spark, path, id_col=id_col)
-        .filter(F.col("state") == "missing_postings")
-        .select(id_col)
+    flagged = audit_trgm_index(spark, path, id_col=id_col).filter(
+        F.col("state") == "missing_postings"
     )
-    n_flagged = flagged.count()
-    if n_flagged == 0:
+    todo, n_todo = flagged_rows(docs_source, flagged.select(id_col), id_col, "repair_trgm_index")
+    if n_todo == 0:
         return 0
-    todo = docs_source.dropDuplicates([id_col]).join(flagged, id_col, "left_semi")
-    todo = todo.localCheckpoint(eager=True)
-    if todo.count() != n_flagged:
-        raise ValueError(
-            "repair_trgm_index: source frame is missing flagged doc ids — "
-            "repairing from a partial source would leave docs unsearchable"
-        )
     # text-drift guard (self-review r12): a flagged doc whose source
     # text was EDITED since ingest would get postings disagreeing with
     # its registered n_grams — wrong similarity denominators and a
@@ -291,19 +264,16 @@ def repair_trgm_index(
 
     postings, _ = _gram_rows(spread(todo, id_col), text_col, id_col, n_buckets)
     postings.write.mode("append").partitionBy("bucket").parquet(posts_p)
-    return n_flagged
+    return n_todo
 
 
 def compact_trgm_index(
     spark: SparkSession, path: str, target_files_per_bucket: int = 1
 ) -> int:
-    """Small-file maintenance for the daily-append loop, with the
-    meta-out/swap/meta-in validity discipline (compact_postings_index
-    contract): readers between meta-delete and meta-rewrite reject the
-    index loudly; a crash mid-swap can never serve doubled or missing
-    postings. Refuses a dirty audit — compacting an index with
-    lost-shard damage would bake the damage in; run repair_trgm_index
-    first. Returns data files removed."""
+    """Rewrite each posting bucket to ``target_files_per_bucket`` files
+    with the meta as the validity marker. Refuses a dirty audit —
+    compacting lost-shard damage would bake it in; run
+    repair_trgm_index first. Returns data files removed."""
     n_buckets = _read_meta(spark, path)
     posts_p, _, meta_p = _paths(path)
     if audit_trgm_index(spark, path).limit(1).count() > 0:
@@ -311,18 +281,11 @@ def compact_trgm_index(
             "compact_trgm_index: audit is dirty — repair with "
             "repair_trgm_index before compacting"
         )
-    from data_pengadaan_agent_spark.operators.similarity import (
-        _compact_partitioned_table,
+    return compact(
+        spark, posts_p, "compact_trgm_index", part_col="bucket", key="h",
+        target_files=target_files_per_bucket, marker=meta_p,
+        recommit=lambda: _write_meta(spark, meta_p, n_buckets),
     )
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(meta_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jvm_path(meta_p), True)  # index invalid until recommit
-    removed = _compact_partitioned_table(
-        spark, posts_p, "bucket", int(target_files_per_bucket), "h"
-    )
-    _write_meta(spark, meta_p, n_buckets)
-    return removed
 
 
 def _pattern_grams(

@@ -18,7 +18,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import logging
+import time
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +40,10 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# Index lifecycle events (gate decisions, appends, repairs, compactions)
+# go to this one logger at INFO.
+log = logging.getLogger("data_pengadaan_agent_spark.index")
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -230,10 +237,13 @@ def ensure_index(
     marker = jvm_path(f"{gate}/{digest.hexdigest()}")
     fs = marker.getFileSystem(conf)
     if fs.exists(marker):
+        log.info("index fresh: %s", path)
         return False
+    t0 = time.perf_counter()
     fs.delete(jvm_path(gate), True)
     build()
     fs.create(marker, True).close()
+    log.info("index rebuilt: %s in %.2fs", path, time.perf_counter() - t0)
     return True
 
 
@@ -272,38 +282,39 @@ def write_meta(spark: SparkSession, meta_p: str, ddl, values) -> None:
     local_df(spark, [tuple(values)], ddl).write.mode("overwrite").parquet(meta_p)
 
 
-def swap_dirs(fs, jvm_path, tmp: str, live: str, old: str, label: str) -> None:
-    """Commit a rewritten directory over the live one: rename
-    ``live`` -> ``old``, ``tmp`` -> ``live``, delete ``old``.
+def swap_dirs(
+    fs, jvm_path, tmp: str, live: str, old: str, label: str, carry: Iterable[str] = ()
+) -> None:
+    """Commit a rewritten directory over the live one: move each
+    ``carry`` subdirectory of ``live`` into ``tmp``, rename ``live`` ->
+    ``old``, ``tmp`` -> ``live``, delete ``old``.
 
     Hadoop ``FileSystem.rename`` reports failure by RETURNING false,
-    not by raising — an unchecked failed second rename followed by the
-    old-copy delete would destroy the only surviving copy of the data
-    (the self-review-r12 finding; three compacts had reimplemented the
-    swap without the guard). Callers delete their validity sidecar
-    BEFORE the swap and recommit it after, so every abort here leaves
-    the index loudly invalid (sidecar absent), never silently
-    half-swapped:
+    not by raising, so every rename here is checked: an unchecked
+    failed second rename followed by the old-copy delete would destroy
+    the only surviving copy of the data. Callers delete their validity
+    marker BEFORE the swap and recommit it after, so every abort here
+    leaves the index loudly invalid, never silently half-swapped:
 
-    - first rename fails  -> live data untouched, OSError;
+    - a carry or the first rename fails -> live data in place (carried
+      subdirectories already in ``tmp``), OSError;
     - second rename fails -> original restored, OSError — and the
-      restore rename is ITSELF checked: if it also fails the data
-      still survives at ``old`` and the message says exactly that
-      (the previous inline guards' "original restored" could lie).
+      restore rename is itself checked: if it also fails the data
+      still survives at ``old`` and the message says so.
 
-    A leftover ``old`` from a PRIOR swap (crash after the second
-    rename succeeded but before delete(old)) is deleted up front: at
-    that point ``live`` already holds the new copy, so ``old`` is by
-    construction a superseded duplicate — and Hadoop rename returns
-    false when the destination exists, so without this sweep every
-    subsequent swap would wedge on its FIRST rename with a misleading
-    "live data untouched" (ADVICE r13). The double-failure abort path
-    (data surviving only at ``old``) is NOT mistaken for this: it
-    leaves ``live`` absent, so its ``old`` is never swept by a retry —
-    the retry's first rename fails on the missing source instead.
+    A leftover ``old`` from a PRIOR swap (crash after the second rename
+    but before delete(old)) is deleted up front: ``live`` already holds
+    the new copy then, and Hadoop rename returns false when the
+    destination exists, so without the sweep every later swap would
+    wedge on its first rename. The double-failure abort (data only at
+    ``old``, ``live`` absent) is never swept: a retry fails on the
+    missing source instead.
     """
     if fs.exists(jvm_path(old)) and fs.exists(jvm_path(live)):
         fs.delete(jvm_path(old), True)
+    for name in carry:
+        if not fs.rename(jvm_path(f"{live}/{name}"), jvm_path(f"{tmp}/{name}")):
+            raise OSError(f"{label}: could not move {live}/{name} into {tmp}")
     if not fs.rename(jvm_path(live), jvm_path(old)):
         raise OSError(
             f"{label}: rename {live} -> {old} failed; live data untouched"
@@ -320,3 +331,148 @@ def swap_dirs(fs, jvm_path, tmp: str, live: str, old: str, label: str) -> None:
             f"{label}: rename {tmp} -> {live} failed; original restored"
         )
     fs.delete(jvm_path(old), True)
+
+
+# --- Index lifecycle kernel ------------------------------------------------
+# The write contracts every maintained index shares (README "Index
+# lifecycle"): an append writes its registry first, so a replay is a
+# no-op; the audit flags registry ids without index rows; a repair
+# re-derives exactly those rows from a source frame; a compaction
+# commits through ``compact``.
+
+
+def logged(fn):
+    """Log each call of an append or repair: its name, the count it
+    returns and its seconds."""
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        t0 = time.perf_counter()
+        out = fn(*args, **kwargs)
+        log.info("%s: %s rows in %.2fs", fn.__name__, out, time.perf_counter() - t0)
+        return out
+
+    return run
+
+
+def new_rows(batch: DataFrame, registry_p: str, id_col: str) -> tuple[DataFrame, int]:
+    """The rows of ``batch`` an append writes — one per id, none whose
+    id the registry at ``registry_p`` holds — materialized, so every
+    write of the append sees the same verdict, and their count."""
+    seen = batch.sparkSession.read.parquet(registry_p).select(id_col)
+    fresh = batch.dropDuplicates([id_col]).join(seen, id_col, "left_anti")
+    fresh = fresh.localCheckpoint(eager=True)
+    return fresh, fresh.count()
+
+
+def audit_registry(
+    spark: SparkSession, registry_p: str, rows_p: str, id_col: str, noun: str
+) -> DataFrame:
+    """(id, state): registry ids without index rows (``missing_<noun>``:
+    an append whose second write died) and index rows without a
+    registry id (``orphan_<noun>``: registry damage; rebuild). Empty =
+    consistent."""
+    reg = spark.read.parquet(registry_p).select(id_col).distinct()
+    rows = spark.read.parquet(rows_p).select(id_col).distinct()
+    missing = reg.join(rows, id_col, "left_anti").select(
+        id_col, F.lit(f"missing_{noun}").alias("state")
+    )
+    orphan = rows.join(reg, id_col, "left_anti").select(
+        id_col, F.lit(f"orphan_{noun}").alias("state")
+    )
+    return missing.unionByName(orphan)
+
+
+def flagged_rows(
+    source: DataFrame, flagged: DataFrame, id_col: str, label: str
+) -> tuple[DataFrame, int]:
+    """The rows of ``source`` a repair re-derives — one per ``flagged``
+    id, materialized — and their count. A source that lacks a flagged
+    id is refused: repairing from it would report the id healed while
+    it stays invisible."""
+    todo = source.dropDuplicates([id_col]).join(flagged, id_col, "left_semi")
+    todo = todo.localCheckpoint(eager=True)
+    n, n_flagged = todo.count(), flagged.count()
+    if n < n_flagged:
+        raise ValueError(
+            f"{label}: source frame is missing flagged ids ({n_flagged - n}) "
+            "— a repair re-reads the original row of every flagged id"
+        )
+    return todo, n
+
+
+def _sidecar(name: str) -> bool:
+    """Spark's hidden-path rule: ``_``-prefixed, but not a partition
+    directory such as ``_sig=b0101``."""
+    return name.startswith("_") and "=" not in name
+
+
+def _n_files(fs, jvm_path, path: str) -> int:
+    """Data files of a table directory, sidecars excluded."""
+    it, n = fs.listFiles(jvm_path(path), True), 0
+    while it.hasNext():
+        f = it.next().getPath()
+        n += f.getName().endswith(".parquet") and not _sidecar(f.getParent().getName())
+    return n
+
+
+def compact(
+    spark: SparkSession,
+    path: str,
+    label: str,
+    frame: DataFrame | None = None,
+    *,
+    part_col: str | None = None,
+    key: str | None = None,
+    target_files: int = 1,
+    marker: str | None = None,
+    recommit: Callable[[], object] | None = None,
+) -> int:
+    """The one compaction of an index directory: write ``frame`` (by
+    default the directory's own rows) to a staged copy, delete the
+    validity ``marker`` — readers reject the index from here — swap
+    the copy in through ``swap_dirs``, carrying the sidecar
+    subdirectories of ``path`` (``_``-prefixed, not partitions) along,
+    then ``recommit()``. A
+    crash at any point leaves an index readers reject, never a
+    half-compacted one; the next run sweeps the stale staged copy.
+
+    ``key`` spreads the rows over at most ``target_files`` files, per
+    ``part_col`` partition when given: each (partition, key hash mod
+    ``target_files``) pair lands in one task, so a large partition is
+    split over ``target_files`` tasks rather than sent whole to one.
+    The task count is fixed (``target_files`` per core), since AQE
+    would coalesce small tasks and with them the split. Returns data
+    files removed."""
+    t0 = time.perf_counter()
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jvm_path(path)):
+        raise ValueError(f"{label}: no table at {path!r}")
+    tmp, old = f"{path}_compact_tmp", f"{path}_compact_old"
+    fs.delete(jvm_path(tmp), True)
+    rows = spark.read.parquet(path) if frame is None else frame
+    if key is not None:
+        sub = F.pmod(F.xxhash64(key), F.lit(int(target_files)))
+        rows = (
+            rows.repartition(int(target_files), sub)
+            if part_col is None
+            else rows.repartition(
+                int(target_files) * spark.sparkContext.defaultParallelism, F.col(part_col), sub
+            )
+        )
+    before = _n_files(fs, jvm_path, path)
+    rows.write.mode("overwrite").partitionBy(*filter(None, [part_col])).parquet(tmp)
+    if marker is not None:
+        fs.delete(jvm_path(marker), True)
+    carry = [
+        st.getPath().getName()
+        for st in fs.listStatus(jvm_path(path))
+        if st.isDirectory() and _sidecar(st.getPath().getName())
+    ]
+    swap_dirs(fs, jvm_path, tmp, path, old, label, carry)
+    if recommit is not None:
+        recommit()
+    removed = before - _n_files(fs, jvm_path, path)
+    log.info("%s: %d files removed in %.2fs", label, removed, time.perf_counter() - t0)
+    return removed

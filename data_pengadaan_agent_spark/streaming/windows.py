@@ -259,6 +259,44 @@ def enrich_events_stream(events: DataFrame, dim: DataFrame, on: str = "event_typ
     return events.join(F.broadcast(dim), on)
 
 
+def _start(stream_df: DataFrame, checkpoint: str, write_batch):
+    """Run ``write_batch(batch_df, epoch_id)`` on every micro-batch of
+    ``stream_df`` under ``checkpoint``. Returns the started
+    StreamingQuery; callers stop it (tests use processAllAvailable)."""
+    return (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .start()
+    )
+
+
+def _write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
+    """Write ``df`` as the ``_epoch=<epoch_id>`` partition of ``path``
+    by dynamic partition overwrite: a replayed epoch rewrites its own
+    partition instead of duplicating its rows — effectively-once file
+    output on at-least-once foreachBatch."""
+    (
+        df.withColumn("_epoch", F.lit(int(epoch_id)))
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .partitionBy("_epoch")
+        .parquet(path)
+    )
+
+
+def _append_sink(stream_df: DataFrame, checkpoint: str, append):
+    """Call ``append(batch_df, epoch_id)`` on every non-empty
+    micro-batch — the body of the cube sinks, whose replay safety is
+    the cube's own append contract."""
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            append(batch_df, epoch_id)
+
+    return _start(stream_df, checkpoint, write_batch)
+
+
 def _guard_fresh_checkpoint_roots(
     stream_df: DataFrame,
     checkpoint: str,
@@ -305,38 +343,19 @@ def foreach_batch_parquet_sink(
     stream_df: DataFrame,
     path: str,
     checkpoint: str,
-    mode: str = "append",
     fresh_checkpoint_ok: bool = False,
 ):
-    """foreachBatch sink: per micro-batch, write the batch DataFrame
-    to parquet stamped with the epoch id. Combined with the streaming
-    checkpoint this gives effectively-once file output: a replayed
-    epoch rewrites the SAME _epoch partition (dynamic partition
-    overwrite) instead of duplicating rows — the standard idempotent
+    """foreachBatch sink: each micro-batch becomes its own ``_epoch``
+    partition of ``path`` (``_write_epoch``) — the idempotent
     foreachBatch recipe for sinks without native exactly-once. The
     path is paired with the checkpoint for the data's lifetime
-    (``_guard_fresh_checkpoint_roots``).
-
-    Returns the started StreamingQuery; callers stop it (tests use
-    processAllAvailable)."""
+    (``_guard_fresh_checkpoint_roots``). Returns the started
+    StreamingQuery."""
     _guard_fresh_checkpoint_roots(
         stream_df, checkpoint, (path,), "parquet sink", fresh_checkpoint_ok
     )
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("_epoch", F.lit(epoch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite" if mode == "append" else mode)
-            .partitionBy("_epoch")
-            .parquet(path)
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    return _start(
+        stream_df, checkpoint, lambda batch_df, epoch_id: _write_epoch(batch_df, path, epoch_id)
     )
 
 
@@ -348,7 +367,6 @@ def foreach_batch_dup_span_sink(
     max_ppm: int = 500_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fresh_checkpoint_ok: bool = False,
 ):
     """Streaming exact-substring dedup gate — the dup-span family's
     ingest deployment: each micro-batch is appended to the maintained
@@ -360,25 +378,16 @@ def foreach_batch_dup_span_sink(
     and a doc's within-batch repeats count immediately because the
     batch is appended before it is scored.
 
-    Replay safety comes from the index's own crash contract instead
-    of sink bookkeeping: for a FULLY-COMMITTED append, a replayed
-    epoch's docs are already in the registry, so the append is a
-    no-op and the verdicts recompute identically; the epoch-stamped
-    dynamic-partition write then rewrites the same partition (the
-    foreach_batch_parquet_sink recipe). If the original append died
-    between its registry write and its commit marker, the replay's
-    no-op append leaves the batch's grams missing and the replayed
-    verdicts UNDER-count — that state is flagged by
-    ``dupindex.audit_gram_counts`` and healed append-only by
-    ``dupindex.repair_gram_counts``, so run the audit before trusting
-    verdicts across a crash-restart. The gram law (length, bucket
-    count, hash family — use xxhash64 in production) is fixed at
-    index build and read from its meta, never passed per batch.
-
-    Returns the started StreamingQuery; callers stop it."""
-    _guard_fresh_checkpoint_roots(
-        stream_df, checkpoint, (path,), "dup-span sink", fresh_checkpoint_ok
-    )
+    Replay safety is the index's own append contract: a replayed
+    epoch's docs are already registered, so the append is a no-op, the
+    verdicts recompute identically and ``_write_epoch`` rewrites the
+    same partition. An append that died before its commit marker
+    leaves the replayed verdicts UNDER-counting until
+    ``dupindex.repair_gram_counts`` heals what
+    ``dupindex.audit_gram_counts`` flags — run the audit before
+    trusting verdicts across a crash-restart. The gram law is read
+    from the index meta. Returns the started StreamingQuery."""
+    _guard_fresh_checkpoint_roots(stream_df, checkpoint, (path,), "dup-span sink", False)
     from data_pengadaan_agent_spark.operators import dupindex as DI
     from data_pengadaan_agent_spark.operators.textan import tokens
 
@@ -387,7 +396,7 @@ def foreach_batch_dup_span_sink(
         # NULL-text rows carry no tokens: they contribute nothing to
         # the gram index yet used to slip the gate with keep=true and
         # n_tokens=NULL (greatest(NULL,1)=1 → dup_ppm=0) — dropped at
-        # the gate like streaming_dedup_near does (self-review r12)
+        # the gate like streaming_dedup_near does
         b = (
             batch_df.filter(F.col(text_col).isNotNull())
             .dropDuplicates([id_col])
@@ -423,20 +432,9 @@ def foreach_batch_dup_span_sink(
             )
             .withColumn("keep", F.col("dup_ppm") <= F.lit(int(max_ppm)))
         )
-        (
-            stats.withColumn("_epoch", F.lit(epoch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("_epoch")
-            .parquet(path)
-        )
+        _write_epoch(stats, path, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, checkpoint, write_batch)
 
 
 def foreach_batch_classify_sink(
@@ -449,8 +447,6 @@ def foreach_batch_classify_sink(
     threshold: float = 0.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    arith_hash: bool = False,
-    fresh_checkpoint_ok: bool = False,
 ):
     """The xxhash64 path of the streaming quality gate: score each
     micro-batch with the BATCH ``quality_classifier`` inside
@@ -468,9 +464,7 @@ def foreach_batch_classify_sink(
     every epoch's broadcast join.
 
     Returns the started StreamingQuery; callers stop it."""
-    _guard_fresh_checkpoint_roots(
-        stream_df, checkpoint, (path,), "classify sink", fresh_checkpoint_ok
-    )
+    _guard_fresh_checkpoint_roots(stream_df, checkpoint, (path,), "classify sink", False)
     from data_pengadaan_agent_spark.operators.textan import (
         quality_classifier,
     )
@@ -491,23 +485,11 @@ def foreach_batch_classify_sink(
             threshold=threshold,
             text_col=text_col,
             id_col=id_col,
-            arith_hash=arith_hash,
         ).filter(F.col("keep"))
         out = batch_df.join(scored.select(id_col, "n_feats", "logit"), id_col)
-        (
-            out.withColumn("_epoch", F.lit(epoch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("_epoch")
-            .parquet(path)
-        )
+        _write_epoch(out, path, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, checkpoint, write_batch)
 
 
 def trending_terms_stream(
@@ -741,77 +723,37 @@ def foreach_batch_ivfpq_sink(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ):
-    """Streaming ANN-index ingest — the FIFTH streaming form: each
-    micro-batch of vectors is appended to a maintained IVF-PQ index
-    (``pq.append_ivfpq_table``: frozen sidecar geometry, never a
-    retrain or base rescan) and the batch's rows are acknowledged to
-    an epoch-stamped parquet log with their coarse assignment. The
-    ack is AT-LEAST-ONCE by design: a vec_id the index already holds
-    (a replay, or a later-epoch duplicate the first-wins contract
-    rejects) still acks — the log answers "what arrived when", the
-    ids registry answers "what the index holds". New vectors are
-    probe-visible to ``ivfpq_adc_topk`` as soon as their trigger
-    commits — the streaming half of the build/append/audit/compact
-    lifecycle.
-
-    Replay safety rides the index's own ids-first crash contract, not
-    sink bookkeeping: a replayed epoch's vectors are already in the
-    ids registry, so the append is a no-op, and the epoch-stamped
-    dynamic-partition ack rewrite is idempotent (the
-    foreach_batch_parquet_sink recipe). First-wins across triggers: a
-    vec_id seen in an earlier epoch is never re-encoded. The one
-    crash window is the index's own (ids committed, codes lost) —
-    flagged by ``pq.audit_ivfpq_table``, so run the audit before
-    trusting probes across a crash-restart. Geometry drift from the
-    frozen codebooks is the monitor's job (the coarse sidecar feeds
-    ``ivf_drift_report`` directly).
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming ANN-index ingest: each micro-batch of vectors is
+    appended to a maintained IVF-PQ index under its frozen geometry
+    (``pq.append_ivfpq_residuals``) and acknowledged, with its coarse
+    list, to an epoch-partitioned parquet log. Replay safety is the
+    index's own append contract (a replayed epoch's ids are
+    registered, so the append is a no-op; ``_write_epoch`` rewrites
+    the ack); run ``pq.audit_ivfpq_table`` before trusting probes
+    across a crash-restart. The ack is AT-LEAST-ONCE: a rejected
+    duplicate still acks — the log answers "what arrived when", the
+    ids registry "what the index holds". Returns the started
+    StreamingQuery."""
     from data_pengadaan_agent_spark.operators import pq as PQ
 
-    # Codebooks load ONCE at sink construction, not once per epoch
-    # (r15, guide §1.2/§4 heavyweight-init-once): the geometry is
-    # FROZEN by the append contract — appends never retrain and
-    # compact recommits identical content — so a per-epoch reload
-    # bought nothing but 2 collect jobs + 2 sidecar reads per trigger,
-    # and under a (contract-violating) concurrent rebuild it would
-    # silently MIX geometries across one stream's epochs; loading once
-    # pins the stream to one geometry for its lifetime and turns an
-    # invalid index into a construction-time error instead of a
-    # first-batch one.
+    # Codebooks load ONCE at sink construction: the geometry is frozen
+    # by the append contract, so a per-epoch reload would cost 2
+    # collect jobs per trigger and, under a concurrent rebuild, could
+    # mix geometries across one stream's epochs.
     coarse, cb = PQ.load_ivfpq_codebooks(stream_df.sparkSession, index_path)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        # ONE dedup exchange and ONE Arrow coarse-assign pass per
-        # epoch, shared between the index append and the ack log (r14;
-        # the r13 shape paid each twice — once inside
-        # append_ivfpq_table, once rebuilt for the ack — guide §1.2
-        # step 1: don't compute things twice). The materialization
-        # barrier doubles as the determinism point the ids-first crash
-        # contract needs.
+        # ONE Arrow coarse-assign pass per epoch, shared between the
+        # index append and the ack log
         resid = PQ.ivfpq_residuals(
             batch_df.dropDuplicates([id_col]), coarse, vec_col, id_col
         ).localCheckpoint(eager=True)
         if resid.isEmpty():
             return
-        PQ.append_ivfpq_residuals(
-            batch_df.sparkSession, resid, cb, index_path, id_col=id_col
-        )
-        (
-            resid.select(F.col(id_col), F.col("list"))
-            .withColumn("_epoch", F.lit(epoch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("_epoch")
-            .parquet(path)
-        )
+        PQ.append_ivfpq_residuals(resid, cb, index_path, id_col=id_col)
+        _write_epoch(resid.select(F.col(id_col), F.col("list")), path, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, checkpoint, write_batch)
 
 
 def foreach_batch_trgm_sink(
@@ -822,29 +764,13 @@ def foreach_batch_trgm_sink(
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """Streaming substring-search-index ingest — the SIXTH streaming
-    form: each micro-batch of documents is appended to a maintained
-    trigram index (``trgm.append_trgm_index``: frozen gram law,
-    registry-first crash contract, existing partitions never
-    rescanned), and the batch's rows are acknowledged to an
-    epoch-stamped parquet log with their distinct-gram counts. New
-    docs are searchable by ``trgm.substring_search`` /
-    ``trgm.trgm_similar`` as soon as their trigger commits — the
-    streaming half of the index lifecycle, exactly the
-    ``foreach_batch_ivfpq_sink`` shape on the lexical side.
-
-    Replay safety rides the index's own registry-first contract, not
-    sink bookkeeping: a replayed epoch's ids are already registered,
-    so the append is a no-op; the ack rewrite is idempotent
-    (epoch-partitioned dynamic overwrite). First-wins across
-    triggers: a doc_id seen in an earlier epoch is never re-grammed.
-    The one crash window is the index's own (registry committed,
-    postings lost) — flagged by ``trgm.audit_trgm_index``, healed by
-    ``trgm.repair_trgm_index``. The ack is AT-LEAST-ONCE: rejected
-    later-epoch duplicates still ack (the log answers "what arrived
-    when", the registry answers "what the index holds").
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming substring-search-index ingest: each micro-batch of
+    documents is appended to a maintained trigram index
+    (``trgm.append_trgm_index``) and acknowledged, with its
+    distinct-gram counts, to an epoch-partitioned parquet log — the
+    ``foreach_batch_ivfpq_sink`` shape on the lexical side, with the
+    same replay argument and the same at-least-once ack. Returns the
+    started StreamingQuery."""
     from data_pengadaan_agent_spark.operators import trgm as TG
 
     def write_batch(batch_df, epoch_id: int) -> None:
@@ -856,20 +782,9 @@ def foreach_batch_trgm_sink(
             F.col(id_col),
             F.size(TG.char_grams(text_col)).cast("bigint").alias("n_grams"),
         )
-        (
-            ack.withColumn("_epoch", F.lit(epoch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("_epoch")
-            .parquet(path)
-        )
+        _write_epoch(ack, path, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, checkpoint, write_batch)
 
 
 def foreach_batch_distinct_cube_sink(
@@ -877,32 +792,16 @@ def foreach_batch_distinct_cube_sink(
     cube_path: str,
     checkpoint: str,
 ):
-    """Streaming distinct-count ingest — the SEVENTH streaming form,
-    and the one with the cleanest replay story in the repo: each
-    micro-batch is sketched per group and appended to the HLL cube
-    (``sketchcube.append_distinct_cube``), and because HLL union is
-    idempotent (union(s, s) = s), a replayed epoch, a crash between
-    append and checkpoint commit, or any at-least-once duplication
-    converges to BIT-IDENTICAL estimates — exactly-once semantics for
-    every ``distinct_rollup`` answer with zero bookkeeping: no
-    registry, no ack log, no commit marker. (The cube's n_rows column
-    keeps at-least-once arrival counts, documented there.) Rollups
-    are readable mid-stream; estimates only ever grow toward the
-    union of everything ingested.
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming distinct-count ingest: each micro-batch is appended to
+    the HLL cube (``sketchcube.append_distinct_cube``). HLL union is
+    idempotent, so a replayed epoch converges to bit-identical
+    estimates with no registry, ack log or marker (the cube's n_rows
+    keeps at-least-once arrival counts). Returns the started
+    StreamingQuery."""
     from data_pengadaan_agent_spark.operators import sketchcube as SC
 
-    def write_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        SC.append_distinct_cube(batch_df, cube_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    return _append_sink(
+        stream_df, checkpoint, lambda b, _: SC.append_distinct_cube(b, cube_path)
     )
 
 
@@ -911,30 +810,16 @@ def foreach_batch_hist_cube_sink(
     cube_path: str,
     checkpoint: str,
 ):
-    """Streaming quantile-cube ingest — the EIGHTH streaming form:
-    each micro-batch is bucketed under the cube's frozen bin geometry
-    and appended (``histcube.append_hist_cube``). Counts ADD, so
-    unlike the HLL cube replay is not algebraically free — instead the
-    epoch id IS the batch-registry key: a replayed epoch finds its id
-    registered and appends nothing, giving exactly-once bin counts on
-    top of Structured Streaming's at-least-once foreachBatch. The one
-    crash window (registry committed, cube rows lost) under-counts
-    that epoch only and is the documented histcube retry contract.
-    Quantile rollups are readable mid-stream.
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming quantile-cube ingest (``histcube.append_hist_cube``).
+    Counts ADD, so the epoch id is the batch-registry key: a replayed
+    epoch finds its id registered and appends nothing — exactly-once
+    bin counts on at-least-once foreachBatch. Returns the started
+    StreamingQuery."""
     from data_pengadaan_agent_spark.operators import histcube as HC
 
-    def write_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        HC.append_hist_cube(batch_df, cube_path, batch_id=f"epoch_{epoch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    return _append_sink(
+        stream_df, checkpoint,
+        lambda b, epoch_id: HC.append_hist_cube(b, cube_path, batch_id=f"epoch_{epoch_id}"),
     )
 
 
@@ -945,41 +830,24 @@ def foreach_batch_bloom_sink(
     checkpoint: str,
     key_col: str = "key",
 ):
-    """Streaming dedup-ingest through the bloom index — the NINTH
-    streaming form: each micro-batch runs
-    ``bloom.ingest_bloom_batch`` (bloom-negative rows are new with
-    zero corpus contact; the maybe sliver takes the exact anti-join;
-    words append FIRST, keys LAST) and acknowledges an epoch-stamped
-    (batch_id, n_new) row.
-
-    Exactly-once for the INDEX without any epoch registry: a replayed
-    batch converges by the module's algebra — its word rows are
-    absorbed by bit_or (idempotent), its keys re-anti-join to nothing
-    — so the filter and key registry are bit-identical however many
-    times an epoch fires. The ack log is the one at-least-once
-    surface (epoch-keyed for idempotent reads): a replayed epoch
-    re-acks with n_new = 0.
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming dedup-ingest through the bloom index: each micro-batch
+    runs ``bloom.ingest_bloom_batch`` and acknowledges a (batch_id,
+    n_new) row. A replayed batch converges by the module's algebra —
+    its word rows are absorbed by bit_or, its keys re-anti-join to
+    nothing — so the index is exactly-once without an epoch registry;
+    the ack log is at-least-once (a replayed epoch re-acks with
+    n_new = 0). Returns the started StreamingQuery."""
     from data_pengadaan_agent_spark.operators import bloom as BL
+    from data_pengadaan_agent_spark.sources.catalog import local_df
 
-    def write_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def ingest(batch_df, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        from data_pengadaan_agent_spark.sources.catalog import local_df
-
         n_new = BL.ingest_bloom_batch(spark, index_path, batch_df, key_col)
         local_df(
             spark, [(int(epoch_id), int(n_new))], "batch_id bigint, n_new bigint"
         ).write.mode("append").parquet(ack_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _append_sink(stream_df, checkpoint, ingest)
 
 
 def foreach_batch_cms_sink(
@@ -987,30 +855,16 @@ def foreach_batch_cms_sink(
     cube_path: str,
     checkpoint: str,
 ):
-    """Streaming frequency-sketch ingest — the TENTH streaming form,
-    completing the sketch-cube trio's streaming side (HLL cube =
-    algebraic exactly-once, hist cube = epoch-registry exactly-once;
-    the CMS cube is count-bearing like the hist cube, so the epoch id
-    IS the batch-registry key): each micro-batch is sketched under
-    the cube's frozen (d, w, seed) law and appended
-    (``cmscube.append_cms_cube``); a replayed epoch finds its id
-    registered and appends nothing — exactly-once counters on
-    at-least-once foreachBatch. Point estimates (``cms_estimate``)
-    are readable mid-stream and only ever grow toward the union's.
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming frequency-sketch ingest (``cmscube.append_cms_cube``),
+    count-bearing like the hist cube, so the epoch id is the
+    batch-registry key and a replayed epoch appends nothing. Point
+    estimates are readable mid-stream. Returns the started
+    StreamingQuery."""
     from data_pengadaan_agent_spark.operators import cmscube as CM
 
-    def write_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        CM.append_cms_cube(batch_df, cube_path, batch_id=f"epoch_{epoch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    return _append_sink(
+        stream_df, checkpoint,
+        lambda b, epoch_id: CM.append_cms_cube(b, cube_path, batch_id=f"epoch_{epoch_id}"),
     )
 
 
@@ -1096,13 +950,7 @@ def foreach_batch_dq_gate_sink(
             if n_bad
             else (clean_path, quarantine_path)
         )
-        (
-            b.withColumn("_epoch", FF.lit(int(epoch_id)))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("_epoch")
-            .parquet(target)
-        )
+        _write_epoch(b, target, epoch_id)
         # A replayed epoch whose verdict FLIPPED (rules_factory binds
         # per-batch referential dims, which may legitimately change
         # between the original run and a crash-replay) rewrites its
@@ -1118,12 +966,7 @@ def foreach_batch_dq_gate_sink(
         if fs.exists(sib):
             fs.delete(sib, True)
 
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, checkpoint, write_batch)
 
 
 def foreach_batch_kmv_sink(
@@ -1131,26 +974,13 @@ def foreach_batch_kmv_sink(
     cube_path: str,
     checkpoint: str,
 ):
-    """Streaming bottom-k distinct ingest — the TWELFTH streaming
-    form, and the second with the pure-algebra replay contract: each
-    micro-batch's own k-cut sample rows append to the KMV cube
-    (``kmv.append_kmv_cube``); the sketch is a SET (readers
-    distinct-then-cut), so a replayed epoch re-appends rows a
-    DISTINCT absorbs — exactly-once estimates with zero bookkeeping,
-    like the HLL sink, but with a DuckDB-verifiable state. Estimates
-    are readable mid-stream and only move toward the union's.
-
-    Returns the started StreamingQuery; callers stop it."""
+    """Streaming bottom-k distinct ingest (``kmv.append_kmv_cube``):
+    the sketch is a set that readers distinct-then-cut, so a replayed
+    epoch re-appends rows a DISTINCT absorbs — exactly-once estimates
+    with no bookkeeping and a DuckDB-verifiable state. Returns the
+    started StreamingQuery."""
     from data_pengadaan_agent_spark.operators import kmv as KV
 
-    def write_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        KV.append_kmv_cube(batch_df, cube_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+    return _append_sink(
+        stream_df, checkpoint, lambda b, _: KV.append_kmv_cube(b, cube_path)
     )

@@ -67,7 +67,6 @@ def test_ivf_and_lsh_recall(spark, tables):
     assert 0 in lsh
 
 
-@pytest.mark.slow
 def test_ivf_assignment_partitions_corpus(spark, tables):
     emb = tables["embeddings"]
     assign = S.ivf_assignments(emb, "embedding", dim=64, n_centroids=8)
@@ -537,7 +536,6 @@ def test_ivf_append_trained_uses_frozen_codebook(spark, tables, tmp_path):
     assert any(r["vec_id"] == 350 for r in got)
 
 
-@pytest.mark.slow
 def test_lsh_append_equals_rebuild(spark, tables, tmp_path):
     """LSH signature-table append: same fixed hyperplane family signs
     the shard, so append ∪ base is bit-identical to a full rebuild and

@@ -209,7 +209,6 @@ def test_empty_and_all_dup_batches(spark, idx):
     assert B.ingest_bloom_batch(spark, path, corpus, "key") == 0
 
 
-@pytest.mark.slow
 def test_streaming_bloom_sink_parity_and_replay(spark, tmp_path):
     """NINTH streaming form: two single-file triggers (the second
     replays an already-ingested key) leave the streamed index

@@ -264,7 +264,6 @@ def test_bq_table_lifecycle_build_append_replay(spark, tmp_path):
     assert words.count() == words.select("vec_id").distinct().count() == len(FIX)
 
 
-@pytest.mark.slow
 def test_bq_table_crash_audit_repair_compact(spark, tmp_path):
     """Writer-failure injection for the BQ index: append's words
     write dies after the ids commit → audit flags, replay is a no-op,

@@ -45,7 +45,6 @@ def _spans(df):
     return sorted(map(tuple, df.collect()))
 
 
-@pytest.mark.slow
 def test_incremental_matches_full_recompute(spark, tmp_path):
     base, shard = _base(spark), _shard(spark)
     path = str(tmp_path / "gidx")
@@ -115,7 +114,6 @@ def test_meta_is_commit_marker_and_gram_law(spark, tmp_path):
         DI.build_gram_counts(base, str(tmp_path / "g2"), length=0)
 
 
-@pytest.mark.slow
 def test_compact_gram_counts_merges_and_preserves_answers(spark, tmp_path):
     """Compaction merges per-shard count rows (SUM per hash) and
     shrinks files; incremental answers are bit-identical before and
@@ -167,7 +165,6 @@ def test_build_dedups_repeated_doc_ids(spark, tmp_path):
     assert reg.count() == reg.select("doc_id").distinct().count()
 
 
-@pytest.mark.slow
 def test_audit_clean_and_flags_dead_batch(spark, tmp_path):
     """The append crash window: registry committed, counts/marker
     lost. The audit flags exactly that batch; repair heals it so the
@@ -207,7 +204,6 @@ def test_audit_clean_and_flags_dead_batch(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_repair_negates_partial_counts(spark, tmp_path):
     """The other crash point: counts landed (fully or partially) but
     the marker didn't. Repair appends NEGATING rows plus a fresh
@@ -283,7 +279,6 @@ def test_compact_meta_keeps_explicit_schema(spark, tmp_path):
     assert str(after.field("n_buckets").type) == "int32"
 
 
-@pytest.mark.slow
 def test_crashed_repair_id_never_reused_by_append(spark, tmp_path):
     """ADVICE r10 (medium): a repair that dies between its counts
     append and its marker must not have its batch id handed to the
@@ -369,7 +364,6 @@ def test_crashed_repair_id_never_reused_by_append(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_intent_only_dead_repair_flagged_and_healed(spark, tmp_path):
     """A repair that dies after declaring its intent but before ANY
     counts row lands: the audit must still flag it (0 registry docs,

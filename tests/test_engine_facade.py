@@ -204,7 +204,8 @@ def test_retrieve_keywords_matches_the_spark_plan(spark, pengadaan):
 def test_turn_job_counts(spark, pengadaan):
     """A warm retrieval starts no Spark job; bar, line and pie are one
     action each (an aggregate over a grouped stage-2 frame: at most 3
-    jobs under AQE); the numeric histogram is its min/max pass plus
+    jobs under AQE), and so is a string histogram, categorical or
+    parsed as dates; the numeric histogram is its min/max pass plus
     its binning pass."""
     vocab = spark.createDataFrame([(w,) for w in "alat kantor gedung".split()], "keyword string")
     engine = Engine(spark, pengadaan, vocab_df=vocab)
@@ -227,10 +228,19 @@ def test_turn_job_counts(spark, pengadaan):
             "satuan_kerja", "n",
         ),
         "hist": lambda: engine.histogram("SELECT total_pagu FROM intermediary_table", "total_pagu"),
+        "hist_category": lambda: engine.histogram(
+            "SELECT satuan_kerja FROM intermediary_table", "satuan_kerja"
+        ),
+        "hist_date_string": lambda: engine.histogram(
+            "SELECT tanggal_umumkan_paket FROM intermediary_table", "tanggal_umumkan_paket"
+        ),
     }
     jobs = {kind: jobs_in(spark, fn)[1] for kind, fn in calls.items()}
     assert all(jobs[k] <= 3 for k in ("bar", "line", "pie")), jobs
     assert jobs["hist"] <= 4, jobs
+    # a STRING histogram decides its datetime parse inside its one
+    # aggregate: no more jobs than bar, line or pie
+    assert all(jobs[k] <= 3 for k in ("hist_category", "hist_date_string")), jobs
 
 
 def test_chart_rows_keep_the_stage2_order(spark, pengadaan):

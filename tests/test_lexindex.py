@@ -73,7 +73,6 @@ def test_bm25_from_index_prunes_bucket_partitions(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_append_postings_index_validates_and_matches_rebuild(spark, tmp_path):
     """Append drops in-shard duplicates AND already-indexed ids, then
     the queried index equals a from-scratch rebuild over the union —
@@ -160,7 +159,6 @@ def test_postings_meta_is_commit_marker(spark, tmp_path):
         LX.build_postings_index(docs, str(tmp_path / "p2"), n_buckets=0)
 
 
-@pytest.mark.slow
 def test_append_crash_contract_and_audit(spark, tmp_path):
     """doclen commits FIRST: a replay after any mid-append crash is a
     no-op (never double-counted tf/df), and the surviving lost-shard
@@ -196,7 +194,6 @@ def test_append_crash_contract_and_audit(spark, tmp_path):
     assert LX.append_postings_index(shard, path) == 0
 
 
-@pytest.mark.slow
 def test_compact_postings_index_preserves_answers(spark, tmp_path):
     """Compaction shrinks the file count after a run of appends and
     the compacted index answers BIT-identically; a stale meta-less

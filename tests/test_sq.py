@@ -226,7 +226,6 @@ def test_sq_table_lifecycle_build_append_replay(spark, tmp_path):
     assert codes.count() == codes.select("vec_id").distinct().count() == len(FIX)
 
 
-@pytest.mark.slow
 def test_sq_table_crash_audit_repair_compact(spark, tmp_path):
     """Writer-failure injection for the SQ index: append's codes write
     dies after the ids commit → audit flags, replay is a no-op, repair

@@ -129,7 +129,6 @@ def test_append_replay_safe_and_base_independent(spark, tmp_path):
     assert T.audit_trgm_index(spark, path).count() == 0
 
 
-@pytest.mark.slow
 def test_audit_flags_lost_postings_and_repair_heals(spark, tmp_path, monkeypatch):
     """Writer-failure injection replaying the append crash contract:
     the registry commits, the postings write dies. The audit flags
@@ -196,7 +195,6 @@ def test_audit_flags_lost_postings_and_repair_heals(spark, tmp_path, monkeypatch
         assert a == b and len(a) > 0
 
 
-@pytest.mark.slow
 def test_compact_bit_identical_and_refuses_dirty(spark, tmp_path):
     docs = _mini_corpus(spark)
     path = str(tmp_path / "tidx")
@@ -257,7 +255,6 @@ def test_char_grams_law(spark):
     assert got[3] == ["aaa"]  # set semantics: duplicate gram collapses
 
 
-@pytest.mark.slow
 def test_streaming_trgm_sink_matches_batch_appends(spark, tmp_path):
     """The sixth streaming form: file-per-trigger ingest into a
     maintained trigram index equals the batch append sequence
