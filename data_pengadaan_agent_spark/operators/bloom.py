@@ -56,6 +56,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
+    begin_build,
     compact,
     logged,
     read_meta,
@@ -245,11 +246,7 @@ def build_bloom_index(
     _require_integral(df, key_col, "build_bloom_index")
     spark = df.sparkSession
     words_p, keys_p, meta_p = _paths(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs_path = jvm_path(meta_p)
-    fs = meta_fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs_path):
-        fs.delete(meta_fs_path, True)
+    begin_build(spark, meta_p, words_p, keys_p)
 
     # NULL keys carry no identity (the bloom_new_rows contract): their
     # probe rows explode to nothing, so registering one writes a keys/

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
     audit_registry,
+    begin_build,
     compact,
     flagged_rows,
     local_df,
@@ -249,10 +250,7 @@ def build_bq_table(
     side."""
     spark = df.sparkSession
     ids_p, thr_p = _bq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(thr_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path(thr_p)):  # index invalid until recommit
-        fs.delete(jvm_path(thr_p), True)
+    begin_build(spark, thr_p, path, ids_p)
     df = df.dropDuplicates([id_col])
     thresholds = train_bq(df, dim, vec_col)
     bq_encode(df, thresholds, vec_col, id_col).write.mode(

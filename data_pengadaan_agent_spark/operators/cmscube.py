@@ -39,12 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_pengadaan_agent_spark.operators.dedup import P31, _lcg_coeffs, poly_hash_col
-from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
-
-
-def _paths(path: str) -> tuple[str, str, str]:
-    p = path.rstrip("/")
-    return f"{p}/cube", f"{p}/batches", f"{p}/meta"
+from data_pengadaan_agent_spark.sources.catalog import (
+    append_counts,
+    build_counts,
+    cube_paths as _paths,
+    local_df,
+    read_meta,
+)
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -97,60 +98,29 @@ def build_cms_cube(
     w: int = 1024,
     seed: int = 424242,
 ) -> None:
-    """Ingest: one (dims, row, col) count shuffle, meta commit marker
-    LAST (readers reject a half-built cube). Geometry is frozen for
-    the cube's life — ε = e/w and δ = e^−d are design-time choices;
-    appends under different geometry would corrupt every estimate."""
+    """Ingest: one (dims, row, col) count shuffle through
+    ``catalog.build_counts`` (meta last). Geometry is frozen for the
+    cube's life — ε = e/w and δ = e^−d are design-time choices; appends
+    under different geometry would corrupt every estimate."""
     if not dims:
         raise ValueError("build_cms_cube: need at least one dim")
     if d < 1 or w < 2:
         raise ValueError("build_cms_cube: need d >= 1, w >= 2")
-    cube_p, batches_p, meta_p = _paths(path)
-    spark = df.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
-    for stale in (cube_p, batches_p):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    _cube_rows(df, dims, key_col, d, w, seed).write.mode("overwrite").parquet(cube_p)
-
-    local_df(spark, [("__build__",)], "batch_id string").write.mode(
-        "overwrite"
-    ).parquet(batches_p)
-    write_meta(
-        spark, meta_p, "dims array<string>, key_col string, d int, w int, seed int",
+    build_counts(
+        _cube_rows(df, dims, key_col, d, w, seed), path,
+        "dims array<string>, key_col string, d int, w int, seed int",
         (list(dims), str(key_col), int(d), int(w), int(seed)),
     )
 
 
 def append_cms_cube(shard: DataFrame, path: str, batch_id: str) -> int:
-    """Incremental ingest under the FROZEN geometry, registry-gated
-    exactly like append_hist_cube (counts ADD, so replay needs the
-    batch registry; it commits FIRST and a replayed id is a no-op;
-    the crash-retry contract — retry under a NEW id — is the
-    documented histcube one). Returns cube rows appended."""
-    spark = shard.sparkSession
-    dims, key_col, d, w, seed = _read_meta(spark, path)
-    cube_p, batches_p, _ = _paths(path)
-    if not batch_id or batch_id == "__build__":
-        raise ValueError(
-            "append_cms_cube: need a non-empty batch_id (not the reserved "
-            "'__build__')"
-        )
-    seen = spark.read.parquet(batches_p).filter(F.col("batch_id") == str(batch_id))
-    if seen.limit(1).count() > 0:
-        return 0
-    rows = _cube_rows(shard, dims, key_col, d, w, seed).localCheckpoint(eager=True)
-    n = rows.count()
-
-    local_df(spark, [(str(batch_id),)], "batch_id string").write.mode(
-        "append"
-    ).parquet(batches_p)
-    rows.write.mode("append").parquet(cube_p)
-    return n
+    """Incremental ingest under the FROZEN geometry, registry-gated on
+    ``batch_id`` like ``append_hist_cube`` (``catalog.append_counts``).
+    Returns cube rows appended."""
+    dims, key_col, d, w, seed = _read_meta(shard.sparkSession, path)
+    return append_counts(
+        _cube_rows(shard, dims, key_col, d, w, seed), path, batch_id, "append_cms_cube"
+    )
 
 
 def cms_rollup(
@@ -164,9 +134,8 @@ def cms_rollup(
     bad = [g for g in group_by if g not in dims]
     if bad:
         raise ValueError(f"cms_rollup: {bad!r} not in cube dims {dims!r}")
-    cube_p, _, _ = _paths(path)
     return (
-        spark.read.parquet(cube_p)
+        spark.read.parquet(_paths(path)[0])
         .groupBy(*group_by, "row", "col")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.operators.textan import dup_gram_hash, word_ngrams
 from data_pengadaan_agent_spark.sources.catalog import (
+    begin_build,
     compact,
     flagged_rows,
     local_df,
@@ -198,16 +199,9 @@ def build_gram_counts(
         raise ValueError("build_gram_counts: length and n_buckets must be >= 1")
     counts_p, docs_p, meta_p, commits_p = _paths(path)
     spark = docs.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
-    # a rebuild over a prior index must also clear its repair intents,
-    # or the fresh audit would flag phantom never-committed batches
-    intents_fs = jvm_path(_intents_path(path))
-    if fs.exists(intents_fs):
-        fs.delete(intents_fs, True)
+    # the repair intents go too, or the fresh audit would flag phantom
+    # never-committed batches
+    begin_build(spark, meta_p, counts_p, docs_p, commits_p, _intents_path(path))
     docs = docs.dropDuplicates([id_col])
     _shard_counts(
         docs, length, n_buckets, arith_hash, text_col, id_col, batch=0

@@ -73,11 +73,6 @@ def filter_keywords(
     return df.filter(keyword_cnf(F.col(column), include, exclude))
 
 
-def attribute_filter(df: DataFrame, column: str, value) -> DataFrame:
-    """P5: equality filter on a low-cardinality attribute."""
-    return df.filter(F.col(column) == value)
-
-
 def date_range_filter(df: DataFrame, ts_column: str, start=None, end=None) -> DataFrame:
     """P5: inclusive timestamp range filter (either bound optional)."""
     c = F.col(ts_column)

@@ -43,12 +43,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
-
-
-def _paths(path: str) -> tuple[str, str, str]:
-    p = path.rstrip("/")
-    return f"{p}/cube", f"{p}/batches", f"{p}/meta"
+from data_pengadaan_agent_spark.sources.catalog import (
+    append_counts,
+    build_counts,
+    cube_paths as _paths,
+    read_meta,
+)
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -96,73 +96,34 @@ def build_hist_cube(
     hi: float,
     n_bins: int = 64,
 ) -> None:
-    """Ingest: one (dims, bin) count shuffle, then the 1-row meta
-    COMMIT MARKER last (readers reject a half-built cube). [lo, hi,
-    n_bins] freeze the bin geometry for the cube's life — appends
-    under a different geometry would silently corrupt every quantile,
-    so the law lives in meta and appends validate against it."""
+    """Ingest: one (dims, bin) count shuffle through
+    ``catalog.build_counts`` (meta last). [lo, hi, n_bins] freeze the
+    bin geometry for the cube's life — appends under a different
+    geometry would silently corrupt every quantile, so the law lives in
+    meta and appends validate against it."""
     if not dims:
         raise ValueError("build_hist_cube: need at least one dim")
     if not (float(lo) < float(hi)):
         raise ValueError("build_hist_cube: need lo < hi")
     if n_bins < 2:
         raise ValueError("build_hist_cube: n_bins must be >= 2")
-    cube_p, batches_p, meta_p = _paths(path)
-    spark = df.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
-    for stale in (cube_p, batches_p):
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
-    _cube_rows(df, dims, value_col, lo, hi, n_bins).write.mode(
-        "overwrite"
-    ).parquet(cube_p)
-
-    local_df(spark, [("__build__",)], "batch_id string").write.mode(
-        "overwrite"
-    ).parquet(batches_p)
-    write_meta(
-        spark, meta_p,
+    build_counts(
+        _cube_rows(df, dims, value_col, lo, hi, n_bins), path,
         "dims array<string>, value_col string, lo double, hi double, n_bins int",
         (list(dims), str(value_col), float(lo), float(hi), int(n_bins)),
     )
 
 
 def append_hist_cube(shard: DataFrame, path: str, batch_id: str) -> int:
-    """Incremental ingest of one shard under the FROZEN bin geometry.
-    Count addition is not replay-idempotent, so the caller names the
-    batch and the tiny batch registry commits FIRST: a replayed
-    ``batch_id`` is a no-op (returns 0), and a crash between registry
-    and cube write leaves an UNDER-counted batch that the registry
-    makes visible (``audit``: registered batch whose rows never
-    landed cannot be distinguished from a legitimately-empty shard,
-    so callers replaying after a crash should use a NEW batch id for
-    the retry — the documented contract, same as the dupindex batch
-    tags). Returns cube rows appended."""
-    spark = shard.sparkSession
-    dims, value_col, lo, hi, n_bins = _read_meta(spark, path)
-    cube_p, batches_p, _ = _paths(path)
-    if not batch_id or batch_id == "__build__":
-        raise ValueError("append_hist_cube: need a non-empty batch_id "
-                         "(not the reserved '__build__')")
-    seen = spark.read.parquet(batches_p).filter(
-        F.col("batch_id") == str(batch_id)
+    """Incremental ingest of one shard under the FROZEN bin geometry,
+    registry-gated on ``batch_id`` (``catalog.append_counts``: a
+    replayed id is a no-op; a retry after a crash takes a new id).
+    Returns cube rows appended."""
+    dims, value_col, lo, hi, n_bins = _read_meta(shard.sparkSession, path)
+    return append_counts(
+        _cube_rows(shard, dims, value_col, lo, hi, n_bins), path, batch_id,
+        "append_hist_cube",
     )
-    if seen.limit(1).count() > 0:
-        return 0
-    rows = _cube_rows(shard, dims, value_col, lo, hi, n_bins).localCheckpoint(
-        eager=True
-    )
-    n = rows.count()
-
-    local_df(spark, [(str(batch_id),)], "batch_id string").write.mode(
-        "append"
-    ).parquet(batches_p)
-    rows.write.mode("append").parquet(cube_p)
-    return n
 
 
 def hist_rollup(
@@ -178,8 +139,7 @@ def hist_rollup(
         raise ValueError(
             f"hist_rollup: {bad!r} not in cube dims {dims!r}"
         )
-    cube_p, _, _ = _paths(path)
-    cube = spark.read.parquet(cube_p)
+    cube = spark.read.parquet(_paths(path)[0])
     out = cube.groupBy(*group_by, "bin").agg(
         F.sum("cnt").cast("bigint").alias("cnt")
     )

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from data_pengadaan_agent_spark.operators.sampling import split_hash_col
 from data_pengadaan_agent_spark.sources.catalog import (
+    append_union,
+    begin_build,
     compact,
     logged,
     read_meta,
@@ -102,13 +104,7 @@ def build_kmv_cube(
     _require_integral(df, key_col, "build_kmv_cube")
     samples_p, meta_p = _paths(path)
     spark = df.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
-    if fs.exists(jvm_path(samples_p)):
-        fs.delete(jvm_path(samples_p), True)
+    begin_build(spark, meta_p, samples_p)
     _sample_rows(df, dims, key_col, k).write.mode("overwrite").parquet(samples_p)
     _write_meta(spark, meta_p, dims, key_col, k)
 
@@ -121,14 +117,8 @@ def append_kmv_cube(shard: DataFrame, path: str) -> int:
     at-least-once duplication converges to the identical sketch (the
     bloom/HLL algebra argument — second count-free index family).
     Returns sample rows appended."""
-    spark = shard.sparkSession
-    dims, key_col, k = _read_meta(spark, path)
-    samples_p, _ = _paths(path)
-    rows = _sample_rows(shard, dims, key_col, k).localCheckpoint(eager=True)
-    n = rows.count()
-    if n:
-        rows.write.mode("append").parquet(samples_p)
-    return n
+    dims, key_col, k = _read_meta(shard.sparkSession, path)
+    return append_union(_sample_rows(shard, dims, key_col, k), _paths(path)[0])
 
 
 def kmv_state(spark: SparkSession, path: str, group_by: list[str] | None = None) -> DataFrame:

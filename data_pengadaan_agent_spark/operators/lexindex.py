@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from data_pengadaan_agent_spark.operators.textan import bm25_int_coeffs, tokens
 from data_pengadaan_agent_spark.sources.catalog import (
     audit_registry,
+    begin_build,
     compact,
     logged,
     new_rows,
@@ -136,12 +137,7 @@ def build_postings_index(
 
     posts_p, doclen_p, meta_p = _paths(path)
     spark = docs.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs_path = jvm_path(meta_p)
-    fs = meta_fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs_path):
-        fs.delete(meta_fs_path, True)
-
+    begin_build(spark, meta_p, posts_p, doclen_p)
     postings, doclen = _rows(docs, text_col, id_col, n_buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(posts_p)
     doclen.write.mode("overwrite").parquet(doclen_p)

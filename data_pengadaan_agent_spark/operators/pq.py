@@ -56,11 +56,13 @@ from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
     audit_registry,
+    begin_build,
     compact,
     flagged_rows,
     local_df,
     logged,
     new_rows,
+    read_dir,
     spread,
 )
 
@@ -373,12 +375,8 @@ def build_ivfpq_table(
     The residual PQ trains on ALL residuals (the paper's single shared
     codebook)."""
     spark = df.sparkSession
-    ids_p, coarse_p, pqcb_p = _ivfpq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(pqcb_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    for stale in (coarse_p, pqcb_p):  # index invalid until recommit
-        if fs.exists(jvm_path(stale)):
-            fs.delete(jvm_path(stale), True)
+    ids_p, _, pqcb_p = _ivfpq_sidecars(path)
+    begin_build(spark, pqcb_p, path)  # the sidecars live inside ``path``
     # same dedup contract as build_gram_counts/append_ivfpq_table
     # (ADVICE r10): the ids sidecar was already deduped, but codes were
     # encoded from the raw frame — duplicate vec_ids yielded duplicate
@@ -543,8 +541,8 @@ def load_ivfpq_codebooks(
     committed (codes without codebooks)."""
     _, coarse_p, pqcb_p = _ivfpq_sidecars(path)
     try:
-        crows = spark.read.parquet(coarse_p).collect()
-        prows = spark.read.parquet(pqcb_p).collect()
+        crows = read_dir(spark, coarse_p).collect()
+        prows = read_dir(spark, pqcb_p).collect()
     except Exception as exc:  # noqa: BLE001 - absent = invalid index
         raise ValueError(
             f"ivfpq index at {path!r} has no readable codebooks — the "

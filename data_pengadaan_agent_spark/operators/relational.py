@@ -188,19 +188,6 @@ def large_volume_orders(
     )
 
 
-def pivot_status_by_priority(orders: DataFrame) -> DataFrame:
-    """Pivot: order counts, status × priority. Values enumerated
-    explicitly — at scale an unenumerated pivot needs an extra
-    distinct-scan job to discover columns."""
-    prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-    aliases = ["p_urgent", "p_high", "p_medium", "p_notspec", "p_low"]
-    piv = orders.groupBy("o_orderstatus").pivot("o_orderpriority", prios).count()
-    return piv.select(
-        "o_orderstatus",
-        *[F.coalesce(F.col(f"`{p}`"), F.lit(0)).alias(a) for p, a in zip(prios, aliases)],
-    ).orderBy("o_orderstatus")
-
-
 def cube_returns(lineitem: DataFrame) -> DataFrame:
     """CUBE grouping sets over returnflag × linestatus."""
     return (
@@ -212,17 +199,6 @@ def cube_returns(lineitem: DataFrame) -> DataFrame:
         .orderBy(
             F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first()
         )
-    )
-
-
-def exact_percentiles(df: DataFrame, col: str, points=(0.25, 0.5, 0.75)) -> DataFrame:
-    """Exact linear-interpolation percentiles (type R-7, same method
-    as DuckDB quantile_cont). Exact percentile requires a full sort of
-    the column per group — at 100 TB swap in approx_percentile
-    (KLL/GK sketch, mergeable, one pass); same call shape."""
-    pct = F.percentile(F.col(col), F.array(*[F.lit(p) for p in points]))
-    return df.agg(
-        *[F.round(pct[i], 4).alias(f"p{int(p * 100)}") for i, p in enumerate(points)]
     )
 
 
@@ -252,43 +228,6 @@ def priority_with_late_lines(orders: DataFrame, lineitem: DataFrame) -> DataFram
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
         .orderBy("o_orderpriority")
-    )
-
-
-def returnflag_priority_mix(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """TPC-H Q12 shape (shipmode→returnflag): conditional counts via
-    sum(CASE WHEN) — one pass, no second scan per condition. The
-    orders side is projected to (key, priority) before the join."""
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        lineitem.select("l_orderkey", "l_returnflag")
-        .join(orders.select("o_orderkey", "o_orderpriority"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(hi, 0).otherwise(1)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def promo_revenue_share(part: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """TPC-H Q14 shape: conditional-aggregate ratio. part is a dim →
-    broadcast join, zero shuffle on the fact side; both numerator and
-    denominator come out of ONE aggregation."""
-    rev = F.col("l_extendedprice").cast(D18) * (F.lit(1.0) - F.col("l_discount")).cast(D8)
-    return (
-        lineitem.select("l_partkey", "l_extendedprice", "l_discount")
-        .join(F.broadcast(part.select("p_partkey", "p_type")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            (
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev)).cast("double")
-                / F.sum(rev).cast("double")
-            ).alias("promo_revenue_pct")
-        )
     )
 
 
@@ -359,25 +298,6 @@ def idle_rich_customers(
     )
 
 
-def cumulative_revenue(orders: DataFrame) -> DataFrame:
-    """Running cumulative sum over an ordered monthly series. The
-    window partitions by order status so the sort is distributed per
-    status — an intentionally keyed running total (an unpartitioned
-    running total over raw rows would serialize; at scale, aggregate
-    first, window over the small rollup)."""
-    monthly = orders.groupBy(
-        "o_orderstatus", F.date_format("o_orderdate", "yyyy-MM").alias("bulan")
-    ).agg(F.sum(F.col("o_totalprice").cast(D18)).alias("m_total"))
-    w = Window.partitionBy("o_orderstatus").orderBy("bulan").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return monthly.select(
-        "o_orderstatus",
-        "bulan",
-        F.sum("m_total").over(w).cast("double").alias("cum_total"),
-    ).orderBy("o_orderstatus", "bulan")
-
-
 def customer_value_tiles(customer: DataFrame, n_tiles: int = 4) -> DataFrame:
     """ntile + percent_rank over account balance within market segment:
     the ranking-window family. Per-segment partitions distribute the
@@ -433,19 +353,6 @@ def monthly_orders_vs_events(orders: DataFrame, events: DataFrame) -> DataFrame:
             F.coalesce("n_events", F.lit(0)).alias("n_events"),
         )
         .orderBy("month")
-    )
-
-
-def surplus_order_multiplicity(orders: DataFrame, customer: DataFrame) -> DataFrame:
-    """EXCEPT ALL (multiset difference): each customer key appears
-    (orders-per-customer − 1) times after subtracting the customer
-    list once. Spark plans exceptAll as an aggregate of signed counts
-    — one shuffle, no join explosion."""
-    return (
-        orders.select(F.col("o_custkey").alias("custkey"))
-        .exceptAll(customer.select(F.col("c_custkey").alias("custkey")))
-        .groupBy("custkey")
-        .agg(F.count(F.lit(1)).alias("multiplicity"))
     )
 
 
@@ -727,20 +634,6 @@ def market_share(
             ).alias("mkt_share")
         )
         .orderBy("l_year")
-    )
-
-
-def hourly_distinct_users(events: DataFrame) -> DataFrame:
-    """Exact windowed distinct — count(DISTINCT user) per hour. Spark
-    plans this as a two-phase expand+agg; at 100 TB swap the exact
-    count for approx_count_distinct (HLL, mergeable, one pass)."""
-    return (
-        events.groupBy(F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm").alias("hour"))
-        .agg(
-            F.countDistinct("user_id").alias("n_users"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .orderBy("hour")
     )
 
 
@@ -1083,27 +976,6 @@ def cohort_retention(
             ).cast("double")
             / F.lit(1000000.0)
         ).alias("retention"),
-    )
-
-
-def activity_heatmap(
-    events: DataFrame, ts_col: str = "ts", type_col: str = "event_type"
-) -> DataFrame:
-    """Day-of-week × hour-of-day activity heatmap cells (counts +
-    distinct users) — the C4-family chart data for temporal usage
-    patterns. ``dow`` is 0=Monday..6=Sunday (Spark ``weekday``;
-    DuckDB ``isodow - 1``). A single partial-aggregated count on a
-    168-value composite key: the shuffle is 168 rows regardless of
-    input size."""
-    return (
-        events.groupBy(
-            F.weekday(F.col(ts_col)).alias("dow"),
-            F.hour(F.col(ts_col)).alias("hod"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.count_distinct(F.col("user_id")).cast("bigint").alias("n_users"),
-        )
     )
 
 

@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pengadaan_agent_spark.sources.catalog import compact
+from data_pengadaan_agent_spark.sources.catalog import begin_build, compact
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -46,7 +46,7 @@ def _norm(a: Column) -> Column:
 
 def _norm_safe(a: Column) -> Column:
     """Zero-norm guard for cosine denominators (the r12
-    cosine_topk_pandas / l2_normalize_pandas convention, and what the
+    cosine_topk_pandas convention, and what the
     guarded keyword-retrieval oracle twins already spell): a zero
     vector scores 0, never NaN — NaN ranks ABOVE every real similarity
     under desc and would crowd real matches out of a top-k. Reachable
@@ -108,10 +108,9 @@ def cosine_topk_pandas(
             if len(pdf) == 0:
                 continue
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # zero-norm guard (self-review r12, the l2_normalize_pandas
-            # convention): 0/0 would give NaN, which Spark ranks ABOVE
-            # every real similarity under desc — zero vectors would
-            # crowd real matches out of the top-k
+            # zero-norm guard (self-review r12): 0/0 would give NaN,
+            # which Spark ranks ABOVE every real similarity under desc —
+            # zero vectors would crowd real matches out of the top-k
             norms = np.linalg.norm(m, axis=1)
             norms[norms == 0.0] = 1.0
             sims = (m @ q) / (norms * (qn if qn != 0.0 else 1.0))
@@ -123,31 +122,6 @@ def cosine_topk_pandas(
         score, schema=f"{id_col} long, similarity double"
     )
     return scored.orderBy(F.desc("similarity"), F.col(id_col)).limit(k)
-
-
-def l2_normalize_pandas(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Arrow-batched L2 normalization — the canonical 'UDF slow path
-    done right': one NumPy matrix op per batch instead of a per-row
-    Python call. Output keeps the array column; downstream cosine
-    reduces to a plain dot product."""
-    import numpy as np
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.sqrt((m * m).sum(axis=1, keepdims=True))
-            norms[norms == 0.0] = 1.0
-            yield pd.DataFrame({id_col: pdf[id_col], vec_col: list(m / norms)})
-
-    from data_pengadaan_agent_spark.sources.catalog import spread
-
-    return spread(df.select(id_col, vec_col), id_col).mapInPandas(
-        run, schema=f"{id_col} long, {vec_col} array<double>"
-    )
 
 
 # --- LSH (random hyperplane / SimHash family) ------------------------------
@@ -240,39 +214,6 @@ def cosine_pairs(
     )
 
 
-def banded_signatures(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    id_col: str = "vec_id",
-    bands: int = 4,
-    planes_per_band: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, band, sig) — one row per (vector, band), where ``sig`` is
-    the hyperplane bit-string of that band's planes. The banded form
-    trades precision for recall exactly like MinHash banding: two
-    vectors are candidates if ANY band signature collides. The frame
-    carries only ids and short strings — candidate generation shuffles
-    signatures, never vectors. The input is PROJECTED to (id, vec)
-    before spread(): the bands·planes·dim multiply-adds per row are
-    the dominant linear cost and a single-split input would run them
-    all on one core, but the round-robin exchange must not ship the
-    caller's text/payload columns along (self-review r12)."""
-    from data_pengadaan_agent_spark.sources.catalog import spread
-
-    df = spread(df.select(id_col, vec_col), id_col)
-    planes = _hyperplanes(dim, bands * planes_per_band, seed)
-    band_sigs = [
-        signature_col(F.col(vec_col), planes[b * planes_per_band : (b + 1) * planes_per_band])
-        for b in range(bands)
-    ]
-    return df.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_sigs)).alias("band", "sig"),
-    )
-
-
 def banded_signatures_blas(
     df: DataFrame,
     vec_col: str,
@@ -282,7 +223,7 @@ def banded_signatures_blas(
     planes_per_band: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """Arrow-batched BLAS twin of banded_signatures: one (batch×dim)
+    """Arrow-batched banded LSH signatures: one (batch×dim)
     @ (dim×planes) matmul signs every plane of every vector at once,
     replacing bands·planes interpreted higher-order-function dots per
     row (Catalyst evaluates aggregate()/zip_with() lambdas
@@ -431,6 +372,7 @@ def build_lsh_signature_table(
     probe after that is a partition-pruned read of one bucket —
     the scan never touches the other 2^n_planes buckets (Catalyst
     PartitionFilters, verified by a plan-shape test)."""
+    begin_build(df.sparkSession, path)
     _signed(df, vec_col, dim, id_col, n_planes, seed).write.mode(
         "overwrite"
     ).partitionBy("_sig").parquet(path)
@@ -602,19 +544,30 @@ def build_ivf_table(
             F.col(vec_col),
             ivf_centroid_col(F.col(vec_col), _hyperplanes(dim, n_centroids, seed)).alias("centroid_id"),
         )
+    # The previous build stays whole until this write starts (the
+    # table has no validity marker to delete first, so no
+    # ``begin_build``); the static overwrite mode, pinned on the write,
+    # then removes every old list — under a session default of
+    # ``dynamic`` the lists the new rows miss would survive.
     (
-        listed.write.mode("overwrite")
+        listed.write.option("partitionOverwriteMode", "static")
+        .mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(path)
     )
+    # The previous codebook goes only now, after the lists are written
+    # (ADVICE r6/r7): the probe keys its ranking geometry on the
+    # codebook's presence, so a stale one would rank hyperplane lists
+    # with obsolete centroids, and deleting it first would leave the
+    # old trained lists of a failed rebuild without it. A trained build
+    # then renames its staged codebook in.
+    spark = df.sparkSession
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    dst = jvm_path(f"{path}_codebook")
+    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.delete(dst, True)
     if train_iters > 0:
-        spark = df.sparkSession
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        dst = jvm_path(f"{path}_codebook")
         tmp = jvm_path(f"{path}_codebook_tmp")
-        fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(dst):
-            fs.delete(dst, True)
         # rename reports failure by RETURNING false (the swap_dirs
         # lesson): an unchecked failure here leaves trained lists with
         # NO codebook, and the probe's auto-detect would silently rank
@@ -628,21 +581,6 @@ def build_ivf_table(
                 "wrong geometry) — staged codebook left at the tmp path, "
                 "re-run the build"
             )
-    if train_iters <= 0:
-        # An earlier TRAINED build at the same path may have left a
-        # codebook behind; ivf_topk_precomputed's auto-detect keys the
-        # ranking geometry on its presence, so a stale one would rank
-        # hyperplane-assigned lists with obsolete trained centroids
-        # and silently collapse recall (ADVICE r6). Remove it only
-        # AFTER the list overwrite succeeds (ADVICE r7): deleting
-        # first meant a failure mid-overwrite left the previous
-        # build's TRAINED lists with no codebook — exactly the silent
-        # hyperplane-over-trained-lists collapse this delete prevents.
-        spark = df.sparkSession
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}_codebook")
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
 
 
 def append_ivf_table(
@@ -966,44 +904,6 @@ class KeywordIndex:
 # --- Lloyd k-means (centroid training for the IVF index) --------------------
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: Sequence[tuple[int, Sequence[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid (squared L2).
-    The k×dim codebook ships as a broadcast literal array; distances
-    and the argmin run as codegen'd column expressions — ZERO shuffle,
-    perfectly mapper-parallel at any scale. Ties break to the lowest
-    centroid id via lexicographic min over struct(dist, cid), which a
-    SQL twin can reproduce exactly (min(struct_pack(d, cid)))."""
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    carr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).cast("int").alias("cid"),
-                F.array(*[F.lit(float(v)) for v in cvec]).alias("cv"),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    dists = F.transform(
-        carr,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(vec, s["cv"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            ).alias("d"),
-            s["cid"].alias("cid"),
-        ),
-    )
-    return df.select(
-        F.col(id_col), F.col(vec_col), F.array_min(dists)["cid"].alias("cluster")
-    )
-
-
 def kmeans_assign_blas(
     df: DataFrame,
     centroids: Sequence[tuple[int, Sequence[float]]],
@@ -1011,10 +911,10 @@ def kmeans_assign_blas(
     id_col: str = "vec_id",
     with_dist: bool = False,
 ) -> DataFrame:
-    """Arrow-batched twin of kmeans_assign: one (batch×dim)@(dim×k)
+    """Arrow-batched k-means assignment: one (batch×dim)@(dim×k)
     matmul per batch computes every squared distance at once via
-    ‖a−c‖² = ‖a‖² − 2a·c + ‖c‖², then argmin with the same
-    lowest-cid tie-break. The expression version compiles a k×dim
+    ‖a−c‖² = ‖a‖² − 2a·c + ‖c‖², then argmin with ties to the
+    lowest cid. An expression version compiles a k×dim
     literal codebook into one giant interpreted expression (~15 s of
     analysis/codegen at k=4, dim=64 — per NEW codebook, so every
     Lloyd iteration pays it); this kernel is plan-size-constant.
@@ -1349,7 +1249,7 @@ def kmeans_lloyd(
     the exchange; the driver holds only the k×dim codebook between
     iterations (same driver-only-aggregates discipline as
     dedup_clusters' convergence counts). Assignment is shuffle-free
-    (see kmeans_assign). Returns (id, cluster) after ``iters``
+    (kmeans_assign_blas). Returns (id, cluster) after ``iters``
     rounds."""
     from data_pengadaan_agent_spark.sources.catalog import spread
 

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
+    append_union,
+    begin_build,
     compact,
     logged,
     read_meta,
@@ -93,11 +95,7 @@ def build_distinct_cube(
         raise ValueError("build_distinct_cube: lg_k must be in [4, 21]")
     cube_p, meta_p = _paths(path)
     spark = df.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
+    begin_build(spark, meta_p, cube_p)
     _sketch_rows(df, dims, key_col, int(lg_k)).write.mode("overwrite").parquet(
         cube_p
     )
@@ -112,14 +110,10 @@ def append_distinct_cube(shard: DataFrame, path: str) -> int:
     replayed epoch, a double-write, or a crash-then-retry all converge
     to the same estimates once the rows land. (n_rows IS
     duplication-sensitive — it counts arrivals, the at-least-once ack
-    semantic, not distinct keys.) Returns group rows appended."""
-    spark = shard.sparkSession
-    dims, key_col, lg_k = _read_meta(spark, path)
-    cube_p, _ = _paths(path)
-    rows = _sketch_rows(shard, dims, key_col, lg_k).localCheckpoint(eager=True)
-    n = rows.count()
-    rows.write.mode("append").parquet(cube_p)
-    return n
+    semantic, not distinct keys.) ``catalog.append_union`` writes
+    nothing for an empty shard. Returns group rows appended."""
+    dims, key_col, lg_k = _read_meta(shard.sparkSession, path)
+    return append_union(_sketch_rows(shard, dims, key_col, lg_k), _paths(path)[0])
 
 
 def distinct_rollup(

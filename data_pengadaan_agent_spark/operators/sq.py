@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
     audit_registry,
+    begin_build,
     compact,
     flagged_rows,
     local_df,
@@ -259,10 +260,7 @@ def build_sq_table(
     contract). Returns (mins, scales) for the query side."""
     spark = df.sparkSession
     ids_p, quant_p = _sq_sidecars(path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(quant_p).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path(quant_p)):  # index invalid until recommit
-        fs.delete(jvm_path(quant_p), True)
+    begin_build(spark, quant_p, path, ids_p)
     df = df.dropDuplicates([id_col])
     mins, scales = train_sq(df, dim, vec_col, id_col, levels)
     sq_encode(df, mins, scales, vec_col, id_col, levels).write.mode(

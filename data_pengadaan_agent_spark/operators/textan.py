@@ -197,26 +197,6 @@ def fingerprint_arith(
     )
 
 
-def top_terms_per_doc(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """Per-document top-k terms by frequency (rank window over the
-    exploded token counts; ties broken by token). The window partitions
-    per doc, so the sort is distributed across documents."""
-    from pyspark.sql import Window
-
-    counts = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tf"), F.col("token"))
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "token", "tf", F.col("rnk").cast("int").alias("rnk"))
-    )
-
-
 def chunk_text(
     df: DataFrame,
     text_col: str = "text",
@@ -1109,7 +1089,7 @@ def tfidf_top_terms(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
     """Per-document top-k terms by tf·idf — the classic keyword
-    extractor over a corpus (vs ``top_terms_per_doc``'s raw tf).
+    extractor over a corpus (rather than raw tf).
 
     The idf factor is an EXACT-ARITHMETIC proxy: instead of the
     floating ``ln(N/df)`` (whose last-ulp libm drift across engines
@@ -1294,12 +1274,10 @@ def _bm25_contrib_frame(
     k1: float,
     b: float,
 ) -> DataFrame:
-    """The shared per-(query, doc, term) contribution lineage of
-    ``bm25_retrieval_batch`` (which sums it) and
-    ``bm25_components_probe`` (which emits it raw): pruned posting
-    explode → tf aggregate → broadcast joins → the exact-integer
-    fraction-cleared contribution. One construction site so the probe
-    can never diverge from the operator it instruments. Columns:
+    """The per-(query, doc, term) contribution lineage that
+    ``bm25_retrieval_batch`` sums: pruned posting explode → tf
+    aggregate → broadcast joins → the exact-integer fraction-cleared
+    contribution. Columns:
     (qid, id, t, _tf, _dl, _df, _n_docs, _sum_dl, _c)."""
     coef_a, coef_b, coef_c, scale_l = bm25_int_coeffs(k1, b)
 
@@ -1357,44 +1335,6 @@ def _bm25_contrib_frame(
             "_sum_dl",
             contrib.alias("_c"),
         )
-    )
-
-
-def bm25_components_probe(
-    queries_df: DataFrame,
-    docs: DataFrame,
-    doc_mod: int = 500,
-    qid_col: str = "qid",
-    terms_col: str = "terms",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.5,
-    b: float = 0.75,
-) -> DataFrame:
-    """Diagnostic probe for the driver-red localization plan (VERDICT
-    r9 What's-wrong #1.iii): emit the RAW BIGINT components of every
-    BM25 contribution — (qid, doc_id, t, tf, dl, df, n_docs, sum_dl,
-    contrib) — restricted to the ``doc_id % doc_mod == 0`` slice so
-    the output stays small. Shares ``_bm25_contrib_frame`` with
-    ``bm25_retrieval_batch``, so a driver green/red on this probe
-    bisects the batch operator: probe green + batch red localizes the
-    divergence to the sum/rank/output stage; probe red shows WHICH
-    component column differs. Every hashed column is int64."""
-    frame = _bm25_contrib_frame(
-        queries_df, docs, qid_col, terms_col, text_col, id_col, k1, b
-    )
-    return frame.filter(
-        F.col(id_col) % F.lit(int(doc_mod)) == 0
-    ).select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.col("t"),
-        F.col("_tf").cast("bigint").alias("tf"),
-        F.col("_dl").cast("bigint").alias("dl"),
-        F.col("_df").cast("bigint").alias("df"),
-        F.col("_n_docs").cast("bigint").alias("n_docs"),
-        F.col("_sum_dl").cast("bigint").alias("sum_dl"),
-        F.col("_c").cast("bigint").alias("contrib"),
     )
 
 

@@ -21,12 +21,6 @@ def top_k(df: DataFrame, order: list[Column], k: int = 10) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def head_preview(df: DataFrame, n: int = 5) -> DataFrame:
-    """T3: first-n echo of a materialized result
-    (openai/list_of_tools.py:155, langchain/agent_setup.py:55)."""
-    return df.limit(n)
-
-
 def sorted_first_last(df: DataFrame, label_col: str, value_col: str) -> dict:
     """T4 fix: the reference reads .iloc[0]/.iloc[-1] assuming the
     query was sorted (openai/list_of_tools.py:262-266). Positional

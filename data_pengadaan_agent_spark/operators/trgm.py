@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.sources.catalog import (
+    begin_build,
     compact,
     flagged_rows,
     local_df,
@@ -134,22 +135,7 @@ def build_trgm_index(
 
     posts_p, docs_p, meta_p = _paths(path)
     spark = docs.sparkSession
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs_path = jvm_path(meta_p)
-    fs = meta_fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs_path):
-        fs.delete(meta_fs_path, True)
-
-    # delete the data dirs explicitly, not just meta: under
-    # spark.sql.sources.partitionOverwriteMode=dynamic (a common
-    # cluster default) a partitioned overwrite replaces only the
-    # buckets present in the NEW data, silently keeping stale
-    # partitions from the previous layout (self-review r12)
-    for p in (posts_p, docs_p):
-        fp = jvm_path(p)
-        if fs.exists(fp):
-            fs.delete(fp, True)
-
+    begin_build(spark, meta_p, posts_p, docs_p)
     fresh = spread(docs.dropDuplicates([id_col]), id_col)
     postings, registry = _gram_rows(fresh, text_col, id_col, n_buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(posts_p)

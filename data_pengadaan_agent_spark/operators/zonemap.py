@@ -59,7 +59,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from data_pengadaan_agent_spark.sources.catalog import local_df, read_meta, write_meta
+from data_pengadaan_agent_spark.sources.catalog import (
+    begin_build,
+    local_df,
+    read_meta,
+    write_meta,
+)
 
 
 def _paths(path: str) -> tuple[str, str]:
@@ -172,13 +177,7 @@ def build_zonemap(
     if not files:
         raise ValueError(f"build_zonemap: no parquet files at {data_path!r}")
     zones_p, meta_p = _paths(zm_path)
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
-
+    begin_build(spark, meta_p, zones_p)
     zones = _footer_sweep(spark, files, list(cols))
     zones.write.mode("overwrite").parquet(zones_p)
     write_meta(spark, meta_p, "cols array<string>", (list(cols),))
@@ -425,11 +424,7 @@ def build_valueset_index(
     if not files:
         raise ValueError(f"build_valueset_index: no parquet files at {data_path!r}")
     values_p, meta_p = _vs_paths(vs_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    meta_fs = jvm_path(meta_p)
-    fs = meta_fs.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(meta_fs):
-        fs.delete(meta_fs, True)
+    begin_build(spark, meta_p, values_p)
     _value_rows(spark, files, col).write.mode("overwrite").parquet(values_p)
     write_meta(spark, meta_p, "col string", (str(col),))
     return len(files)

@@ -18,9 +18,6 @@ layers:
    authoritative check — it sees exactly what Spark would execute,
    so no string trick can smuggle DML past it. Read-only metadata
    commands (``DESCRIBE``/``SHOW``) stay allowed.
-
-A Catalyst dry-run (``EXPLAIN``) remains available via
-``explain_check`` — a strictly stronger validity check than LLM lint.
 """
 
 from __future__ import annotations
@@ -138,9 +135,3 @@ def preview(spark: SparkSession, sql: str, n: int = 5) -> dict:
         "schema": df.schema.jsonValue(),
         "first_rows": [r.asDict(recursive=True) for r in df.limit(n).collect()],
     }
-
-
-def explain_check(spark: SparkSession, sql: str) -> str:
-    """V3 replacement: deterministic EXPLAIN dry-run instead of LLM lint."""
-    df = safe_sql(spark, sql)
-    return df._jdf.queryExecution().explainString("formatted")

@@ -132,23 +132,6 @@ def list_tables(spark: SparkSession) -> str:
     return ", ".join(sorted(t.name for t in spark.catalog.listTables()))
 
 
-def table_schema(spark: SparkSession, names: Iterable[str], sample_rows: int = 3) -> str:
-    """M3: DDL-ish schema + sample rows for named tables
-    (langchain/langchain_tool.py:56-81).
-    """
-    blocks = []
-    for name in names:
-        df = spark.table(name)
-        ddl_cols = ",\n  ".join(f"{f.name} {f.dataType.simpleString().upper()}" for f in df.schema.fields)
-        rows = [tuple(r) for r in df.limit(sample_rows).collect()]
-        blocks.append(
-            f"CREATE TABLE {name} (\n  {ddl_cols}\n)\n/*\n{sample_rows} rows:\n"
-            + "\n".join(str(r) for r in rows)
-            + "\n*/"
-        )
-    return "\n\n".join(blocks)
-
-
 def schema_head_echo(df: DataFrame, n: int = 5) -> dict:
     """M4: {schema, first n rows} echo returned after materialization
     (openai/list_of_tools.py:154-164, langchain/my_toolkit.py:73-109).
@@ -335,10 +318,47 @@ def swap_dirs(
 
 # --- Index lifecycle kernel ------------------------------------------------
 # The write contracts every maintained index shares (README "Index
-# lifecycle"): an append writes its registry first, so a replay is a
-# no-op; the audit flags registry ids without index rows; a repair
-# re-derives exactly those rows from a source frame; a compaction
-# commits through ``compact``.
+# lifecycle"): a build starts with ``begin_build`` and writes its
+# validity marker last; an append writes its registry first, so a
+# replay is a no-op; the audit flags registry ids without index rows; a
+# repair re-derives exactly those rows from a source frame; a
+# compaction commits through ``compact``.
+
+
+def begin_build(spark: SparkSession, *paths: str) -> None:
+    """The first step of every index build: delete ``paths`` in order —
+    the validity marker first, then every directory the build rewrites.
+    From the first delete on, readers reject the index; the build
+    writes its marker last, so a crash anywhere leaves an index readers
+    reject, never a mix of two builds. Deleting the data directories,
+    not only overwriting them, keeps a rebuild exact under
+    ``spark.sql.sources.partitionOverwriteMode=dynamic``: a partitioned
+    overwrite then replaces only the partitions the new rows touch, and
+    every other partition of the old build would survive. Hadoop
+    ``delete`` of an absent path returns false, so nothing is probed
+    first."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    for p in paths:
+        jvm_path(p).getFileSystem(conf).delete(jvm_path(p), True)
+
+
+def read_dir(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet rows of the directory ``path``. A ``_``-prefixed
+    sidecar is read through its file paths: named as the read path,
+    Spark's listing hides it, falls back to the path itself and logs
+    ``All paths were ignored`` on every read."""
+    if not _sidecar(path.rstrip("/").rsplit("/", 1)[-1]):
+        return spark.read.parquet(path)
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    return spark.read.parquet(
+        *(
+            str(st.getPath())
+            for st in fs.listStatus(jvm_path(path))
+            if not st.getPath().getName().startswith(("_", "."))
+        )
+    )
 
 
 def logged(fn):
@@ -359,7 +379,7 @@ def new_rows(batch: DataFrame, registry_p: str, id_col: str) -> tuple[DataFrame,
     """The rows of ``batch`` an append writes — one per id, none whose
     id the registry at ``registry_p`` holds — materialized, so every
     write of the append sees the same verdict, and their count."""
-    seen = batch.sparkSession.read.parquet(registry_p).select(id_col)
+    seen = read_dir(batch.sparkSession, registry_p).select(id_col)
     fresh = batch.dropDuplicates([id_col]).join(seen, id_col, "left_anti")
     fresh = fresh.localCheckpoint(eager=True)
     return fresh, fresh.count()
@@ -372,7 +392,7 @@ def audit_registry(
     an append whose second write died) and index rows without a
     registry id (``orphan_<noun>``: registry damage; rebuild). Empty =
     consistent."""
-    reg = spark.read.parquet(registry_p).select(id_col).distinct()
+    reg = read_dir(spark, registry_p).select(id_col).distinct()
     rows = spark.read.parquet(rows_p).select(id_col).distinct()
     missing = reg.join(rows, id_col, "left_anti").select(
         id_col, F.lit(f"missing_{noun}").alias("state")
@@ -399,6 +419,69 @@ def flagged_rows(
             "— a repair re-reads the original row of every flagged id"
         )
     return todo, n
+
+
+# Registered-batch counts (hist, CMS): ``cube/`` holds count rows that
+# readers SUM, ``batches/`` the batch ids whose rows landed, ``meta/``
+# the frozen geometry, written last.
+_BUILD_BATCH = "__build__"
+
+
+def cube_paths(path: str) -> tuple[str, str, str]:
+    p = path.rstrip("/")
+    return f"{p}/cube", f"{p}/batches", f"{p}/meta"
+
+
+def build_counts(rows: DataFrame, path: str, ddl: str, values) -> None:
+    """Build a registered-batch count cube from its count ``rows``:
+    the rows, the registry holding the build's reserved batch, then
+    the meta ``(ddl, values)``."""
+    spark = rows.sparkSession
+    cube_p, batches_p, meta_p = cube_paths(path)
+    begin_build(spark, meta_p, cube_p, batches_p)
+    rows.write.mode("overwrite").parquet(cube_p)
+    local_df(spark, [(_BUILD_BATCH,)], "batch_id string").write.mode("overwrite").parquet(
+        batches_p
+    )
+    write_meta(spark, meta_p, ddl, values)
+
+
+def append_counts(rows: DataFrame, path: str, batch_id: str, label: str) -> int:
+    """Append the count ``rows`` of batch ``batch_id``. Counts add, so
+    a replay would double them: the batch registry commits FIRST and a
+    registered ``batch_id`` is a no-op (returns 0). A crash between the
+    registry and the rows leaves the batch under-counted and
+    indistinguishable from an empty shard, so a retry after a crash
+    takes a NEW batch id. Returns cube rows appended."""
+    if not batch_id or batch_id == _BUILD_BATCH:
+        raise ValueError(
+            f"{label}: need a non-empty batch_id (not the reserved '{_BUILD_BATCH}')"
+        )
+    spark = rows.sparkSession
+    cube_p, batches_p, _ = cube_paths(path)
+    seen = spark.read.parquet(batches_p).filter(F.col("batch_id") == str(batch_id))
+    if seen.limit(1).count() > 0:
+        return 0
+    rows = rows.localCheckpoint(eager=True)
+    n = rows.count()
+    local_df(spark, [(str(batch_id),)], "batch_id string").write.mode("append").parquet(
+        batches_p
+    )
+    rows.write.mode("append").parquet(cube_p)
+    return n
+
+
+def append_union(rows: DataFrame, data_p: str) -> int:
+    """Append the sketch ``rows`` of an idempotent set-union family
+    (HLL, KMV) to ``data_p``: readers union the rows, so a replayed or
+    partly written append converges once the rows land again — no
+    registry, no marker. An empty shard writes nothing. Returns rows
+    appended."""
+    rows = rows.localCheckpoint(eager=True)
+    n = rows.count()
+    if n:
+        rows.write.mode("append").parquet(data_p)
+    return n
 
 
 def _sidecar(name: str) -> bool:

@@ -285,10 +285,17 @@ def _write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
     )
 
 
-def _append_sink(stream_df: DataFrame, checkpoint: str, append):
-    """Call ``append(batch_df, epoch_id)`` on every non-empty
-    micro-batch — the body of the cube sinks, whose replay safety is
-    the cube's own append contract."""
+def foreach_batch_cube_sink(stream_df: DataFrame, checkpoint: str, append):
+    """The sink of the mergeable cubes and filters: call
+    ``append(batch_df, epoch_id)`` on every non-empty micro-batch and
+    let the index's own append contract make a replayed epoch
+    harmless. Set-union sketches converge on a replay
+    (``lambda b, _: sketchcube.append_distinct_cube(b, path)``, likewise
+    ``kmv.append_kmv_cube``); count cubes take the epoch as their batch
+    id, so a replayed epoch finds it registered and appends nothing
+    (``lambda b, e: histcube.append_hist_cube(b, path, f"epoch_{e}")``,
+    likewise ``cmscube.append_cms_cube``). Returns the started
+    StreamingQuery."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.isEmpty():
@@ -787,42 +794,6 @@ def foreach_batch_trgm_sink(
     return _start(stream_df, checkpoint, write_batch)
 
 
-def foreach_batch_distinct_cube_sink(
-    stream_df,
-    cube_path: str,
-    checkpoint: str,
-):
-    """Streaming distinct-count ingest: each micro-batch is appended to
-    the HLL cube (``sketchcube.append_distinct_cube``). HLL union is
-    idempotent, so a replayed epoch converges to bit-identical
-    estimates with no registry, ack log or marker (the cube's n_rows
-    keeps at-least-once arrival counts). Returns the started
-    StreamingQuery."""
-    from data_pengadaan_agent_spark.operators import sketchcube as SC
-
-    return _append_sink(
-        stream_df, checkpoint, lambda b, _: SC.append_distinct_cube(b, cube_path)
-    )
-
-
-def foreach_batch_hist_cube_sink(
-    stream_df,
-    cube_path: str,
-    checkpoint: str,
-):
-    """Streaming quantile-cube ingest (``histcube.append_hist_cube``).
-    Counts ADD, so the epoch id is the batch-registry key: a replayed
-    epoch finds its id registered and appends nothing — exactly-once
-    bin counts on at-least-once foreachBatch. Returns the started
-    StreamingQuery."""
-    from data_pengadaan_agent_spark.operators import histcube as HC
-
-    return _append_sink(
-        stream_df, checkpoint,
-        lambda b, epoch_id: HC.append_hist_cube(b, cube_path, batch_id=f"epoch_{epoch_id}"),
-    )
-
-
 def foreach_batch_bloom_sink(
     stream_df,
     index_path: str,
@@ -847,25 +818,7 @@ def foreach_batch_bloom_sink(
             spark, [(int(epoch_id), int(n_new))], "batch_id bigint, n_new bigint"
         ).write.mode("append").parquet(ack_path)
 
-    return _append_sink(stream_df, checkpoint, ingest)
-
-
-def foreach_batch_cms_sink(
-    stream_df,
-    cube_path: str,
-    checkpoint: str,
-):
-    """Streaming frequency-sketch ingest (``cmscube.append_cms_cube``),
-    count-bearing like the hist cube, so the epoch id is the
-    batch-registry key and a replayed epoch appends nothing. Point
-    estimates are readable mid-stream. Returns the started
-    StreamingQuery."""
-    from data_pengadaan_agent_spark.operators import cmscube as CM
-
-    return _append_sink(
-        stream_df, checkpoint,
-        lambda b, epoch_id: CM.append_cms_cube(b, cube_path, batch_id=f"epoch_{epoch_id}"),
-    )
+    return foreach_batch_cube_sink(stream_df, checkpoint, ingest)
 
 
 def foreach_batch_dq_gate_sink(
@@ -962,25 +915,6 @@ def foreach_batch_dq_gate_sink(
         # epoch, which redoes both steps).
         jvm_path = b.sparkSession._jvm.org.apache.hadoop.fs.Path
         sib = jvm_path(f"{sibling}/_epoch={int(epoch_id)}")
-        fs = sib.getFileSystem(b.sparkSession._jsc.hadoopConfiguration())
-        if fs.exists(sib):
-            fs.delete(sib, True)
+        sib.getFileSystem(b.sparkSession._jsc.hadoopConfiguration()).delete(sib, True)
 
     return _start(stream_df, checkpoint, write_batch)
-
-
-def foreach_batch_kmv_sink(
-    stream_df,
-    cube_path: str,
-    checkpoint: str,
-):
-    """Streaming bottom-k distinct ingest (``kmv.append_kmv_cube``):
-    the sketch is a set that readers distinct-then-cut, so a replayed
-    epoch re-appends rows a DISTINCT absorbs — exactly-once estimates
-    with no bookkeeping and a DuckDB-verifiable state. Returns the
-    started StreamingQuery."""
-    from data_pengadaan_agent_spark.operators import kmv as KV
-
-    return _append_sink(
-        stream_df, checkpoint, lambda b, _: KV.append_kmv_cube(b, cube_path)
-    )

@@ -151,7 +151,10 @@ def test_streaming_cms_sink_parity(spark, tmp_path):
         .format("parquet")
         .load(src)
     )
-    q = SW.foreach_batch_cms_sink(stream, streamed, str(tmp_path / "ckpt"))
+    q = SW.foreach_batch_cube_sink(
+        stream, str(tmp_path / "ckpt"),
+        lambda b, e: C.append_cms_cube(b, streamed, f"epoch_{e}"),
+    )
     q.processAllAvailable()
     q.stop()
 

@@ -166,7 +166,10 @@ def test_streaming_hist_cube_sink_counts_equal_batch(spark, tmp_path):
         .format("parquet")
         .load(src)
     )
-    q = SW.foreach_batch_hist_cube_sink(stream, path, str(tmp_path / "ckpt"))
+    q = SW.foreach_batch_cube_sink(
+        stream, str(tmp_path / "ckpt"),
+        lambda b, e: HC.append_hist_cube(b, path, f"epoch_{e}"),
+    )
     q.processAllAvailable()
     q.stop()
 

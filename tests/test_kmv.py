@@ -131,7 +131,9 @@ def test_streaming_kmv_sink_parity(spark, tmp_path):
         .format("parquet")
         .load(src)
     )
-    q = SW.foreach_batch_kmv_sink(stream, streamed, str(tmp_path / "ckpt"))
+    q = SW.foreach_batch_cube_sink(
+        stream, str(tmp_path / "ckpt"), lambda b, _: K.append_kmv_cube(b, streamed)
+    )
     q.processAllAvailable()
     q.stop()
 

@@ -181,7 +181,9 @@ def test_streaming_cube_sink_estimates_equal_batch(spark, tmp_path):
         .format("parquet")
         .load(src)
     )
-    q = SW.foreach_batch_distinct_cube_sink(stream, path, str(tmp_path / "ckpt"))
+    q = SW.foreach_batch_cube_sink(
+        stream, str(tmp_path / "ckpt"), lambda b, _: SC.append_distinct_cube(b, path)
+    )
     q.processAllAvailable()
     q.stop()
 
