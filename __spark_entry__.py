@@ -1949,7 +1949,7 @@ def _q_decontaminate_semantic(spark, sf):
     )
 
 
-def _bm25_retrieval_batch_sql(k: int = 5, tail: str | None = None) -> str:
+def _bm25_retrieval_batch_sql(k: int = 5) -> str:
     """DuckDB twin of _q_bm25_retrieval_batch: integer-proxy idf and
     the EXACT-INTEGER contribution (round-9 determinism fix — the old
     round(double, 6) form hash-failed on a representation-boundary
@@ -1967,12 +1967,7 @@ def _bm25_retrieval_batch_sql(k: int = 5, tail: str | None = None) -> str:
     stacks serialize decimal128 ambiguously; int64 is one encoding).
     The query CTE also drops the version-sensitive list slice
     toks[1:3] for a zipped parallel-unnest ordinality filter (i < 3),
-    matching Spark's F.slice(toks, 1, 3) semantics explicitly.
-
-    ``tail`` swaps the final SELECT; the components-probe twin emits
-    the raw per-(qid, doc, term) BIGINT components from the SAME c
-    CTE the score sum consumes (the one-construction-site rule the
-    Spark side follows via _bm25_contrib_frame)."""
+    matching Spark's F.slice(toks, 1, 3) semantics explicitly."""
     return f"""
 WITH d AS (
   SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
@@ -2017,8 +2012,7 @@ r AS (
          row_number() OVER (PARTITION BY qid ORDER BY bm25 DESC, doc_id) AS rk
   FROM s
 )
-{tail if tail is not None else
- f"SELECT qid, doc_id, bm25, CAST(rk AS INT) AS rank FROM r WHERE rk <= " + str(k)}
+SELECT qid, doc_id, bm25, CAST(rk AS INT) AS rank FROM r WHERE rk <= {k}
 """
 
 
@@ -4092,7 +4086,8 @@ def _q_dup_spans_incremental(spark, sf):
     # #5; guide §2.4 / §6): the counts table re-laid-out as a managed
     # table bucketed on h removes the count side's per-query exchange
     # from BOTH the per-hash SUM and the merge join — measured 1.52×
-    # on the x16 corpus (tools/lap_bucketed_counts.py, NOTES.md) and
+    # on the x16 corpus (NOTES.md; the probe script, since deleted,
+    # lives in git history as tools/lap_bucketed_counts.py) and
     # at parity (within host noise) with the parquet path at sf0.1,
     # where the count side is only ~2.6 MB. The in-memory catalog is
     # session-scoped, so a fresh session rewrites the table once from

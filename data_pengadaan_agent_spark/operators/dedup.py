@@ -530,8 +530,8 @@ def dedup_clusters(
         )
         changed = new_ck.filter(F.col("label") != F.col("_prev")).limit(1).count()
         # the changed-count was the old checkpoint's last consumer —
-        # release it (self-review r14, the pagerank_int_converged
-        # lesson) instead of pinning one node-sized copy per round.
+        # release it (self-review r14) instead of pinning one
+        # node-sized copy per round.
         # Release the CHECKPOINT handle, not the projected view over
         # it (_release_local_checkpoint unpersists the LogicalRDD it
         # is handed — a Project on top would silently no-op).

@@ -328,8 +328,8 @@ def replay_quarantine(
         # (self-review r14): both frames are fully consumed by the
         # writes above, and without the release a long quarantine
         # pins every epoch's full batch in executor storage for the
-        # session (the pagerank_int_converged lesson — the RDD handle,
-        # not DataFrame.unpersist, frees localCheckpoint blocks)
+        # session (the RDD handle, not DataFrame.unpersist, frees
+        # localCheckpoint blocks)
         from data_pengadaan_agent_spark.operators.graph import (
             _release_local_checkpoint,
         )

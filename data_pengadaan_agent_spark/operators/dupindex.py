@@ -426,7 +426,8 @@ def dup_spans_incremental(
     (h, cnt) rows — e.g. a managed table bucketed on ``h``
     (``sources.readers.write_bucketed``), which removes the
     count-side exchange of both the per-hash SUM and the merge join
-    (see tools/lap_bucketed_counts.py for the measured payoff); the
+    (measured payoff in NOTES.md; the probe script is in git history as
+    tools/lap_bucketed_counts.py); the
     parquet layout stays the default because it keeps the index
     vanilla-session-portable.
 

@@ -37,13 +37,13 @@ Skew note (the winnow/dup_spans df-cap discipline does NOT apply
 here): a viral segment key would fan out, but capping keys breaks the
 completeness lemma and silently drops true pairs — for a dup DETECTOR
 that is wrong. Mass-identical strings make the OUTPUT itself
-quadratic; cap the corpus upstream (sample_per_group) if that is the
-data, not the join.
+quadratic; cap the corpus upstream (stratified_sample) if that is
+the data, not the join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def _segments(df: DataFrame, d: int, text_col: str, id_col: str) -> DataFrame:
@@ -204,65 +204,3 @@ def fuzzy_dup_pairs(
         .orderBy("a_id", "b_id")
     )
 
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    max_dist: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cross-corpus fuzzy equi-join: (left_id, right_id, dist) for
-    every pair within ``max_dist`` edits — the entity-resolution /
-    benchmark-decontamination shape ("is any training doc a typo away
-    from a benchmark entry"). The shorter string of a pair may live in
-    EITHER frame, so candidates are the union of segments(left) ⋈
-    probes(right) and segments(right) ⋈ probes(left), plus the two
-    directed short-block tails; each surviving pair is verified once."""
-    if max_dist < 1:
-        raise ValueError("fuzzy_join: max_dist must be >= 1")
-    d = int(max_dist)
-    lf = left.select(id_col, text_col).dropDuplicates([id_col])
-    rf = right.select(id_col, text_col).dropDuplicates([id_col])
-
-    def directed(seg_side: DataFrame, probe_side: DataFrame, flip: bool) -> DataFrame:
-        got = _segments(seg_side, d, text_col, id_col).join(
-            _probes(probe_side, d, text_col, id_col), ["_l", "_i", "_seg"]
-        )
-        lid = "_tid" if flip else "_sid"
-        rid = "_sid" if flip else "_tid"
-        return got.select(
-            F.col(lid).alias("left_id"), F.col(rid).alias("right_id")
-        )
-
-    def short(tiny: DataFrame, wide: DataFrame, flip: bool) -> DataFrame:
-        t = tiny.select(F.col(id_col).alias("_sid")).filter(
-            F.length(text_col) <= d
-        )
-        w = wide.select(F.col(id_col).alias("_tid")).filter(
-            F.length(text_col) <= 2 * d
-        )
-        got = F.broadcast(t).crossJoin(w)
-        lid = "_tid" if flip else "_sid"
-        rid = "_sid" if flip else "_tid"
-        return got.select(
-            F.col(lid).alias("left_id"), F.col(rid).alias("right_id")
-        )
-
-    cand = (
-        directed(lf, rf, flip=False)
-        .unionByName(directed(rf, lf, flip=True))
-        .unionByName(short(lf, rf, flip=False))
-        .unionByName(short(rf, lf, flip=True))
-        .distinct()
-    )
-    a = lf.select(F.col(id_col).alias("left_id"), F.col(text_col).alias("_ta"))
-    b = rf.select(F.col(id_col).alias("right_id"), F.col(text_col).alias("_tb"))
-    return (
-        cand.join(a, "left_id")
-        .join(b, "right_id")
-        .withColumn("dist", F.levenshtein("_ta", "_tb", d))
-        .filter(F.col("dist") >= 0)
-        .select("left_id", "right_id", F.col("dist").cast("int").alias("dist"))
-        .orderBy("left_id", "right_id")
-    )

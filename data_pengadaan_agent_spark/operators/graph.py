@@ -4,8 +4,8 @@ A curation pipeline keeps meeting graphs: near-dup pair graphs (whose
 connected components operators/dedup.py already closes), co-purchase /
 co-occurrence graphs, link graphs for quality propagation. This module
 adds the next analytics tier — degree structure, exact triangle
-counting, clustering coefficients, and a deterministic integer
-PageRank — all in the repo's exact-arithmetic class (BIGINT
+counting, clustering coefficients and incremental connected
+components — all in the repo's exact-arithmetic class (BIGINT
 end-to-end, integer DIV for every ratio), so DuckDB twins certify
 them value-for-value with no rounding probes.
 
@@ -24,13 +24,6 @@ Spark-first scale design:
   100 TB link graph and one that explodes on its hottest hub. Every
   triangle is produced exactly once (its vertices are totally ordered
   by (degree, id)), so counts need no post-deduplication.
-- ``pagerank_int`` runs in pure micro-unit integers: ranks start at
-  10^6, each step is rank DIV degree contributions summed per
-  neighbor, then 150_000 + 85·sum DIV 100 (d = 0.85 exactly, in
-  percent arithmetic). Truncation leaks tiny mass (documented —
-  deterministic bias, not noise) in exchange for bit-identical
-  results on any engine, any partitioning, any iteration order. The
-  driver twin unrolls the iterations in SQL, the kmeans-twin pattern.
 
 Reference parity note: the reference has no graph operators
 (SURVEY.md §2 extensions) — this family extends the engine the same
@@ -75,16 +68,6 @@ def degrees(edges: DataFrame) -> DataFrame:
         .unionAll(edges.select(F.col("v").alias("vertex")))
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    )
-
-
-def degree_histogram(edges: DataFrame) -> DataFrame:
-    """(degree, n_vertices) — the structure-at-a-glance rollup."""
-    return (
-        degrees(edges)
-        .groupBy("degree")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_vertices"))
-        .orderBy("degree")
     )
 
 
@@ -191,101 +174,6 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_int(edges: DataFrame, iters: int = 2, top_k: int | None = None) -> DataFrame:
-    """Deterministic integer PageRank over the undirected graph
-    (edges doubled into both directions). Micro-unit arithmetic:
-
-        rank_0(v)   = 10^6
-        contrib(v)  = rank(v) DIV degree(v)
-        rank_{t+1}  = 150_000 + 85 · Σ_{u→v} contrib(u) DIV 100
-
-    i.e. d = 0.85 computed exactly in percent integers; DIV truncates
-    toward zero on both engines (all quantities nonnegative). The
-    truncation loses < 1 micro-unit per contribution — a deterministic
-    bias every engine reproduces bit-for-bit, which is the point:
-    rank SUMS over doubles would be partition-order-dependent.
-    Returns (vertex, rank_ppm) ordered by rank desc, vertex."""
-    if iters < 1:
-        raise ValueError("pagerank_int: iters must be >= 1")
-    # deg and directed are consumed by EVERY unrolled iteration, and
-    # edges is typically a derived graph (a basket self-join) —
-    # materialize once so the lazy plan doesn't re-derive the graph
-    # per use (the triangles() lesson: 94 redundant scans without the
-    # barrier; same discipline as pagerank_int_converged)
-    own_edges = not _is_materialized(edges)
-    edges = _materialize_once(edges)
-    deg = degrees(edges).localCheckpoint(eager=True)
-    directed = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    # edges fed only deg + directed, both now eager — release a
-    # checkpoint THIS call created (never a caller's) immediately
-    if own_edges:
-        _release_local_checkpoint(edges)
-    rank = deg.select("vertex", F.lit(_PPM).cast("bigint").alias("rank_ppm"))
-    for _ in range(int(iters)):
-        rank = _pagerank_step(rank, deg, directed)
-    # ADVICE r13: the three support checkpoints were pinned for the
-    # session. Materialize the final ranks (vertex-count-sized — tiny
-    # next to the edge list) so the returned plan depends on nothing
-    # but them, then free deg + directed.
-    rank = rank.localCheckpoint(eager=True)
-    _release_local_checkpoint(deg)
-    _release_local_checkpoint(directed)
-    out = rank.orderBy(F.desc("rank_ppm"), "vertex")
-    # `is not None`, not truthiness: top_k=0 must mean limit(0), not
-    # the full ranking (self-review r12)
-    return out.limit(int(top_k)) if top_k is not None else out
-
-
-def _pagerank_step(
-    rank: DataFrame,
-    deg: DataFrame,
-    directed: DataFrame,
-    carry_prev: bool = False,
-) -> DataFrame:
-    """ONE exact-integer PageRank update — shared verbatim by the
-    fixed-iteration form (the certified twin) and the residual-stop
-    form, so converged(t iters) ≡ pagerank_int(iters=t) bit-for-bit.
-
-    ``carry_prev`` (optimization r14, guide §2.4): the residual-stop
-    caller needs Σ|rank_t − rank_{t−1}| each iteration; joining the
-    two rank frames costs an exchange of both sides per iteration
-    just to pair old with new. With ``carry_prev=True`` the update is
-    based on ``rank`` itself (same vertex set as ``deg`` — rank_0 is
-    derived from deg and every step preserves the base's vertex set,
-    so base-on-rank ≡ base-on-deg row-for-row) and the previous rank
-    rides along as ``_prev``; the residual becomes a plain aggregate
-    over the step's own output. rank_ppm arithmetic is untouched —
-    the bit-identical-trajectory contract holds for both forms
-    (pinned by test_pagerank_converged_matches_fixed_form_bit_exact).
-    """
-    contrib = (
-        rank.join(deg, "vertex")
-        .select(
-            F.col("vertex").alias("src"),
-            F.expr("rank_ppm DIV degree").cast("bigint").alias("c"),
-        )
-        .join(directed, "src")
-        .groupBy(F.col("dst").alias("vertex"))
-        .agg(F.sum("c").cast("bigint").alias("in_sum"))
-    )
-    base = (
-        rank.select("vertex", F.col("rank_ppm").alias("_prev"))
-        if carry_prev
-        else deg.select("vertex")
-    )
-    new_rank = (
-        F.lit(150_000).cast("bigint")
-        + F.expr("85 * coalesce(in_sum, 0) DIV 100").cast("bigint")
-    ).alias("rank_ppm")
-    return base.join(contrib, "vertex", "left").select(
-        "vertex", new_rank, *(["_prev"] if carry_prev else [])
-    )
-
-
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Actually free a superseded localCheckpoint: DataFrame.unpersist
     only clears cache-manager entries and is a NO-OP for the RDD
@@ -322,88 +210,6 @@ def _is_materialized(df: DataFrame) -> bool:
 def _materialize_once(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager) unless the plan already is one."""
     return df if _is_materialized(df) else df.localCheckpoint(eager=True)
-
-
-def pagerank_int_converged(
-    edges: DataFrame,
-    tol_ppm: int = 1_000,
-    max_iters: int = 50,
-    top_k: int | None = None,
-) -> tuple[DataFrame, dict]:
-    """Residual-stop PageRank (VERDICT r11 "what's missing" #4): the
-    production form for a real ranking job, where the right iteration
-    count is a property of the GRAPH, not a parameter guess. Same
-    exact-integer update as ``pagerank_int`` (shared ``_pagerank_step``
-    — bit-identical trajectories), but each iteration localCheckpoints
-    the new ranks (the merge_components lineage-truncation pattern:
-    an unbounded iterative plan otherwise grows linearly and re-executes
-    the whole chain per action) and stops when the L1 residual
-    Σ|rank_t − rank_{t−1}| ≤ tol_ppm — one extra 1-row aggregate per
-    iteration, the unavoidable price of a data-dependent stop.
-
-    Returns (ranks ordered by rank desc, info) with info =
-    {"iters": t, "residual_ppm": r, "converged": bool}; hitting
-    ``max_iters`` without meeting tol reports converged=False rather
-    than raising (the partial ranks are still the exact t-step
-    answer)."""
-    if max_iters < 1:
-        raise ValueError("pagerank_int_converged: max_iters must be >= 1")
-    # deg and directed are read EVERY iteration — checkpoint them once
-    # so the per-iteration jobs don't rescan edges and re-run the
-    # degree shuffle up to max_iters times (self-review r12)
-    deg = degrees(edges).localCheckpoint(eager=True)
-    directed = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    rank_ck = deg.select(
-        "vertex", F.lit(_PPM).cast("bigint").alias("rank_ppm")
-    ).localCheckpoint(eager=True)
-    rank = rank_ck
-    residual = None
-    iters_run = 0
-    for _ in range(int(max_iters)):
-        # carry_prev: the step emits (vertex, rank_ppm, _prev), so the
-        # residual is ONE aggregate over the just-materialized frame —
-        # the old per-iteration rank_t ⋈ rank_{t−1} join (an exchange
-        # of both checkpoints every round) is gone (optimization r14)
-        new_ck = _pagerank_step(rank, deg, directed, carry_prev=True).localCheckpoint(
-            eager=True
-        )
-        iters_run += 1
-        residual = (
-            new_ck.agg(
-                F.coalesce(
-                    F.sum(F.abs(F.col("rank_ppm") - F.col("_prev"))), F.lit(0)
-                ).cast("bigint")
-            )
-            .collect()[0][0]
-        )
-        # release the superseded checkpoint: new_ck is already
-        # materialized (eager) and the residual read only new_ck —
-        # without this, max_iters full rank copies stay pinned in
-        # executor storage for the session (self-review r12; the RDD
-        # handle, not DataFrame.unpersist, is what frees the blocks).
-        # Release the CHECKPOINT handle, never a projection over it
-        # (the dedup_clusters lesson, optimization r14 §4).
-        _release_local_checkpoint(rank_ck)
-        rank_ck = new_ck
-        rank = new_ck.select("vertex", "rank_ppm")
-        if residual <= int(tol_ppm):
-            break
-    # the final rank is its own checkpoint; deg + directed fed only
-    # the now-finished iterations (ADVICE r13: don't pin them for the
-    # session)
-    _release_local_checkpoint(deg)
-    _release_local_checkpoint(directed)
-    out = rank.orderBy(F.desc("rank_ppm"), "vertex")
-    info = {
-        "iters": iters_run,
-        "residual_ppm": int(residual),
-        "converged": residual <= int(tol_ppm),
-    }
-    return (out.limit(int(top_k)) if top_k is not None else out), info
 
 
 def merge_components(

@@ -19,7 +19,7 @@ smuggle in float division).
   a value is floor((x − lo) / width) clamped to [0, n_bins−1]; the
   subtraction and division are single IEEE ops on bit-identical
   doubles, so bucketing is STRUCTURALLY identical on every engine
-  (the weighted_sample determinism class). Values outside [lo, hi]
+  (the split_hash_col determinism class). Values outside [lo, hi]
   clamp to the edge bins (documented contract — the edge bins answer
   "how much mass escaped the design range", the retrain signal for a
   stale [lo, hi]).

@@ -256,7 +256,7 @@ def bm25_from_index(
     # dec_idiv_sql, not a bare DIV (self-review r14): Spark's DIV on
     # decimal operands silently wraps past-int64 quotients through
     # LongType — same construct and bound as textan's
-    # _bm25_contrib_frame; values identical, overflow now loud.
+    # bm25_retrieval_batch; values identical, overflow now loud.
     from data_pengadaan_agent_spark.functions.exactmath import dec_idiv_sql
 
     # (N, Σdl) are exact BIGINT literals off the meta marker — same

@@ -682,266 +682,6 @@ def dup_spans(
     )
 
 
-def dup_span_stats(
-    df: DataFrame,
-    length: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    arith_hash: bool = True,
-    min_count: int = 2,
-) -> DataFrame:
-    """Per-document duplicated-token budget over ``dup_spans``: total
-    tokens, tokens inside duplicated spans (spans are maximal and
-    disjoint after the gap-merge, so their lengths sum exactly), and
-    the exact-integer ratio ``dup_ppm = (10⁶ · dup_tokens) DIV
-    n_tokens`` — the number the paper's dedup decision (drop/trim
-    docs past a duplication budget) keys on. Documents with no
-    duplicated span (including docs shorter than ``length`` tokens,
-    which cannot clear the gram threshold) report zeros via the left
-    join — absence of evidence is a 0-ppm row, not a missing row.
-    Integer arithmetic end to end: bit-exact on any engine."""
-    spans = dup_spans(df, length, text_col, id_col, arith_hash, min_count)
-    per_doc = spans.groupBy(id_col).agg(
-        F.sum("span_len").cast("bigint").alias("dup_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_spans"),
-    )
-    base = df.select(
-        F.col(id_col), F.size(tokens(text_col)).cast("bigint").alias("n_tokens")
-    )
-    return base.join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        "n_tokens",
-        F.coalesce("dup_tokens", F.lit(0)).cast("bigint").alias("dup_tokens"),
-        F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
-        F.expr(
-            "CAST((1000000 * coalesce(dup_tokens, 0))"
-            " DIV greatest(n_tokens, 1) AS BIGINT)"
-        ).alias("dup_ppm"),
-    )
-
-
-def strip_dup_spans(
-    df: DataFrame,
-    length: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    arith_hash: bool = True,
-    min_count: int = 2,
-) -> DataFrame:
-    """The removal step of Lee et al. 2021: reassemble each document
-    with every duplicated span's tokens cut out (the paper deletes
-    the repeated bytes and keeps the remainder — same here at token
-    granularity). Kept columns: the cleaned text plus the before/after
-    token counts, so the caller can audit the cut.
-
-    Spans per document are few and integer-bounded, so they travel as
-    one ``collect_list`` of (start, end) structs per doc joined back
-    onto the document row, and the cut is a single ``filter`` over a
-    posexploded token column — no pair join, no UDF; the rejoin is
-    sort_array over (pos, token) structs then concat (array functions
-    are whole-stage-codegen'd). Documents with no spans pass through
-    unchanged via the left join."""
-    spans = dup_spans(df, length, text_col, id_col, arith_hash, min_count)
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
-    )
-    toks = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col)).alias("pos", "tok"),
-    )
-    kept = (
-        toks.join(per_doc, id_col, "left")
-        .filter(
-            F.col("_spans").isNull()
-            | ~F.exists(
-                "_spans",
-                lambda s: (F.col("pos") >= s["span_start"])
-                & (F.col("pos") <= s["span_end"]),
-            )
-        )
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("tok")))
-            ).alias("_kt")
-        )
-        .select(
-            F.col(id_col),
-            F.array_join(F.transform("_kt", lambda s: s["tok"]), " ").alias(
-                "clean_text"
-            ),
-            F.size("_kt").cast("bigint").alias("kept_tokens"),
-        )
-    )
-    base = df.select(
-        F.col(id_col), F.size(tokens(text_col)).cast("bigint").alias("n_tokens")
-    )
-    return base.join(kept, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        "n_tokens",
-        F.coalesce("kept_tokens", F.lit(0)).cast("bigint").alias("kept_tokens"),
-    )
-
-
-def dup_run_pairs(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    length: int = 8,
-    max_df: int = 50,
-    min_run: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    arith_hash: bool = True,
-) -> DataFrame:
-    """EXACT maximal shared token runs between two corpora, with
-    boundaries on both sides — the exact complement of
-    ``winnow_matches`` (whose spans are sketch EXTENTS that one
-    coincidental hash can inflate) and the cross-document pairing
-    view of ``dup_spans`` (which reports per-doc spans without saying
-    WHO they are shared with). For each (a, b) pair, every maximal
-    contiguous run of >= max(length, min_run) identical tokens is one
-    output row with exact [start, end] token positions on each side —
-    the report Lee et al. 2021 builds from the suffix array, and the
-    evidence a human reviews for license/plagiarism/contamination
-    triage.
-
-    The diagonal trick makes this ONE window pass instead of an
-    alignment algorithm: a shared run of R tokens is R−L+1 gram
-    matches at consecutive positions on BOTH sides, so every match in
-    the run has the same ``a_pos − b_pos`` — grouping joined gram
-    matches by (a, b, diagonal) and clustering consecutive a_pos
-    (new run iff a_pos > lag(a_pos) + 1) recovers every maximal run
-    exactly; run token length = gram_span + length − 1. The same
-    content repeated at several places in b shows up as several
-    diagonals — each reported separately, as it should be.
-
-    ``max_df`` is the same boilerplate/fan-out guard as
-    winnow_matches: a gram hash present in more than ``max_df``
-    documents of either corpus is dropped BEFORE the pair join
-    (bounding pair fan-out per hash at max_df²); dropped hashes are
-    boilerplate by definition and their runs are exactly what a
-    curation pass does not want pair-multiplied.
-
-    Scale shape: two gram passes (spread + posexplode, exchanges
-    carry (id, pos, int64) only), per-side document-frequency caps
-    (partial-aggregated), ONE hash equi-join pinned merge (both sides
-    explode-descended — never broadcast), then one
-    (a, b, diag) window + aggregate. All integer; arith_hash chooses
-    the 62-bit two-channel oracle hash vs JVM xxhash64."""
-
-    def _grams(df: DataFrame, side: str) -> DataFrame:
-        from data_pengadaan_agent_spark.sources.catalog import spread
-
-        g = spread(df, id_col).select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.posexplode(word_ngrams(text_col, length)).alias(f"{side}_pos", "g"),
-        )
-        out = g.select(
-            f"{side}_id",
-            F.col(f"{side}_pos").cast("bigint").alias(f"{side}_pos"),
-            dup_gram_hash(F.col("g"), arith_hash).alias("h"),
-        )
-        dfreq = out.groupBy("h").agg(
-            F.count_distinct(f"{side}_id").alias("_df")
-        )
-        return out.join(
-            dfreq.filter(F.col("_df") <= max_df).select("h").hint("merge"),
-            "h",
-            "left_semi",
-        )
-
-    if length < 1:
-        raise ValueError("dup_run_pairs: length must be >= 1")
-    a = _grams(df_a, "a")
-    b = _grams(df_b, "b")
-    m = a.join(b.hint("merge"), "h").select(
-        "a_id", "b_id", "a_pos", "b_pos", (F.col("a_pos") - F.col("b_pos")).alias("_diag")
-    )
-    w = Window.partitionBy("a_id", "b_id", "_diag").orderBy("a_pos")
-    runs = (
-        m.withColumn(
-            "_new",
-            F.when(
-                F.lag("a_pos").over(w).isNull()
-                | (F.col("a_pos") > F.lag("a_pos").over(w) + 1),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_run", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        .groupBy("a_id", "b_id", "_diag", "_run")
-        .agg(
-            F.min("a_pos").alias("a_start"),
-            (F.max("a_pos") + F.lit(int(length) - 1)).alias("a_end"),
-        )
-    )
-    return (
-        runs.select(
-            "a_id",
-            "b_id",
-            "a_start",
-            "a_end",
-            (F.col("a_start") - F.col("_diag")).alias("b_start"),
-            (F.col("a_end") - F.col("_diag")).alias("b_end"),
-            (F.col("a_end") - F.col("a_start") + F.lit(1)).alias("run_tokens"),
-        )
-        .filter(F.col("run_tokens") >= F.lit(max(int(min_run), int(length))))
-    )
-
-
-def lexical_diversity(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Integer-exact lexical-richness signals per document — the
-    unigram-concentration complement of ``repetition_stats`` (which
-    measures Gopher-style duplicate n-GRAM mass): type-token ratio,
-    hapax share, and the Simpson repeat concentration
-    Σ nᵢ(nᵢ−1) / (N(N−1)) — the probability two tokens drawn without
-    replacement are the same type, a standard template/spam signal
-    (high Simpson = the doc keeps repeating the same few words).
-
-    Everything is exact rational arithmetic emitted as parts-per-
-    million integers — ``x_ppm = (10⁶ · num) DIV den`` — so the
-    operator is bit-exact on any engine with 64-bit integers: no
-    logs, no doubles (entropy needs a log; Simpson is the
-    diversity index that doesn't). Single-token docs define
-    simpson_ppm = 0 (no unordered pair to collide).
-
-    Scale shape: one explode → groupBy(id, token) count →
-    groupBy(id) fold; both aggregates partial-combine map-side and
-    the second rides the first's hash partitioning on the id prefix.
-    Exchanges carry (id, token-hash counts) rows only."""
-    from data_pengadaan_agent_spark.sources.catalog import spread
-
-    tok = spread(df, id_col).select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("t")
-    )
-    counts = tok.groupBy(id_col, "t").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    return counts.groupBy(id_col).agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_types"),
-        F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("bigint").alias("n_hapax"),
-        F.sum(F.col("c") * (F.col("c") - 1)).cast("bigint").alias("_rep"),
-    ).select(
-        F.col(id_col),
-        "n_tokens",
-        "n_types",
-        "n_hapax",
-        F.expr("CAST((1000000 * n_types) DIV n_tokens AS BIGINT)").alias("ttr_ppm"),
-        F.expr("CAST((1000000 * n_hapax) DIV n_types AS BIGINT)").alias("hapax_ppm"),
-        F.expr(
-            "CAST(CASE WHEN n_tokens < 2 THEN 0 ELSE"
-            " (1000000 * _rep) DIV (n_tokens * (n_tokens - 1)) END AS BIGINT)"
-        ).alias("simpson_ppm"),
-    )
-
-
 def _overlap_hits(
     test_df: DataFrame,
     train_df: DataFrame,
@@ -1264,80 +1004,6 @@ def bm25_int_coeffs(k1: float, b: float) -> tuple[int, int, int, int]:
     return int(af * scale_l), int(bf * scale_l), int(cf * scale_l), scale_l
 
 
-def _bm25_contrib_frame(
-    queries_df: DataFrame,
-    docs: DataFrame,
-    qid_col: str,
-    terms_col: str,
-    text_col: str,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """The per-(query, doc, term) contribution lineage that
-    ``bm25_retrieval_batch`` sums: pruned posting explode → tf
-    aggregate → broadcast joins → the exact-integer fraction-cleared
-    contribution. Columns:
-    (qid, id, t, _tf, _dl, _df, _n_docs, _sum_dl, _c)."""
-    coef_a, coef_b, coef_c, scale_l = bm25_int_coeffs(k1, b)
-
-    toks = tokens(text_col)
-    # lower the query terms to the tokens() convention (self-review
-    # r12: an uppercase term silently matched nothing); explode first
-    # — generators cannot nest inside expressions
-    qterms = queries_df.select(
-        F.col(qid_col), F.explode(terms_col).alias("_t_raw")
-    ).select(F.col(qid_col), F.lower(F.col("_t_raw")).alias("t"))
-    vocab = qterms.select("t").distinct()
-    posts = docs.select(
-        F.col(id_col),
-        F.explode(toks).alias("t"),
-        F.size(toks).cast("bigint").alias("_dl"),
-    ).join(F.broadcast(vocab), "t", "left_semi")
-    tf = posts.groupBy(id_col, "t").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_tf"),
-        F.min("_dl").alias("_dl"),
-    )
-    dfreq = tf.groupBy("t").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_df")
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n_docs"),
-        F.sum(F.size(toks)).cast("bigint").alias("_sum_dl"),
-    )
-    # dec_idiv_sql, not a bare DIV: Spark's DIV on decimal operands
-    # routes the exact quotient through LongType and silently WRAPS
-    # past int64 (probed r14, functions.exactmath). The contribution
-    # bound below keeps the quotient int64-safe through N ~ 1.2e12
-    # docs, so values are identical — but beyond the bound the failure
-    # is now a loud ANSI cast error instead of a wrapped negative.
-    contrib = F.expr(
-        dec_idiv_sql(
-            f"""CAST((_n_docs * 1000000) DIV greatest(_df, 1) AS DECIMAL(38,0))
-             * CAST({coef_a} AS DECIMAL(38,0)) * _tf * _sum_dl""",
-            f"""CAST({scale_l} AS DECIMAL(38,0)) * _tf * _sum_dl
-             + CAST({coef_b} AS DECIMAL(38,0)) * _sum_dl
-             + CAST({coef_c} AS DECIMAL(38,0)) * _dl * _n_docs""",
-        )
-    )
-    return (
-        tf.join(F.broadcast(qterms), "t")
-        .join(F.broadcast(dfreq), "t")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.col("t"),
-            "_tf",
-            "_dl",
-            "_df",
-            "_n_docs",
-            "_sum_dl",
-            contrib.alias("_c"),
-        )
-    )
-
-
 def bm25_retrieval_batch(
     queries_df: DataFrame,
     docs: DataFrame,
@@ -1408,11 +1074,52 @@ def bm25_retrieval_batch(
     in one query weight that term twice — multiplicity is preserved
     identically on both engines. Documents sharing no term with a
     query are absent from its ranking (score 0), like bm25_score."""
-    scored = (
-        _bm25_contrib_frame(
-            queries_df, docs, qid_col, terms_col, text_col, id_col, k1, b
+    coef_a, coef_b, coef_c, scale_l = bm25_int_coeffs(k1, b)
+
+    toks = tokens(text_col)
+    # lower the query terms to the tokens() convention (self-review
+    # r12: an uppercase term silently matched nothing); explode first
+    # — generators cannot nest inside expressions
+    qterms = queries_df.select(
+        F.col(qid_col), F.explode(terms_col).alias("_t_raw")
+    ).select(F.col(qid_col), F.lower(F.col("_t_raw")).alias("t"))
+    vocab = qterms.select("t").distinct()
+    posts = docs.select(
+        F.col(id_col),
+        F.explode(toks).alias("t"),
+        F.size(toks).cast("bigint").alias("_dl"),
+    ).join(F.broadcast(vocab), "t", "left_semi")
+    tf = posts.groupBy(id_col, "t").agg(
+        F.count(F.lit(1)).cast("bigint").alias("_tf"),
+        F.min("_dl").alias("_dl"),
+    )
+    dfreq = tf.groupBy("t").agg(
+        F.count(F.lit(1)).cast("bigint").alias("_df")
+    )
+    stats = docs.agg(
+        F.count(F.lit(1)).cast("bigint").alias("_n_docs"),
+        F.sum(F.size(toks)).cast("bigint").alias("_sum_dl"),
+    )
+    # dec_idiv_sql, not a bare DIV: Spark's DIV on decimal operands
+    # routes the exact quotient through LongType and silently WRAPS
+    # past int64 (probed r14, functions.exactmath). The contribution
+    # bound below keeps the quotient int64-safe through N ~ 1.2e12
+    # docs, so values are identical — but beyond the bound the failure
+    # is now a loud ANSI cast error instead of a wrapped negative.
+    contrib = F.expr(
+        dec_idiv_sql(
+            f"""CAST((_n_docs * 1000000) DIV greatest(_df, 1) AS DECIMAL(38,0))
+             * CAST({coef_a} AS DECIMAL(38,0)) * _tf * _sum_dl""",
+            f"""CAST({scale_l} AS DECIMAL(38,0)) * _tf * _sum_dl
+             + CAST({coef_b} AS DECIMAL(38,0)) * _sum_dl
+             + CAST({coef_c} AS DECIMAL(38,0)) * _dl * _n_docs""",
         )
-        .select(F.col(qid_col), F.col(id_col), F.col("_c"))
+    )
+    scored = (
+        tf.join(F.broadcast(qterms), "t")
+        .join(F.broadcast(dfreq), "t")
+        .crossJoin(F.broadcast(stats))
+        .select(F.col(qid_col), F.col(id_col), contrib.alias("_c"))
         .groupBy(qid_col, id_col)
         .agg(F.sum("_c").cast("bigint").alias("bm25"))
     )
@@ -1718,49 +1425,6 @@ def boilerplate_ngrams(
     )
 
 
-def length_outlier_band(
-    df: DataFrame,
-    p_lo: float = 0.05,
-    p_hi: float = 0.95,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Token-length percentile band filter: flag documents whose
-    whitespace token count falls outside the corpus's exact
-    [p_lo, p_hi] percentile band — the standard "drop truncated
-    fragments and runaway concatenations" curation gate, with the
-    band derived FROM the corpus instead of hand-tuned constants.
-
-    Percentiles are EXACT (``percentile``, linear interpolation at
-    rank p·(n−1) — the same definition DuckDB's ``quantile_cont``
-    uses, so the bounds value-check across engines). At 100 TB exact
-    percentiles of a bigint column are one total-agg pass (Spark
-    partial-aggregates per partition and merges count maps — token
-    counts have tiny cardinality, ~thousands of distinct lengths);
-    swap in ``approx_percentile`` only if the value domain were
-    unbounded. The 1-row bounds frame joins back via broadcast, so
-    the operator costs two passes over the input (one for the bounds
-    aggregate, one for the flagged output) with ZERO row exchanges —
-    the right trade at scale, where a second scan is cheaper than
-    shuffling the corpus."""
-    n_tok = F.size(tokens(text_col)).cast("bigint")
-    base = df.select(F.col(id_col), n_tok.alias("n_tokens"))
-    bounds = base.agg(
-        F.percentile(F.col("n_tokens"), F.lit(float(p_lo))).alias("lo"),
-        F.percentile(F.col("n_tokens"), F.lit(float(p_hi))).alias("hi"),
-    )
-    in_band = (F.col("n_tokens") >= F.col("lo")) & (
-        F.col("n_tokens") <= F.col("hi")
-    )
-    return base.crossJoin(F.broadcast(bounds)).select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.round(F.col("lo"), 6).alias("p_lo"),
-        F.round(F.col("hi"), 6).alias("p_hi"),
-        in_band.alias("in_band"),
-    )
-
-
 def decontaminate_train(
     train_df: DataFrame,
     test_df: DataFrame,
@@ -1987,7 +1651,7 @@ def dsir_importance(
     product is DECIMAL(38,9) with no precision loss; a single doc
     repeating one bucket ≥1e9 times would overflow LOUDLY under
     ANSI). The keep threshold is a 1-row percentile aggregate
-    broadcast back (the length_outlier_band two-pass trade).
+    broadcast back (a two-pass trade: one scan, one tiny broadcast).
     Per-bucket log-ratios are rounded to 9 places and summed as
     DECIMAL, so accumulation order can never drift the score across
     partitionings or engines (the embedding_qa discipline).
@@ -2384,68 +2048,3 @@ def quality_classifier_stateless(
         *[F.col(c) for c in carry],
     )
 
-
-def collocations(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 20,
-    min_count: int = 3,
-) -> DataFrame:
-    """Top-``k`` adjacent-word collocations by exact integer lift —
-    the phrase-mining primitive (classically PMI; lift is PMI's
-    argument before the log, so the RANKING is identical and the
-    arithmetic stays exact):
-
-        lift_ppm = 10⁶ · N · c(w1w2)  DIV  (c(w1) · c(w2))
-
-    N = total tokens, counts from one explode each of the unigram and
-    bigram streams (``word_ngrams`` verbatim, so the oracle replays
-    the same construction). ``min_count`` guards the classic PMI
-    pathology (a pair of two hapaxes scores maximal lift); ties break
-    on the bigram string. All products fold through DECIMAL(38,0) —
-    day-one int64 would overflow at 10⁶·N·c ≈ 10²⁰ on a 10-TB corpus.
-    The count joins are pinned shuffle_hash (explode-derived garbage
-    estimates — the ngram_lm_score rule). Returns
-    (bigram, cnt, lift_ppm, rank)."""
-    if k < 1 or min_count < 1:
-        raise ValueError("collocations: need k >= 1 and min_count >= 1")
-    toks = df.select(F.explode(tokens(text_col)).alias("w"))
-    c1 = toks.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    # 1-row broadcast aggregate, not an eager .count() at plan time —
-    # the tfidf_top_terms pattern: constructing the plan must not run
-    # a corpus scan, and execution reads the corpus once, not twice
-    # (self-review r12)
-    tot = toks.agg(F.count(F.lit(1)).cast("bigint").alias("_n_total"))
-    bg = (
-        df.select(F.explode(word_ngrams(text_col, 2)).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .filter(F.col("cnt") >= int(min_count))
-        .withColumn("_w1", F.split("bigram", " ").getItem(0))
-        .withColumn("_w2", F.split("bigram", " ").getItem(1))
-    )
-    joined = (
-        bg.join(c1.hint("shuffle_hash"), bg["_w1"] == c1["w"])
-        .select("bigram", "cnt", "_w2", F.col("c").alias("_c1"))
-        .join(c1.hint("shuffle_hash"), F.col("_w2") == c1["w"])
-        .select("bigram", "cnt", "_c1", F.col("c").alias("_c2"))
-        .crossJoin(F.broadcast(tot))
-    )
-    # dec_idiv_sql, not a bare DIV (self-review r14): decimal DIV
-    # wraps past-int64 quotients silently; the lift quotient is
-    # <= 1e6*N/min_count, past int64 around N ~ 2.8e13 tokens
-    lift = F.expr(
-        dec_idiv_sql(
-            "CAST(1000000 AS DECIMAL(38,0)) * CAST(_n_total AS DECIMAL(38,0))"
-            " * CAST(cnt AS DECIMAL(38,0))",
-            "CAST(_c1 AS DECIMAL(38,0)) * CAST(_c2 AS DECIMAL(38,0))",
-        )
-    )
-    w = Window.orderBy(F.desc("lift_ppm"), F.asc("bigram"))
-    return (
-        joined.withColumn("lift_ppm", lift.cast("bigint"))
-        .orderBy(F.desc("lift_ppm"), F.asc("bigram"))
-        .limit(int(k))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("bigram", "cnt", "lift_ppm", "rank")
-    )

@@ -149,7 +149,8 @@ def stream_shuffle_partitions(spark: SparkSession) -> int:
     commit files PER PARTITION per batch), so width the state doesn't
     need is pure overhead — at 32 partitions for KB-scale state the
     three corpus-ingest queries ran 1.6–2.9× slower than at 8
-    (tools/stream_partitions_probe.py, interleaved A/B). A production
+    (interleaved A/B with tools/stream_partitions_probe.py, since
+    deleted; it is in git history). A production
     deployment with real state volume raises
     $SPARK_GRAFT_STREAM_SHUFFLE (or passes shuffle_partitions) to
     rate-appropriate width; state can only use parallelism it has
@@ -741,6 +742,7 @@ def foreach_batch_ivfpq_sink(
     duplicate still acks — the log answers "what arrived when", the
     ids registry "what the index holds". Returns the started
     StreamingQuery."""
+    _guard_fresh_checkpoint_roots(stream_df, checkpoint, (path,), "ivfpq sink", False)
     from data_pengadaan_agent_spark.operators import pq as PQ
 
     # Codebooks load ONCE at sink construction: the geometry is frozen
@@ -778,6 +780,7 @@ def foreach_batch_trgm_sink(
     ``foreach_batch_ivfpq_sink`` shape on the lexical side, with the
     same replay argument and the same at-least-once ack. Returns the
     started StreamingQuery."""
+    _guard_fresh_checkpoint_roots(stream_df, checkpoint, (path,), "trgm sink", False)
     from data_pengadaan_agent_spark.operators import trgm as TG
 
     def write_batch(batch_df, epoch_id: int) -> None:

@@ -91,24 +91,6 @@ def test_boilerplate_ngrams_invariants(spark, docs):
         assert out[len(rows) - 1]["n_boiler"] == out[len(rows) - 1]["n_ngrams"]
 
 
-@settings(max_examples=10, deadline=None)
-@given(st.lists(st.integers(min_value=1, max_value=50), min_size=3, max_size=12))
-def test_length_outlier_band_invariants(spark, counts):
-    """Band bounds lie within [min, max] token count; in_band is
-    monotone (anything between two in-band counts is in-band); the
-    full corpus is returned."""
-    from data_pengadaan_agent_spark.operators.textan import length_outlier_band
-
-    rows = [(i, " ".join(["w"] * c)) for i, c in enumerate(counts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = length_outlier_band(df, p_lo=0.25, p_hi=0.75).collect()
-    assert len(out) == len(rows)
-    lo, hi = out[0]["p_lo"], out[0]["p_hi"]
-    assert min(counts) <= lo <= hi <= max(counts)
-    for r in out:
-        assert r["in_band"] == (lo <= r["n_tokens"] <= hi)
-
-
 @settings(max_examples=4, deadline=None)
 @given(
     st.integers(min_value=0, max_value=2**31 - 1),
@@ -337,64 +319,6 @@ def test_bm25_batch_matches_integer_reference(spark, corpora, qterms):
         .collect()
     ]
     assert got == want, (corpora, qterms)
-
-
-@settings(max_examples=6, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.sampled_from("ab"), min_size=1, max_size=12),
-        min_size=1,
-        max_size=3,
-    ),
-    st.lists(
-        st.lists(st.sampled_from("ab"), min_size=1, max_size=12),
-        min_size=1,
-        max_size=3,
-    ),
-)
-def test_dup_run_pairs_matches_bruteforce_reference(spark, ca, cb):
-    """dup_run_pairs == an independent brute-force reference (every
-    (a, b, diagonal): consecutive equal-L-gram clustering) on random
-    2-letter corpora — heavy organic overlap exercises multi-diagonal
-    and run-boundary paths no hand fixture covers."""
-    from data_pengadaan_agent_spark.operators.textan import dup_run_pairs
-
-    L = 3
-    want = set()
-    for i, ta in enumerate(ca):
-        ga = [tuple(ta[p : p + L]) for p in range(len(ta) - L + 1)]
-        for j, tb in enumerate(cb):
-            gb = [tuple(tb[p : p + L]) for p in range(len(tb) - L + 1)]
-            for d in range(-len(gb) + 1, len(ga)):
-                run = []
-                for pa in range(max(0, d), min(len(ga), len(gb) + d)):
-                    if ga[pa] == gb[pa - d]:
-                        run.append(pa)
-                    else:
-                        if run:
-                            want.add((i, 100 + j, run[0], run[-1] + L - 1,
-                                      run[0] - d, run[-1] + L - 1 - d,
-                                      run[-1] - run[0] + L))
-                        run = []
-                if run:
-                    want.add((i, 100 + j, run[0], run[-1] + L - 1,
-                              run[0] - d, run[-1] + L - 1 - d,
-                              run[-1] - run[0] + L))
-    dfa = spark.createDataFrame(
-        [(i, " ".join(t)) for i, t in enumerate(ca)], "doc_id LONG, text STRING"
-    )
-    dfb = spark.createDataFrame(
-        [(100 + j, " ".join(t)) for j, t in enumerate(cb)],
-        "doc_id LONG, text STRING",
-    )
-    for arith in (True, False):
-        got = {
-            tuple(r)
-            for r in dup_run_pairs(
-                dfa, dfb, length=L, max_df=1000, arith_hash=arith
-            ).collect()
-        }
-        assert got == want, (ca, cb, arith)
 
 
 @settings(max_examples=10, deadline=None)

@@ -1,12 +1,11 @@
 """PassJoin fuzzy matching: completeness vs a brute-force oracle (the
 pigeonhole lemma is structural — EVERY true pair must surface), exact
-distances, degenerate short strings, cross-corpus join direction, and
-the no-cartesian plan shape."""
+distances, degenerate short strings and the no-cartesian plan
+shape."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.operators import fuzzy as FZ
 
@@ -100,24 +99,6 @@ def test_dup_pairs_property_vs_brute(spark):
         assert got == want and len(want) > 40
 
 
-def test_fuzzy_join_directions_and_shorts(spark):
-    """The shorter side of a pair may live in EITHER frame; short
-    strings route through the degenerate block in both directions."""
-    left = spark.createDataFrame(
-        [(1, "benchmark entry one"), (2, "x"), (3, "completely other")],
-        "doc_id LONG, text STRING",
-    )
-    right = spark.createDataFrame(
-        [(100, "benchmark entry one!"), (101, "xy"), (102, "benchmark entry on")],
-        "doc_id LONG, text STRING",
-    )
-    got = {
-        (r["left_id"], r["right_id"], r["dist"])
-        for r in FZ.fuzzy_join(left, right, max_dist=1).collect()
-    }
-    assert got == {(1, 100, 1), (1, 102, 1), (2, 101, 1)}
-
-
 def test_no_cartesian_product_in_plan(spark):
     df = spark.createDataFrame(
         _hand_corpus(), "doc_id LONG, text STRING"
@@ -137,51 +118,4 @@ def test_validation(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id LONG, text STRING")
     with pytest.raises(ValueError, match="max_dist"):
         FZ.fuzzy_dup_pairs(df, max_dist=0)
-    with pytest.raises(ValueError, match="max_dist"):
-        FZ.fuzzy_join(df, df, max_dist=0)
 
-
-def _sky_brute(rows):
-    out = set()
-    for i, (ix, iy) in enumerate(rows):
-        if ix is None or iy is None:
-            continue
-        dominated = any(
-            jx >= ix and jy >= iy and (jx > ix or jy > iy)
-            for j, (jx, jy) in enumerate(rows)
-            if j != i and jx is not None and jy is not None
-        )
-        if not dominated:
-            out.add((ix, iy))
-    return out
-
-
-def test_skyline_2d_matches_brute_force(spark):
-    from data_pengadaan_agent_spark.operators import relational as R
-
-    pts = []
-    for i in range(400):
-        h = (i * 2654435761) % (1 << 32)
-        pts.append((float(h % 97), float((h >> 8) % 89)))
-    pts += [(96.0, 88.0)] * 2  # duplicate maximal point: both rows survive
-    pts += [(None, 5.0), (5.0, None)]
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(pts)], "id LONG, x DOUBLE, y DOUBLE"
-    )
-    got = [(r["x"], r["y"]) for r in R.skyline_2d(df, "x", "y", n_partitions=7).collect()]
-    want = _sky_brute(pts)
-    assert set(got) == want
-    # duplicates of a skyline point are ALL returned
-    assert got.count((96.0, 88.0)) == 2
-    # monotone anti-chain: every point on the skyline
-    anti = spark.createDataFrame(
-        [(i, float(i), float(100 - i)) for i in range(50)], "id LONG, x DOUBLE, y DOUBLE"
-    )
-    assert R.skyline_2d(anti, "x", "y").count() == 50
-    # total order: exactly one survivor
-    chain = spark.createDataFrame(
-        [(i, float(i), float(i)) for i in range(50)], "id LONG, x DOUBLE, y DOUBLE"
-    )
-    assert [(r["x"], r["y"]) for r in R.skyline_2d(chain, "x", "y").collect()] == [
-        (49.0, 49.0)
-    ]

@@ -1,16 +1,14 @@
 """Graph family: edge derivation (canonical form + support
 sparsifier), exact triangle enumeration under the degree-ordered
 orientation (once-only, orientation-independent counts vs brute
-force), integer clustering coefficients, and the deterministic
-integer PageRank (hand-computed reference, partitioning invariance,
-damping arithmetic)."""
+force), integer clustering coefficients, and incremental connected
+components against a union-find reference."""
 
 from __future__ import annotations
 
 import itertools
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_pengadaan_agent_spark.operators import graph as G
 
@@ -98,71 +96,6 @@ def test_triangle_stats_values(spark):
     assert ordered == [1, 3, 2, 4]
 
 
-def test_degree_histogram(spark):
-    sq = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
-    got = {r.degree: r.n_vertices for r in
-           G.degree_histogram(_edges(spark, sq)).collect()}
-    assert got == {2: 2, 3: 2}
-
-
-def test_pagerank_hand_reference_path3(spark):
-    """P3 (1-2-3), one iteration: deg = (1,2,1), all ranks start 1e6.
-    contrib: ends 1e6, middle 5e5 each way.
-    rank(1) = rank(3) = 150000 + 85·500000 DIV 100 = 575000
-    rank(2) = 150000 + 85·2000000 DIV 100 = 1850000"""
-    pr = {r.vertex: r.rank_ppm for r in
-          G.pagerank_int(_edges(spark, [(1, 2), (2, 3)]), iters=1).collect()}
-    assert pr == {1: 575_000, 2: 1_850_000, 3: 575_000}
-
-
-def test_pagerank_partitioning_invariance_and_ties(spark):
-    pairs = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 1)]
-    e1 = _edges(spark, pairs)
-    e2 = e1.repartition(7, "v")
-    a = [tuple(r) for r in G.pagerank_int(e1, iters=3).collect()]
-    b = [tuple(r) for r in G.pagerank_int(e2, iters=3).collect()]
-    assert a == b
-    # symmetric vertices 2 and 4 tie exactly; order breaks by id
-    ranks = dict(a)
-    assert ranks[2] == ranks[4]
-    order = [v for v, _ in a]
-    assert order.index(2) < order.index(4)
-
-
-def test_pagerank_rejects_bad_iters(spark):
-    with pytest.raises(ValueError, match="iters"):
-        G.pagerank_int(_edges(spark, [(1, 2)]), iters=0)
-    with pytest.raises(ValueError, match="max_iters"):
-        G.pagerank_int_converged(_edges(spark, [(1, 2)]), max_iters=0)
-
-
-@pytest.mark.slow
-def test_pagerank_converged_matches_fixed_form_bit_exact(spark):
-    """VERDICT r11 #4: the residual-stop form shares _pagerank_step
-    with the certified fixed-iteration twin — converged-after-t ≡
-    pagerank_int(iters=t) bit-for-bit, the residual is the exact
-    integer L1 delta, and a too-small max_iters reports
-    converged=False with the exact t-step answer."""
-    pairs = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 1)]
-    e = _edges(spark, pairs)
-    out, info = G.pagerank_int_converged(e, tol_ppm=1_000, max_iters=30)
-    assert info["converged"] and 1 <= info["iters"] <= 30
-    assert info["residual_ppm"] <= 1_000
-    fixed = G.pagerank_int(e, iters=info["iters"])
-    assert [tuple(r) for r in out.collect()] == [tuple(r) for r in fixed.collect()]
-    # regular graph (cycle): every vertex keeps rank 1e6 forever —
-    # residual 0 after one step, the earliest possible stop
-    cyc = _edges(spark, [(1, 2), (2, 3), (3, 1)])
-    _, info_c = G.pagerank_int_converged(cyc, tol_ppm=0, max_iters=10)
-    assert info_c == {"iters": 1, "residual_ppm": 0, "converged": True}
-    # honest non-convergence: max_iters hit, partial = exact t-step
-    out_p, info_p = G.pagerank_int_converged(e, tol_ppm=0, max_iters=2)
-    assert not info_p["converged"] and info_p["iters"] == 2
-    assert [tuple(r) for r in out_p.collect()] == [
-        tuple(r) for r in G.pagerank_int(e, iters=2).collect()
-    ]
-
-
 def _py_cc(pairs, nodes):
     parent = {}
 
@@ -234,10 +167,9 @@ def test_merge_components_guard_rails(spark):
 
 
 def test_merge_components_string_labels_and_topk_zero(spark):
-    """Self-review r12: (a) the relabel map schema derives from the
-    input labeling — string labels (dedup_clusters is type-generic)
-    used to crash createDataFrame('label long, ...') on the first
-    merge; (b) top_k=0 means limit(0), not the full ranking."""
+    """Self-review r12: the relabel map schema derives from the input
+    labeling — string labels (dedup_clusters is type-generic) used to
+    crash createDataFrame('label long, ...') on the first merge."""
     labels = spark.createDataFrame(
         [("a", "a"), ("b", "a"), ("c", "c")], "node STRING, label STRING"
     )
@@ -246,54 +178,6 @@ def test_merge_components_string_labels_and_topk_zero(spark):
     got = {r.node: r.label for r in merged.collect()}
     assert got == {"a": "a", "b": "a", "c": "a"}
     assert dict(merged.dtypes)["label"] == "string"
-    e = _edges(spark, [(1, 2), (2, 3)])
-    assert G.pagerank_int(e, iters=1, top_k=0).count() == 0
-    out, _ = G.pagerank_int_converged(e, tol_ppm=0, max_iters=2, top_k=0)
-    assert out.count() == 0
-
-
-def test_pagerank_step_carry_prev_is_joinfree_residual_source(spark):
-    """Optimization r14 (guide §2.4): the residual-stop loop no longer
-    joins rank_t against rank_{t−1} per iteration — _pagerank_step
-    carries the previous rank through as `_prev`. Pin the contract:
-    (a) carry_prev=True emits the SAME (vertex, rank_ppm) rows as the
-    certified carry_prev=False form, (b) `_prev` is exactly the input
-    rank, (c) the public converged output carries no `_prev` column."""
-    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 1)])
-    deg = G.degrees(e)
-    directed = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    rank0 = deg.select("vertex", F.lit(1_000_000).cast("bigint").alias("rank_ppm"))
-    plain = {
-        r.vertex: r.rank_ppm
-        for r in G._pagerank_step(rank0, deg, directed).collect()
-    }
-    carried = G._pagerank_step(rank0, deg, directed, carry_prev=True).collect()
-    assert {r.vertex: r.rank_ppm for r in carried} == plain
-    assert {r.vertex: r._prev for r in carried} == {
-        r.vertex: r.rank_ppm for r in rank0.collect()
-    }
-    out, _ = G.pagerank_int_converged(e, tol_ppm=0, max_iters=2)
-    assert out.columns == ["vertex", "rank_ppm"]
-
-
-def test_pagerank_releases_superseded_checkpoints(spark):
-    """ADVICE r12: DataFrame.unpersist is a no-op for localCheckpoint
-    RDD blocks, so the iterative loop pinned up to max_iters rank
-    copies until GC. The loop now unpersists the LogicalRDD behind
-    the superseded checkpoint — persisted-block growth must be
-    bounded by the live handles (deg, directed, final rank), not by
-    the iteration count."""
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 1)])
-    out, info = G.pagerank_int_converged(e, tol_ppm=0, max_iters=8)
-    out.collect()
-    assert info["iters"] >= 3  # the loop actually iterated
-    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    # ADVICE r13 tightened this from <=3: deg + directed are released
-    # once the loop ends — only the live final rank stays pinned
-    assert after - before <= 1
 
 
 def test_triangle_stats_does_not_double_checkpoint(spark):
@@ -311,14 +195,3 @@ def test_triangle_stats_does_not_double_checkpoint(spark):
         (1, 1), (2, 1), (3, 2), (4, 1), (5, 1)
     }
 
-
-def test_pagerank_int_releases_support_checkpoints(spark):
-    """ADVICE r13: the fixed-iteration form pinned edges + deg +
-    directed for the session. It now releases an edge checkpoint it
-    created as soon as deg/directed are eager, and frees those two
-    behind a final vertex-sized rank barrier — only that rank stays."""
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 1)])
-    G.pagerank_int(e, iters=3).collect()
-    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    assert after - before <= 1  # the live rank checkpoint only

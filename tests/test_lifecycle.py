@@ -27,7 +27,6 @@ from data_pengadaan_agent_spark.operators import dupindex as DI
 from data_pengadaan_agent_spark.operators import lexindex as LX
 from data_pengadaan_agent_spark.operators import pq as PQ
 from data_pengadaan_agent_spark.operators import similarity as SIM
-from data_pengadaan_agent_spark.operators import sq as SQ
 from data_pengadaan_agent_spark.operators import trgm as TG
 from data_pengadaan_agent_spark.sources.catalog import ensure_index
 
@@ -178,29 +177,28 @@ def test_rebuild_under_dynamic_overwrite_keeps_no_old_partition(spark, tmp_path,
 def test_lifecycle_events_log_one_line_each(spark, tmp_path, caplog):
     sf, idx = str(tmp_path / "sf"), str(tmp_path / "idx")
     spark.createDataFrame([(1, "a")], "id bigint, v string").write.parquet(f"{sf}/t.parquet")
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0, -float(i), 0.5]) for i in range(6)],
-        "vec_id long, embedding array<double>",
+    docs = spark.createDataFrame(
+        [(i, f"vendor record {i} alpha beta") for i in range(6)], "doc_id long, text string"
     )
-    path = str(tmp_path / "sq")
-    SQ.build_sq_table(vecs.filter("vec_id < 4"), path, dim=4)
+    path = str(tmp_path / "trgm")
+    TG.build_trgm_index(docs.filter("doc_id < 4"), path, n_buckets=4)
     with caplog.at_level(logging.INFO, logger="data_pengadaan_agent_spark.index"):
         ensure_index(spark, idx, sf, ("t",), 1, lambda: None)
         ensure_index(spark, idx, sf, ("t",), 1, lambda: None)
-        SQ.append_sq_table(vecs, path)
-        SQ.repair_sq_table(vecs, path)
-        SQ.compact_sq_table(spark, path)
+        TG.append_trgm_index(docs, path)
+        TG.repair_trgm_index(docs, path)
+        TG.compact_trgm_index(spark, path)
     got = [
         r.getMessage() for r in caplog.records if r.name == "data_pengadaan_agent_spark.index"
     ]
     assert [m.split(":")[0] for m in got] == [
         "index rebuilt",
         "index fresh",
-        "append_sq_table",
-        "repair_sq_table",
-        "compact_sq_table",
+        "append_trgm_index",
+        "repair_trgm_index",
+        "compact_trgm_index",
     ], got
     assert got[0].startswith(f"index rebuilt: {idx} in ") and got[1] == f"index fresh: {idx}"
-    assert got[2].startswith("append_sq_table: 2 rows in ") and got[2].endswith("s")
-    assert got[3].startswith("repair_sq_table: 0 rows in ")
+    assert got[2].startswith("append_trgm_index: 2 rows in ") and got[2].endswith("s")
+    assert got[3].startswith("repair_trgm_index: 0 rows in ")
     assert " files removed in " in got[4]

@@ -12,7 +12,6 @@ from data_pengadaan_agent_spark.operators.materialize import (
     materialize,
     read_intermediary,
 )
-from data_pengadaan_agent_spark.operators.topk import sorted_first_last
 from data_pengadaan_agent_spark.sources.catalog import list_tables, schema_check, schema_head_echo
 
 
@@ -117,12 +116,6 @@ def test_render_png_draws_the_returned_rows(tables, monkeypatch, tmp_path):
 def test_histogram_missing_column_raises(tables):
     with pytest.raises(C.ChartColumnError):
         C.histogram_data(tables["orders"], "nope")
-
-
-def test_sorted_first_last(tables):
-    counts = tables["orders"].groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
-    out = sorted_first_last(counts, "o_orderstatus", "n")
-    assert out["first_value"] >= out["last_value"]
 
 
 # --- materialize + catalog ---------------------------------------------------

@@ -929,6 +929,51 @@ def test_parquet_sink_fresh_checkpoint_over_live_root_refuses(spark, tmp_path):
     assert spark.read.parquet(sink).count() >= 1
 
 
+@pytest.mark.parametrize("family", ["trgm", "ivfpq"])
+def test_index_sink_fresh_checkpoint_over_live_ack_root_refuses(spark, tmp_path, family):
+    """The trgm and IVF-PQ sinks write _epoch-partitioned ack logs like
+    the parquet sink: a second run with a fresh checkpoint over the
+    first run's ack root refuses at start instead of overwriting its
+    _epoch=0.. acks; a restart on the original checkpoint proceeds."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from data_pengadaan_agent_spark.operators import pq as PQ
+    from data_pengadaan_agent_spark.operators import trgm as TG
+
+    idx, ack, src = (str(tmp_path / d) for d in ("idx", "ack", "src"))
+    os.makedirs(src)
+    if family == "trgm":
+        schema, sink = "doc_id long, text string", SW.foreach_batch_trgm_sink
+        docs = [(1, "quick brown fox"), (2, "lazy dog sleeps")]
+        TG.build_trgm_index(spark.createDataFrame(docs, schema), idx, n_buckets=4)
+        arrival = {"doc_id": pa.array([3], pa.int64()), "text": ["new doc arrives"]}
+    else:
+        schema, sink = "vec_id long, embedding array<double>", SW.foreach_batch_ivfpq_sink
+        vecs = [(i, [float(i), 0.0, 10.0 - i, 1.0]) for i in range(6)]
+        PQ.build_ivfpq_table(spark.createDataFrame(vecs, schema), idx, dim=4, kc=2, m=2, ksub=2)
+        arrival = {
+            "vec_id": pa.array([9], pa.int64()),
+            "embedding": pa.array([[0.5, 0.5, 9.0, 1.0]], pa.list_(pa.float64())),
+        }
+    papq.write_table(pa.table(arrival), os.path.join(src, "f.parquet"))
+    stream = spark.readStream.schema(schema).format("parquet").load(src)
+    ck1, ck2 = str(tmp_path / "ck1"), str(tmp_path / "ck2")
+
+    q = sink(stream, idx, ack, ck1)
+    q.processAllAvailable()
+    q.stop()
+    assert spark.read.parquet(ack).count() == 1
+    with pytest.raises(ValueError, match="fresh"):
+        sink(stream, idx, ack, ck2).stop()  # reached only if the sink does not refuse
+    q = sink(stream, idx, ack, ck1)
+    q.processAllAvailable()
+    q.stop()
+    assert spark.read.parquet(ack).count() == 1
+
+
 def test_ann_ingest_stream_codes_leaves_no_temp_dirs(spark):
     """The streaming IVF-PQ ingest entry stages its source slice and
     its checkpoint in temp directories; both are removed once the

@@ -211,48 +211,6 @@ def test_dup_spans_gap_merge_and_min_count(spark):
         X.dup_spans(df2, length=4, min_count=1)
 
 
-def test_dup_span_stats_and_strip(spark):
-    """Stats: dup_tokens sums DISJOINT merged spans and zero-span docs
-    report 0-ppm rows. Strip: cleaned text = original tokens minus
-    span tokens in order; a fully-duplicated doc strips to empty."""
-    shared = "c1 c2 c3 c4 c5 c6 c7 c8"
-    df = spark.createDataFrame(
-        [
-            (1, shared),                          # fully duplicated
-            (2, "head tok " + shared + " tail"),  # partial
-            (3, "nothing duplicated here at all"),
-        ],
-        "doc_id LONG, text STRING",
-    )
-    stats = {r["doc_id"]: r for r in X.dup_span_stats(df, length=8).collect()}
-    assert stats[1]["dup_tokens"] == 8 and stats[1]["dup_ppm"] == 1000000
-    assert stats[2]["n_tokens"] == 11 and stats[2]["dup_tokens"] == 8
-    assert stats[2]["dup_ppm"] == (1000000 * 8) // 11
-    assert stats[3]["dup_tokens"] == 0 and stats[3]["dup_ppm"] == 0
-    clean = {r["doc_id"]: r for r in X.strip_dup_spans(df, length=8).collect()}
-    assert clean[1]["clean_text"] == "" and clean[1]["kept_tokens"] == 0
-    assert clean[2]["clean_text"] == "head tok tail"
-    assert clean[2]["kept_tokens"] == 3 and clean[2]["n_tokens"] == 11
-    assert clean[3]["clean_text"] == "nothing duplicated here at all"
-
-
-def test_lexical_diversity_exact_values(spark):
-    """Hand-computed TTR / hapax / Simpson on a 4-token doc, plus the
-    single-token edge (simpson_ppm defined 0)."""
-    df = spark.createDataFrame(
-        [(1, "a a b c"), (2, "solo")], "doc_id LONG, text STRING"
-    )
-    out = {r["doc_id"]: r for r in X.lexical_diversity(df).collect()}
-    r1 = out[1]
-    assert (r1["n_tokens"], r1["n_types"], r1["n_hapax"]) == (4, 3, 2)
-    assert r1["ttr_ppm"] == (1000000 * 3) // 4
-    assert r1["hapax_ppm"] == (1000000 * 2) // 3
-    assert r1["simpson_ppm"] == (1000000 * 2) // (4 * 3)  # only 'a' repeats
-    r2 = out[2]
-    assert (r2["n_tokens"], r2["n_types"], r2["simpson_ppm"]) == (1, 1, 0)
-    assert r2["ttr_ppm"] == 1000000 and r2["hapax_ppm"] == 1000000
-
-
 def test_derive_filtered_keywords(spark):
     df = spark.createDataFrame(
         [(1, "Belanja ALAT Tulis", "alat tulis untuk the kantor!")],
@@ -499,23 +457,6 @@ def test_boilerplate_ngrams_flags_shared_trigrams(spark):
         assert got[d]["n_boiler"] == 1  # only "a b c" is shared
         assert got[d]["boilerplate_frac"] == 0.5
         assert got[d]["mostly_boilerplate"] is True
-
-
-def test_length_outlier_band_exact_percentiles(spark):
-    """Band bounds are exact linear-interpolated percentiles over the
-    corpus; docs outside [p10, p90] are flagged out of band."""
-    from data_pengadaan_agent_spark.operators.textan import length_outlier_band
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * i)) for i in range(1, 11)],
-        "doc_id long, text string",
-    )
-    rows = length_outlier_band(docs, p_lo=0.10, p_hi=0.90).collect()
-    by_id = {r["doc_id"]: r for r in rows}
-    # counts 1..10: p10 = 1 + 0.9*(2-1) = 1.9, p90 = 9 + 0.1*(10-9) = 9.1
-    assert by_id[5]["p_lo"] == 1.9 and by_id[5]["p_hi"] == 9.1
-    assert {r["doc_id"] for r in rows if not r["in_band"]} == {1, 10}
-    assert {r["doc_id"] for r in rows if r["in_band"]} == set(range(2, 10))
 
 
 def test_corpus_report_datasheet(spark):
@@ -878,53 +819,6 @@ def test_tokenizer_vertical_tab_oracle_parity(spark):
     assert got[4] == ["alpha beta"]
 
 
-def test_dup_run_pairs_exact_localization(spark):
-    """Diagonal-trick pins: (1) a shared 12-token run at shifted
-    offsets reports EXACT [start, end] on both sides and the exact
-    run length; (2) the same content appearing TWICE in b yields two
-    rows (two diagonals); (3) a one-gram coincidental hit far from
-    the run stays its own row and cannot inflate the real run's
-    boundaries (the winnow_matches extent problem, solved exactly);
-    (4) min_run filters it out; (5) xxhash64 path agrees."""
-    run = "r1 r2 r3 r4 r5 r6 r7 r8 r9 r10 r11 r12"
-    a = spark.createDataFrame(
-        [(1, run + " tailx taily k1 k2 k3 k4")], "doc_id LONG, text STRING"
-    )
-    b = spark.createDataFrame(
-        [
-            (10, "p1 p2 " + run + " mid " + run),
-            (11, "z1 k1 k2 k3 k4 z2"),  # small separate 4-gram hit
-        ],
-        "doc_id LONG, text STRING",
-    )
-    for arith in (True, False):
-        rows = X.dup_run_pairs(a, b, length=4, arith_hash=arith).collect()
-        got = {
-            (r["a_id"], r["b_id"], r["a_start"], r["a_end"],
-             r["b_start"], r["b_end"], r["run_tokens"])
-            for r in rows
-        }
-        assert (1, 10, 0, 11, 2, 13, 12) in got     # first copy
-        assert (1, 10, 0, 11, 15, 26, 12) in got    # second copy, own diagonal
-        assert (1, 11, 14, 17, 1, 4, 4) in got      # the small exact hit
-        assert len(got) == 3
-        # min_run: only the 12-token runs survive
-        big = X.dup_run_pairs(a, b, length=4, min_run=10, arith_hash=arith)
-        assert {(r["b_start"], r["run_tokens"]) for r in big.collect()} == {
-            (2, 12), (15, 12)
-        }
-
-
-def test_dup_run_pairs_max_df_guard(spark):
-    """A gram shared by many docs on one side must be dropped before
-    the pair join — same boilerplate law as winnow_matches."""
-    boiler = "standard header text appears verbatim everywhere"
-    a = spark.createDataFrame([(i, boiler) for i in range(6)], "doc_id LONG, text STRING")
-    b = spark.createDataFrame([(100 + i, boiler) for i in range(6)], "doc_id LONG, text STRING")
-    assert X.dup_run_pairs(a, b, length=3, max_df=5).count() == 0
-    assert X.dup_run_pairs(a, b, length=3, max_df=50).count() == 36
-
-
 def test_bpe_learn_merges_canonical_example(spark):
     """The Sennrich et al. running example: low/lower/newest/widest
     with frequencies learns (e,s) -> (es,t) -> (l,o) [the third is a
@@ -1037,49 +931,6 @@ def test_bpe_return_vocab_segmentation(spark):
                 i += 1
         syms = out
     assert vocab["low"][1] == syms
-
-
-def test_collocations_exact_lift_and_guards(spark):
-    """Hand-checked lift: a bigram that ALWAYS co-occurs scores
-    1e6·N/(c1·c2) exactly; min_count drops hapax pairs (the PMI
-    pathology); ties break on the bigram string; python replay of the
-    integer recipe."""
-    from data_pengadaan_agent_spark.operators import textan as X
-
-    rows = [
-        (1, "new york new york new york"),
-        (2, "san francisco san francisco"),
-        (3, "york new san the the the the"),
-        (4, "rare pair"),  # hapax bigram: min_count must drop it
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    got = X.collocations(df, k=10, min_count=2).collect()
-    by_bg = {r["bigram"]: r for r in got}
-    assert "rare pair" not in by_bg
-    # python replay
-    toks = [t for _, s in rows for t in s.split()]
-    n = len(toks)
-    c1 = {}
-    for t in toks:
-        c1[t] = c1.get(t, 0) + 1
-    bg_counts = {}
-    for _, s in rows:
-        ws = s.split()
-        for i in range(len(ws) - 1):
-            b = f"{ws[i]} {ws[i+1]}"
-            bg_counts[b] = bg_counts.get(b, 0) + 1
-    for b, r in by_bg.items():
-        w1, w2 = b.split(" ")
-        want = (1_000_000 * n * bg_counts[b]) // (c1[w1] * c1[w2])
-        assert (r["cnt"], r["lift_ppm"]) == (bg_counts[b], want), b
-    # ranking is (lift desc, bigram asc), ranks contiguous
-    lifts = [(r["lift_ppm"], r["bigram"]) for r in got]
-    assert lifts == sorted(lifts, key=lambda t: (-t[0], t[1]))
-    assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
-    import pytest
-
-    with pytest.raises(ValueError, match="min_count"):
-        X.collocations(df, k=0)
 
 
 def test_payload_byte_stats_matches_python_reference(spark):

@@ -4,10 +4,12 @@ after changing any operator: `python tools/dump_plans.py`."""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADLINERS = {
     "tpch_q6_forecast_revenue": "pushdown benchmark: every predicate at the scan, partial+final agg",
@@ -102,7 +104,7 @@ def main() -> None:
         plan = re.sub(r"#\d+L?", "", plan)  # strip expr ids for readability
         plan = "\n".join(line.rstrip() for line in plan.splitlines()[:60])
         out.append(f"## {name}\n\n*{note}*\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -34,9 +34,10 @@ Exit code 1 if any query raises a finding (prints all findings).
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SCAN_THRESHOLD = 10
 
