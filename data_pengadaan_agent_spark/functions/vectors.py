@@ -1,5 +1,9 @@
 """Vector scalar functions (SURVEY.md §1.3, §2.8).
 
+- ``parse_vector_string``: the reference hydrates embeddings from CSV
+  as stringified float arrays, ``np.fromstring(x.strip('[]'), sep=',')``
+  (openai/list_of_tools.py:128, langchain/my_toolkit.py:449). Here the
+  same parse is a pure column expression (codegen'd, no Python).
 - ``hash_ngram_embedding_col``: a deterministic hashing-trick text
   embedder (char-3-gram → signed bucket counts), the test stand-in for
   the reference's external embedding API (S6, text-embedding-3-large).
@@ -14,6 +18,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 EMBED_DIM = 64
+
+
+def parse_vector_string(col: Column | str, element_type: str = "float") -> Column:
+    """'[0.1, -0.2, …]' → ARRAY<element_type>. NULL-safe: malformed
+    numbers become NULL elements under try-semantics (ANSI mode)."""
+    c = F.col(col) if isinstance(col, str) else col
+    stripped = F.regexp_replace(F.trim(c), r"^\[|\]$", "")
+    return F.transform(
+        F.split(stripped, ","), lambda x: F.trim(x).try_cast(element_type)
+    )
 
 
 def _gram_hash(g: Column) -> Column:

@@ -71,6 +71,16 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def degree_histogram(edges: DataFrame) -> DataFrame:
+    """(degree, n_vertices) — the structure-at-a-glance rollup."""
+    return (
+        degrees(edges)
+        .groupBy("degree")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_vertices"))
+        .orderBy("degree")
+    )
+
+
 def _oriented(edges: DataFrame) -> DataFrame:
     """Degree-ordered orientation: (src, dst) with (deg, id) of src
     strictly below dst — a total order, so every undirected edge gets

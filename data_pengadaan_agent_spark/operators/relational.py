@@ -923,7 +923,11 @@ def cohort_retention(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Weekly cohort retention matrix — the classic product-analytics
-    rollup, on Monday-truncated calendar weeks.
+    rollup. NOT the same operator as :func:`retention_cohorts`
+    (self-review r12 cross-reference): this one uses Monday-truncated
+    calendar weeks and emits a RATIO; retention_cohorts uses
+    epoch-anchored integer periods (day/week/month grains) and emits
+    COUNTS — the cohort boundaries differ, pick by contract.
     Users are cohorted by the week of their FIRST event, and
     each (cohort_week, offset_weeks) cell counts how many of them were
     active that many weeks later. ``retention`` is the cell count over
@@ -1108,3 +1112,161 @@ def embedding_qa(
         )
     )
 
+
+def retention_cohorts(
+    events: DataFrame,
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+    grain: str = "day",
+) -> DataFrame:
+    """Cohort retention matrix: users grouped by FIRST-active period,
+    counted in every period-offset they were active. NOT the same
+    operator as :func:`cohort_retention` (see its docstring for the
+    anchor/output differences). All calendar
+    arithmetic is integer — day index = datediff(epoch), week =
+    day DIV 7 (epoch-anchored weeks), month = year·12 + month — so
+    the matrix is exact on any engine. Two exchanges — distinct
+    (user, period) then the min-period per user — both on the user
+    key, so the second reuses the first's partitioning. Output:
+    (cohort_start DATE = first day of the cohort period,
+    offset_periods, n_users)."""
+    day = F.datediff(F.to_date(ts_col), F.lit("1970-01-01").cast("date"))
+    if grain == "day":
+        m, back = day.cast("bigint"), "CAST(_c AS INT)"
+    elif grain == "week":
+        m = F.expr(
+            f"CAST(datediff(to_date({ts_col}), DATE '1970-01-01') DIV 7 AS BIGINT)"
+        )
+        back = "CAST(_c * 7 AS INT)"
+    elif grain == "month":
+        m = (F.year(ts_col) * F.lit(12) + F.month(ts_col)).cast("bigint")
+        back = (
+            "CAST(datediff(make_date(CAST((_c - 1) DIV 12 AS INT), "
+            "CAST((_c - 1) % 12 + 1 AS INT), 1), DATE '1970-01-01') AS INT)"
+        )
+    else:
+        raise ValueError(f"retention_cohorts: unknown grain {grain!r}")
+    active = events.select(F.col(user_col).alias("_u"), m.alias("_m")).distinct()
+    first = active.groupBy("_u").agg(F.min("_m").alias("_c"))
+    return (
+        active.join(first, "_u")
+        .groupBy(
+            F.expr(f"date_add(DATE '1970-01-01', {back})").alias("cohort_start"),
+            (F.col("_m") - F.col("_c")).cast("bigint").alias("offset_periods"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
+        .orderBy("cohort_start", "offset_periods")
+    )
+
+
+def event_transitions(
+    events: DataFrame,
+    user_col: str = "user_id",
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    tiebreak_col: str = "event_id",
+) -> DataFrame:
+    """First-order behavioral transition matrix: per user, consecutive
+    event-type pairs under a TOTAL order (ts, tiebreak) — equal
+    timestamps cannot reorder across engines or partitionings — then
+    (from_type, to_type, n, prob_ppm) with prob_ppm the exact integer
+    share of the from-type's outgoing transitions (n·10^6 DIV
+    row-total). One window shuffle on the user key + one small
+    groupBy."""
+    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    pairs = (
+        events.select(
+            F.col(user_col),
+            F.col(type_col).alias("to_type"),
+            F.col(ts_col),
+            F.col(tiebreak_col),
+        )
+        .withColumn("from_type", F.lag("to_type").over(w))
+        .filter(F.col("from_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    wf = Window.partitionBy("from_type")
+    return (
+        pairs.withColumn("_tot", F.sum("n").over(wf))
+        .select(
+            "from_type",
+            "to_type",
+            "n",
+            F.expr("n * 1000000 DIV _tot").cast("bigint").alias("prob_ppm"),
+        )
+        .orderBy("from_type", "to_type")
+    )
+
+
+def event_ngrams(
+    events: DataFrame,
+    n: int = 3,
+    user_col: str = "user_id",
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    tiebreak_col: str = "event_id",
+    min_support: int = 1,
+) -> DataFrame:
+    """Sequential pattern mining, n-gram tier: contiguous length-n
+    event-type sequences per user under the total (ts, tiebreak)
+    order, counted corpus-wide with a support threshold. The lead
+    chain is one window pass (n−1 leads over the same user-keyed
+    window — one shuffle), the count one small groupBy; PrefixSpan-
+    style gap patterns are deliberately out of scope (contiguous
+    n-grams are the honest one-pass tier, the textan n-gram story
+    applied to behavior). Returns (pattern array<string>, support)
+    ordered by support desc, pattern."""
+    if n < 2:
+        raise ValueError("event_ngrams: n must be >= 2")
+    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    cols = [F.col(type_col)] + [
+        F.lead(type_col, i).over(w) for i in range(1, int(n))
+    ]
+    pat = F.array(*cols)
+    return (
+        events.select(pat.alias("pattern"))
+        .filter(F.forall("pattern", lambda x: x.isNotNull()))
+        .groupBy("pattern")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
+        .filter(F.col("support") >= int(min_support))
+        .orderBy(F.desc("support"), "pattern")
+    )
+
+
+def concurrency_timeline(
+    intervals: DataFrame,
+    start_col: str = "start",
+    end_col: str = "end",
+    group_cols: list[str] | None = None,
+) -> DataFrame:
+    """Exact interval-overlap sweep: +1 at each start, −1 at each end
+    (half-open [start, end) — an interval ending exactly when another
+    begins does NOT overlap it), cumulative-sum over the event points
+    per group. One window shuffle on (group, ts); the output is the
+    exact concurrency step function (ts, concurrent), the classic
+    'peak simultaneous sessions' primitive — never a per-timestamp
+    explode, so cost is O(2·intervals), not O(span/resolution).
+    Equal-timestamp starts and ends collapse into one point whose
+    delta sums both (ends apply before the point's reading would
+    double-count: summing deltas at the SAME ts yields the value
+    holding from that instant on)."""
+    group_cols = list(group_cols or [])
+    pts = intervals.select(
+        *group_cols, F.col(start_col).alias("ts"), F.lit(1).alias("_d")
+    ).unionAll(
+        intervals.select(
+            *group_cols, F.col(end_col).alias("ts"), F.lit(-1).alias("_d")
+        )
+    )
+    merged = pts.groupBy(*group_cols, "ts").agg(F.sum("_d").alias("_delta"))
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy("ts")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return merged.select(
+        *group_cols,
+        "ts",
+        F.sum("_delta").over(w).cast("bigint").alias("concurrent"),
+    ).orderBy(*group_cols, "ts")

@@ -60,6 +60,23 @@ def train_test_split(
     )
 
 
+def sample_per_group(
+    df: DataFrame, group_col: str, id_col: str, k: int
+) -> DataFrame:
+    """Deterministic k-per-group sample: rank rows within each group
+    by the scrambled hash (ties broken by id) and keep the first k.
+    One hash-partitioned window — the shuffle carries only the
+    group/id/payload rows, and at scale the rank never materializes
+    the full sorted group (window + filter ≤ k prunes per partition).
+    The canonical 'cap documents per domain' curation step."""
+    w = Window.partitionBy(group_col).orderBy(split_hash_col(id_col), F.col(id_col))
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+    )
+
+
 def corpus_mix(
     df: DataFrame,
     weights: dict[str, float],
@@ -246,3 +263,68 @@ def corpus_mix_token_budget(
         .drop("_budget", "_before")
     )
 
+
+def weighted_sample(
+    df: DataFrame,
+    weight_col: str,
+    n: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Fixed-size weighted sample WITHOUT replacement — sequential
+    Poisson sampling (Ohlsson 1998, the πps scheme statistics
+    agencies run their price indices on): every row gets the priority key
+    ``hash_u(id) / weight`` and the n SMALLEST keys win, so selection
+    probability is proportional to weight (asymptotically exact πps)
+    while membership stays a pure function of (id, weight) — stable
+    under re-runs, repartitioning, and cluster layout, like every
+    sampler in this module. The quality-weighted curation step ("keep
+    2M documents, favor high quality-score") in one scan.
+
+    Cross-engine determinism is STRUCTURAL, stronger than the
+    kmeans-family gap-probe class: the key is ONE int-to-double
+    conversion (exact below 2^53) followed by ONE IEEE division,
+    spelled identically on Spark and DuckDB, so keys are bit-identical
+    by construction; the (key, id) tiebreak means even an exact key
+    collision orders identically on both engines. No rounding anywhere
+    — nothing for a margin probe to certify.
+
+    Scale shape: a TakeOrderedAndProject — each partition keeps its
+    local top-n, ONE n-row merge at the driver/final stage, no global
+    sort, no shuffle of the corpus. Rows with NULL or non-positive
+    weight have zero selection probability and are excluded (Poisson
+    semantics), never sampled and never an error.
+    """
+    if n < 1:
+        raise ValueError("weighted_sample: n must be >= 1")
+    key = split_hash_col(id_col).cast("double") / F.col(weight_col).cast("double")
+    return (
+        df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
+        .withColumn("_wkey", key)
+        .orderBy(F.col("_wkey").asc(), F.col(id_col).asc())
+        .limit(int(n))
+        .drop("_wkey")
+    )
+
+
+def weighted_sample_per_group(
+    df: DataFrame,
+    group_col: str,
+    weight_col: str,
+    k: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """k-per-group weighted sample: the same sequential-Poisson key,
+    ranked within each group — ``sample_per_group``'s weighted
+    sibling ("cap each domain at k docs, favor high quality"). One
+    hash-partitioned window; the rank never materializes the full
+    sorted group (WindowGroupLimit prunes per partition)."""
+    if k < 1:
+        raise ValueError("weighted_sample_per_group: k must be >= 1")
+    key = split_hash_col(id_col).cast("double") / F.col(weight_col).cast("double")
+    w = Window.partitionBy(group_col).orderBy(key.asc(), F.col(id_col).asc())
+    return (
+        df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= int(k))
+        .drop("_rk")
+    )

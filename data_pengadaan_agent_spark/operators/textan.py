@@ -1425,6 +1425,49 @@ def boilerplate_ngrams(
     )
 
 
+def length_outlier_band(
+    df: DataFrame,
+    p_lo: float = 0.05,
+    p_hi: float = 0.95,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Token-length percentile band filter: flag documents whose
+    whitespace token count falls outside the corpus's exact
+    [p_lo, p_hi] percentile band — the standard "drop truncated
+    fragments and runaway concatenations" curation gate, with the
+    band derived FROM the corpus instead of hand-tuned constants.
+
+    Percentiles are EXACT (``percentile``, linear interpolation at
+    rank p·(n−1) — the same definition DuckDB's ``quantile_cont``
+    uses, so the bounds value-check across engines). At 100 TB exact
+    percentiles of a bigint column are one total-agg pass (Spark
+    partial-aggregates per partition and merges count maps — token
+    counts have tiny cardinality, ~thousands of distinct lengths);
+    swap in ``approx_percentile`` only if the value domain were
+    unbounded. The 1-row bounds frame joins back via broadcast, so
+    the operator costs two passes over the input (one for the bounds
+    aggregate, one for the flagged output) with ZERO row exchanges —
+    the right trade at scale, where a second scan is cheaper than
+    shuffling the corpus."""
+    n_tok = F.size(tokens(text_col)).cast("bigint")
+    base = df.select(F.col(id_col), n_tok.alias("n_tokens"))
+    bounds = base.agg(
+        F.percentile(F.col("n_tokens"), F.lit(float(p_lo))).alias("lo"),
+        F.percentile(F.col("n_tokens"), F.lit(float(p_hi))).alias("hi"),
+    )
+    in_band = (F.col("n_tokens") >= F.col("lo")) & (
+        F.col("n_tokens") <= F.col("hi")
+    )
+    return base.crossJoin(F.broadcast(bounds)).select(
+        F.col(id_col),
+        F.col("n_tokens"),
+        F.round(F.col("lo"), 6).alias("p_lo"),
+        F.round(F.col("hi"), 6).alias("p_hi"),
+        in_band.alias("in_band"),
+    )
+
+
 def decontaminate_train(
     train_df: DataFrame,
     test_df: DataFrame,
@@ -1651,7 +1694,7 @@ def dsir_importance(
     product is DECIMAL(38,9) with no precision loss; a single doc
     repeating one bucket ≥1e9 times would overflow LOUDLY under
     ANSI). The keep threshold is a 1-row percentile aggregate
-    broadcast back (a two-pass trade: one scan, one tiny broadcast).
+    broadcast back (the length_outlier_band two-pass trade).
     Per-bucket log-ratios are rounded to 9 places and summed as
     DECIMAL, so accumulation order can never drift the score across
     partitionings or engines (the embedding_qa discipline).

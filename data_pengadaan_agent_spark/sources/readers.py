@@ -1,11 +1,17 @@
-"""Text-corpus sources and the bucketed sink.
+"""Non-parquet sources and scale-oriented sinks.
 
-Sources:
-- ``read_text_corpus``: a directory of text files as one row per line
-  (or per file) with a content-hash ``doc_id``;
-- ``read_text_corpus_stream``: the same rows as a file stream.
+Sources (SURVEY.md §2.1):
+- S3: keyword-vocabulary CSV with stringified float vectors
+  (`v2_key.csv`, openai/list_of_tools.py:125-128,
+  langchain/my_toolkit.py:442-449) → typed (keyword, ARRAY<FLOAT>).
+- JSON lines reader for event-shaped feeds (beyond-reference; the
+  `events.props` column is JSON text).
 
 Sinks:
+- ``write_partitioned``: Parquet partitioned by a derived key (e.g.
+  month) — date-filtered queries then prune whole partitions
+  (SURVEY.md §4.2 'partition pruning'). At 100 TB this is the
+  difference between scanning 36 files and 36,000.
 - ``write_bucketed``: ``bucketBy`` managed table — co-located joins
   and aggregations on the bucket key skip their shuffle entirely
   (verified in tests: the joined plan has no Exchange).
@@ -15,6 +21,50 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_pengadaan_agent_spark.functions.vectors import parse_vector_string
+
+
+def read_keyword_vocab_csv(spark: SparkSession, path: str) -> DataFrame:
+    """S3: header CSV (keyword, embedding='[f, f, …]') → typed frame.
+    The vector parse is a column expression — no Python per row."""
+    raw = spark.read.option("header", True).csv(path)
+    return raw.select(
+        F.col("keyword"),
+        parse_vector_string("embedding").alias("embedding"),
+    )
+
+
+def write_keyword_vocab_csv(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
+    """Round-trip helper: ARRAY<FLOAT> → the reference's stringified
+    format ('[a, b, …]', comma+space separated)."""
+    df.select(
+        "keyword",
+        F.concat(
+            F.lit("["), F.array_join(F.col(vec_col).cast("array<string>"), ", "), F.lit("]")
+        ).alias("embedding"),
+    ).write.mode("overwrite").option("header", True).csv(path)
+
+
+def read_events_json(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+    """JSON-lines source; explicit schema skips the inference scan
+    (inference reads the whole input once — never at 100 TB)."""
+    reader = spark.read
+    if schema:
+        reader = reader.schema(schema)
+    return reader.json(path)
+
+
+def write_partitioned(
+    df: DataFrame, path: str, partition_col: str, derive_month_from: str | None = None
+) -> None:
+    """Parquet sink partitioned by ``partition_col`` (optionally
+    derived as yyyy-MM of a timestamp). Partition count = distinct
+    key count — keep it in the hundreds/thousands, not millions."""
+    out = df
+    if derive_month_from:
+        out = df.withColumn(partition_col, F.date_format(F.col(derive_month_from), "yyyy-MM"))
+    out.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 def write_bucketed(
@@ -56,6 +106,40 @@ def write_bucketed(
     if sort:
         w = w.sortBy(bucket_col)
     w.saveAsTable(table)
+
+
+def overwrite_partitions_dynamic(df: DataFrame, path: str, partition_col: str) -> None:
+    """Incremental partition replacement: with
+    ``partitionOverwriteMode=dynamic`` an overwrite replaces ONLY the
+    partitions present in ``df`` and leaves every other partition's
+    files untouched. This is how a daily job lands one day into a
+    100 TB table — the static default would TRUNCATE the whole table
+    first. The conf is set per-write (runtime-settable) and restored,
+    so other writers in the session keep the safer static default."""
+    spark = df.sparkSession
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "STATIC")
+    spark.conf.set(key, "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def write_orc(df: DataFrame, path: str, partition_col: str | None = None) -> None:
+    """ORC sink (built into Spark — no extra package). Same columnar
+    pushdown/pruning properties as parquet; offered because warehouse
+    estates are frequently ORC-side (Hive lineage)."""
+    w = df.write.mode("overwrite")
+    if partition_col:
+        w = w.partitionBy(partition_col)
+    w.orc(path)
+
+
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
+    """ORC source — predicate pushdown and column pruning apply
+    exactly as with parquet (`.explain` shows PushedFilters)."""
+    return spark.read.orc(path)
 
 
 def read_text_corpus(

@@ -91,6 +91,24 @@ def test_boilerplate_ngrams_invariants(spark, docs):
         assert out[len(rows) - 1]["n_boiler"] == out[len(rows) - 1]["n_ngrams"]
 
 
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.integers(min_value=1, max_value=50), min_size=3, max_size=12))
+def test_length_outlier_band_invariants(spark, counts):
+    """Band bounds lie within [min, max] token count; in_band is
+    monotone (anything between two in-band counts is in-band); the
+    full corpus is returned."""
+    from data_pengadaan_agent_spark.operators.textan import length_outlier_band
+
+    rows = [(i, " ".join(["w"] * c)) for i, c in enumerate(counts)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = length_outlier_band(df, p_lo=0.25, p_hi=0.75).collect()
+    assert len(out) == len(rows)
+    lo, hi = out[0]["p_lo"], out[0]["p_hi"]
+    assert min(counts) <= lo <= hi <= max(counts)
+    for r in out:
+        assert r["in_band"] == (lo <= r["n_tokens"] <= hi)
+
+
 @settings(max_examples=4, deadline=None)
 @given(
     st.integers(min_value=0, max_value=2**31 - 1),

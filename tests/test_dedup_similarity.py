@@ -162,6 +162,22 @@ def test_train_test_split_deterministic_under_repartition(tables):
     assert 0.7 < frac < 0.9  # close to 0.8 in expectation
 
 
+def test_sample_per_group_cap_and_determinism(tables):
+    from data_pengadaan_agent_spark.operators.sampling import sample_per_group
+
+    docs = tables["documents"]
+    out = sample_per_group(docs, "source", "doc_id", k=3)
+    rows = out.collect()
+    from collections import Counter
+
+    per = Counter(r["source"] for r in rows)
+    assert all(v <= 3 for v in per.values())
+    again = sample_per_group(docs.repartition(7), "source", "doc_id", k=3).collect()
+    assert sorted((r["source"], r["doc_id"]) for r in rows) == sorted(
+        (r["source"], r["doc_id"]) for r in again
+    )
+
+
 def test_cross_source_overlap_pairs(spark):
     """Distinct shared contents per source pair, pairs ordered a<b,
     duplicate rows within one source collapse first."""
@@ -256,6 +272,71 @@ def test_dedup_passages_skew_salt_same_answer_two_level_plan(spark):
     )
     assert "Window" not in plan_salted and "ShuffledHashJoin" in plan_salted
     assert "Window" in plan_default and "ShuffledHashJoin" not in plan_default
+
+
+def test_weighted_sample_pps_and_determinism(spark):
+    """Sequential Poisson sampling: (a) membership is a pure function
+    of (id, weight) — repartitioning never changes it; (b) selection
+    is genuinely weight-biased (the heavy stratum wins far more than
+    its row share); (c) NULL / non-positive weights are excluded;
+    (d) n >= survivors returns them all."""
+    from data_pengadaan_agent_spark.operators import sampling as SA
+
+    rows = [(i, 1000 if i % 10 == 0 else 1) for i in range(2000)]
+    rows += [(2000, None), (2001, 0), (2002, -5)]
+    df = spark.createDataFrame(rows, "doc_id LONG, w LONG")
+    got = sorted(r["doc_id"] for r in SA.weighted_sample(df, "w", 100).collect())
+    again = sorted(
+        r["doc_id"]
+        for r in SA.weighted_sample(df.repartition(13), "w", 100).collect()
+    )
+    assert got == again and len(got) == 100
+    assert not {2000, 2001, 2002} & set(got)
+    heavy = sum(1 for i in got if i % 10 == 0)
+    # heavy stratum is 10% of rows but weight 1000x: expect near-total
+    assert heavy > 80
+    all_of_them = SA.weighted_sample(df, "w", 10_000).count()
+    assert all_of_them == 2000  # the three invalid-weight rows stay out
+
+
+def test_weighted_sample_per_group_quota(spark):
+    from data_pengadaan_agent_spark.operators import sampling as SA
+
+    rows = [(i, "a" if i < 500 else "b", 1 + i % 7) for i in range(1000)]
+    df = spark.createDataFrame(rows, "doc_id LONG, g STRING, w LONG")
+    got = SA.weighted_sample_per_group(df, "g", "w", 25).collect()
+    per = {}
+    for r in got:
+        per[r["g"]] = per.get(r["g"], 0) + 1
+    assert per == {"a": 25, "b": 25}
+    again = {
+        (r["g"], r["doc_id"])
+        for r in SA.weighted_sample_per_group(df.repartition(11), "g", "w", 25).collect()
+    }
+    assert again == {(r["g"], r["doc_id"]) for r in got}
+
+
+def test_weighted_sample_plan_is_take_ordered(spark):
+    """The 100 TB shape: partial per-partition top-n, one n-row merge
+    — never a global sort of the corpus."""
+    from data_pengadaan_agent_spark.operators import sampling as SA
+
+    df = spark.createDataFrame(
+        [(i, 1 + i % 3) for i in range(100)], "doc_id LONG, w LONG"
+    )
+    plan = (
+        SA.weighted_sample(df, "w", 10)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "TakeOrderedAndProject" in plan
+    import pytest
+
+    with pytest.raises(ValueError, match="n must be"):
+        SA.weighted_sample(df, "w", 0)
+    with pytest.raises(ValueError, match="k must be"):
+        SA.weighted_sample_per_group(df, "w", "w", 0)
 
 
 def test_cosine_topk_pandas_zero_vectors_never_dominate(spark):

@@ -96,6 +96,13 @@ def test_triangle_stats_values(spark):
     assert ordered == [1, 3, 2, 4]
 
 
+def test_degree_histogram(spark):
+    sq = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
+    got = {r.degree: r.n_vertices for r in
+           G.degree_histogram(_edges(spark, sq)).collect()}
+    assert got == {2: 2, 3: 2}
+
+
 def _py_cc(pairs, nodes):
     parent = {}
 

@@ -285,6 +285,19 @@ def test_boilerplate_ngrams_joins_pinned_shuffle(spark, tables):
         assert "Generate explode" not in sub, sub
 
 
+def test_length_band_broadcasts_bounds_only(spark, tables):
+    """length_outlier_band must cost one scan + a broadcast of the
+    1-row percentile aggregate: no hash exchange of document rows
+    (the only exchanges are the SinglePartition merge of the
+    total aggregate and the broadcast itself)."""
+    from data_pengadaan_agent_spark.operators.textan import length_outlier_band
+
+    out = length_outlier_band(tables["documents"])
+    plan = _plan(out)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+
+
 def test_snapshot_diff_full_outer_on_hashes(spark, tables):
     """snapshot_diff's one shuffle join is FullOuter and both exchange
     inputs project to (key, xxhash64) — document text never crosses

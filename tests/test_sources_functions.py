@@ -1,5 +1,5 @@
-"""Sources/sinks and vector scalar functions: embedder determinism,
-text-corpus readers, bucketed shuffle-free joins."""
+"""Sources/sinks and vector scalar functions: CSV vocab round-trip,
+embedder determinism, partition pruning, bucketed shuffle-free joins."""
 
 from __future__ import annotations
 
@@ -8,9 +8,23 @@ from pyspark.sql import functions as F
 from data_pengadaan_agent_spark.functions.vectors import (
     hash_ngram_embed,
     hash_ngram_embedding_col,
+    parse_vector_string,
 )
 from data_pengadaan_agent_spark.operators import similarity as S
 from data_pengadaan_agent_spark.sources import readers as RD
+
+
+def test_vector_string_roundtrip_csv(spark, tables, tmp_path):
+    """S3 parity: ARRAY<FLOAT> → '[a, b, …]' CSV → parse back."""
+    vocab = tables["embeddings"].limit(20).select(
+        F.col("vec_id").cast("string").alias("keyword"), "embedding"
+    )
+    path = str(tmp_path / "vocab_csv")
+    RD.write_keyword_vocab_csv(vocab, path)
+    back = RD.read_keyword_vocab_csv(spark, path)
+    want = {r["keyword"]: [round(v, 5) for v in r["embedding"]] for r in vocab.collect()}
+    got = {r["keyword"]: [round(v, 5) for v in r["embedding"]] for r in back.collect()}
+    assert got == want
 
 
 def test_hash_ngram_embedder_spark_python_parity(spark):
@@ -37,6 +51,18 @@ def test_keyword_retrieval_self_similarity(spark):
     assert abs(out[0]["similarity"] - 1.0) < 1e-9  # exact self-match
     # morphological neighbor ranks above unrelated tokens
     assert out[1]["keyword"] == "sparkle"
+
+
+def test_write_partitioned_prunes(spark, tables, tmp_path):
+    path = str(tmp_path / "events_bymonth")
+    RD.write_partitioned(tables["events"], path, "month", derive_month_from="ts")
+    back = spark.read.parquet(path)
+    pruned = back.filter(F.col("month") == "2024-01")
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(month" in plan
+    # pruned read touches only the matching partition's rows
+    want = tables["events"].filter(F.date_format("ts", "yyyy-MM") == "2024-01").count()
+    assert pruned.count() == want
 
 
 def test_bucketed_join_skips_shuffle(spark, tables):
@@ -78,6 +104,21 @@ def test_materialize_durable_roundtrip(spark, tables, tmp_path):
     assert back.count() == 50
     assert back.schema == src.schema
     spark.catalog.dropTempView("inter_dur")
+
+
+def test_read_events_json(spark, tables, tmp_path):
+    from data_pengadaan_agent_spark.sources.readers import read_events_json
+
+    path = str(tmp_path / "events_json")
+    tables["events"].limit(100).selectExpr(
+        "event_id", "CAST(ts AS STRING) AS ts", "user_id", "event_type", "value"
+    ).write.mode("overwrite").json(path)
+    back = read_events_json(
+        spark, path,
+        schema="event_id long, ts timestamp, user_id long, event_type string, value double",
+    )
+    assert back.count() == 100
+    assert dict(back.dtypes)["ts"] == "timestamp"
 
 
 def test_sqlite_source_roundtrip(spark, tmp_path):
@@ -154,6 +195,35 @@ def test_derived_partsupp_parity_and_shape(spark, tables):
     # no shuffle in the derivation plan (pure projection + explode)
     plan = ps._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def test_dynamic_partition_overwrite_preserves_untouched(spark, tmp_path):
+    """The dynamic mode must replace only the partitions present in
+    the incoming frame — the static default would truncate the table."""
+    path = str(tmp_path / "daily")
+    full = spark.createDataFrame(
+        [("d1", 1), ("d1", 2), ("d2", 3)], "day STRING, v INT"
+    )
+    RD.write_partitioned(full, path, "day")
+    # re-land ONLY d2 with new values
+    delta = spark.createDataFrame([("d2", 99)], "day STRING, v INT")
+    RD.overwrite_partitions_dynamic(delta, path, "day")
+    back = {(r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert back == {("d1", 1), ("d1", 2), ("d2", 99)}
+    # conf restored to the safer default afterwards
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+
+def test_orc_round_trip_pushdown(spark, tables, tmp_path):
+    path = str(tmp_path / "orders_orc")
+    RD.write_orc(tables["orders"].select("o_orderkey", "o_orderstatus", "o_totalprice"), path)
+    back = RD.read_orc(spark, path)
+    assert back.count() == tables["orders"].count()
+    plan = (
+        back.filter(back["o_orderstatus"] == "F")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "PushedFilters: [" in plan and "o_orderstatus" in plan
 
 
 def test_read_text_corpus_lines_and_wholefile(spark, tmp_path):

@@ -459,6 +459,23 @@ def test_boilerplate_ngrams_flags_shared_trigrams(spark):
         assert got[d]["mostly_boilerplate"] is True
 
 
+def test_length_outlier_band_exact_percentiles(spark):
+    """Band bounds are exact linear-interpolated percentiles over the
+    corpus; docs outside [p10, p90] are flagged out of band."""
+    from data_pengadaan_agent_spark.operators.textan import length_outlier_band
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(["w"] * i)) for i in range(1, 11)],
+        "doc_id long, text string",
+    )
+    rows = length_outlier_band(docs, p_lo=0.10, p_hi=0.90).collect()
+    by_id = {r["doc_id"]: r for r in rows}
+    # counts 1..10: p10 = 1 + 0.9*(2-1) = 1.9, p90 = 9 + 0.1*(10-9) = 9.1
+    assert by_id[5]["p_lo"] == 1.9 and by_id[5]["p_hi"] == 9.1
+    assert {r["doc_id"] for r in rows if not r["in_band"]} == {1, 10}
+    assert {r["doc_id"] for r in rows if r["in_band"]} == set(range(2, 10))
+
+
 def test_corpus_report_datasheet(spark):
     """Per-source rollup: dup_rate counts exact content dups, mean and
     median are exact, language spread counts distinct lang codes."""
