@@ -59,6 +59,7 @@ from data_pengadaan_agent_spark.sources.catalog import (
     begin_build,
     compact,
     logged,
+    read_index,
     read_meta,
     write_meta,
 )
@@ -216,9 +217,8 @@ def _resolve_key(frozen: str, key_col: str | None, fn: str) -> str:
 def grouped_words(spark: SparkSession, path: str) -> DataFrame:
     """The filter's canonical state: bit_or over all appended rows
     per (bucket, word_idx) — the read-side half of the merge algebra."""
-    words_p, _, _ = _paths(path)
     return (
-        spark.read.parquet(words_p)
+        read_index(spark, path, "words")
         .groupBy("bucket", "word_idx")
         .agg(F.bit_or("word").alias("word"))
     )
@@ -343,8 +343,7 @@ def bloom_new_rows(
     probed = probe_bloom(
         spark, path, batch, key_col, _meta=meta
     ).localCheckpoint(eager=True)
-    _, keys_p, _ = _paths(path)
-    keys = spark.read.parquet(keys_p).select(F.col(key_col)).distinct()
+    keys = read_index(spark, path, "keys").select(F.col(key_col)).distinct()
     definitely_new = probed.filter(~F.col("maybe")).drop("maybe")
     verified_new = (
         probed.filter(F.col("maybe")).drop("maybe").join(keys, key_col, "left_anti")
@@ -481,9 +480,8 @@ def bloom_fill_report(
     n_buckets, n_words, k, frozen = _meta or _read_meta(spark, path)
     key_col = _resolve_key(frozen, key_col, "bloom_fill_report")
     m = n_words * _WORD_BITS
-    _, keys_p, _ = _paths(path)
     keys_per_bucket = (
-        spark.read.parquet(keys_p)
+        read_index(spark, path, "keys")
         .select(F.col(key_col))
         .distinct()
         .groupBy(_bucket_col(F.col(key_col), n_buckets).alias("bucket"))

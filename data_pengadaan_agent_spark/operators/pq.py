@@ -376,7 +376,11 @@ def build_ivfpq_table(
     codebook)."""
     spark = df.sparkSession
     ids_p, _, pqcb_p = _ivfpq_sidecars(path)
-    begin_build(spark, pqcb_p, path)  # the sidecars live inside ``path``
+    # the sidecars live inside ``path``; the older layout kept them
+    # beside it as ``<path>_{ids,coarse,pqcb}``, which a rebuild removes
+    begin_build(
+        spark, pqcb_p, path, *(f"{path.rstrip('/')}_{s}" for s in ("ids", "coarse", "pqcb"))
+    )
     # same dedup contract as build_gram_counts/append_ivfpq_table
     # (ADVICE r10): the ids sidecar was already deduped, but codes were
     # encoded from the raw frame — duplicate vec_ids yielded duplicate

@@ -230,6 +230,39 @@ def ensure_index(
     return True
 
 
+# What a commit settles, per directory: the meta rows of a meta
+# directory and the schema of an index subdirectory, each stored with
+# the identity of the index's meta files it was read under. Never a
+# DataFrame or a data-file listing: those are re-made on every call.
+_META: dict[str, tuple[tuple, list]] = {}
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _no_meta(label: str, meta_p: str) -> ValueError:
+    return ValueError(
+        f"{label} at {meta_p!r} has no readable meta table — absent, "
+        "corrupt, or a build crashed before commit; rebuild it"
+    )
+
+
+def _commit_key(spark: SparkSession, meta_p: str, label: str) -> tuple:
+    """(name, length, mtime) of every file of the meta directory, from
+    one driver-side Hadoop ``listStatus`` — no Spark job. Every build,
+    and every append or compaction that changes what meta holds,
+    rewrites meta last under a new part-file name, so a commit changes
+    the key. An absent meta directory is the ValueError of
+    ``read_meta``."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    p = jvm_path(meta_p)
+    try:
+        sts = p.getFileSystem(spark._jsc.hadoopConfiguration()).listStatus(p)
+    except Exception as exc:  # noqa: BLE001 - absent meta = invalid index
+        raise _no_meta(label, meta_p) from exc
+    return tuple(
+        sorted((st.getPath().getName(), st.getLen(), st.getModificationTime()) for st in sts)
+    )
+
+
 def read_meta(
     spark: SparkSession,
     meta_p: str,
@@ -241,14 +274,17 @@ def read_meta(
     exactly one row, or missing a column of ``require`` — ``(column,
     the meta change that added it)`` pairs, so an index written before
     that change is rebuilt — is a loud ValueError naming ``label``,
-    never a guess."""
-    try:
-        rows = spark.read.parquet(meta_p).collect()
-    except Exception as exc:  # noqa: BLE001 - absent/corrupt meta = invalid index
-        raise ValueError(
-            f"{label} at {meta_p!r} has no readable meta table — absent, "
-            "corrupt, or a build crashed before commit; rebuild it"
-        ) from exc
+    never a guess. The rows are read once per ``_commit_key``: a warm
+    read of an unchanged index starts no Spark job."""
+    meta_p = meta_p.rstrip("/")
+    key = _commit_key(spark, meta_p, label)
+    hit = _META.get(meta_p)
+    if hit is None or hit[0] != key:
+        try:
+            hit = _META[meta_p] = (key, spark.read.parquet(meta_p).collect())
+        except Exception as exc:  # noqa: BLE001 - corrupt meta = invalid index
+            raise _no_meta(label, meta_p) from exc
+    rows = hit[1]
     if len(rows) != 1:
         raise ValueError(f"{label} meta at {meta_p!r} must be exactly 1 row")
     have = rows[0].asDict()
@@ -358,6 +394,51 @@ def read_dir(spark: SparkSession, path: str) -> DataFrame:
             for st in fs.listStatus(jvm_path(path))
             if not st.getPath().getName().startswith(("_", "."))
         )
+    )
+
+
+def read_index(
+    spark: SparkSession, path: str, sub: str, buckets: Iterable[int] | None = None
+) -> DataFrame:
+    """The rows of the index subdirectory ``{path}/{sub}`` under the
+    schema its commit settled: inferred on the first read after each
+    ``_commit_key`` change of ``{path}/meta``, then given to the scan,
+    so a warm read starts no schema-inference job. Appends keep the
+    column types, so the schema holds until the next build rewrites
+    meta.
+
+    ``buckets`` reads only the ``bucket=<b>`` directories among them
+    that exist, listed driver-side, with ``basePath`` set so ``bucket``
+    stays a column and the ``bucket`` IN-list stays a partition filter:
+    reading the root instead lists every bucket directory, with a
+    Spark job once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``. None
+    existing is an empty frame of the same schema. Files are listed on
+    every call, so no answer comes from an older file set."""
+    p = path.rstrip("/")
+    root = f"{p}/{sub}"
+    key = _commit_key(spark, f"{p}/meta", "index")
+    hit = _SCHEMAS.get(root)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[root] = (key, spark.read.parquet(root).schema)
+    schema = hit[1]
+    if buckets is None:
+        return spark.read.schema(schema).parquet(root)
+    want = sorted({int(b) for b in buckets})
+    found = []
+    if want:
+        glob = spark._jvm.org.apache.hadoop.fs.Path(
+            f"{root}/bucket={{{','.join(map(str, want))}}}"
+        )
+        found = glob.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(glob) or []
+    dirs = [f"{root}/{st.getPath().getName()}" for st in found]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", root)
+        .parquet(*dirs)
+        .filter(f"bucket IN ({','.join(map(str, want))})")
     )
 
 

@@ -11,10 +11,6 @@ from data_pengadaan_agent_spark.operators import similarity as S
 from data_pengadaan_agent_spark.operators.asof import asof_join_backward, range_join_bucketed
 
 
-def _ts(s):
-    return f"timestamp'{s}'"
-
-
 def test_asof_backward_semantics(spark):
     left = spark.createDataFrame(
         [(1, 1, "2024-01-01 10:00:00"), (2, 1, "2024-01-01 12:00:00"), (3, 2, "2024-01-01 10:00:00")],

@@ -241,6 +241,21 @@ def test_ivfpq_sidecars_live_inside_the_index(spark, tmp_path):
     PQ.load_ivfpq_codebooks(spark, path)
 
 
+def test_ivfpq_rebuild_removes_the_older_layouts_sidecars(spark, tmp_path):
+    """The older layout kept the ids registry and codebooks beside the
+    index as ``<path>_{ids,coarse,pqcb}``: a build deletes them, and
+    nothing else beside the index."""
+    import os
+
+    path = str(tmp_path / "ivfpq")
+    for d in ("ivfpq_ids", "ivfpq_coarse", "ivfpq_pqcb", "other_ids"):
+        os.makedirs(tmp_path / d)
+        (tmp_path / d / "part-00000.parquet").write_bytes(b"stale")
+    PQ.build_ivfpq_table(_vecs(spark, FIX), path, dim=4, kc=2, m=2, ksub=2, iters=2)
+    assert sorted(os.listdir(tmp_path)) == ["ivfpq", "other_ids"]
+    assert PQ.audit_ivfpq_table(spark, path).count() == 0
+
+
 def test_ivfpq_validation(spark, tmp_path):
     df = _vecs(spark, FIX)
     with pytest.raises(ValueError, match="init needs ids"):
